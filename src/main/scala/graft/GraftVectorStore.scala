@@ -66,22 +66,24 @@ final class GraftVectorStore(
     graphLayers: Int = 0,
     // Some(candidates): binary-sketch layout — rows stored plain;
     // `approximate = true` runs the two-stage Hamming search
-    // (operators/BinaryQuant): sign-bit sketch of the leading 64 dims
-    // sweeps the tenant cheaply (8 bytes/row), float vectors are fetched
-    // only for the candidate sliver re-rank. probeDepth scales the
-    // candidate pool. No persisted structure, so appends never invalidate
-    // anything — the zero-maintenance approximate tier.
+    // (operators/BinaryQuant.hammingSearch): the sweep packs the sign bits
+    // of each row's leading 64 dims from its float vector at query time
+    // (so it reads every row's vector) and keeps the Hamming-nearest ids;
+    // exact cosine is computed only for that candidate sliver. probeDepth
+    // scales the candidate pool. No persisted structure, so appends never
+    // invalidate anything — the zero-maintenance approximate tier.
     binaryCandidates: Option[Int] = None,
     // Graph-serving dispatch budget: when the tenant's on-disk footprint
-    // (one FS metadata read, no Spark job) fits, the driver-paced walk
+    // (FS metadata reads, no Spark job) fits, the driver-paced walk
     // materializes the tenant's latest slice once and serves every
     // per-round vector fetch from memory — measured ~2.5x faster at toy
     // scale (RECALL.md round-8 table). Past the budget it point-reads node
     // buckets per round (PartitionFilters on __node_bucket) — the only
     // shape that exists at 100 TB, where no tenant slice fits anywhere.
-    // The footprint is a conservative overestimate of the latest slice
-    // (it counts superseded generations and tombstones), so the dispatch
-    // can only err toward the scale-safe pruned walk.
+    // The footprint is the newest committed generation plus the active
+    // deltas (IndexTable.footprintBytes) — an overestimate of the latest
+    // slice (deltas carry superseded versions and tombstones), so the
+    // dispatch can only err toward the scale-safe pruned walk.
     graphServingBudgetBytes: Long = 256L << 20,
     // Pluggable embedding model (None = the murmur hashing-trick default):
     // `docCol` embeds the cleansed page column at ingest, `query` embeds a
@@ -261,22 +263,21 @@ final class GraftVectorStore(
     KnnSearch.hitProjection(KnnSearch.topK(slice, qvec, topN))
   }
 
-  /** Binary-sketch approximate path: two-stage Hamming sweep + exact
-    * re-rank ([[graft.operators.BinaryQuant.hammingTopK]]) over the
-    * serving slice. The sweep touches 8 bytes per row; floats are fetched
-    * only for `binaryCandidates * probeDepth` rows. */
+  /** Binary-sketch approximate path: Hamming sweep + exact re-rank of
+    * the `binaryCandidates * probeDepth` nearest ids over the serving
+    * slice, as two shuffle-free scans
+    * ([[graft.operators.BinaryQuant.hammingSearch]]: the sweep runs in
+    * this call, the re-rank when the result is read). Ids are xxhash64 of
+    * the record id, as in [[graft.operators.BinaryQuant.hammingTopK]]'s
+    * batch form. */
   private def binarySearch(qvec: Array[Float], alias: String, topN: Int,
                            probeDepth: Int): DataFrame = {
-    import spark.implicits._
     val cand = binaryCandidates.get * math.max(1, probeDepth)
     val nodes = IndexTable.readLatest(spark, indexPath, resolveAlias(alias))
       .withColumn("__nid", xxhash64(col("id")))
-    val q = Seq((-1L, qvec.toSeq)).toDF("q_id", "q_vec")
-    val hits = graft.operators.BinaryQuant.hammingTopK(
-      nodes, q, k = topN, candidates = math.max(cand, topN),
-      corpusVec = "page_content_vector", corpusId = "__nid")
-    KnnSearch.hitProjection(
-      hits.join(nodes, Seq("__nid")).orderBy(col("rank")))
+    KnnSearch.hitProjection(graft.operators.BinaryQuant.hammingSearch(
+      nodes, qvec, k = topN, candidates = math.max(cand, topN),
+      corpusVec = "page_content_vector", corpusId = "__nid"))
   }
 
   /** The persisted neighbor-graph dir for a tenant: underscore-prefixed
@@ -313,14 +314,16 @@ final class GraftVectorStore(
     *    prompt pays ZERO Spark jobs until the final hit projection,
     *  - `entries`: the persisted walk entry ids.
     * Driver memory is bounded by `graphServingBudgetBytes` BY CONSTRUCTION
-    * (the dispatch sends bigger tenants to the pruned walk). Every
-    * mutation through this facade invalidates the state; a mutation
+    * (the dispatch sends bigger tenants to the pruned walk). Concurrent
+    * searches share one state per tenant: the first builds it, the others
+    * wait for it. Every mutation through this facade invalidates the
+    * state; a mutation
     * through a DIFFERENT store instance over the same path is not seen
     * until this instance's next invalidation — the ordinary read-replica
     * contract of a serving cache (the pruned mode has no such window: it
     * reads the store per round). */
   private val servingState =
-    scala.collection.mutable.Map[String, GraftVectorStore.GraphServing]()
+    new java.util.concurrent.ConcurrentHashMap[String, GraftVectorStore.GraphServing]()
 
   private def invalidateServing(alias: String): Unit = {
     servingState.remove(resolveAlias(alias)); ()
@@ -341,15 +344,13 @@ final class GraftVectorStore(
   /** Graph-serving dispatch (see `graphServingBudgetBytes`): true when the
     * tenant's on-disk footprint exceeds the serving budget, i.e. the walk
     * must point-read node buckets instead of materializing the latest
-    * slice. One `getContentSummary` FS metadata read — no Spark job — over
-    * the tenant's partition directory; a missing directory (nothing
-    * ingested yet) trivially fits. */
-  private[graft] def servesPruned(alias: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$indexPath/index_alias=${resolveAlias(alias)}")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.getContentSummary(p).getLength > graphServingBudgetBytes
-  }
+    * slice. The footprint counts the tenant's newest committed generation
+    * and its active deltas ([[IndexTable.footprintBytes]], FS metadata
+    * only — no Spark job), so a compacted tenant whose delta directory is
+    * gone is still measured whole; a tenant with nothing ingested trivially
+    * fits. */
+  private[graft] def servesPruned(alias: String): Boolean =
+    IndexTable.footprintBytes(spark, indexPath, resolveAlias(alias)) > graphServingBudgetBytes
 
   /** Record ids are sha1 hex strings; the graph walks 8-byte node ids, so
     * nodes are keyed by xxhash64(id) (collision over a tenant is ~n^2/2^64 —
@@ -499,7 +500,7 @@ final class GraftVectorStore(
         (s, prunedFetch)
       } else {
         graft.core.TierStats.record("storeGraphServe", "driver")
-        val st = servingState.getOrElseUpdate(resolveAlias(alias), {
+        val st = servingState.computeIfAbsent(resolveAlias(alias), _ => {
           val slice = graphNodes(alias).localCheckpoint()
           val vecs = slice
             .select($"__nid", $"page_content_vector".cast("array<float>"))

@@ -93,6 +93,44 @@ object BinaryQuant {
       .select(col(queryId), col(corpusId), col("hamming"), col("similarity"), col("rank"))
   }
 
+  /** One query's [[hammingTopK]] as two narrow scans of `corpus` — the
+    * serving shape, where the batch operator's spread, grouped top-k and
+    * join-back cost more than the work itself:
+    *  1. TakeOrdered of the `candidates` nearest ids by (hamming asc, id
+    *     asc), collected to the driver (a `candidates`-long id list);
+    *  2. `id IN (candidates)`, exact cosine rounded to 4 on those rows only,
+    *     TakeOrdered top-`k` by (similarity desc, id asc), projecting the
+    *     corpus columns directly.
+    * No exchange, no aggregate, no join: two jobs per query. Both cuts use
+    * [[hammingTopK]]'s keys, and a corpus id equal to `queryId` is excluded
+    * as its `=!=` join does, so the hits equal [[hammingTopK]]'s output
+    * joined back to the corpus, order included — provided `corpus` reads
+    * the same rows in both scans (a frozen file set).
+    *
+    * Output: `corpus`'s columns plus `similarity`, best first. */
+  def hammingSearch(corpus: DataFrame, queryVec: Array[Float], k: Int, candidates: Int,
+                    corpusVec: String = "embedding", corpusId: String = "vec_id",
+                    queryId: Long = -1L): DataFrame = {
+    require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
+    // the query's words are packed once on the driver (a one-row local
+    // relation runs no job), not re-packed next to every corpus row
+    val (p0, p1) = pack64(col("_1"))
+    val qw = corpus.sparkSession.createDataFrame(Seq(Tuple1(queryVec.toSeq)))
+      .select(p0, p1).head()
+    val (c0, c1) = pack64(col(corpusVec))
+    val cand = corpus.where(col(corpusId) =!= queryId)
+      .select(col(corpusId).cast("long").as("__cand"),
+        hamming(c0, c1, lit(qw.getLong(0)), lit(qw.getLong(1))).as("__hamming"))
+      .orderBy(asc("__hamming"), asc("__cand"))
+      .limit(candidates)
+      .collect().map(_.getLong(0))
+    corpus.where(col(corpusId).isin(cand.toSeq: _*))
+      .withColumn("similarity",
+        round(VectorFunctions.cosineSimilarity(col(corpusVec), typedlit(queryVec)), 4))
+      .orderBy(desc("similarity"), asc(corpusId))
+      .limit(k)
+  }
+
   /** IVF x binary composition — the two ANN cost axes composed: IVF cell
     * pruning bounds WHICH inverted lists are scanned (file-level skipping
     * when the store is cell-partitioned), the packed Hamming sweep bounds

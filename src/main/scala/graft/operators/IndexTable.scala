@@ -54,8 +54,9 @@ object IndexTable {
 
   /** D3: drop (reference `dropRedisIndex`, `modules/utilities.py:242-251` —
     * there it keeps the documents; here the parquet IS the index, so drop
-    * removes the path). */
+    * removes the path, and the relations read from it). */
   def drop(spark: SparkSession, path: String): Unit = {
+    relations.keySet.removeIf(_._2 == path)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) { fs.delete(p, true); () }
@@ -407,22 +408,23 @@ object IndexTable {
   }
 
   /** Data files currently in the tenant's delta partition, as paths relative
-    * to the index root (stable across fs-qualification differences). */
+    * to the index root (stable across fs-qualification differences). A
+    * `listStatus` walk, not `listFiles`: the located statuses `listFiles`
+    * builds load each file's owner and permissions, which the local file
+    * system answers by running a process per file — the bulk of a serving
+    * read's planning time. */
   private def listDeltaFiles(fs: org.apache.hadoop.fs.FileSystem, path: String,
                              alias: String): Seq[String] = {
     val tenantDir = new org.apache.hadoop.fs.Path(path, aliasDirName(alias))
     if (!fs.exists(tenantDir)) Seq.empty
     else {
       val rootPrefix = fs.makeQualified(new org.apache.hadoop.fs.Path(path)).toString + "/"
-      val out = Seq.newBuilder[String]
-      val it = fs.listFiles(tenantDir, true)
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (!name.startsWith("_") && !name.startsWith("."))
-          out += f.getPath.toString.stripPrefix(rootPrefix)
-      }
-      out.result()
+      def walk(dir: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] =
+        fs.listStatus(dir).toSeq.flatMap(s =>
+          if (s.isDirectory) walk(s.getPath) else Seq(s.getPath))
+      walk(tenantDir)
+        .filterNot(p => p.getName.startsWith("_") || p.getName.startsWith("."))
+        .map(p => fs.makeQualified(p).toString.stripPrefix(rootPrefix))
     }
   }
 
@@ -458,17 +460,43 @@ object IndexTable {
     (gen, all.filterNot(folded), all)
   }
 
+  /** Parquet relations reused across reads, one generation slot and one
+    * delta slot per (session, index path, tenant), each tagged with the
+    * key of the file set it was read from: the committed generation's
+    * directory (immutable once its marker lands) or the sorted active delta
+    * files (append-only). A `spark.read.parquet` relation freezes its file
+    * listing and inferred schema, so a slot whose key equals the current
+    * [[tenantView]] listing reads exactly what a fresh relation would —
+    * without the listing and the footer-inference job. Any write changes
+    * the listing, hence the key, and replaces the slot on the next read. */
+  private val relations =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, String),
+      (Seq[String], DataFrame)]()
+
+  private def reuse(spark: SparkSession, path: String, alias: String, slot: String,
+                    key: Seq[String])(read: => DataFrame): DataFrame = {
+    val k = (spark, path, alias, slot)
+    Option(relations.get(k)).filter(_._1 == key).map(_._2).getOrElse {
+      val df = read
+      relations.put(k, (key, df))
+      df
+    }
+  }
+
   private def viewFrame(spark: SparkSession, path: String, alias: String,
                         gen: Option[org.apache.hadoop.fs.Path],
                         deltas: Seq[String]): DataFrame = {
-    val base = gen.map(g => spark.read.parquet(g.toString)
-      .where(col("index_alias") === alias))
+    val base = gen.map(g => reuse(spark, path, alias, "gen", Seq(g.toString))(
+      spark.read.parquet(g.toString).where(col("index_alias") === alias)))
     val delta =
       if (deltas.isEmpty) None
-      // basePath keeps partition-column discovery (index_alias + layout
-      // cols) rooted at the index even though we hand Spark leaf files.
-      else Some(spark.read.option("basePath", path)
-        .parquet(deltas.map(d => s"$path/$d"): _*))
+      else {
+        val files = deltas.sorted
+        // basePath keeps partition-column discovery (index_alias + layout
+        // cols) rooted at the index even though we hand Spark leaf files.
+        Some(reuse(spark, path, alias, "delta", files)(
+          spark.read.option("basePath", path).parquet(files.map(d => s"$path/$d"): _*)))
+      }
     (base, delta) match {
       case (Some(b), Some(d)) => b.unionByName(d, allowMissingColumns = true)
       case (Some(b), None) => b
@@ -591,6 +619,23 @@ object IndexTable {
   def deltaFileCount(spark: SparkSession, path: String, alias: String): Int =
     tenantView(spark, path, alias)._2.size
 
+  /** On-disk bytes of the tenant's current view — its newest committed
+    * generation's files plus the active deltas, from the same listing a
+    * read plans over (FS metadata only, no Spark job). Superseded
+    * generations and folded deltas still retained for in-flight readers
+    * are not counted; superseded versions and tombstones inside the active
+    * deltas are, so it is an upper bound of the latest slice's size. A file
+    * retired by a concurrent vacuum between the listing and its size probe
+    * counts zero. */
+  def footprintBytes(spark: SparkSession, path: String, alias: String): Long = {
+    val fs = fileSystem(spark, path)
+    val (gen, active, _) = tenantView(spark, path, alias)
+    def bytes(p: org.apache.hadoop.fs.Path): Long =
+      scala.util.Try(fs.getContentSummary(p).getLength).getOrElse(0L)
+    gen.map(g => bytes(new org.apache.hadoop.fs.Path(g, aliasDirName(alias)))).getOrElse(0L) +
+      active.map(d => bytes(new org.apache.hadoop.fs.Path(s"$path/$d"))).sum
+  }
+
   /** Committed generation ids for a tenant, newest first — the time-travel
     * catalog. Each committed generation is a CONSISTENT snapshot (compact
     * folds every delta file on disk into the new generation before the
@@ -632,8 +677,13 @@ object IndexTable {
   /** Read with HSET-overwrite semantics: newest record per id wins (by the
     * ingest generation stamp).
     *
-    * Scale shape — this is the serving read under every search, so the
-    * upsert resolution must NOT shuffle the tenant:
+    * Scale shape — this is the serving read under every search, so neither
+    * planning it nor the upsert resolution may cost a pass over the tenant:
+    *   - every read lists the tenant's files (FS metadata only, no Spark
+    *     job) and plans over the parquet relations already read for the
+    *     same generation dir and the same active delta files (see
+    *     [[relations]]): a tenant unchanged since the previous read plans
+    *     with zero jobs, and any write is seen on the very next read;
     *   - zero active deltas (the steady state right after [[compact]]): the
     *     committed generation is already latest-resolved, so the read IS the
     *     raw pruned scan — no window, no exchange;

@@ -436,6 +436,52 @@ class GraftVectorStoreSpec extends AnyFunSuite {
     cached.dropIndex()
   }
 
+  test("graph serving footprint counts the compacted generation: a " +
+      "compacted tenant over budget takes the pruned walk") {
+    val path = java.nio.file.Files.createTempDirectory("graft_store_fp").toString + "/idx"
+    val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
+      .select(concat_ws("/", $"source", $"doc_id").as("document_path"), $"text")
+    val store = new GraftVectorStore(spark, path, graphM = Some(8),
+      graphServingBudgetBytes = 1L)
+    store.addDocuments(docs, "t", pageSize = 32)
+    store.compactIndex("t", retainMillis = 0L)
+    // vacuum retired the delta zone: every row lives in the generation
+    assert(!new java.io.File(s"$path/index_alias=t").exists())
+    assert(store.servesPruned("t"), "the generation's bytes must count")
+    val s0 = graft.core.TierStats.snapshot()
+    assert(store.search("fast spark table scan query", "t", topN = 5,
+      approximate = true).count() === 5)
+    val tiers = graft.core.TierStats.diff(s0, graft.core.TierStats.snapshot())
+    assert(tiers.getOrElse("storeGraphServe:distributed", 0L) >= 1L &&
+      tiers.getOrElse("storeGraphServe:driver", 0L) === 0L, s"tiers: $tiers")
+    store.dropIndex()
+  }
+
+  test("concurrent graph searches on one store instance share one serving " +
+      "state and return identical hits") {
+    val path = java.nio.file.Files.createTempDirectory("graft_store_cc").toString + "/idx"
+    val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
+      .select(concat_ws("/", $"source", $"doc_id").as("document_path"), $"text")
+    val store = new GraftVectorStore(spark, path, graphM = Some(8))
+    store.addDocuments(docs, "t", pageSize = 32)
+    store.buildGraphIndex("t")
+    assert(!store.servesPruned("t"))
+    def hits(): Seq[(String, Int, Double)] =
+      store.search("fast spark table scan query", "t", topN = 5, approximate = true)
+        .select($"document_path", $"page_number", $"similarity")
+        .as[(String, Int, Double)].collect().toSeq
+    // no warm-up: the threads race to build the tenant's serving state
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futures = (1 to 4).map(_ => pool.submit(() => hits()))
+      val results = futures.map(_.get(5, java.util.concurrent.TimeUnit.MINUTES))
+      assert(results.head.size === 5)
+      assert(results.forall(_ === results.head), s"divergent hits: $results")
+      assert(hits() === results.head)
+    } finally pool.shutdown()
+    store.dropIndex()
+  }
+
   test("persisted graph layout is validated against graphLayers: a store " +
       "opened under the OTHER layout rebuilds instead of misreading") {
     val path = java.nio.file.Files.createTempDirectory("graft_store_lay").toString + "/idx"
@@ -506,6 +552,48 @@ class GraftVectorStoreSpec extends AnyFunSuite {
       "binary sweep + re-rank must land mostly inside the exact top set")
     // no persisted structure: appends don't invalidate anything
     assert(!new java.io.File(s"$path/_graft_knn_graph").exists())
+
+    // The facade's two-scan search equals the batch operator
+    // (hammingTopK over the latest view + join back to the rows), order
+    // included, at candidate pools from topN (4 is clamped up to 5) to 64,
+    // in every store state: deltas only, compacted, an upsert and a delete
+    // pending over a generation, compacted again.
+    val narrow = new GraftVectorStore(spark, path, binaryCandidates = Some(4))
+    val prompts = Seq("fast spark table scan query", "distributed join shuffle",
+      "vector index")
+    def reference(prompt: String, topN: Int, candidates: Int): Seq[(String, Double)] = {
+      val nodes = graft.operators.IndexTable.readLatest(spark, path, "t")
+        .withColumn("__nid", xxhash64($"id"))
+      val q = Seq((-1L, graft.functions.Embedder.embedQuery(prompt).toSeq))
+        .toDF("q_id", "q_vec")
+      graft.operators.BinaryQuant.hammingTopK(nodes, q, k = topN,
+          candidates = math.max(candidates, topN),
+          corpusVec = "page_content_vector", corpusId = "__nid")
+        .join(nodes, Seq("__nid")).orderBy($"rank")
+        .select($"id", $"similarity").as[(String, Double)].collect().toSeq
+    }
+    def assertEquivalent(state: String): Unit =
+      for (prompt <- prompts;
+           (s, perDepth, depth) <- Seq((narrow, 4, 1), (narrow, 4, 3), (store, 64, 1))) {
+        val got = s.search(prompt, "t", topN = 5, approximate = true, probeDepth = depth)
+          .select($"id", $"similarity").as[(String, Double)].collect().toSeq
+        assert(got.nonEmpty)
+        assert(got === reference(prompt, 5, perDepth * depth),
+          s"$state: '$prompt' at ${perDepth * depth} candidates")
+      }
+    assertEquivalent("after addDocuments")
+    store.compactIndex("t")
+    assertEquivalent("after compactIndex")
+    val paths = docs.select($"document_path").distinct().as[String]
+      .collect().sorted
+    store.addDocuments(Seq((paths(0), "a vector index rewritten by an upsert"))
+      .toDF("document_path", "text"), "t", pageSize = 32)
+    store.deleteDocuments(Seq(paths(1)), "t")
+    assert(graft.operators.IndexTable.deltaFileCount(spark, path, "t") > 0)
+    assertEquivalent("with an upsert and a delete pending")
+    store.compactIndex("t")
+    assert(graft.operators.IndexTable.deltaFileCount(spark, path, "t") === 0)
+    assertEquivalent("after the second compactIndex")
     store.dropIndex()
   }
 
