@@ -18,7 +18,6 @@ import graft.plans.{CosineSimilarityExpr, DotProductExpr, EmbedTextExpr, Squared
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => graft.plans.LshTopKPruneRule)
   }
 }
 
@@ -47,17 +46,12 @@ object GraftExtensions {
           else graft.functions.Embedder.DefaultSeed)
       }))
 
-  /** Register on an already-built session (functions into the registry, the
-    * LSH prune rule via experimental extraOptimizations). */
+  /** Register on an already-built session (functions into the registry). */
   def register(spark: SparkSession): Unit = {
     val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val registry = classic.sessionState.functionRegistry
     functions.foreach { case (ident, inf, builder) =>
       registry.registerFunction(ident, inf, builder)
-    }
-    if (!classic.experimental.extraOptimizations.contains(graft.plans.LshTopKPruneRule)) {
-      classic.experimental.extraOptimizations =
-        classic.experimental.extraOptimizations :+ graft.plans.LshTopKPruneRule
     }
   }
 }

@@ -7,8 +7,8 @@ import graft.functions.VectorFunctions
 
 /** Graph-based approximate nearest neighbor — the structural analogue of the
   * reference's HNSW index (reference `modules/utilities.py:272-278`), closing
-  * the approximate ladder next to the LSH-bucketed and IVF tiers
-  * ([[SimilaritySearch]], [[IndexTable.appendBucketed]]/`appendIvf`).
+  * the approximate ladder next to the LSH and IVF operators
+  * ([[SimilaritySearch]]).
   *
   * HNSW itself is a pointer-chasing structure that lives in one machine's
   * memory; the Spark-native re-expression keeps its two ideas — a
@@ -167,30 +167,6 @@ object GraphAnn {
         col("e._2").as("dst"), col("e._1").as("sim"))
   }
 
-  /** Incremental insert into a [[hnswGraph]]: the layered twin of
-    * [[insertNodes]]. A new node's level is a pure function of its id
-    * ([[layerOf]] — the same rule the build uses), so layer membership
-    * needs no bookkeeping: for each layer ℓ the batch subset with level
-    * ≥ ℓ runs the flat insert against that layer's subgraph over the
-    * corpus subset with level ≥ ℓ. Costs one flat insert per layer, each
-    * 16× smaller than the last — the build pyramid's economics, kept at
-    * insert time. Ids must be NEW (the [[insertNodes]] update contract). */
-  def hnswInsert(corpus: DataFrame, layeredEdges: DataFrame, newNodes: DataFrame,
-                 m: Int = 8, beam: Int = 8, rounds: Int = 3, nEntry: Int = 8,
-                 nBits: Int = 4, nTables: Int = 8, dim: Int = 64, seed: Long = 7L,
-                 maxLayer: Int = 2,
-                 vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
-    (0 to maxLayer).map { l =>
-      val subCorpus = if (l == 0) corpus else corpus.where(layerOf(col(idCol)) >= l)
-      val subNew = if (l == 0) newNodes else newNodes.where(layerOf(col(idCol)) >= l)
-      val e = layeredEdges.where(col("layer") === l)
-        .select(col("src"), col("dst"), col("sim"))
-      insertNodes(subCorpus, e, subNew, m, beam, rounds, nEntry,
-          nBits, nTables, dim, seed, vecCol, idCol)
-        .withColumn("layer", lit(l))
-        .select(col("layer"), col("src"), col("dst"), col("sim"))
-    }.reduce(_ unionByName _)
-
   /** HNSW-style search over a [[hnswGraph]]: start at the single global
     * entry point (the max-layer node, ties by (md5, id) — the portable
     * seed convention), greedily descend the upper layers (per layer,
@@ -241,8 +217,7 @@ object GraphAnn {
       // each probe the corpus by key, and without this every job re-scans
       // and re-decodes the corpus parquet — measured ~25% of the warm
       // query at sf0.1. One materialization per query BATCH is the batch
-      // walk's amortized access shape (the serving path's point lookups
-      // live in beamSearchSingle/hnswSearchSingle instead). The corpus
+      // walk's amortized access shape. The corpus
       // count rides this already-paid checkpoint as an Observation — the
       // size-dispatch probe, zero extra passes.
       val obs = org.apache.spark.sql.Observation()
@@ -442,8 +417,7 @@ object GraphAnn {
     * `corpus` must carry vectors for BOTH old and new ids (the store's
     * latest view after the append); `newNodes` is the batch. Ids in
     * `newNodes` must be NEW — re-inserting an existing id would leave its
-    * stale out-edges navigable; callers detect updates and rebuild
-    * (see GraftVectorStore.addDocuments).
+    * stale out-edges navigable; callers detect updates and rebuild.
     *
     * Scale shape: the beam walk is |batch| × beam × 2m frontier-sized
     * (constant in corpus size); the batch-internal build is LSH-bounded
@@ -568,119 +542,9 @@ object GraphAnn {
     topKFromVisited(visited, k, corpusId, queryId, excludeSelf)
   }
 
-  /** Single-query serving walk, driver-paced — the HNSW access pattern.
-    *
-    * The batch walk ([[beamSearch]]) runs ~5 distributed stages per round
-    * (broadcasts, anti-join, checkpoint); for a query BATCH that cost
-    * amortizes, but a one-prompt facade search pays ~20 jobs of pure
-    * scheduler latency for frontier state that is at most beam × 2m rows.
-    * Here the walk state lives on the driver and each round issues exactly
-    * TWO keyed lookups: the frontier's out-edges (`src IN (...)` — an
-    * In-filter the parquet scan pushes down) and the fresh candidates'
-    * vectors from a once-materialized (id, vector) slice. At cluster scale
-    * those lookups are the index random-reads a graph-ANN serving tier is
-    * built around (vectors resident, edges keyed) — HNSW's economics, not
-    * a corpus pass per round.
-    *
-    * Arithmetic matches [[beamSearch]]'s serving mode (portable = false):
-    * identical md5 entry sample, float-widened cosine exactly as
-    * CosineSimilarityExpr computes it, (similarity desc, id asc) ties —
-    * so result sets agree with the distributed walk wherever rounding
-    * never decided a tie. Returns (id, similarity, rank), rank 1-based. */
-  def beamSearchSingle(corpus: DataFrame, edges: DataFrame,
-                       queryVec: Array[Float], k: Int = 10, beam: Int = 8,
-                       rounds: Int = 3, nEntry: Int = 8,
-                       corpusVec: String = "embedding",
-                       corpusId: String = "vec_id",
-                       fetchVectors: Option[Seq[Long] => DataFrame] = None,
-                       fetchEdges: Option[Seq[Long] => DataFrame] = None,
-                       entryIds: Option[Seq[Long]] = None): Seq[(Long, Double, Int)] = {
-    require(nEntry >= 1)
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // every frame in the walk roots at the scoped clone (the whole body is
-    // driver-paced eager work; the return is a plain Seq) — see walkSession
-    val walk = walkSession(spark)
-    // serving-resident (id, vector) slice: one materialization, then
-    // every per-round fetch is an in-memory keyed filter. With
-    // `fetchVectors` (a partition-pruned point lookup — the store's
-    // node-bucketed layout) the full-corpus slice is NEVER materialized:
-    // each round reads only the frontier ids' files, the access shape
-    // that survives a 100 TB index.
-    lazy val c = walk(corpus).select(col(corpusId).cast("long").as("__cid"),
-        col(corpusVec).cast("array<float>").as("__cvec"))
-      .localCheckpoint()
-    lazy val e = walk(edges).select(col("src").cast("long").as("__esrc"),
-      col("dst").cast("long").as("__edst"))
-    def vecRows(ids: Seq[Long]): Seq[(Long, Seq[Float])] = (fetchVectors match {
-      case Some(f) => walk(f(ids))
-        .select(col(corpusId).cast("long"), col(corpusVec).cast("array<float>"))
-        .as[(Long, Seq[Float])].collect()
-      case None => c.where(col("__cid").isin(ids: _*))
-        .as[(Long, Seq[Float])].collect()
-    }).toSeq
-    def neighborIds(srcs: Seq[Long]): Seq[Long] = (fetchEdges match {
-      case Some(f) => walk(f(srcs))
-        .select(col("dst").cast("long")).distinct()
-      case None => e.where(col("__esrc").isin(srcs: _*))
-        .select(col("__edst")).distinct()
-    }).as[Long].collect().toSeq
-    // `entryIds` (persisted with the store's graph build) skips the
-    // corpus-wide md5 TakeOrdered — with it and the fetch closures set,
-    // the walk touches no corpus-sized frame at all
-    def entryScan(): Seq[(Long, Seq[Float])] =
-      c.orderBy(md5(col("__cid").cast("string")), col("__cid"))
-        .limit(nEntry).as[(Long, Seq[Float])].collect().toSeq
-    beamWalkLocal(queryVec, k, beam, rounds, vecRows, neighborIds,
-      entryScan _, entryIds)
-  }
-
-  /** The flat serving walk's SELECTION CORE, parameterized over its three
-    * data accessors — vector rows by id, out-neighbor ids by src, and the
-    * entry fallback. [[beamSearchSingle]] wires Spark-backed closures in
-    * (keyed filters / pruned point reads); a memory-resident serving tier
-    * wires plain hash-map lookups and pays ZERO Spark jobs per query. One
-    * core, two tiers: the walk's arithmetic (float-widened double cosine,
-    * (sim desc, id asc) ties, visited-dedup per round) cannot drift
-    * between them. */
-  def beamWalkLocal(queryVec: Array[Float], k: Int, beam: Int, rounds: Int,
-                    vecRows: Seq[Long] => Seq[(Long, Seq[Float])],
-                    neighborIds: Seq[Long] => Seq[Long],
-                    entryRows: () => Seq[(Long, Seq[Float])],
-                    entryIds: Option[Seq[Long]] = None): Seq[(Long, Double, Int)] = {
-    require(k >= 1 && beam >= 1 && rounds >= 0)
-    val visited = scala.collection.mutable.HashMap.empty[Long, Double]
-    def scoreRows(rows: Seq[(Long, Seq[Float])]): Seq[(Long, Double)] =
-      rows.map { case (id, v) => (id, cosDouble(queryVec, v)) }
-    def best(xs: Seq[(Long, Double)], n: Int): Seq[Long] =
-      xs.sortBy { case (id, s) => (-s, id) }.take(n).map(_._1)
-    val entry = entryIds match {
-      // persisted entries may all be tombstoned since the build — fall
-      // back to the live scan rather than returning an empty result
-      case Some(ids) => val r = vecRows(ids); if (r.nonEmpty) r else entryRows()
-      case None => entryRows()
-    }
-    var fresh = scoreRows(entry)
-    visited ++= fresh
-    var frontier = best(fresh, beam)
-    var r = 0
-    while (r < rounds && frontier.nonEmpty) {
-      val dsts = neighborIds(frontier).distinct.filterNot(visited.contains)
-      if (dsts.isEmpty) frontier = Nil
-      else {
-        fresh = scoreRows(vecRows(dsts))
-        visited ++= fresh
-        frontier = best(fresh, beam)
-      }
-      r += 1
-    }
-    visited.toSeq.sortBy { case (id, s) => (-s, id) }.take(k)
-      .zipWithIndex.map { case ((id, s), i) => (id, s, i + 1) }
-  }
-
   /** Float-widened double cosine — exactly CosineSimilarityExpr's
-    * arithmetic, shared by both serving tiers so scores are bit-identical
-    * regardless of where the vectors were fetched from. */
+    * arithmetic, so the driver-resident walks score bit-identically to the
+    * distributed ones. */
   def cosDouble(q: Array[Float], v: Seq[Float]): Double = {
     val n = math.min(v.length, q.length)
     var dp = 0.0; var na = 0.0; var nb = 0.0
@@ -692,117 +556,6 @@ object GraphAnn {
     }
     val denom = math.sqrt(na) * math.sqrt(nb)
     if (denom == 0.0) 0.0 else dp / denom
-  }
-
-  /** Single-query HNSW serving walk, driver-paced — [[beamSearchSingle]]'s
-    * hierarchical twin over a [[hnswGraph]]. The descent replaces the flat
-    * walk's nEntry random sample: start at the single deepest node, then per
-    * upper layer run `descentRounds` greedy best-1 moves (each round is the
-    * same two keyed lookups as the flat walk — frontier out-edges by
-    * `src IN (...)`, candidate vectors by id), landing the layer-0 beam walk
-    * at an entry already near the query. Upper layers shrink 16× per level
-    * ([[layerOf]]), so the descent touches O(descentRounds × 2m) nodes
-    * total — at corpus scale the descent is what lets a single entry match
-    * the recall of a wide entry sample without scoring one.
-    *
-    * Arithmetic is the serving form (raw double cosine, ties on id) — the
-    * portable, oracle-replayable hierarchy walk is [[hnswSearch]], the same
-    * gate/serving twin split as beamSearch/beamSearchSingle. Every node
-    * scored anywhere (entry, descent candidates, walk) stays in the visited
-    * pool the final top-k ranks over. Returns (id, similarity, rank). */
-  def hnswSearchSingle(corpus: DataFrame, layeredEdges: DataFrame,
-                       queryVec: Array[Float], k: Int = 10, beam: Int = 8,
-                       rounds: Int = 3, descentRounds: Int = 2, maxLayer: Int = 2,
-                       corpusVec: String = "embedding",
-                       corpusId: String = "vec_id",
-                       fetchVectors: Option[Seq[Long] => DataFrame] = None,
-                       fetchEdges: Option[(Int, Seq[Long]) => DataFrame] = None,
-                       entryId: Option[Long] = None): Seq[(Long, Double, Int)] = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // same clone-scoped discipline as beamSearchSingle (see walkSession);
-    // with the fetch closures + persisted entry the walk touches no
-    // corpus-sized frame (node-bucketed point lookups per round)
-    val walk = walkSession(spark)
-    lazy val c = walk(corpus).select(col(corpusId).cast("long").as("__cid"),
-        col(corpusVec).cast("array<float>").as("__cvec"))
-      .localCheckpoint()
-    def edgesAt(l: Int): DataFrame = walk(layeredEdges)
-      .where(col("layer") === l)
-      .select(col("src").cast("long").as("__esrc"),
-        col("dst").cast("long").as("__edst"))
-    def neighborIds(l: Int, srcs: Seq[Long]): Seq[Long] = (fetchEdges match {
-      case Some(f) => walk(f(l, srcs)).select(col("dst").cast("long")).distinct()
-      case None => edgesAt(l).where(col("__esrc").isin(srcs: _*))
-        .select(col("__edst")).distinct()
-    }).as[Long].collect().toSeq
-    def vecRows(ids: Seq[Long]): Seq[(Long, Seq[Float])] = (fetchVectors match {
-      case Some(f) => walk(f(ids))
-        .select(col(corpusId).cast("long"), col(corpusVec).cast("array<float>"))
-        .as[(Long, Seq[Float])].collect()
-      case None => c.where(col("__cid").isin(ids: _*))
-        .as[(Long, Seq[Float])].collect()
-    }).toSeq
-    // global entry: the deepest node, (md5, id)-tie-broken — the same
-    // convention as the distributed hierarchy walk; `entryId` (persisted
-    // at build time) skips the corpus-wide scan
-    def entryScan(): Seq[Long] = c
-      .select(col("__cid"), least(layerOf(col("__cid")), lit(maxLayer)).as("__lv"))
-      .orderBy(col("__lv").desc, md5(col("__cid").cast("string")), col("__cid"))
-      .limit(1).select(col("__cid")).as[Long].collect().toSeq
-    hnswWalkLocal(queryVec, k, beam, rounds, descentRounds, maxLayer,
-      vecRows, neighborIds, entryScan _, entryId)
-  }
-
-  /** The hierarchical serving walk's SELECTION CORE — the layered twin of
-    * [[beamWalkLocal]], parameterized the same way (vector rows by id,
-    * out-neighbors by (layer, src), entry fallback). [[hnswSearchSingle]]
-    * wires Spark-backed accessors; a memory-resident tier wires hash-map
-    * lookups. Same one-core-two-tiers guarantee: descent, beam, tie, and
-    * visited-pool decisions are the same code path in both. */
-  def hnswWalkLocal(queryVec: Array[Float], k: Int, beam: Int, rounds: Int,
-                    descentRounds: Int, maxLayer: Int,
-                    vecRows: Seq[Long] => Seq[(Long, Seq[Float])],
-                    neighborIds: (Int, Seq[Long]) => Seq[Long],
-                    entryScan: () => Seq[Long],
-                    entryId: Option[Long] = None): Seq[(Long, Double, Int)] = {
-    require(k >= 1 && beam >= 1 && rounds >= 0 && descentRounds >= 1 && maxLayer >= 0)
-    val visited = scala.collection.mutable.HashMap.empty[Long, Double]
-    def fetchScore(ids: Seq[Long]): Seq[(Long, Double)] = {
-      val scored = vecRows(ids).map { case (id, v) => (id, cosDouble(queryVec, v)) }
-      visited ++= scored
-      scored
-    }
-    def best(xs: Seq[(Long, Double)], n: Int): Seq[Long] =
-      xs.sortBy { case (id, s) => (-s, id) }.take(n).map(_._1)
-    val entry = entryId.map(Seq(_)).getOrElse(entryScan())
-    if (entry.isEmpty) return Seq.empty
-    var cur = fetchScore(entry) // (id, sim) best-so-far, 1 element
-    if (cur.isEmpty && entryId.nonEmpty) {
-      // persisted entry tombstoned since the build — live rescan
-      val live = entryScan()
-      if (live.nonEmpty) cur = fetchScore(live)
-    }
-    if (cur.isEmpty) return Seq.empty
-    for (l <- maxLayer to 1 by -1; _ <- 1 to descentRounds) {
-      val dsts = neighborIds(l, Seq(cur.head._1)).distinct.filterNot(visited.contains)
-      if (dsts.nonEmpty) {
-        val scored = fetchScore(dsts)
-        // greedy best-1 over current ∪ neighbors, (sim desc, id asc) ties
-        cur = (cur ++ scored).sortBy { case (id, s) => (-s, id) }.take(1)
-      }
-    }
-    // layer-0 beam walk seeded by the descended entry
-    var frontier = cur.map(_._1)
-    var r = 0
-    while (r < rounds && frontier.nonEmpty) {
-      val dsts = neighborIds(0, frontier).distinct.filterNot(visited.contains)
-      if (dsts.isEmpty) frontier = Nil
-      else frontier = best(fetchScore(dsts), beam)
-      r += 1
-    }
-    visited.toSeq.sortBy { case (id, s) => (-s, id) }.take(k)
-      .zipWithIndex.map { case ((id, s), i) => (id, s, i + 1) }
   }
 
   /** Rank a [[beamVisited]] set: top-k per query, self-excluded by default. */
@@ -843,7 +596,7 @@ object GraphAnn {
   /** `portable = true` (the gated default) keeps the oracle-replayable
     * arithmetic: md5-ordered entry sample and round-4 similarities, so a
     * DuckDB oracle reproduces the walk decision-for-decision. `portable =
-    * false` is the SERVING form behind [[graft.GraftVectorStore]]: same
+    * false` is the serving form: same
     * walk — including the md5-ordered entry sample (one tiny TakeOrdered
     * either way, so serving keeps the gate's entry choice) — with raw
     * double similarities (no per-score rounding): still fully

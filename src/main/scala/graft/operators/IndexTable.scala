@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -56,7 +56,7 @@ object IndexTable {
     * there it keeps the documents; here the parquet IS the index, so drop
     * removes the path, and the relations read from it). */
   def drop(spark: SparkSession, path: String): Unit = {
-    relations.keySet.removeIf(_._2 == path)
+    relations.keySet.removeIf(_._1 == path)
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) { fs.delete(p, true); () }
@@ -108,13 +108,17 @@ object IndexTable {
     * be realized on read via [[readLatest]]. */
   private val ingestCounter = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** The next ingest stamp: millis << 10 + per-process counter, strictly
+    * increasing even for appends within the same millisecond. */
+  private[graft] def nextIngestSeq(): Long =
+    (System.currentTimeMillis() << 10) | (ingestCounter.incrementAndGet() & 0x3ff)
+
+  /** Stamp records that carry no `ingest_seq` yet; records that already
+    * carry one (a compacted generation's rows) keep their own. */
   private def stampIngest(records: DataFrame): DataFrame = {
-    // millis << 10 + per-process counter: strictly increasing even for
-    // appends within the same millisecond.
-    val gen = (System.currentTimeMillis() << 10) | (ingestCounter.incrementAndGet() & 0x3ff)
     val stamped =
       if (records.columns.contains("ingest_seq")) records
-      else records.withColumn("ingest_seq", lit(gen))
+      else records.withColumn("ingest_seq", lit(nextIngestSeq()))
     // every written file carries the tombstone column so mixed delta reads
     // never lose it to single-footer schema inference
     if (stamped.columns.contains("is_deleted")) stamped
@@ -131,48 +135,15 @@ object IndexTable {
     *
     * Scale shape: a delete of N ids writes N tiny rows — no read, no join,
     * no rewrite at delete time (deletion cost is deferred to the next
-    * compaction, which was already rewriting the tenant). Tombstones carry
-    * no layout column, so bucket/cell-pruned reads keep NULL-layout rows
-    * visible (a tombstone must mask its id in EVERY probe set). */
-  def deleteRecords(ids: DataFrame, path: String, alias: String): Unit = {
-    val tomb = ids.select(col(ids.columns.head).cast("string").as("id"))
+    * compaction, which was already rewriting the tenant). */
+  def deleteRecords(ids: DataFrame, path: String, alias: String): Unit =
+    append(ids.select(col(ids.columns.head).cast("string").as("id"))
       .withColumn("index_alias", lit(alias))
       .withColumn("document_path", lit(null).cast("string"))
       .withColumn("page_number", lit(null).cast("int"))
       .withColumn("page_content", lit(null).cast("string"))
       .withColumn("page_content_vector", lit(null).cast("array<float>"))
-      .withColumn("is_deleted", lit(true))
-    // layout-partitioned stores need tombstones at the SAME partition depth
-    // (mixed depths break partition discovery), so they go to a dedicated
-    // tombstone partition that every pruned read adds to its probe set
-    val spark = ids.sparkSession
-    val fs = fileSystem(spark, path)
-    val tenantDir = new org.apache.hadoop.fs.Path(path, aliasDirName(alias))
-    def hasLayout(c: String): Boolean =
-      fs.exists(tenantDir) && fs.listStatus(tenantDir)
-        .exists(st => st.isDirectory && st.getPath.getName.startsWith(c + "="))
-    if (hasLayout(BucketCol))
-      stampIngest(tomb.withColumn(BucketCol, lit(TombPartition)))
-        .write.mode(SaveMode.Append)
-        .partitionBy("index_alias", BucketCol).parquet(path)
-    else if (hasLayout(CellCol))
-      stampIngest(tomb.withColumn(CellCol, lit(TombPartition)))
-        .write.mode(SaveMode.Append)
-        .partitionBy("index_alias", CellCol).parquet(path)
-    else if (hasLayout(NodeBucketCol))
-      // the node bucket is a PURE function of the id (unlike the
-      // vector-derived LSH/IVF layouts), so a tombstone can land in the
-      // exact bucket holding its id's live rows — pruned reads see the
-      // mask with no tomb-partition scan
-      stampIngest(tomb.withColumn(NodeBucketCol, nodeBucketOf(col("id"))))
-        .write.mode(SaveMode.Append)
-        .partitionBy("index_alias", NodeBucketCol).parquet(path)
-    else append(tomb, path)
-  }
-
-  /** Disk value of the tombstone layout partition: no legal bucket
-    * ("b"+bits) or cell ("c"+id) value collides with it. */
-  private val TombPartition = "tomb"
+      .withColumn("is_deleted", lit(true)), path)
 
   /** [[deleteRecords]] for a driver-side id list. */
   def delete(spark: SparkSession, path: String, alias: String,
@@ -185,164 +156,6 @@ object IndexTable {
     stampIngest(records)
       .write.mode(SaveMode.Append).partitionBy("index_alias").parquet(path)
 
-  /** Conventional LSH bucket partition column (shared with
-    * [[graft.plans.LshTopKPruneRule]]). */
-  val BucketCol: String = graft.plans.LshTopKPruneRule.BucketCol
-
-  /** Default hyperplane seed for the bucketed layout — distinct from the
-    * embedder seed; must match between write and probe time. */
-  val DefaultLshSeed: Long = 42L
-
-  /** K1 at the 100 TB scale point: append with the vector's sign-LSH bucket
-    * as a SECOND partition column. A probe-time filter on [[BucketCol]] then
-    * prunes at the FILE level (Catalyst `PruneFileSourcePartitions` turns the
-    * `IN` probe list into PartitionFilters), so an approximate search touches
-    * (1 + bits)/2^bits of the tenant's files instead of scanning and
-    * discarding rows — the on-disk analogue of the reference's HNSW candidate
-    * narrowing (reference `modules/utilities.py:272-278`). */
-  /** Disk encoding of a bucket bit-string. The "b" prefix is load-bearing:
-    * a bare bit-string directory name (`__lsh_bucket=0110`) is type-inferred
-    * as an INTEGER partition column on read, silently dropping leading zeros
-    * — probe strings then never match leading-zero buckets. */
-  private def diskBucket(bitString: String): String = "b" + bitString
-
-  def appendBucketed(records: DataFrame, path: String, bits: Int, dim: Int,
-                     lshSeed: Long = DefaultLshSeed): Unit = {
-    val planes = SimilaritySearch.hyperplanes(bits, dim, lshSeed)
-    stampIngest(records)
-      .withColumn(BucketCol,
-        concat(lit("b"), SimilaritySearch.lshBucket(col("page_content_vector"), planes)))
-      .write.mode(SaveMode.Append).partitionBy("index_alias", BucketCol).parquet(path)
-  }
-
-  // ---------------- node-bucketed layout (graph stores) ----------------
-
-  /** Id-hash bucket partition column — the layout for GRAPH-indexed stores,
-    * whose serving access pattern is per-round POINT LOOKUPS of node ids
-    * (the HNSW walk), not vector-similarity probes. The bucket is a pure
-    * function of the record id (`pmod(xxhash64(id), GraphNodeBuckets)` —
-    * the walk's own node key), so every version of an id, its tombstone
-    * included, lives in ONE bucket: pruned reads have none of the
-    * re-ingest staleness caveat the vector-derived layouts carry. */
-  val NodeBucketCol: String = "__node_bucket"
-
-  /** Bucket fanout. 64 keeps a frontier round's probe set at <= a few
-    * dozen directories while a 100 TB tenant's per-bucket slice is 1/64 of
-    * the corpus — the walk reads files proportional to the frontier, not
-    * the index. */
-  val GraphNodeBuckets: Int = 64
-
-  private def nodeBucketOf(id: Column): Column =
-    concat(lit("n"), pmod(xxhash64(id), lit(GraphNodeBuckets.toLong)))
-
-  /** K1 at the graph-serving scale point: append with the id-hash bucket as
-    * a SECOND partition column, so the graph walk's per-round vector
-    * fetches prune at the FILE level ([[readLatestPrunedNodes]]). */
-  def appendNodeBucketed(records: DataFrame, path: String): Unit =
-    stampIngest(records)
-      .withColumn(NodeBucketCol, nodeBucketOf(col("id")))
-      .write.mode(SaveMode.Append)
-      .partitionBy("index_alias", NodeBucketCol).parquet(path)
-
-  /** Node-pruned tenant read: scan only the buckets holding the given
-    * xxhash64 node keys (plus legacy unrouted tombstones). Latest-per-id
-    * within the slice is EXACT here — an id's bucket never moves — so
-    * unlike the vector layouts there is no staleness window. */
-  def readLatestPrunedNodes(spark: SparkSession, path: String, alias: String,
-                            nodeIds: Seq[Long]): DataFrame = {
-    val probes = nodeIds.map(n =>
-      "n" + java.lang.Math.floorMod(n, GraphNodeBuckets.toLong)).distinct
-    latestView(spark, path, alias, df =>
-      if (df.columns.contains(NodeBucketCol))
-        df.where(col(NodeBucketCol).isin((probes :+ TombPartition): _*) ||
-          col(NodeBucketCol).isNull)
-      else df // unbucketed legacy store: unpruned but correct
-    ).drop(NodeBucketCol)
-  }
-
-  // ---------------- IVF-partitioned layout ----------------
-
-  /** IVF cell partition column (centroid-partitioned store — the second
-    * approximate layout next to the LSH-bucketed one). */
-  val CellCol: String = "__ivf_cell"
-
-  /** Centroids live under an underscore-prefixed sibling dir INSIDE the
-    * index path: parquet scans ignore `_`-prefixed directories, so the main
-    * table read never sees them, yet drop(path) removes everything. */
-  private def centroidsPath(path: String): String = s"$path/_graft_centroids"
-
-  private def diskCell(centroidId: Long): String = "c" + centroidId
-
-  /** K1 at the IVF scale point: assign every record's vector to its nearest
-    * centroid and write with the cell as a SECOND partition column — the
-    * inverted-file layout on disk. Centroids are built from this batch
-    * (deterministic seeding + Lloyd, [[SimilaritySearch.ivfCentroids]])
-    * unless the store already has them (appends after the first reuse the
-    * existing codebook so cells stay stable across generations). */
-  def appendIvf(records: DataFrame, path: String, nCentroids: Int,
-                iters: Int = 2): Unit = {
-    val spark = records.sparkSession
-    val centroids = readCentroids(spark, path).getOrElse {
-      val c = SimilaritySearch.ivfCentroids(records, nCentroids, iters,
-        vecCol = "page_content_vector", idCol = "id")
-      c.coalesce(1).write.mode(SaveMode.Overwrite).parquet(centroidsPath(path))
-      // Assign from the PERSISTED codebook, not the lazy plan: the plan
-      // contains monotonically_increasing_id, so a second execution (AQE
-      // re-planning, different partitioning) could stamp centroid_ids that
-      // disagree with what was just written, silently mis-routing
-      // readLatestPrunedIvf for the first batch.
-      spark.read.parquet(centroidsPath(path))
-    }
-    val celled = SimilaritySearch
-      .assignToCentroid(stampIngest(records), centroids,
-        vecCol = "page_content_vector", idCol = "id")
-      .withColumn(CellCol, concat(lit("c"), col("centroid_id")))
-      .drop("centroid_id")
-    celled.write.mode(SaveMode.Append)
-      .partitionBy("index_alias", CellCol).parquet(path)
-  }
-
-  /** The store's codebook, if this is an IVF-partitioned index. */
-  def readCentroids(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(centroidsPath(path))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(centroidsPath(path))) else None
-  }
-
-  /** Cell-pruned tenant read: rank the codebook by distance to the query
-    * vector (centroids are config-sized — a driver-side collect, the same
-    * way a real IVF index keeps its codebook in memory) and scan only the
-    * `nprobe` nearest cells' FILES. Latest-per-id within the pruned slice,
-    * same staleness caveat as [[readLatestPruned]]. */
-  def readLatestPrunedIvf(spark: SparkSession, path: String, alias: String,
-                          queryVec: Array[Float], nprobe: Int): DataFrame = {
-    val cells = readCentroids(spark, path) match {
-      case None => Seq.empty[String]
-      case Some(cdf) =>
-        cdf.collect().map { r =>
-          val id = r.getLong(r.fieldIndex("centroid_id"))
-          // codebooks written before round 6 carry float centroids, the
-          // portable build writes round-6 doubles — accept both
-          val c = r.getSeq[Any](r.fieldIndex("centroid")).map {
-            case f: Float => f.toDouble
-            case d: Double => d
-          }
-          var s = 0.0
-          var i = 0
-          val n = math.min(c.length, queryVec.length)
-          while (i < n) { val d = c(i) - queryVec(i); s += d * d; i += 1 }
-          (s, id)
-        }.sortBy(identity).take(nprobe).map(t => diskCell(t._2)).toSeq
-    }
-    latestView(spark, path, alias, df =>
-      // the tombstone partition stays visible in every probe set
-      if (cells.nonEmpty && df.columns.contains(CellCol))
-        df.where(col(CellCol).isin((cells :+ TombPartition): _*) ||
-          col(CellCol).isNull)
-      else df.where(lit(false))
-    ).drop(CellCol)
-  }
-
   // ---------------- compaction: generation zone + folded-delta manifest ----
 
   /** Base-zone root: compacted generations live under an underscore-prefixed
@@ -352,7 +165,7 @@ object IndexTable {
     * tenant per generation) holding:
     *
     *   - `index_alias=<a>/...` — the tenant's resolved rows (Spark-written,
-    *     layout partition columns preserved);
+    *     each row keeping its own `ingest_seq`);
     *   - `_folded_deltas` — manifest of the delta-zone files whose rows were
     *     folded into this generation (paths relative to the index root);
     *   - `_graft_committed` — the commit marker, created LAST. A generation
@@ -369,7 +182,9 @@ object IndexTable {
     * (ignored by readers, removed by the next compaction) or a committed
     * generation (readers switch atomically on the marker's existence).
     * Concurrent APPENDS during compaction are safe — their files are in no
-    * manifest, so they stay visible as delta; concurrent compactions of the
+    * manifest, so they stay visible as delta, and they rank against the
+    * generation rows by the stamps both sides took when they were written;
+    * concurrent compactions of the
     * SAME tenant are not (single compactor per tenant, as with any
     * OPTIMIZE). */
   private def baseRoot(path: String): String = s"$path/_graft_base"
@@ -461,26 +276,29 @@ object IndexTable {
   }
 
   /** Parquet relations reused across reads, one generation slot and one
-    * delta slot per (session, index path, tenant), each tagged with the
-    * key of the file set it was read from: the committed generation's
-    * directory (immutable once its marker lands) or the sorted active delta
-    * files (append-only). A `spark.read.parquet` relation freezes its file
-    * listing and inferred schema, so a slot whose key equals the current
-    * [[tenantView]] listing reads exactly what a fresh relation would —
-    * without the listing and the footer-inference job. Any write changes
-    * the listing, hence the key, and replaces the slot on the next read. */
+    * delta slot per (index path, tenant), each tagged with the session that
+    * read it and the key of the file set it was read from: the committed
+    * generation's directory (immutable once its marker lands) or the sorted
+    * active delta files (append-only). A `spark.read.parquet` relation
+    * freezes its file listing and inferred schema, so a slot whose session
+    * and key equal the current ones ([[tenantView]]'s listing) reads
+    * exactly what a fresh relation would — without the listing and the
+    * footer-inference job. Any write changes the listing, hence the key,
+    * and a read from another session replaces the slot too, so the map
+    * holds at most one session per slot. */
   private val relations =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String, String),
-      (Seq[String], DataFrame)]()
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String),
+      (SparkSession, Seq[String], DataFrame)]()
 
   private def reuse(spark: SparkSession, path: String, alias: String, slot: String,
                     key: Seq[String])(read: => DataFrame): DataFrame = {
-    val k = (spark, path, alias, slot)
-    Option(relations.get(k)).filter(_._1 == key).map(_._2).getOrElse {
-      val df = read
-      relations.put(k, (key, df))
-      df
-    }
+    val k = (path, alias, slot)
+    Option(relations.get(k)).filter(v => (v._1 eq spark) && v._2 == key).map(_._3)
+      .getOrElse {
+        val df = read
+        relations.put(k, (spark, key, df))
+        df
+      }
   }
 
   private def viewFrame(spark: SparkSession, path: String, alias: String,
@@ -492,8 +310,8 @@ object IndexTable {
       if (deltas.isEmpty) None
       else {
         val files = deltas.sorted
-        // basePath keeps partition-column discovery (index_alias + layout
-        // cols) rooted at the index even though we hand Spark leaf files.
+        // basePath keeps partition-column discovery (index_alias) rooted
+        // at the index even though we hand Spark leaf files.
         Some(reuse(spark, path, alias, "delta", files)(
           spark.read.option("basePath", path).parquet(files.map(d => s"$path/$d"): _*)))
       }
@@ -508,7 +326,7 @@ object IndexTable {
     }
   }
 
-  /** Remove now-empty delta directories bottom-up (layout subdirs, then the
+  /** Remove now-empty delta directories bottom-up (any subdirs, then the
     * tenant dir). Never touches a non-empty dir, so concurrent appends are
     * safe. Returns true when `dir` is gone. */
   private def pruneEmptyDirs(fs: org.apache.hadoop.fs.FileSystem,
@@ -532,9 +350,9 @@ object IndexTable {
     * record per id survives, stale rows are dropped) and rewrite the slice
     * as fresh files — the OPTIMIZE/VACUUM analogue every append-only store
     * needs once streaming ingest starts producing a small file per
-    * micro-batch. Layout-preserving: the LSH bucket / IVF cell partition
-    * column is kept if present, so pruned reads behave identically after
-    * compaction. Publication follows the generation + manifest protocol
+    * micro-batch. Each surviving row keeps its own `ingest_seq`, so a
+    * write ranks by when it happened, not by when it was folded.
+    * Publication follows the generation + manifest protocol
     * documented at [[baseRoot]]; retirement is retention-gated: a
     * superseded generation (and the delta files its successor folded) is
     * deleted only once the successor has been committed for at least
@@ -554,12 +372,11 @@ object IndexTable {
       .transform(df =>
         if (!df.columns.contains("is_deleted")) df
         else df.where(!coalesce(col("is_deleted"), lit(false))))
-    val layoutCols = Seq(BucketCol, CellCol, NodeBucketCol)
-      .filter(resolved.columns.contains)
     val genDir = new org.apache.hadoop.fs.Path(baseRoot(path), s"gen_${nextGenId()}")
-    stampIngest(resolved)
-      .write.partitionBy(("index_alias" +: layoutCols): _*)
-      .parquet(genDir.toString)
+    // each surviving row keeps the stamp it was written with: restamping
+    // the generation with this compaction's clock would rank it above an
+    // append that took its stamp earlier but landed after the listing
+    stampIngest(resolved).write.partitionBy("index_alias").parquet(genDir.toString)
     if (!fs.exists(new org.apache.hadoop.fs.Path(genDir, aliasDirName(alias)))) {
       // Empty tenant: a zero-row dynamic-partition write emits no tenant
       // dir, so there is nothing to publish — remove the empty generation
@@ -619,23 +436,6 @@ object IndexTable {
   def deltaFileCount(spark: SparkSession, path: String, alias: String): Int =
     tenantView(spark, path, alias)._2.size
 
-  /** On-disk bytes of the tenant's current view — its newest committed
-    * generation's files plus the active deltas, from the same listing a
-    * read plans over (FS metadata only, no Spark job). Superseded
-    * generations and folded deltas still retained for in-flight readers
-    * are not counted; superseded versions and tombstones inside the active
-    * deltas are, so it is an upper bound of the latest slice's size. A file
-    * retired by a concurrent vacuum between the listing and its size probe
-    * counts zero. */
-  def footprintBytes(spark: SparkSession, path: String, alias: String): Long = {
-    val fs = fileSystem(spark, path)
-    val (gen, active, _) = tenantView(spark, path, alias)
-    def bytes(p: org.apache.hadoop.fs.Path): Long =
-      scala.util.Try(fs.getContentSummary(p).getLength).getOrElse(0L)
-    gen.map(g => bytes(new org.apache.hadoop.fs.Path(g, aliasDirName(alias)))).getOrElse(0L) +
-      active.map(d => bytes(new org.apache.hadoop.fs.Path(s"$path/$d"))).sum
-  }
-
   /** Committed generation ids for a tenant, newest first — the time-travel
     * catalog. Each committed generation is a CONSISTENT snapshot (compact
     * folds every delta file on disk into the new generation before the
@@ -692,93 +492,24 @@ object IndexTable {
     *     set BROADCASTS — the generation bulk passes through a broadcast
     *     anti-join untouched (narrow), and the window runs solely over
     *     (contested generation rows ∪ delta rows). */
-  def readLatest(spark: SparkSession, path: String, alias: String): DataFrame =
-    latestView(spark, path, alias, identity)
-
-  /** Bucket-pruned tenant read for a bucketed index ([[appendBucketed]]):
-    * only the probe buckets' files are listed and scanned. Latest-per-id is
-    * resolved WITHIN the pruned slice (same delta-aware shape as
-    * [[readLatest]]) — correct because a record's bucket is
-    * a pure function of its vector, so re-ingests of identical content land
-    * in the same bucket; a document whose content (hence vector) changed may
-    * briefly surface its previous version from a non-probed bucket, the same
-    * staleness window an HNSW rebuild has. */
-  def readLatestPruned(spark: SparkSession, path: String, alias: String,
-                       probes: Seq[String]): DataFrame = {
-    val diskProbes = probes.map(diskBucket)
-    latestView(spark, path, alias, df =>
-      // the tombstone partition (and any NULL-layout row) stays visible in
-      // every probe set so a delete masks its id under any probe selection
-      if (df.columns.contains(BucketCol))
-        df.where(col(BucketCol).isin((diskProbes :+ TombPartition): _*) ||
-          col(BucketCol).isNull)
-      else df.where(lit(false)) // empty/unbucketed index: no approximate hits
-    ).drop(BucketCol)
-  }
-
-  /** One tenant's view as SEPARATE generation/delta frames (never unioned),
-    * so the upsert resolution can treat the pre-resolved generation bulk
-    * differently from the small delta overlay. */
-  private def splitView(spark: SparkSession, path: String, alias: String)
-      : (Option[DataFrame], Option[DataFrame]) = {
+  def readLatest(spark: SparkSession, path: String, alias: String): DataFrame = {
     val (gen, active, _) = tenantView(spark, path, alias)
-    (gen.map(g => viewFrame(spark, path, alias, Some(g), Seq.empty)),
-      if (active.isEmpty) None
-      else Some(viewFrame(spark, path, alias, None, active)))
-  }
-
-  /** The delta-aware latest-per-id resolution behind [[readLatest]] /
-    * [[readLatestPruned]] / [[readLatestPrunedIvf]]. `prune` is applied to
-    * BOTH sides before resolution (bucket/cell file pruning), so the
-    * broadcast split composes with the approximate layouts. */
-  private def latestView(spark: SparkSession, path: String, alias: String,
-                         prune: DataFrame => DataFrame): DataFrame = {
-    val (genDf, deltaDf) = splitView(spark, path, alias)
-    resolveLatest(spark, path, alias, genDf, deltaDf, prune)
-  }
-
-  /** The delta-overlay resolution shared by [[latestView]] and the
-    * serving-path [[nodePointFetcher]] (which resolves the file view once
-    * and re-applies only the prune per call). */
-  private def resolveLatest(spark: SparkSession, path: String, alias: String,
-                            genDf: Option[DataFrame], deltaDf: Option[DataFrame],
-                            prune: DataFrame => DataFrame): DataFrame = {
-    val resolved = (genDf.map(prune), deltaDf.map(prune)) match {
-      case (None, None) =>
-        prune(viewFrame(spark, path, alias, None, Seq.empty)).drop("ingest_seq")
+    val genDf = gen.map(g => viewFrame(spark, path, alias, Some(g), Seq.empty))
+    val deltaDf =
+      if (active.isEmpty) None else Some(viewFrame(spark, path, alias, None, active))
+    val resolved = (genDf, deltaDf) match {
+      case (None, None) => viewFrame(spark, path, alias, None, Seq.empty)
       // compact() wrote latestPerId output: one row per id, no window needed.
-      case (Some(g), None) => g.drop("ingest_seq")
+      case (Some(g), None) => g
       case (None, Some(d)) => latestPerId(d)
       case (Some(g), Some(d)) =>
         val deltaIds = d.select("id").distinct()
         val untouched = g.join(broadcast(deltaIds), Seq("id"), "left_anti")
         val contested = g.join(broadcast(deltaIds), Seq("id"), "left_semi")
         latestPerId(contested.unionByName(d, allowMissingColumns = true))
-          .unionByName(untouched.drop("ingest_seq"), allowMissingColumns = true)
+          .unionByName(untouched, allowMissingColumns = true)
     }
-    dropTombstones(resolved)
-  }
-
-  /** Serving-resident point-lookup fetcher for a node-bucketed store: the
-    * tenant's file view (generation + delta relations, with their file
-    * indexes) resolves ONCE at construction; each call plans a
-    * bucket-pruned latest read over the CACHED relations — PartitionFilters
-    * on [[NodeBucketCol]], no per-call directory listing. This is the
-    * walk's per-round fetch shape: cost scales with the frontier's
-    * buckets, never the index. */
-  def nodePointFetcher(spark: SparkSession, path: String, alias: String)
-      : Seq[Long] => DataFrame = {
-    val (genDf, deltaDf) = splitView(spark, path, alias)
-    nodeIds => {
-      val probes = nodeIds.map(n =>
-        "n" + java.lang.Math.floorMod(n, GraphNodeBuckets.toLong)).distinct
-      resolveLatest(spark, path, alias, genDf, deltaDf, df =>
-        if (df.columns.contains(NodeBucketCol))
-          df.where(col(NodeBucketCol).isin((probes :+ TombPartition): _*) ||
-            col(NodeBucketCol).isNull)
-        else df
-      ).drop(NodeBucketCol)
-    }
+    dropTombstones(resolved.drop("ingest_seq"))
   }
 
   /** Serve only live rows: an id whose NEWEST record is a tombstone
@@ -788,13 +519,15 @@ object IndexTable {
     if (!df.columns.contains("is_deleted")) df
     else df.where(!coalesce(col("is_deleted"), lit(false))).drop("is_deleted")
 
+  /** Newest record per id, keeping its `ingest_seq`. Ties on the stamp (one
+    * batch holding the same id twice, or two writer JVMs taking the same
+    * stamp) break on (tombstone first, page_content asc), so the winner
+    * does not depend on how the rows were partitioned. */
   private def latestPerId(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    if (!df.columns.contains("ingest_seq")) df.dropDuplicates("id")
-    else {
-      val w = Window.partitionBy(col("id")).orderBy(col("ingest_seq").desc)
-      df.withColumn("rn", row_number().over(w)).where(col("rn") === 1)
-        .drop("rn", "ingest_seq")
-    }
+    val order = Seq("ingest_seq", "is_deleted").filter(df.columns.contains)
+      .map(col(_).desc) :+ col("page_content").asc
+    val w = Window.partitionBy(col("id")).orderBy(order: _*)
+    df.withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
   }
 }

@@ -57,53 +57,7 @@ object StreamingIngest {
     spark.read.parquet(indexPath).where(col("index_alias") === alias).count()
   }
 
-  /** Continuous ingest INTO THE LSH-BUCKETED LAYOUT: the parquet file sink
-    * cannot compute the bucket partition column, so each micro-batch goes
-    * through `foreachBatch` -> [[graft.operators.IndexTable.appendBucketed]]
-    * — the same write path the batch ingest uses, so layout and probe
-    * semantics are identical. foreachBatch replays a batch after a crash
-    * (at-least-once appends); the store's latest-per-id read makes replays
-    * invisible, the same idempotence Redis HSET gives the reference. */
-  def ingestOnceBucketed(spark: SparkSession, landingDir: String, globFilter: String,
-                         indexPath: String, checkpointDir: String, alias: String,
-                         bits: Int, dim: Int,
-                         pageSize: Int = Chunker.DefaultPageSize,
-                         lshSeed: Long = graft.operators.IndexTable.DefaultLshSeed,
-                         maxDeltaFiles: Int = Int.MaxValue): Long = {
-    val schema = spark.read.option("pathGlobFilter", globFilter).parquet(landingDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", globFilter).parquet(landingDir)
-      .withColumnRenamed("source", "document_path")
-    val records = transform(stream, alias, pageSize = pageSize)
-    // lshSeed MUST match the store's write/probe seed: buckets written under
-    // different hyperplanes than probe time uses silently miss every
-    // streamed document in approximate search.
-    val q = records.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.operators.IndexTable.appendBucketed(batch.toDF(), indexPath, bits, dim, lshSeed)
-        // Self-maintenance: micro-batch sinks land at least one small file
-        // per batch; once the tenant's delta zone passes the threshold,
-        // fold it into a fresh committed generation. Safe under concurrent
-        // readers (generation publish is atomic on the commit marker) and
-        // under foreachBatch replays (compaction is idempotent — a replayed
-        // batch's rows resolve by latest-per-id like any upsert).
-        if (graft.operators.IndexTable.deltaFileCount(spark, indexPath, alias) > maxDeltaFiles) {
-          graft.operators.IndexTable.compact(spark, indexPath, alias)
-          ()
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    // the store view, not a raw scan: after a triggered compaction the
-    // tenant's rows live in a committed generation the raw scan cannot see
-    graft.operators.IndexTable.read(spark, indexPath, alias).count()
-  }
-
-  /** Vector-native continuous graph ingest — the [[ingestOnceGraph]] shape
-    * with the embed pipeline factored out: micro-batches of PRE-EMBEDDED
+  /** Vector-native continuous graph ingest: micro-batches of PRE-EMBEDDED
     * vectors land and each batch links into the persisted flat
     * [[graft.operators.GraphAnn.knnGraph]] edge table via
     * [[graft.operators.GraphAnn.insertNodes]] (beam-walk link against the
@@ -114,8 +68,7 @@ object StreamingIngest {
     *
     * `corpus` must carry vectors for both old and new ids (the latest
     * view). Batch ids must be NEW — the [[graft.operators.GraphAnn
-    * .insertNodes]] update contract; id-rewriting streams go through the
-    * facade ([[ingestOnceGraph]]), which detects updates and rebuilds.
+    * .insertNodes]] update contract.
     * The merged table is materialized (localCheckpoint) BEFORE the
     * overwrite so the sink never reads the files it is replacing.
     *
@@ -167,51 +120,5 @@ object StreamingIngest {
     q.processAllAvailable()
     q.stop()
     spark.read.parquet(graphPath).count()
-  }
-
-  /** Continuous ingest INTO THE GRAPH-ANN STORE: each micro-batch appends
-    * to the node-bucketed layout AND keeps the persisted neighbor graph
-    * LIVE — brand-new documents link in incrementally via the facade's
-    * append path ([[graft.operators.GraphAnn.hnswInsert]] /
-    * [[graft.operators.GraphAnn.insertNodes]]: LSH-bounded batch-internal
-    * candidates + a beam-walk link against the existing graph, entry file
-    * refreshed with the merged graph), so approximate search never waits
-    * for a rebuild between batches. The first batch builds the graph if
-    * none exists yet.
-    *
-    * Idempotence under foreachBatch replays (at-least-once): a replayed
-    * batch's rows re-append and resolve by latest-per-id like any upsert,
-    * and its ids are then EXISTING graph nodes, which the merge detects as
-    * updates — it invalidates the graph and this loop immediately rebuilds
-    * from the latest view. A replay can therefore cost a rebuild, never a
-    * duplicate edge or a stale-vector walk.
-    *
-    * Scale shape: per batch O(|batch|) embed+append, an O(|batch|)
-    * beam-walk link against the persisted graph, and one entry-file
-    * TakeOrdered — never an O(corpus) pass while ids stay new. */
-  def ingestOnceGraph(spark: SparkSession, landingDir: String, globFilter: String,
-                      indexPath: String, checkpointDir: String, alias: String,
-                      m: Int, layers: Int = 0,
-                      pageSize: Int = Chunker.DefaultPageSize): Long = {
-    val store = new graft.GraftVectorStore(spark, indexPath,
-      graphM = Some(m), graphLayers = layers)
-    val schema = spark.read.option("pathGlobFilter", globFilter).parquet(landingDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", globFilter).parquet(landingDir)
-      .withColumnRenamed("source", "document_path")
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val docs = batch.toDF().select(col("document_path"), col("text"))
-        // the facade's append path: node-bucketed rows + incremental graph
-        // merge + entry refresh (+ update-detect -> invalidate)
-        store.addDocuments(docs, alias, pageSize = pageSize)
-        if (!store.graphIndexExists(alias)) store.buildGraphIndex(alias)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    graft.operators.IndexTable.read(spark, indexPath, alias).count()
   }
 }

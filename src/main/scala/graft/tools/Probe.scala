@@ -151,87 +151,6 @@ object Probe {
         println("RANGE-EDGE-ROWS=" + RangeJoin.pointInInterval(
           pts, "v", iv, "lo", "hi", 1.0).count())
 
-      case "store" =>
-        // Bucketed on-disk store: end-to-end recall + latency of
-        // `search(approximate = true)` (partition-pruned probe of the
-        // query bucket + hamming-1 neighbors) vs the exact full-tenant
-        // scan, over the SAME store files. This is the sf0.1 evidence for
-        // the RECALL.md table: the in-memory lshTopK numbers there measure
-        // the math; this measures the storage layout actually doing the
-        // pruning.
-        val docsRaw = spark.read.parquet(s"$sfDir/documents.parquet")
-        val docs = docsRaw
-          .select(concat(lit("doc_"), col("doc_id")).as("document_path"), col("text"))
-        val prompts = docsRaw.where(col("doc_id") % 200 === 0)
-          .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-          .map { case (_, t) => t.split("\\s+").take(12).mkString(" ") }
-        println(s"prompts=${prompts.length}")
-        println("config,recall_at_10,file_frac,s_exact_per_q,s_approx_per_q")
-        for (bits <- Seq(4, 6, 8)) {
-          val path = java.nio.file.Files
-            .createTempDirectory(s"probe_store_b$bits").toString + "/idx"
-          val store = new graft.GraftVectorStore(spark, path, lshBits = Some(bits))
-          time(s"ingest bits=$bits")(store.addDocuments(docs, "tenant"))
-          for (depth <- Seq(1, 2)) {
-            var inter = 0; var tot = 0; var tEx = 0.0; var tAp = 0.0
-            prompts.foreach { p =>
-              val t0 = System.nanoTime
-              val ex = store.search(p, "tenant", 10).select("id").as[String].collect().toSet
-              val t1 = System.nanoTime
-              val ap = store.search(p, "tenant", 10, approximate = true, probeDepth = depth)
-                .select("id").as[String].collect().toSet
-              tEx += (t1 - t0) / 1e9; tAp += (System.nanoTime - t1) / 1e9
-              inter += ex.intersect(ap).size; tot += ex.size
-            }
-            val nProbes = (0 to depth).map(d =>
-              (0 until bits).combinations(d).size).sum
-            val frac = nProbes.toDouble / (1 << bits)
-            println(f"store bits=$bits depth=$depth,${inter.toDouble / tot}%.3f,$frac%.3f," +
-              f"${tEx / prompts.length}%.3f,${tAp / prompts.length}%.3f")
-          }
-        }
-
-      case "storeivf" =>
-        // IVF-partitioned on-disk store: recall of the cell-pruned read
-        // (readLatestPrunedIvf + exact top-k over the slice) vs the exact
-        // full-tenant scan — the centroid-partitioned counterpart of the
-        // "store" sweep above.
-        import graft.operators.{IndexTable, KnnSearch}
-        import graft.functions.Embedder
-        val docsRaw = spark.read.parquet(s"$sfDir/documents.parquet")
-        val docs = docsRaw
-          .select(concat(lit("doc_"), col("doc_id")).as("document_path"), col("text"))
-        val prompts = docsRaw.where(col("doc_id") % 200 === 0)
-          .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-          .map { case (_, t) => t.split("\\s+").take(12).mkString(" ") }
-        println(s"prompts=${prompts.length}")
-        println("config,recall_at_10,cell_frac,s_exact_per_q,s_approx_per_q")
-        for (cells <- Seq(8, 16)) {
-          val path = java.nio.file.Files
-            .createTempDirectory(s"probe_storeivf_c$cells").toString + "/idx"
-          val records = IndexTable.ingestRecords(docs, "tenant")
-          time(s"ingest c=$cells")(IndexTable.appendIvf(records, path, cells))
-          for (nprobe <- Seq(1, 2, 4)) {
-            var inter = 0; var tot = 0; var tEx = 0.0; var tAp = 0.0
-            prompts.foreach { p =>
-              val qv = Embedder.embedQuery(p)
-              val t0 = System.nanoTime
-              val ex = KnnSearch.topK(
-                  IndexTable.readLatest(spark, path, "tenant"), qv, 10)
-                .select("id").as[String].collect().toSet
-              val t1 = System.nanoTime
-              val ap = KnnSearch.topK(
-                  IndexTable.readLatestPrunedIvf(spark, path, "tenant", qv, nprobe), qv, 10)
-                .select("id").as[String].collect().toSet
-              tEx += (t1 - t0) / 1e9; tAp += (System.nanoTime - t1) / 1e9
-              inter += ex.intersect(ap).size; tot += ex.size
-            }
-            println(f"storeivf c=$cells nprobe=$nprobe,${inter.toDouble / tot}%.3f," +
-              f"${nprobe.toDouble / cells}%.3f,${tEx / prompts.length}%.3f," +
-              f"${tAp / prompts.length}%.3f")
-          }
-        }
-
       case "embcos" =>
         // r13: stage-by-stage cost of dedup_embedding_cosine (sign-LSH
         // candidates + cosine verify), min-of-3 warm per stage.
@@ -359,11 +278,10 @@ object Probe {
         spark.streams.removeListener(listener)
 
       case "storegraph" =>
-        // Graph-layout store + the round-7 serving arithmetic: quantifies
-        // the oracle-portability tax (md5 entry ranking + per-score
-        // round-4) that the gated twin pays and the facade no longer does.
-        // Part 1: operator-level beamSearch, portable vs serving, same
-        // graph, same queries — recall@10 vs brute force and wall time.
+        // The oracle-portability tax (md5 entry ranking + per-score
+        // round-4) the gated walk pays over the serving arithmetic:
+        // operator-level beamSearch, portable vs serving, same graph,
+        // same queries — recall@10 vs brute force and wall time.
         import graft.operators.GraphAnn
         val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
         emb.count()
@@ -384,31 +302,6 @@ object Probe {
           val rec = bf.intersect(got).size.toDouble / bf.size
           println(f"beam portable=$portable,$rec%.3f,$dt%.2f")
         }
-        // Part 2: facade end-to-end — graph-layout store, exact vs
-        // approximate (serving) search per prompt.
-        val docsRaw = spark.read.parquet(s"$sfDir/documents.parquet")
-        val docs = docsRaw
-          .select(concat(lit("doc_"), col("doc_id")).as("document_path"), col("text"))
-        val prompts = docsRaw.where(col("doc_id") % 200 === 0)
-          .select(col("doc_id"), col("text")).as[(Long, String)].collect()
-          .map { case (_, t) => t.split("\\s+").take(12).mkString(" ") }
-        val path = java.nio.file.Files
-          .createTempDirectory("probe_storegraph").toString + "/idx"
-        val store = new graft.GraftVectorStore(spark, path, graphM = Some(16))
-        time("ingest graph m=16")(store.addDocuments(docs, "tenant"))
-        println("config,recall_at_10,s_exact_per_q,s_approx_per_q")
-        var inter = 0; var tot = 0; var tEx = 0.0; var tAp = 0.0
-        prompts.foreach { p =>
-          val t0 = System.nanoTime
-          val ex = store.search(p, "tenant", 10).select("id").as[String].collect().toSet
-          val t1 = System.nanoTime
-          val ap = store.search(p, "tenant", 10, approximate = true)
-            .select("id").as[String].collect().toSet
-          tEx += (t1 - t0) / 1e9; tAp += (System.nanoTime - t1) / 1e9
-          inter += ex.intersect(ap).size; tot += ex.size
-        }
-        println(f"storegraph m=16 serving,${inter.toDouble / tot}%.3f," +
-          f"${tEx / prompts.length}%.3f,${tAp / prompts.length}%.3f")
 
       case "deduplsh" =>
         // Selectivity/recall evidence for the bucketed embedding near-dup:

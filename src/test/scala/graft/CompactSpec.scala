@@ -79,33 +79,6 @@ class CompactSpec extends AnyFunSuite {
     assert(after.count() === base.count())
   }
 
-  test("compact preserves the bucketed layout and its pruned reads") {
-    val path = java.nio.file.Files.createTempDirectory("compact_bucketed").toString + "/idx"
-    val bits = 2
-    val dim = graft.core.ModelRegistry.dim(graft.core.ModelRegistry.default)
-    val records = IndexTable.ingestRecords(docs, "t", pageSize = 32)
-    IndexTable.appendBucketed(records, path, bits, dim)
-    IndexTable.appendBucketed(IndexTable.ingestRecords(docs, "t", pageSize = 32),
-      path, bits, dim)
-
-    val qvec = graft.functions.Embedder.embedQuery("fast spark table scan")
-    val probes = graft.plans.LshTopKPruneRule
-      .probeBuckets(qvec, bits, dim, IndexTable.DefaultLshSeed)
-    val before = IndexTable.readLatestPruned(spark, path, "t", probes.toSeq)
-      .select($"id").as[String].collect().toSet
-
-    IndexTable.compact(spark, path, "t")
-
-    val gens = genDirsFor(path, "t")
-    assert(gens.size === 1)
-    val bucketDirs = new java.io.File(gens.head, "index_alias=t").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("__lsh_bucket=")).map(_.getName)
-    assert(bucketDirs.length > 1, s"bucket layout lost: ${bucketDirs.toSeq}")
-    val after = IndexTable.readLatestPruned(spark, path, "t", probes.toSeq)
-      .select($"id").as[String].collect().toSet
-    assert(after === before, "pruned reads must be unchanged by compaction")
-  }
-
   test("a concurrent reader never observes a missing or doubled tenant during compaction") {
     val path = java.nio.file.Files.createTempDirectory("compact_race").toString + "/idx"
     IndexTable.append(IndexTable.ingestRecords(docs, "t", pageSize = 32), path)
@@ -255,22 +228,51 @@ class CompactSpec extends AnyFunSuite {
       "no delta files (tombstone or data) survive the zero-retention vacuum")
   }
 
-  test("tombstones mask their id in bucket-pruned reads (every probe set)") {
-    val path = java.nio.file.Files.createTempDirectory("compact_del_b").toString + "/idx"
-    val records = IndexTable.ingestRecords(docs, "t", pageSize = 32)
-    IndexTable.appendBucketed(records, path, bits = 2, dim = 64)
-    val probes = Seq("00", "01", "10", "11")
-    val all = IndexTable.readLatestPruned(spark, path, "t", probes)
-      .select($"id").as[String].collect().toSet
-    val victim = all.toSeq.min
-    IndexTable.delete(spark, path, "t", Seq(victim))
-    val served = IndexTable.readLatestPruned(spark, path, "t", probes)
-      .select($"id").as[String].collect().toSet
-    assert(served === all - victim,
-      "a tombstone (NULL bucket) must mask its id under full-probe pruning")
-    // and under a partial probe set the victim must not reappear
-    val partial = IndexTable.readLatestPruned(spark, path, "t", probes.take(2))
-      .select($"id").as[String].collect().toSet
-    assert(!partial.contains(victim))
+  test("an append stamped before a compaction but landing after it wins over the generation row") {
+    val path = java.nio.file.Files.createTempDirectory("compact_stamp_race").toString + "/idx"
+    val doc = Seq(("race/doc", "version one")).toDF("document_path", "text")
+    IndexTable.append(IndexTable.ingestRecords(doc, "t", pageSize = 32), path)
+    // the interleaving two threads produce: the writer takes its stamp,
+    // a compaction lists and folds the tenant, then the writer's files land
+    val stamp = IndexTable.nextIngestSeq()
+    IndexTable.compact(spark, path, "t")
+    IndexTable.append(IndexTable.ingestRecords(
+        doc.withColumn("text", lit("version two")), "t", pageSize = 32)
+      .withColumn("ingest_seq", lit(stamp)), path)
+    def served: Seq[String] = IndexTable.readLatest(spark, path, "t")
+      .select($"page_content").as[String].collect().toSeq
+    assert(served === Seq("version two"), "the later write must be visible")
+    IndexTable.compact(spark, path, "t")
+    assert(served === Seq("version two"), "and must survive the next compaction")
+  }
+
+  test("rows with the same id and stamp resolve to one winner at any input partitioning") {
+    // one batch holding the same document twice: every row gets the same
+    // id and the same stamp, so only the tie-break can pick the winner
+    val batch = "hgfedcba".map(c => ("dup/doc", s"copy $c")).toDF("document_path", "text")
+    def resolve(partitions: Int): (Seq[String], Seq[String]) = {
+      val path = java.nio.file.Files
+        .createTempDirectory(s"compact_tie_$partitions").toString + "/idx"
+      val records = IndexTable.ingestRecords(batch, "t", pageSize = 32)
+      IndexTable.append(
+        if (partitions == 1) records.coalesce(1)
+        else records.repartitionByRange(partitions, $"page_content"), path)
+      assert(IndexTable.read(spark, path, "t").rdd.getNumPartitions === partitions)
+      def served: Seq[String] = IndexTable.readLatest(spark, path, "t")
+        .select($"page_content").as[String].collect().toSeq
+      val beforeCompact = served
+      IndexTable.compact(spark, path, "t")
+      (beforeCompact, served)
+    }
+    val expected = (Seq("copy a"), Seq("copy a"))
+    // an open cost as large as a split keeps Spark from packing the small
+    // files together: each file is read as its own input partition
+    val openCost = "spark.sql.files.openCostInBytes"
+    val before = spark.conf.getOption(openCost)
+    spark.conf.set(openCost, spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    try {
+      assert(resolve(1) === expected)
+      assert(resolve(8) === expected)
+    } finally before.fold(spark.conf.unset(openCost))(spark.conf.set(openCost, _))
   }
 }

@@ -377,10 +377,14 @@ class DedupSpec extends AnyFunSuite {
       val emb = spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
       val edges = graft.operators.GraphAnn.knnGraph(
         emb.where($"vec_id" < 200), m = 4, nBits = 3, nTables = 2, dim = 64)
-      val got = graft.operators.GraphAnn.beamSearchSingle(
-        emb.where($"vec_id" < 200), edges,
-        Array.fill(64)(0.1f), k = 5, beam = 4, rounds = 2)
-      assert(got.nonEmpty)
+      // budget 0 forces the distributed walk, whose loop runs on the
+      // walkSession clone
+      val queries = emb.where($"vec_id" < 3)
+        .select($"vec_id".as("q_id"), $"embedding".as("q_vec"))
+      val got = graft.operators.GraphAnn.beamSearch(
+        emb.where($"vec_id" < 200), edges, queries, k = 5, beam = 4,
+        rounds = 2, driverCorpusBudget = 0L)
+      assert(got.count() > 0)
     } finally { running = false; poller.join() }
     assert(dirty.isEmpty, s"shared session conf mutated to $dirty mid-run")
     assert(spark.conf.get("spark.sql.shuffle.partitions") === before)

@@ -87,48 +87,6 @@ class GraphAnnSpec extends AnyFunSuite {
     assert(recall > 0.35, s"recall=$recall after 10% deletes")
   }
 
-  test("beamSearchSingle ≡ distributed serving walk, query by query") {
-    val edges = GraphAnn.knnGraph(emb, m = 8, nBits = 4, nTables = 8, dim = 64)
-      .localCheckpoint()
-    val batch = GraphAnn.beamSearch(emb, edges, qs, k = 10, beam = 8,
-        rounds = 3, nEntry = 8, excludeSelf = false, portable = false)
-      .select(col("q_id"), col("vec_id"), col("rank"))
-      .as[(Long, Long, Int)].collect().groupBy(_._1)
-      .view.mapValues(_.sortBy(_._3).map(_._2).toSeq).toMap
-    val queries = qs.select(col("q_id"), col("q_vec"))
-      .as[(Long, Seq[Float])].collect()
-    queries.foreach { case (qid, qv) =>
-      val single = GraphAnn.beamSearchSingle(emb, edges, qv.toArray, k = 10,
-        beam = 8, rounds = 3, nEntry = 8)
-      // identical entry sample + identical (sim desc, id) ordering on the
-      // same unrounded arithmetic → identical ranked ids
-      assert(single.map(_._1) === batch(qid), s"q=$qid")
-      assert(single.map(_._3) === (1 to single.length), s"q=$qid ranks")
-    }
-  }
-
-  test("hnswSearchSingle: descent-seeded serving walk — ranked shape, recall floor") {
-    val layered = GraphAnn.hnswGraph(emb, m = 8, nBits = 4, nTables = 8,
-      dim = 64, maxLayer = 2).localCheckpoint()
-    val bf = SimilaritySearch.bruteForceTopK(emb, qs, 10)
-      .select(col("q_id"), col("vec_id")).as[(Long, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val queries = qs.select(col("q_id"), col("q_vec"))
-      .as[(Long, Seq[Float])].collect()
-    var hit = 0; var total = 0
-    queries.foreach { case (qid, qv) =>
-      val single = GraphAnn.hnswSearchSingle(emb, layered, qv.toArray,
-        k = 10, beam = 8, rounds = 3, descentRounds = 2, maxLayer = 2)
-      assert(single.map(_._3) === (1 to single.length), s"q=$qid ranks")
-      val sims = single.map(_._2)
-      assert(sims === sims.sortBy(-(_: Double)), s"q=$qid sims non-increasing")
-      hit += bf(qid).intersect(single.map(_._1).toSet).size
-      total += bf(qid).size
-    }
-    val recall = hit.toDouble / total
-    assert(recall > 0.4, s"hnsw single-query recall=$recall")
-  }
-
   test("persisted neighbor graph: built once, bit-identical to the in-memory build") {
     val path = java.nio.file.Files.createTempDirectory("graft_gann").toString + "/idx"
     val fresh = GraphAnn.knnGraph(emb, m = 4, nBits = 4, nTables = 4, dim = 64)
@@ -284,44 +242,6 @@ class GraphAnnSpec extends AnyFunSuite {
     val recall = bf.intersect(got).size.toDouble / bf.size
     assert(recall > 0.4, s"hnsw recall=$recall")
     res.unpersist(false)
-  }
-
-  test("hnswInsert: append ≡ rebuild — layer membership holds and " +
-       "hierarchical recall stays within tolerance of a full rebuild") {
-    val base = emb.where(col("vec_id") % 10 =!= 0)
-    val fresh = emb.where(col("vec_id") % 10 === 0)
-    val baseL = GraphAnn.hnswGraph(base, m = 8, nBits = 4, nTables = 8,
-      dim = 64, maxLayer = 2).localCheckpoint()
-    val merged = GraphAnn.hnswInsert(emb, baseL, fresh,
-      m = 8, beam = 8, rounds = 3, nEntry = 8, nBits = 4, nTables = 8,
-      dim = 64, maxLayer = 2).cache()
-    // membership: a node appears at layer l only if its md5 level reaches l
-    val lvl = emb.select(col("vec_id"), GraphAnn.layerOf(col("vec_id")).as("lv"))
-      .as[(Long, Int)].collect().toMap
-    val byLayer = merged.select(col("layer"), col("src"))
-      .distinct().as[(Int, Long)].collect()
-    byLayer.foreach { case (l, id) => assert(lvl(id) >= l || l == 0, s"$id at $l") }
-    // every fresh node links bidirectionally at layer 0
-    val freshIds = fresh.select(col("vec_id")).as[Long].collect().toSet
-    val l0 = merged.where(col("layer") === 0).cache()
-    val srcs = l0.select(col("src")).distinct().as[Long].collect().toSet
-    val dsts = l0.select(col("dst")).distinct().as[Long].collect().toSet
-    assert(freshIds.subsetOf(srcs) && freshIds.subsetOf(dsts))
-    // recall: hierarchical search on the incremental pyramid vs a rebuild
-    val bf = SimilaritySearch.bruteForceTopK(emb, qs, 10)
-      .select(col("q_id"), col("vec_id")).as[(Long, Long)].collect().toSet
-    def recallOf(edges: org.apache.spark.sql.DataFrame): Double = {
-      val got = GraphAnn.hnswSearch(emb, edges, qs, k = 10, beam = 8,
-          rounds = 3, descentRounds = 2, maxLayer = 2)
-        .select(col("q_id"), col("vec_id")).as[(Long, Long)].collect().toSet
-      bf.intersect(got).size.toDouble / bf.size
-    }
-    val rebuilt = GraphAnn.hnswGraph(emb, m = 8, nBits = 4, nTables = 8,
-      dim = 64, maxLayer = 2).localCheckpoint()
-    val rInc = recallOf(merged); val rFull = recallOf(rebuilt)
-    assert(rInc >= rFull - 0.15,
-      s"incremental hnsw recall $rInc must stay within 0.15 of rebuild $rFull")
-    merged.unpersist(false); l0.unpersist(false)
   }
 
   test("beam search never scans the corpus: visited fraction stays far below 1") {

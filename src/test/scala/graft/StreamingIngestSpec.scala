@@ -30,110 +30,6 @@ class StreamingIngestSpec extends AnyFunSuite {
     assert(streamed.collect().toSeq === expected.collect().toSeq)
   }
 
-  test("streaming ingest into the bucketed layout matches batch appendBucketed") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_bucketed").toString
-    val bits = 2
-    val dim = graft.core.ModelRegistry.dim(graft.core.ModelRegistry.default)
-    // non-default seed on BOTH paths: pins that the streaming path threads
-    // lshSeed through to appendBucketed (a hardcoded default seed would land
-    // streamed docs in different buckets than probe time computes)
-    val seed = 7L
-    val n = StreamingIngest.ingestOnceBucketed(spark,
-      landingDir = TestSpark.sf, globFilter = "documents.parquet",
-      indexPath = s"$tmp/index", checkpointDir = s"$tmp/ckpt",
-      alias = "stream", bits = bits, dim = dim, pageSize = 32, lshSeed = seed)
-
-    // layout: bucket partition dirs exist under the alias
-    val aliasDir = new java.io.File(s"$tmp/index/index_alias=stream")
-    val bucketDirs = aliasDir.listFiles().filter(f =>
-      f.isDirectory && f.getName.startsWith("__lsh_bucket=")).map(_.getName)
-    assert(bucketDirs.length > 1, s"expected bucket partitions, got ${bucketDirs.toSeq}")
-
-    // content: identical (id, bucket) pairs to the batch bucketed write
-    val batchPath = s"$tmp/batch_index"
-    IndexTable.appendBucketed(IndexTable.ingestRecords(
-      spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
-        .select($"source".as("document_path"), $"text"),
-      alias = "stream", pageSize = 32), batchPath, bits, dim, seed)
-    def idBuckets(p: String) = spark.read.parquet(p)
-      .select($"id", col(IndexTable.BucketCol)).distinct()
-      .as[(String, String)].collect().toSet
-    assert(n === spark.read.parquet(batchPath).count())
-    assert(idBuckets(s"$tmp/index") === idBuckets(batchPath))
-  }
-
-  test("ingest-triggered compaction folds the delta zone into a committed generation") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_compact").toString
-    val bits = 2
-    val dim = graft.core.ModelRegistry.dim(graft.core.ModelRegistry.default)
-    // threshold 0: every batch trips the trigger, so after the drain the
-    // tenant's rows live in a committed generation, not loose delta files
-    val n = StreamingIngest.ingestOnceBucketed(spark,
-      landingDir = TestSpark.sf, globFilter = "documents.parquet",
-      indexPath = s"$tmp/index", checkpointDir = s"$tmp/ckpt",
-      alias = "stream", bits = bits, dim = dim, pageSize = 32,
-      maxDeltaFiles = 0)
-    assert(n > 0)
-    assert(IndexTable.deltaFileCount(spark, s"$tmp/index", "stream") === 0,
-      "all delta files must be folded")
-    val gens = new java.io.File(s"$tmp/index/_graft_base")
-    assert(gens.isDirectory && gens.listFiles().exists(_.getName.startsWith("gen_")))
-    // and the resolved content equals the batch ingest, bucketed layout kept
-    val batch = IndexTable.ingestRecords(
-      spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
-        .select($"source".as("document_path"), $"text"),
-      alias = "stream", pageSize = 32)
-    assert(IndexTable.readLatest(spark, s"$tmp/index", "stream").count() ===
-      batch.select($"id").distinct().count())
-  }
-
-  test("streaming graph ingest links new docs incrementally: stream edges " +
-      "== batch edges on the same waves, search stays live") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_graph").toString
-    // unique path per doc: waves must carry DISJOINT record ids, so the
-    // stream exercises the incremental NEW-node link, not the update path
-    val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
-      .select(concat_ws("/", $"source", $"doc_id").as("document_path"),
-        $"text", $"doc_id")
-    val wave1 = docs.where($"doc_id" % 2 === 0).drop("doc_id")
-    val wave2 = docs.where($"doc_id" % 2 === 1).drop("doc_id")
-    // wave 2 lands as parquet part-files for the stream to drain
-    wave2.write.parquet(s"$tmp/landing")
-    def seeded(path: String): GraftVectorStore = {
-      val st = new GraftVectorStore(spark, path, graphM = Some(4))
-      st.addDocuments(wave1, "t", pageSize = 64)
-      st.buildGraphIndex("t")
-      st
-    }
-    // streaming: wave 2 drains through foreachBatch -> incremental insert
-    val streamStore = seeded(s"$tmp/stream_idx")
-    val n = StreamingIngest.ingestOnceGraph(spark,
-      landingDir = s"$tmp/landing", globFilter = "*.parquet",
-      indexPath = s"$tmp/stream_idx", checkpointDir = s"$tmp/ckpt",
-      alias = "t", m = 4, pageSize = 64)
-    // batch twin: the same wave applied through the facade append path
-    val batchStore = seeded(s"$tmp/batch_idx")
-    batchStore.addDocuments(wave2, "t", pageSize = 64)
-    assert(n > 0)
-    assert(graft.operators.IndexTable
-      .readLatest(spark, s"$tmp/stream_idx", "t").count() ===
-      graft.operators.IndexTable
-      .readLatest(spark, s"$tmp/batch_idx", "t").count())
-    // the pin: IDENTICAL persisted edge tables — the stream linked the
-    // batch incrementally, decision-for-decision like the batch append
-    def edges(p: String) = spark.read.parquet(s"$p/_graft_knn_graph/t")
-      .select($"src", $"dst").as[(Long, Long)].collect().toSet
-    val se = edges(s"$tmp/stream_idx")
-    assert(se.nonEmpty && se === edges(s"$tmp/batch_idx"))
-    // wave-2 nodes are navigable immediately (no rebuild pending): a
-    // wave-2 doc's own text must surface itself through the graph walk
-    val probe = wave2.select($"text").as[String].head()
-      .split("\\s+").take(12).mkString(" ")
-    val hit = streamStore.search(probe, "t", topN = 3, approximate = true)
-    assert(hit.count() > 0)
-    streamStore.dropIndex(); batchStore.dropIndex()
-  }
-
   test("ingestOnceVectors re-stamps the readiness marker: a second " +
       "invocation (the multi-rep same-JVM gate scenario) reuses the MERGED " +
       "graph instead of sweeping it and rebuilding wave 1 only") {
