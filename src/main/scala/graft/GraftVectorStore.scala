@@ -77,9 +77,16 @@ final class GraftVectorStore(
   /** Tombstone-delete documents by path: every record (page) of each given
     * `document_path` is masked immediately and physically removed by the
     * next [[compactIndex]] + [[vacuumIndex]] (see
-    * [[operators.IndexTable.deleteRecords]]). */
+    * [[operators.IndexTable.deleteRecords]]).
+    *
+    * The ids come from the tenant's physical rows ([[IndexTable.read]]), so
+    * the delete is one shuffle-free scan and resolves nothing. Every record
+    * of an id carries the same path (the id is sha1 of path and page) and
+    * tombstones carry none, so the only ids beyond the live ones are ids
+    * whose newest record is already a tombstone: re-tombstoning them
+    * changes no read. */
   def deleteDocuments(paths: Seq[String], alias: String): Unit = {
-    val ids = IndexTable.readLatest(spark, indexPath, resolveAlias(alias))
+    val ids = IndexTable.read(spark, indexPath, resolveAlias(alias))
       .where(col("document_path").isin(paths: _*))
       .select(col("id"))
     IndexTable.deleteRecords(ids, indexPath, resolveAlias(alias))

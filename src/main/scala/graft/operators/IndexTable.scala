@@ -56,7 +56,7 @@ object IndexTable {
     * there it keeps the documents; here the parquet IS the index, so drop
     * removes the path, and the relations read from it). */
   def drop(spark: SparkSession, path: String): Unit = {
-    relations.keySet.removeIf(_._1 == path)
+    relations.keySet.forEach(k => if (k._1 == path) release(k._1, k._2, k._3))
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) { fs.delete(p, true); () }
@@ -119,8 +119,8 @@ object IndexTable {
     val stamped =
       if (records.columns.contains("ingest_seq")) records
       else records.withColumn("ingest_seq", lit(nextIngestSeq()))
-    // every written file carries the tombstone column so mixed delta reads
-    // never lose it to single-footer schema inference
+    // every written file carries the tombstone column, so no file reads it
+    // as null under the declared schema
     if (stamped.columns.contains("is_deleted")) stamped
     else stamped.withColumn("is_deleted", lit(false))
   }
@@ -275,48 +275,80 @@ object IndexTable {
     (gen, all.filterNot(folded), all)
   }
 
-  /** Parquet relations reused across reads, one generation slot and one
-    * delta slot per (index path, tenant), each tagged with the session that
-    * read it and the key of the file set it was read from: the committed
-    * generation's directory (immutable once its marker lands) or the sorted
-    * active delta files (append-only). A `spark.read.parquet` relation
-    * freezes its file listing and inferred schema, so a slot whose session
-    * and key equal the current ones ([[tenantView]]'s listing) reads
-    * exactly what a fresh relation would — without the listing and the
-    * footer-inference job. Any write changes the listing, hence the key,
-    * and a read from another session replaces the slot too, so the map
-    * holds at most one session per slot. */
-  private val relations =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String),
-      (SparkSession, Seq[String], DataFrame)]()
-
-  private def reuse(spark: SparkSession, path: String, alias: String, slot: String,
-                    key: Seq[String])(read: => DataFrame): DataFrame = {
-    val k = (path, alias, slot)
-    Option(relations.get(k)).filter(v => (v._1 eq spark) && v._2 == key).map(_._3)
-      .getOrElse {
-        val df = read
-        relations.put(k, (spark, key, df))
-        df
+  /** One reuse slot: a value built at most once for its session and key,
+    * and released by `free` when the slot is replaced or dropped. A slot
+    * released while its value is still being built frees that value as
+    * soon as it exists; the reader that asked for it still gets it. */
+  private final class Slot[A](val spark: SparkSession, val key: Seq[String],
+                              build: () => A, free: A => Unit) {
+    private var value: Option[A] = None
+    private var released = false
+    def get: A = synchronized {
+      if (value.isEmpty) {
+        val v = build()
+        if (released) free(v)
+        value = Some(v)
       }
+      value.get
+    }
+    def release(): Unit = synchronized { released = true; value.foreach(free) }
   }
+
+  /** Values reused across reads, three slots per (index path, tenant), each
+    * tagged with the session that built it and the key of the file set it
+    * was built from:
+    *   - `gen`: the parquet relation of the committed generation's
+    *     directory (immutable once its marker lands);
+    *   - `delta`: the parquet relation of the sorted active delta files
+    *     (append-only);
+    *   - `overlay`: the resolved delta overlay of [[readLatest]], keyed by
+    *     both (see [[resolveOverlay]]).
+    * A relation freezes its file listing and reads with the declared
+    * [[schema]], and the overlay is a function of those same files, so a
+    * slot whose session and key equal the current ones ([[tenantView]]'s
+    * listing) holds exactly what a fresh build would — without the listing
+    * and, for the overlay, without its two resolution jobs. Any write
+    * changes the listing, hence the key, and a read from another session
+    * replaces the slot too, so the map holds at most one session per slot.
+    * A replaced overlay is unpersisted. */
+  private val relations =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Slot[_]]()
+
+  /** The slot's value for this session and key, built at most once even
+    * when several threads ask for a new key together. */
+  private def reuse[A](spark: SparkSession, path: String, alias: String, slot: String,
+                       key: Seq[String], free: A => Unit = (_: A) => ())(
+                       build: => A): A = {
+    var replaced: Slot[_] = null
+    val s = relations.compute((path, alias, slot), (_, cur) =>
+      if (cur != null && (cur.spark eq spark) && cur.key == key) cur
+      else { replaced = cur; new Slot[A](spark, key, () => build, free) })
+    if (replaced != null) replaced.release()
+    s.asInstanceOf[Slot[A]].get
+  }
+
+  /** Drop one slot, releasing what it holds. */
+  private def release(path: String, alias: String, slot: String): Unit =
+    Option(relations.remove((path, alias, slot))).foreach(_.release())
 
   private def viewFrame(spark: SparkSession, path: String, alias: String,
                         gen: Option[org.apache.hadoop.fs.Path],
                         deltas: Seq[String]): DataFrame = {
-    val base = gen.map(g => reuse(spark, path, alias, "gen", Seq(g.toString))(
-      spark.read.parquet(g.toString).where(col("index_alias") === alias)))
+    // the declared schema: no footer-inference job, and one column order
+    // whatever order a file was written in
+    val base = gen.map(g => reuse[DataFrame](spark, path, alias, "gen", Seq(g.toString))(
+      spark.read.schema(schema).parquet(g.toString).where(col("index_alias") === alias)))
     val delta =
       if (deltas.isEmpty) None
       else {
         val files = deltas.sorted
         // basePath keeps partition-column discovery (index_alias) rooted
         // at the index even though we hand Spark leaf files.
-        Some(reuse(spark, path, alias, "delta", files)(
-          spark.read.option("basePath", path).parquet(files.map(d => s"$path/$d"): _*)))
+        Some(reuse[DataFrame](spark, path, alias, "delta", files)(spark.read.schema(schema)
+          .option("basePath", path).parquet(files.map(d => s"$path/$d"): _*)))
       }
     (base, delta) match {
-      case (Some(b), Some(d)) => b.unionByName(d, allowMissingColumns = true)
+      case (Some(b), Some(d)) => b.unionByName(d)
       case (Some(b), None) => b
       case (None, Some(d)) => d
       case (None, None) =>
@@ -359,19 +391,23 @@ object IndexTable {
     * `retainMillis`, so no reader that started inside the retention window
     * can lose a file from under its snapshot. A crash at any point never
     * loses the only copy of a row. `retainMillis = 0` reproduces immediate
-    * retirement (only safe with no concurrent readers).
+    * retirement (only safe with no concurrent readers or writers).
     *
-    * Returns the number of rows surviving compaction. */
+    * A tombstone that won stays in the generation until its stamp is older
+    * than `retainMillis`: a write stamped before it but landing after this
+    * compaction still loses to it, as it would have without the compaction.
+    *
+    * Returns the number of live rows surviving compaction. */
   def compact(spark: SparkSession, path: String, alias: String,
               retainMillis: Long = DefaultRetainMillis): Long = {
     val fs = fileSystem(spark, path)
     val (prevGen, active, allDeltas) = tenantView(spark, path, alias)
     val resolved = latestPerId(viewFrame(spark, path, alias, prevGen, active))
-      // ids whose newest record is a tombstone leave the store HERE —
-      // after vacuum's retention window their bytes are gone from disk
-      .transform(df =>
-        if (!df.columns.contains("is_deleted")) df
-        else df.where(!coalesce(col("is_deleted"), lit(false))))
+      // ids whose newest record is a tombstone older than the retention
+      // window leave the store HERE — after vacuum's retention window their
+      // bytes are gone from disk
+      .where(isLive ||
+        col("ingest_seq") >= lit((System.currentTimeMillis() - retainMillis) << 10))
     val genDir = new org.apache.hadoop.fs.Path(baseRoot(path), s"gen_${nextGenId()}")
     // each surviving row keeps the stamp it was written with: restamping
     // the generation with this compaction's clock would rank it above an
@@ -395,7 +431,7 @@ object IndexTable {
     // readers from (prevGen + active deltas) to this generation.
     writeSmallFile(fs, new org.apache.hadoop.fs.Path(genDir, CommitMarker), "")
     vacuum(spark, path, alias, retainMillis)
-    read(spark, path, alias).count()
+    read(spark, path, alias).where(isLive).count()
   }
 
   /** Retention-gated retirement of superseded files (see [[compact]]):
@@ -411,8 +447,10 @@ object IndexTable {
     def ageOf(p: org.apache.hadoop.fs.Path): Long =
       now - fs.getFileStatus(p).getModificationTime
     val committed = gensFor(fs, path, alias, committedOnly = true)
-    def aged(g: org.apache.hadoop.fs.Path): Boolean =
-      ageOf(new org.apache.hadoop.fs.Path(g, CommitMarker)) >= retainMillis
+    // every age is read before anything is deleted: a generation deleted as
+    // superseded is still the successor of the next older one
+    val aged = committed.filter(g =>
+      ageOf(new org.apache.hadoop.fs.Path(g, CommitMarker)) >= retainMillis).toSet
     // Folded delta files: only pre-G views reference the files G folded, so
     // they are deletable once G itself has been committed for the window.
     committed.filter(aged).foreach(g => readFolded(fs, g).foreach(rel =>
@@ -450,8 +488,9 @@ object IndexTable {
   /** Snapshot (time-travel) read: the tenant exactly as folded at the given
     * committed generation's publish — deltas appended and generations
     * committed AFTER it are excluded, because the generation dir itself IS
-    * the folded state (no manifest chasing needed). Throws if the id is
-    * unknown, not committed, or already vacuumed past retention. */
+    * the folded state (no manifest chasing needed); the tombstones it
+    * retains are left out. Throws if the id is unknown, not committed, or
+    * already vacuumed past retention. */
   def readGeneration(spark: SparkSession, path: String, alias: String,
                      genId: Long): DataFrame = {
     val fs = fileSystem(spark, path)
@@ -460,7 +499,7 @@ object IndexTable {
       .getOrElse(throw new IllegalArgumentException(
         s"generation $genId of '$alias' does not exist (committed ids: " +
           s"${generations(spark, path, alias).mkString(", ")})"))
-    viewFrame(spark, path, alias, Some(gen), Seq.empty)
+    viewFrame(spark, path, alias, Some(gen), Seq.empty).where(isLive)
   }
 
   /** Read one tenant's slice — the union of its newest committed compacted
@@ -488,36 +527,64 @@ object IndexTable {
     *     committed generation is already latest-resolved, so the read IS the
     *     raw pruned scan — no window, no exchange;
     *   - active deltas present: only ids that appear in the delta set can be
-    *     contested. Deltas are small by the compaction invariant, so their id
-    *     set BROADCASTS — the generation bulk passes through a broadcast
-    *     anti-join untouched (narrow), and the window runs solely over
-    *     (contested generation rows ∪ delta rows). */
+    *     contested. The first read of a (generation, delta files) pair
+    *     resolves them once ([[resolveOverlay]]); every read of that pair
+    *     plans as the generation scan minus the contested ids (a driver-side
+    *     set) united with the persisted overlay's live rows — one scan, no
+    *     window and no exchange, the plan shape of a compacted tenant. With
+    *     no generation the overlay alone is the tenant. */
   def readLatest(spark: SparkSession, path: String, alias: String): DataFrame = {
     val (gen, active, _) = tenantView(spark, path, alias)
     val genDf = gen.map(g => viewFrame(spark, path, alias, Some(g), Seq.empty))
-    val deltaDf =
-      if (active.isEmpty) None else Some(viewFrame(spark, path, alias, None, active))
-    val resolved = (genDf, deltaDf) match {
-      case (None, None) => viewFrame(spark, path, alias, None, Seq.empty)
-      // compact() wrote latestPerId output: one row per id, no window needed.
-      case (Some(g), None) => g
-      case (None, Some(d)) => latestPerId(d)
-      case (Some(g), Some(d)) =>
-        val deltaIds = d.select("id").distinct()
-        val untouched = g.join(broadcast(deltaIds), Seq("id"), "left_anti")
-        val contested = g.join(broadcast(deltaIds), Seq("id"), "left_semi")
-        latestPerId(contested.unionByName(d, allowMissingColumns = true))
-          .unionByName(untouched, allowMissingColumns = true)
-    }
+    val resolved =
+      if (active.isEmpty) {
+        release(path, alias, "overlay")
+        // compact() wrote latestPerId output: one row per id, no window needed.
+        genDf.getOrElse(viewFrame(spark, path, alias, None, Seq.empty))
+      } else {
+        val (overlay, contested) = reuse[(DataFrame, Seq[String])](spark, path, alias, "overlay",
+          gen.map(_.toString).toSeq ++ active.sorted,
+          (o: (DataFrame, Seq[String])) => { o._1.unpersist(false); () })(
+          resolveOverlay(spark, path, alias, genDf, active))
+        genDf.map(g => if (contested.isEmpty) g else g.where(!col("id").isin(contested: _*)))
+          .fold(overlay)(_.unionByName(overlay))
+      }
     dropTombstones(resolved.drop("ingest_seq"))
   }
+
+  /** Resolve the active deltas against the generation, once per file set:
+    * collect the delta ids to the driver (an `id`-only scan, no shuffle),
+    * then run the window over (generation rows with those ids ∪ delta rows)
+    * and persist the result, tombstone winners and `ingest_seq` included.
+    * Deltas are small by the compaction invariant, so both the id set and
+    * the overlay are. `persist` rather than a checkpoint: an evicted or
+    * released overlay recomputes from the files the retention window
+    * keeps. Returns the overlay and the contested ids. */
+  private def resolveOverlay(spark: SparkSession, path: String, alias: String,
+                             genDf: Option[DataFrame], active: Seq[String])
+      : (DataFrame, Seq[String]) = {
+    val deltaDf = viewFrame(spark, path, alias, None, active)
+    val contested =
+      if (genDf.isEmpty) Seq.empty
+      else deltaDf.select("id").collect().map(_.getString(0)).distinct.toSeq
+    // a cached plan keeps its shuffle's partition count (Spark does not
+    // coalesce it), so the overlay is narrowed to its input's own count
+    val overlay = latestPerId(genDf.map(_.where(col("id").isin(contested: _*)))
+        .fold(deltaDf)(_.unionByName(deltaDf)))
+      .coalesce(math.max(1, deltaDf.rdd.getNumPartitions))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    overlay.count()
+    (overlay, contested)
+  }
+
+  /** True for a row that is not a tombstone. */
+  private def isLive: org.apache.spark.sql.Column = !coalesce(col("is_deleted"), lit(false))
 
   /** Serve only live rows: an id whose NEWEST record is a tombstone
     * disappears; the flag column never leaves the store layer. Narrow —
     * resolution already happened. */
   private def dropTombstones(df: DataFrame): DataFrame =
-    if (!df.columns.contains("is_deleted")) df
-    else df.where(!coalesce(col("is_deleted"), lit(false))).drop("is_deleted")
+    df.where(isLive).drop("is_deleted")
 
   /** Newest record per id, keeping its `ingest_seq`. Ties on the stamp (one
     * batch holding the same id twice, or two writer JVMs taking the same
@@ -525,9 +592,8 @@ object IndexTable {
     * does not depend on how the rows were partitioned. */
   private def latestPerId(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val order = Seq("ingest_seq", "is_deleted").filter(df.columns.contains)
-      .map(col(_).desc) :+ col("page_content").asc
-    val w = Window.partitionBy(col("id")).orderBy(order: _*)
+    val w = Window.partitionBy(col("id"))
+      .orderBy(col("ingest_seq").desc, col("is_deleted").desc, col("page_content").asc)
     df.withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
   }
 }

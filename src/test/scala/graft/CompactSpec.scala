@@ -246,6 +246,32 @@ class CompactSpec extends AnyFunSuite {
     assert(served === Seq("version two"), "and must survive the next compaction")
   }
 
+  test("a write stamped before a delete stays masked after the delete is compacted") {
+    val path = java.nio.file.Files.createTempDirectory("compact_tomb_race").toString + "/idx"
+    val doc = Seq(("race/gone", "version one")).toDF("document_path", "text")
+    IndexTable.append(IndexTable.ingestRecords(
+      doc.union(Seq(("race/kept", "kept")).toDF("document_path", "text")), "t",
+      pageSize = 32), path)
+    // a writer takes its stamp, the doc is deleted, a compaction folds the
+    // tombstone, then the writer's files land
+    val stamp = IndexTable.nextIngestSeq()
+    IndexTable.delete(spark, path, "t", IndexTable.read(spark, path, "t")
+      .where($"document_path" === "race/gone").select($"id").as[String].collect().toSeq)
+    IndexTable.compact(spark, path, "t")
+    IndexTable.append(IndexTable.ingestRecords(
+        doc.withColumn("text", lit("version two")), "t", pageSize = 32)
+      .withColumn("ingest_seq", lit(stamp)), path)
+    def served: Seq[String] = IndexTable.readLatest(spark, path, "t")
+      .select($"page_content").as[String].collect().toSeq
+    assert(served === Seq("kept"), "the delete is the later write")
+    IndexTable.compact(spark, path, "t")
+    assert(served === Seq("kept"), "and stays so through the next compaction")
+    // zero retention forgets the tombstone and the row it masks
+    IndexTable.compact(spark, path, "t", retainMillis = 0L)
+    assert(IndexTable.read(spark, path, "t").select($"page_content").as[String]
+      .collect().toSeq === Seq("kept"))
+  }
+
   test("rows with the same id and stamp resolve to one winner at any input partitioning") {
     // one batch holding the same document twice: every row gets the same
     // id and the same stamp, so only the tie-break can pick the winner

@@ -218,4 +218,74 @@ class GraftVectorStoreSpec extends AnyFunSuite {
       .select($"document_path").as[String].collect().toSet
     assert(!again.contains("a.txt") && again.contains("c.txt"))
   }
+
+  /** deleteDocuments takes its ids from the physical rows: these cases
+    * read exactly as a delete of the live rows' ids would. */
+  private def deleteCase(dir: String)(body: (GraftVectorStore,
+      () => Seq[(String, Int, String)]) => Unit): Unit = {
+    val path = java.nio.file.Files.createTempDirectory(dir).toString + "/idx"
+    val store = new GraftVectorStore(spark, path)
+    store.addDocuments(Seq(
+      ("a.txt", "one two three four five six seven eight nine ten"),
+      ("b.txt", "eleven twelve thirteen fourteen fifteen"),
+      ("c.txt", "sixteen seventeen eighteen nineteen twenty")
+    ).toDF("document_path", "text"), "t", pageSize = 4)
+    store.compactIndex("t")
+    // every read twice: the first resolves the pending deltas, the second
+    // reuses that resolution
+    def served(): Seq[(String, Int, String)] = {
+      def once = graft.operators.IndexTable.readLatest(spark, path, "t")
+        .select($"document_path", $"page_number", $"page_content")
+        .as[(String, Int, String)].collect().toSeq.sorted
+      val first = once
+      assert(once === first)
+      first
+    }
+    body(store, () => served())
+    store.compactIndex("t")
+    store.dropIndex()
+  }
+
+  test("deleteDocuments twice: the doc stays deleted and the others are untouched") {
+    deleteCase("gvs_del_twice") { (store, served) =>
+      val before = served()
+      store.deleteDocuments(Seq("a.txt"), "t")
+      val once = served()
+      assert(once === before.filterNot(_._1 == "a.txt"))
+      store.deleteDocuments(Seq("a.txt"), "t")
+      assert(served() === once)
+      store.compactIndex("t")
+      assert(served() === once)
+      store.deleteDocuments(Seq("a.txt"), "t")
+      assert(served() === once)
+    }
+  }
+
+  test("deleteDocuments after a delete and a re-ingest masks the doc again") {
+    deleteCase("gvs_del_reingest") { (store, served) =>
+      val before = served()
+      store.deleteDocuments(Seq("b.txt"), "t")
+      assert(served() === before.filterNot(_._1 == "b.txt"))
+      store.addDocuments(Seq(("b.txt", "eleven twelve thirteen fourteen fifteen"))
+        .toDF("document_path", "text"), "t", pageSize = 4)
+      assert(served() === before)
+      store.deleteDocuments(Seq("b.txt"), "t")
+      assert(served() === before.filterNot(_._1 == "b.txt"))
+    }
+  }
+
+  test("deleteDocuments on an upserted doc masks every page of every version") {
+    deleteCase("gvs_del_upsert") { (store, served) =>
+      val before = served()
+      // the upsert has 2 pages where the original had 3: the old third page
+      // stays live, as the reference's per-page HSET keeps it
+      store.addDocuments(Seq(("a.txt", "ONE TWO THREE FOUR FIVE"))
+        .toDF("document_path", "text"), "t", pageSize = 4)
+      val upserted = served()
+      assert(upserted.filter(_._1 == "a.txt").map(_._3) ===
+        Seq("ONE TWO THREE FOUR", "FIVE", "nine ten"))
+      store.deleteDocuments(Seq("a.txt"), "t")
+      assert(served() === before.filterNot(_._1 == "a.txt"))
+    }
+  }
 }

@@ -150,7 +150,7 @@ class PlanPropertiesSpec extends AnyFunSuite {
     assert(p.contains("BroadcastExchange") || p.contains("BroadcastHashJoin"), p)
   }
 
-  test("serving read after compact() is exchange-free; a delta overlay broadcasts") {
+  test("serving read is exchange-free after compact() and over a resolved overlay") {
     import org.apache.spark.sql.functions._
     val path = java.nio.file.Files.createTempDirectory("plan_readlatest").toString + "/idx"
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
@@ -166,15 +166,27 @@ class PlanPropertiesSpec extends AnyFunSuite {
     val p = clean.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(!p.contains("Exchange"), p)
     assert(!p.contains("Window"), p)
-    // delta overlay: the generation bulk passes through a broadcast
-    // anti-join; a full-tenant hash exchange would mean the window is back
+    // delta overlay: resolved once when the read is planned, then the read
+    // scans the generation and the persisted overlay — no exchange and no
+    // window of its own (the overlay's resolution plan sits inside the
+    // cached relation, not among the read's operators)
     graft.operators.IndexTable.append(
       graft.operators.IndexTable.ingestRecords(
         docs.where(col("document_path").endsWith("/1")), "t", pageSize = 64), path)
     val overlay = graft.operators.IndexTable.readLatest(spark, path, "t")
     overlay.collect()
-    val p2 = overlay.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
-    assert(p2.contains("BroadcastHashJoin") || p2.contains("BroadcastExchange"), p2)
+    def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        nodes(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: nodes(q.plan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val p2 = overlay.queryExecution.executedPlan
+    val names = nodes(p2).map(_.nodeName)
+    assert(!names.exists(_.contains("Exchange")), p2)
+    assert(!names.exists(_.contains("Window")), p2)
+    assert(names.contains("InMemoryTableScan"), p2)
   }
 
   test("packing's only single-partition exchange carries the tiny bucket-totals table") {

@@ -75,6 +75,50 @@ class ServingPlanSpec extends AnyFunSuite {
     store.dropIndex()
   }
 
+  /** A compacted tenant of 40 docs with one round of deltas pending: 5 new
+    * docs, 5 upserted ones and a tombstone delete of 2 more. */
+  private def tenantWithDeltas(dir: String): (String, GraftVectorStore, Seq[String]) = {
+    val path = java.nio.file.Files.createTempDirectory(dir).toString + "/idx"
+    val store = new GraftVectorStore(spark, path)
+    val base = docs(40).collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    store.addDocuments(base.toDF("document_path", "text"), "t", pageSize = 32)
+    store.compactIndex("t")
+    store.search(prompt, "t", topN = 10).collect()
+    store.addDocuments((base.take(5).map { case (p, t) => (p, t.toUpperCase) } ++
+      (1 to 5).map(i => (s"new/$i", s"fresh spark scan number $i"))).toDF("document_path", "text"),
+      "t", pageSize = 32)
+    val paths = base.map(_._1).distinct
+    store.deleteDocuments(paths.slice(5, 7), "t")
+    (path, store, paths)
+  }
+
+  test("with deltas pending: a read plans with 0 jobs right after an append, and " +
+      "a warm exact search runs 1 job and no shuffle") {
+    val (path, store, _) = tenantWithDeltas("graft_plan_delta")
+    IndexTable.append(IndexTable.ingestRecords(
+      Seq(("planted/c", "okapi tapir")).toDF("document_path", "text"), "t"), path)
+    assert(measure(IndexTable.read(spark, path, "t"))._1 === 0)
+    // the first search of this file set resolves the overlay
+    val cold = store.search(prompt, "t", topN = 10).collect().toSeq
+    var warm = Seq.empty[org.apache.spark.sql.Row]
+    val (jobs, shuffle) = measure { warm = store.search(prompt, "t", topN = 10).collect().toSeq }
+    assert(jobs === 1)
+    assert(shuffle === 0L)
+    assert(warm === cold)
+    assert(measure(store.answers(prompt, "t", topN = 3, threshold = 0).collect())._1 === 1)
+    store.dropIndex()
+  }
+
+  test("deleteDocuments is one shuffle-free scan and resolves no overlay") {
+    val (_, store, paths) = tenantWithDeltas("graft_plan_del")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val (jobs, shuffle) = measure(store.deleteDocuments(paths.slice(7, 9), "t"))
+    assert(jobs === 1)
+    assert(shuffle === 0L)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === persisted)
+    store.dropIndex()
+  }
+
   test("every kind of write shows on the very next search") {
     val path = java.nio.file.Files.createTempDirectory("graft_fresh").toString + "/idx"
     val store = new GraftVectorStore(spark, path, binaryCandidates = Some(16))

@@ -1,0 +1,137 @@
+package graft
+
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.operators.IndexTable
+
+/** Model-based property spec of the store's HSET contract: seeded random
+  * interleavings of append, upsert, delete, compact and vacuum from two
+  * store instances (two sessions) over one path, checked after every step
+  * against a driver-side last-write-wins map.
+  *
+  * A writer takes its stamp when it plans its write, and its files may land
+  * after later writes and compactions. The spec reaches those orders
+  * deterministically: every step takes a stamp into a pool, and a stale
+  * write lands with a stamp from the pool, in records that already carry
+  * `ingest_seq`. Every doc is one page, so a doc path is one id.
+  *
+  * Every step reads twice through the same instance: the first read of a
+  * new file set resolves its delta overlay, the second reuses it. */
+class StoreModelSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  private val Alias = "t"
+
+  private def frame(s: SparkSession, docs: Seq[(String, String)]): DataFrame =
+    s.createDataFrame(docs).toDF("document_path", "text")
+
+  private def run(seed: Int, steps: Int): Unit = {
+    val rng = new scala.util.Random(seed)
+    val path = java.nio.file.Files.createTempDirectory(s"store_model_$seed").toString + "/idx"
+    val sessions = Seq(spark, spark.newSession())
+    val stores = sessions.map(new GraftVectorStore(_, path))
+    // doc path -> (stamp key, text; None for a tombstone). Stamp keys are
+    // doubled stamps: a write through the facade takes its stamp inside
+    // the call, so it gets the odd key just above the stamp taken before it
+    val model = mutable.Map.empty[String, (Long, Option[String])]
+    val pool = mutable.ArrayBuffer.empty[Long]
+    var version = 0
+    val log = mutable.ArrayBuffer.empty[String]
+
+    def merge(p: String, key: Long, text: Option[String]): Unit =
+      if (model.get(p).forall(_._1 < key)) model(p) = (key, text)
+    def facade(write: => Unit): Long = {
+      val before = IndexTable.nextIngestSeq()
+      write
+      2 * before + 1
+    }
+    def staleStamp(): Long = pool.remove(rng.nextInt(pool.size))
+    def live: Seq[String] = model.collect { case (p, (_, Some(_))) => p }.toSeq.sorted
+    def pick(from: Seq[String], n: Int): Seq[String] =
+      rng.shuffle(from).take(math.min(n, from.size))
+
+    def write(i: Int, paths: Seq[String], op: String): Unit = {
+      val docs = paths.map { p => version += 1; (p, s"$p version $version words") }
+      if (rng.nextBoolean()) {
+        val key = facade(stores(i).addDocuments(frame(sessions(i), docs), Alias, pageSize = 32))
+        docs.foreach { case (p, t) => merge(p, key, Some(t)) }
+        log += s"$op via store $i: ${paths.mkString(",")}"
+      } else {
+        val stamp = staleStamp()
+        IndexTable.append(IndexTable.ingestRecords(frame(sessions(i), docs), Alias, pageSize = 32)
+          .withColumn("ingest_seq", lit(stamp)), path)
+        docs.foreach { case (p, t) => merge(p, 2 * stamp, Some(t)) }
+        log += s"stale $op via store $i: ${paths.mkString(",")}"
+      }
+    }
+
+    def delete(i: Int): Unit =
+      if (rng.nextBoolean() && live.nonEmpty) {
+        // the facade tombstones the doc's physical rows; a live doc has some
+        val paths = pick(live, 2)
+        val key = facade(stores(i).deleteDocuments(paths, Alias))
+        paths.foreach(merge(_, key, None))
+        log += s"delete via store $i: ${paths.mkString(",")}"
+      } else if (model.nonEmpty) {
+        val paths = pick(model.keys.toSeq.sorted, 2)
+        val stamp = staleStamp()
+        IndexTable.append(frame(sessions(i), paths.map((_, "")))
+          .select(sha1(concat_ws("_", col("document_path"), lit(0))).as("id"))
+          .withColumn("index_alias", lit(Alias))
+          .withColumn("document_path", lit(null).cast("string"))
+          .withColumn("page_number", lit(null).cast("int"))
+          .withColumn("page_content", lit(null).cast("string"))
+          .withColumn("page_content_vector", lit(null).cast("array<float>"))
+          .withColumn("ingest_seq", lit(stamp))
+          .withColumn("is_deleted", lit(true)), path)
+        paths.foreach(merge(_, 2 * stamp, None))
+        log += s"stale delete via store $i: ${paths.mkString(",")}"
+      }
+
+    def check(i: Int, step: Int): Unit = {
+      val expected = model.collect { case (p, (_, Some(t))) => (p, t) }.toSeq.sorted
+      Seq("cold", "warm").foreach { read =>
+        val served = IndexTable.readLatest(sessions(i), path, Alias)
+          .select(col("document_path"), col("page_content")).collect()
+          .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+        assert(served === expected,
+          s"seed $seed step $step, $read read via store $i; ops:\n${log.mkString("\n")}")
+      }
+    }
+
+    var next = 0
+    pool += IndexTable.nextIngestSeq()
+    write(0, Seq.fill(3) { next += 1; s"m/$next" }, "append")
+    (1 to steps).foreach { step =>
+      val i = rng.nextInt(2)
+      pool += IndexTable.nextIngestSeq()
+      rng.nextInt(20) match {
+        case n if n < 6 => write(i, Seq.fill(1 + rng.nextInt(2)) { next += 1; s"m/$next" }, "append")
+        case n if n < 11 => write(i, pick(model.keys.toSeq.sorted, 2), "upsert")
+        case n if n < 15 => delete(i)
+        case n if n < 18 =>
+          val retain = if (rng.nextBoolean()) 0L else IndexTable.DefaultRetainMillis
+          stores(i).compactIndex(Alias, retain)
+          // zero retention retires the tombstones it folds at once: their
+          // ids leave the store, and a later write to them stands alone
+          if (retain == 0L) model.filterInPlace { case (_, (_, t)) => t.nonEmpty }
+          log += s"compact via store $i, retain $retain"
+        case _ =>
+          val retain = if (rng.nextBoolean()) 0L else IndexTable.DefaultRetainMillis
+          stores(i).vacuumIndex(Alias, retain)
+          log += s"vacuum via store $i, retain $retain"
+      }
+      if (pool.isEmpty) pool += IndexTable.nextIngestSeq()
+      check(i, step)
+    }
+    stores(0).dropIndex()
+  }
+
+  test("random interleavings from two store instances read as a last-write-wins map") {
+    Seq(1, 2, 3).foreach(run(_, steps = 12))
+  }
+}
