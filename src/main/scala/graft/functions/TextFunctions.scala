@@ -113,20 +113,54 @@ object TextFunctions {
 
   /** Quality score 0-100: length term (up to 40), stopword-ratio term (up to
     * 30, saturating at ratio 1/3), alphanumeric-char-ratio term (up to 30).
-    * Deterministic, SQL-expressible; same *shape* as the reference's 0-100
-    * answer scores (`app/app.py:90,100`). */
+    * Deterministic and SQL-expressible: the counts are those of
+    * `size(wsTokens(c))`, `size(filter(wsTokens(c), w -> lower(w) IN
+    * stoplist))`, `length(regexp_replace(c, '[^A-Za-z0-9]', ''))` and
+    * `length(c)`; same *shape* as the reference's 0-100 answer scores
+    * (`app/app.py:90,100`).
+    *
+    * The four counts come from one compiled pass over the text
+    * ([[qualityCounts]]: one whitespace split, no interpreted per-token
+    * lambda, no regex rewrite); the double arithmetic and the final
+    * `round(…, 2)` stay Spark expressions, so the score is bit-identical to
+    * the declarative form. Null text scores null. */
   def qualityScore(c: Column): Column = {
-    val words = wsTokens(c)
-    val nw = size(words).cast("double")
-    val stopHits = size(filter(words, w => lower(w).isInCollection(Stopwords))).cast("double")
-    val alnum = length(regexp_replace(c, "[^A-Za-z0-9]", "")).cast("double")
-    val total = length(c).cast("double")
+    val counts = qualityCounts(c)
+    val nw = counts("_1").cast("double")
+    val stopHits = counts("_2").cast("double")
+    val alnum = counts("_3").cast("double")
+    val total = counts("_4").cast("double")
     val lenTerm = lit(40.0) * least(nw / 100.0, lit(1.0))
     val stopTerm = when(nw === 0, lit(0.0))
       .otherwise(lit(30.0) * least(lit(3.0) * stopHits / nw, lit(1.0)))
     val alnumTerm = when(total === 0, lit(0.0)).otherwise(lit(30.0) * alnum / total)
     round(lenTerm + stopTerm + alnumTerm, 2)
   }
+
+  /** [[qualityScore]]'s per-document counts, in this order: whitespace
+    * tokens, stoplist hits among them, ASCII alphanumeric chars, and the
+    * length in code points. A stoplist hit is decided by a root-locale
+    * `toLowerCase`, as Spark's `lower` does for the stoplist's ASCII
+    * letters: the one non-ASCII letter that lower-cases to an ASCII one is
+    * the Kelvin sign, to `k`, and no stopword holds a `k`. */
+  private val qualityCounts = udf { (s: String) =>
+    if (s == null) null
+    else {
+      val words = WsPattern.split(s).filter(_.nonEmpty)
+      val stopHits = words.count(w => StopSet(w.toLowerCase(java.util.Locale.ROOT)))
+      var alnum = 0
+      var i = 0
+      while (i < s.length) {
+        val ch = s.charAt(i)
+        if ((ch >= 'a' && ch <= 'z') || (ch >= 'A' && ch <= 'Z') || (ch >= '0' && ch <= '9'))
+          alnum += 1
+        i += 1
+      }
+      (words.length, stopHits, alnum, s.codePointCount(0, s.length))
+    }
+  }
+
+  private val StopSet: Set[String] = Stopwords.toSet
 
   /** Document fingerprint: md5 of the canonicalized text (lowercase, strip
     * non-alphanumerics to spaces, collapse whitespace, trim). Two documents

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
 import graft.functions.TextFunctions
 
@@ -337,13 +338,15 @@ object Dedup {
       ngramJaccardPairs(df, textCol, idCol, n, threshold), path,
       df.sparkSession)
 
-  /** MinHash-LSH near-dup pairs: shingle -> minhash -> band -> bucket
-    * self-join -> exact Jaccard verify on the candidates only.
+  /** MinHash-LSH near-dup pairs: shingle -> minhash -> band -> bucket ->
+    * exact Jaccard verify inside the bucket, on its candidates only.
     *
-    * Scale shape: the only shuffle is the groupBy on (band_idx, band_key);
-    * candidate verification touches candidate pairs, not the n^2 cross
-    * product. Skewed buckets (boilerplate docs) are bounded by dropping
-    * buckets above `maxBucket`. */
+    * Scale shape: the signatures are one narrow per-document pass; the
+    * pairs take two shuffles, both in [[minhashNearDupPairsFromSigs]]: a
+    * keys-only count per band bucket, then one group of the bounded
+    * multi-member buckets, which verifies its own pairs. Verification
+    * touches candidate pairs, not the n^2 cross product. Skewed buckets
+    * (boilerplate docs) are bounded by dropping buckets above `maxBucket`. */
   def minhashNearDupPairs(df: DataFrame, textCol: String, idCol: String,
                           numHashes: Int = 12, bands: Int = 4,
                           threshold: Double = 0.5, ngram: Int = 2,
@@ -360,77 +363,121 @@ object Dedup {
       threshold, maxBucket)
   }
 
-  /** The band-join + verify tail of [[minhashNearDupPairs]], fed by an
+  /** The band-bucket + verify tail of [[minhashNearDupPairs]], fed by an
     * already-derived signature frame ([[minhashSignatures]] live or read
-    * back from its persisted artifact). Bit-identical output: the sig frame
-    * carries exactly the `sh` / band-key values the inline form computes.
-    * `sigs` is read 3x (band explode + two verify join-backs) and the band
-    * table 2x (self-join sides); persist both — tiny relative to the work
-    * that derives them (docs x shingle-array, docs x bands rows).
+    * back from its persisted artifact: the same `sh` / band-key values the
+    * inline form computes). A pair is a candidate when its two docs share a
+    * band bucket of at most `maxBucket` members; it is kept when its exact
+    * shingle Jaccard, `round(inter / (|sh1| + |sh2| - inter), 4)`, reaches
+    * `threshold`. Count, then verify:
+    *   1. one keys-only partial aggregate counts each (band_idx, band_key)
+    *      bucket, and its multi-member buckets (the only ones that can hold
+    *      a pair) are collected to the driver, split into oversize (more
+    *      than `maxBucket` members) and bounded keys. A broadcast join of
+    *      the bounded keys would collect the same rows to the driver;
+    *      collecting them here saves that join's own pass over the counts;
+    *   2. the bounded keys are broadcast-joined back to the band rows, so
+    *      only the docs of those buckets carry their shingles and band keys
+    *      into the second shuffle, a group per bucket;
+    *   3. each group verifies its own pairs (lower id first) and emits a
+    *      pair only from the lowest band where the two docs share a bucket
+    *      that is not oversize. Every pair is therefore emitted once: no
+    *      `dropDuplicates`, and no join-back to fetch shingles.
+    * On a signature frame with no shuffle in its lineage that is 6 jobs
+    * and 2 shuffles (`DedupPlanSpec`). `sigs` is persisted for its two
+    * passes; the pair set is materialized eagerly and `sigs` released, so
+    * repeated calls in one session hold no cached blocks.
     *
     * `requireBucketBound = true` makes the maxBucket skew cut CHECKED
-    * rather than assumed: any band bucket exceeding the bound throws
-    * instead of silently dropping pairs. Audit consumers (the shared pair
-    * graph the recall gates restrict) depend on no bucket being dropped,
-    * so their build must fail loudly the day a boilerplate bucket crosses
-    * the bound (r12 advisor finding); the unchecked form stays the right
-    * default for plain dedup, where dropping signal-free mega-buckets IS
-    * the design. */
+    * rather than assumed: a multi-member band bucket exceeding the bound
+    * throws after step 1, before any verification, instead of silently
+    * dropping pairs. Audit consumers (the shared pair graph the recall
+    * gates restrict) depend on no bucket being dropped, so their build
+    * must fail loudly the day a boilerplate bucket crosses the bound; the
+    * unchecked form stays the right default for plain dedup, where
+    * dropping signal-free mega-buckets IS the design. A one-member bucket
+    * holds no pair, so it is never counted against the bound. */
   def minhashNearDupPairsFromSigs(sigs: DataFrame, threshold: Double,
                                   maxBucket: Int = 1000,
                                   requireBucketBound: Boolean = false): DataFrame = {
-    val sh = sigs
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = sh
-      .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def bandRows(cols: Column*): DataFrame =
+      sh.select(cols :+ posexplode(col("bands")).as(Seq("band_idx", "band_key")): _*)
     // Skew bound: a bucket of size B yields B^2/2 candidate pairs; drop
     // buckets above maxBucket (boilerplate shared by thousands of docs
-    // carries no dedup signal and would OOM the self-join at scale).
-    val bucketSizes = banded.groupBy(col("band_idx"), col("band_key"))
-      .agg(count(lit(1)).as("__bn"))
-    val bounded = banded.join(bucketSizes, Seq("band_idx", "band_key"))
-      .where(col("__bn") <= maxBucket)
-      .drop("__bn")
-    val a = bounded.alias("a")
-    val b = bounded.alias("b")
-    val candidates = a.join(b,
-        col("a.band_idx") === col("b.band_idx") &&
-        col("a.band_key") === col("b.band_key") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"))
-      .dropDuplicates("id1", "id2")
-    val pairs = candidates
-      .join(sh.select(col("doc_id").as("id1"), col("sh").as("sh1")), "id1")
-      .join(sh.select(col("doc_id").as("id2"), col("sh").as("sh2")), "id2")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard", round(
-        col("inter") / (size(col("sh1")) + size(col("sh2")) - col("inter")), 4))
-      .where(col("jaccard") >= threshold)
-      .select("id1", "id2", "jaccard")
-    // Materialize the (small) pair set eagerly, then RELEASE the persisted
-    // intermediates: repeated invocations in a long-lived session must not
-    // accumulate cached blocks until executor storage evicts them.
-    val out = pairs.localCheckpoint()
-    if (requireBucketBound) {
-      // one tiny agg over the still-cached band table (build-path only,
-      // once per artifact publish — never in a serving read)
-      val mx = bucketSizes.agg(max(col("__bn"))).head() match {
-        case r if r.isNullAt(0) => 0L
-        case r => r.getLong(0)
-      }
-      if (mx > maxBucket) {
-        banded.unpersist(false); sh.unpersist(false)
-        throw new IllegalStateException(
-          s"minhash band bucket of size $mx exceeds maxBucket=$maxBucket: " +
-            "the audit-shared pair graph would silently drop pairs; raise " +
-            "maxBucket for this build or fix the boilerplate upstream")
-      }
+    // carries no dedup signal and would OOM the verify group at scale).
+    val (oversize, bounded) = bandRows().groupBy(col("band_idx"), col("band_key"))
+      .agg(count(lit(1)).as("n"))
+      .where(col("n") >= 2)
+      .collect()
+      .partition(_.getLong(2) > maxBucket)
+    if (requireBucketBound && oversize.nonEmpty) {
+      sh.unpersist(false)
+      throw new IllegalStateException(
+        s"minhash band bucket of size ${oversize.map(_.getLong(2)).max} exceeds " +
+          s"maxBucket=$maxBucket: the audit-shared pair graph would silently " +
+          "drop pairs; raise maxBucket for this build or fix the boilerplate upstream")
     }
-    banded.unpersist(false)
+    val cut = oversize.map(r => (r.getInt(0), r.getString(1))).toSet
+    // the bounded keys sit on the driver already, so the broadcast side is
+    // a local relation: broadcasting it runs no job
+    val boundedKeys = sigs.sparkSession.createDataFrame(
+      java.util.Arrays.asList(bounded.map(r => Row(r.getInt(0), r.getString(1))).toIndexedSeq: _*),
+      new StructType().add("band_idx", IntegerType).add("band_key", StringType))
+    val buckets = bandRows(col("doc_id"), col("sh"), col("bands"))
+      .join(broadcast(boundedKeys), Seq("band_idx", "band_key"))
+      .groupBy(col("band_idx"), col("band_key"))
+      // sorted by doc_id, so a member's index orders the pair
+      .agg(sort_array(collect_list(struct(col("doc_id"), col("sh"), col("bands")))).as("m"))
+    val pairs = buckets
+      .select(col("m"), explode(bucketPairs(cut)(col("band_idx"), col("m"))).as("p"))
+      .select(col("m")(col("p._1")).as("a"), col("m")(col("p._2")).as("b"),
+        col("p._3").cast("double").as("inter"))
+      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
+        round(col("inter") / (size(col("a.sh")) + size(col("b.sh")) - col("inter")), 4)
+          .as("jaccard"))
+      .where(col("jaccard") >= threshold)
+    val out = pairs.localCheckpoint()
     sh.unpersist(false)
     out
   }
+
+  /** The pairs one band bucket owns, as (member index, member index,
+    * shared-shingle count) with the lower index first. `members` are
+    * (doc_id, sh, bands) rows sorted by doc_id. A pair is owned by the
+    * bucket of the lowest band where its two docs share a key that is not
+    * in `cut` (the oversize buckets), so each candidate pair is verified and
+    * emitted by exactly one group. The count is the number of distinct
+    * shingles in both sets, which is `size(array_intersect(sh1, sh2))`. */
+  private def bucketPairs(cut: Set[(Int, String)]) =
+    udf { (band: Int, members: Seq[Row]) =>
+      val bands = members.map(_.getSeq[String](2).toArray).toArray
+      val sets = members.map(_.getSeq[String](1).toSet).toArray
+      def ownedHere(i: Int, j: Int): Boolean = {
+        var c = 0
+        while (c < band) {
+          val k = bands(i)(c)
+          if (k == bands(j)(c) && !cut((c, k))) return false
+          c += 1
+        }
+        true
+      }
+      val out = Array.newBuilder[(Int, Int, Int)]
+      var i = 0
+      while (i < sets.length) {
+        var j = i + 1
+        while (j < sets.length) {
+          if (ownedHere(i, j)) {
+            val (small, large) =
+              if (sets(i).size <= sets(j).size) (sets(i), sets(j)) else (sets(j), sets(i))
+            out += ((i, j, small.count(large)))
+          }
+          j += 1
+        }
+        i += 1
+      }
+      out.result()
+    }
 
   /** Incremental MinHash near-dup: NEW batch vs an already-indexed SEEN
     * corpus — the daily-ingest shape ([[exactIncremental]]'s near-dup
@@ -846,8 +893,10 @@ object Dedup {
     * (e.g. [[graft.functions.TextFunctions.qualityScore]]), elect one keeper
     * per cluster: highest score, ties broken by lowest id (the score is on a
     * fixed decimal grid on both engines, so the arg-max is deterministic
-    * cross-engine). One hash shuffle on the id join + one on the cluster
-    * groupBy, with map-side partial max_by — no window, no sort. */
+    * cross-engine). No window: the id join, then one groupBy on the
+    * cluster with a map-side partial `max_by`. `max_by` over a struct has
+    * no fixed-width buffer, so the aggregate runs as a SortAggregate, with
+    * a sort on each side of the cluster exchange. */
   def resolveKeepBest(clusters: DataFrame, scored: DataFrame,
                       idCol: String = "doc_id", clusterCol: String = "cluster_id",
                       scoreCol: String = "quality"): DataFrame =

@@ -402,6 +402,7 @@ object IndexTable {
               retainMillis: Long = DefaultRetainMillis): Long = {
     val fs = fileSystem(spark, path)
     val (prevGen, active, allDeltas) = tenantView(spark, path, alias)
+    if (prevGen.isEmpty && allDeltas.isEmpty) return 0L // no such tenant
     val resolved = latestPerId(viewFrame(spark, path, alias, prevGen, active))
       // ids whose newest record is a tombstone older than the retention
       // window leave the store HERE — after vacuum's retention window their
@@ -413,13 +414,11 @@ object IndexTable {
     // the generation with this compaction's clock would rank it above an
     // append that took its stamp earlier but landed after the listing
     stampIngest(resolved).write.partitionBy("index_alias").parquet(genDir.toString)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(genDir, aliasDirName(alias)))) {
-      // Empty tenant: a zero-row dynamic-partition write emits no tenant
-      // dir, so there is nothing to publish — remove the empty generation
-      // and leave the store untouched.
-      fs.delete(genDir, true)
-      return 0L
-    }
+    // Empty tenant (every row resolved to a dropped tombstone): a zero-row
+    // dynamic-partition write emits no tenant dir. Publish an empty one, so
+    // the generation is seen like any other and vacuum retires the rows
+    // and tombstones it supersedes.
+    fs.mkdirs(new org.apache.hadoop.fs.Path(genDir, aliasDirName(alias)))
     // The manifest lists EVERY delta file on disk at snapshot time — the
     // ones folded now AND the ones folded by earlier generations but still
     // retained: all their rows are inside this generation, so the new view

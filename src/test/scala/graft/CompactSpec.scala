@@ -228,6 +228,30 @@ class CompactSpec extends AnyFunSuite {
       "no delta files (tombstone or data) survive the zero-retention vacuum")
   }
 
+  test("a tenant whose every row is deleted compacts to an empty generation and leaves no byte behind") {
+    val path = java.nio.file.Files.createTempDirectory("compact_empty").toString + "/idx"
+    val doc = Seq(("gone/doc", "the only document")).toDF("document_path", "text")
+    IndexTable.append(IndexTable.ingestRecords(doc, "t", pageSize = 32), path)
+    val ids = IndexTable.read(spark, path, "t").select($"id").as[String].collect().toSeq
+    IndexTable.delete(spark, path, "t", ids)
+    assert(IndexTable.compact(spark, path, "t", retainMillis = 0L) === 0L)
+    assert(IndexTable.read(spark, path, "t").count() === 0L,
+      "the superseded rows and the tombstones must be retired")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val holders = walk(new java.io.File(path)).filter(_.getName.endsWith(".parquet"))
+      .filter(f => spark.read.parquet(f.toString).where($"id".isin(ids: _*)).count() > 0)
+    assert(holders.isEmpty, s"deleted id still on disk in ${holders.mkString(", ")}")
+    // the emptied tenant still takes writes
+    IndexTable.append(IndexTable.ingestRecords(
+      Seq(("new/doc", "a later document")).toDF("document_path", "text"), "t", pageSize = 32), path)
+    assert(IndexTable.readLatest(spark, path, "t").select($"page_content").as[String]
+      .collect().toSeq === Seq("a later document"))
+    IndexTable.compact(spark, path, "t", retainMillis = 0L)
+    assert(IndexTable.read(spark, path, "t").select($"page_content").as[String]
+      .collect().toSeq === Seq("a later document"))
+  }
+
   test("an append stamped before a compaction but landing after it wins over the generation row") {
     val path = java.nio.file.Files.createTempDirectory("compact_stamp_race").toString + "/idx"
     val doc = Seq(("race/doc", "version one")).toDF("document_path", "text")

@@ -180,6 +180,77 @@ class DedupSpec extends AnyFunSuite {
       maxBucket = 4).count() === 0L)
   }
 
+  /** Brute-force reference for [[Dedup.minhashNearDupPairsFromSigs]]: the
+    * exact shingle-Jaccard pairs of the whole frame, kept when the two docs
+    * share at least one band bucket of at most `maxBucket` members
+    * (bucket sizes counted on the driver). */
+  private def bandedReference(sigs: org.apache.spark.sql.DataFrame, threshold: Double,
+                              maxBucket: Int): Set[(Long, Long, Double)] = {
+    val bands = sigs.select($"doc_id", $"bands").as[(Long, Seq[String])].collect().toMap
+    val members = bands.values.flatMap(_.zipWithIndex).groupBy(identity).map {
+      case (k, v) => k -> v.size }
+    def bounded(a: Long, b: Long): Boolean =
+      bands(a).indices.exists(c => bands(a)(c) == bands(b)(c) && members((bands(a)(c), c)) <= maxBucket)
+    Dedup.ngramJaccardPairsFromShingles(sigs.select($"doc_id", $"sh"), threshold)
+      .select($"id1", $"id2", $"jaccard").as[(Long, Long, Double)].collect()
+      .filter { case (a, b, _) => bounded(a, b) }.toSet
+  }
+
+  /** The pairs of `minhashNearDupPairsFromSigs`, checked to hold no
+    * repeated (id1, id2). */
+  private def distinctPairs(sigs: org.apache.spark.sql.DataFrame, threshold: Double,
+                            maxBucket: Int): Set[(Long, Long, Double)] = {
+    val rows = Dedup.minhashNearDupPairsFromSigs(sigs, threshold, maxBucket)
+      .select($"id1", $"id2", $"jaccard").as[(Long, Long, Double)].collect()
+    assert(rows.map(r => (r._1, r._2)).distinct.length === rows.length,
+      "a pair was emitted more than once")
+    rows.toSet
+  }
+
+  test("minhash pairs equal the brute-force Jaccard pairs restricted to bounded " +
+      "shared buckets (sf and planted-dup fixtures)") {
+    val sf = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
+      .select($"doc_id", $"text")
+    // planted: 40 base docs, a one-word edit of each of the first 20, and
+    // 8 docs of one template (a skewed bucket)
+    val base = sf.limit(40).localCheckpoint()
+    val planted = base
+      .union(base.limit(20).select(($"doc_id" + 10000L).as("doc_id"),
+        regexp_replace($"text", "^\\S+", "edited")))
+      .union(spark.range(8).select(($"id" + 20000L).as("doc_id"),
+        concat(lit("terms of service apply to every page of this site "),
+          $"id".cast("string")).as("text")))
+    for ((fixture, name) <- Seq(sf -> "sf", planted -> "planted")) {
+      val sigs = Dedup.minhashSignatures(fixture, "text", "doc_id",
+        numHashes = 12, bands = 4).localCheckpoint()
+      for (threshold <- Seq(0.30, 0.05); maxBucket <- Seq(1000, 3)) {
+        val want = bandedReference(sigs, threshold, maxBucket)
+        if (maxBucket == 1000) assert(want.nonEmpty, s"$name fixture has no pairs")
+        assert(distinctPairs(sigs, threshold, maxBucket) === want,
+          s"$name fixture, threshold $threshold, maxBucket $maxBucket")
+      }
+    }
+  }
+
+  test("a pair whose lowest shared bucket is oversize comes once from a higher bounded band") {
+    // band 0: docs 1-4 share "big" (4 members > maxBucket 3); docs 1, 2 also
+    // share band 1, docs 3, 4 share bands 2 and 3, each bucket of 2
+    val sh = Seq("a b", "b c", "c d", "d e")
+    val sigs = Seq(
+      (1L, sh, Seq("big", "k12", "u1", "v1")),
+      (2L, sh, Seq("big", "k12", "u2", "v2")),
+      (3L, sh :+ "e f", Seq("big", "u3", "k34", "m34")),
+      (4L, sh :+ "e f", Seq("big", "u4", "k34", "m34")),
+      (5L, sh, Seq("w5", "u5", "x5", "v5"))
+    ).toDF("doc_id", "sh", "bands")
+    val got = distinctPairs(sigs, threshold = 0.5, maxBucket = 3)
+    assert(got === Set((1L, 2L, 1.0), (3L, 4L, 1.0)))
+    assert(got === bandedReference(sigs, threshold = 0.5, maxBucket = 3))
+    // with the bound raised, the band-0 bucket pairs all four docs
+    assert(distinctPairs(sigs, threshold = 0.5, maxBucket = 4).map(p => (p._1, p._2)) ===
+      Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)))
+  }
+
   test("minhash jaccard estimate matches exact jaccard on candidates") {
     val mh = Dedup.minhashNearDupPairs(docs, "text", "doc_id",
       numHashes = 12, bands = 6, threshold = 0.0)

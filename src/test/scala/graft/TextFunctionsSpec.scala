@@ -70,6 +70,41 @@ class TextFunctionsSpec extends AnyFunSuite {
     assert(q(0) > q(1))
   }
 
+  test("quality score kernel is bit-identical to the declarative formula") {
+    // the declarative form the one-pass kernel replaces
+    def reference(c: org.apache.spark.sql.Column) = {
+      val words = TextFunctions.wsTokens(c)
+      val nw = size(words).cast("double")
+      val stopHits = size(filter(words,
+        w => lower(w).isInCollection(TextFunctions.Stopwords))).cast("double")
+      val alnum = length(regexp_replace(c, "[^A-Za-z0-9]", "")).cast("double")
+      val total = length(c).cast("double")
+      val lenTerm = lit(40.0) * least(nw / 100.0, lit(1.0))
+      val stopTerm = when(nw === 0, lit(0.0))
+        .otherwise(lit(30.0) * least(lit(3.0) * stopHits / nw, lit(1.0)))
+      val alnumTerm = when(total === 0, lit(0.0)).otherwise(lit(30.0) * alnum / total)
+      round(lenTerm + stopTerm + alnumTerm, 2)
+    }
+    val edge = Seq[String](null, "", "   ", "\t\n", "a\tb\nc \r\n d", "The AND",
+      "THE the ThE tO To What's WHAT'S ? i I", "Ünïcödé wörds straße naïve café",
+      "İF ıf Kelvin K and", "𝕏 marks 😀 the spot 𝄞", " non-breaking space",
+      "x" * 500, ("the " * 40).trim, "123 456 abc DEF !!! ???")
+      .toDF("t")
+    val texts = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
+      .select($"text".as("t")).union(edge)
+    val rows = texts.select(
+      TextFunctions.qualityScore($"t").as("kernel"), reference($"t").as("reference"),
+      (TextFunctions.qualityScore($"t") <=> reference($"t")).as("same"))
+      .collect()
+    assert(rows.length === texts.count())
+    val differ = rows.filterNot(_.getBoolean(2))
+    assert(differ.isEmpty, s"kernel != reference on ${differ.take(5).mkString(", ")}")
+    // null text scores null; empty and blank text score 0
+    val e = edge.select(TextFunctions.qualityScore($"t").as("q")).collect().map(_.get(0))
+    assert(e(0) == null)
+    assert(e.slice(1, 4).toSeq === Seq(0.0, 0.0, 0.0))
+  }
+
   test("charEntropy: zero for uniform repeats, ln k for k uniform chars, matches manual") {
     val got = Seq("aaaa", "ab", "abcd", "aab")
       .toDF("t").select(TextFunctions.charEntropy($"t").as("e"))
