@@ -1,7 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.core.ModelRegistry
 import graft.functions.Embedder
@@ -96,6 +99,12 @@ final class GraftVectorStore(
     * Reads with HSET-upsert semantics — a re-ingested document's newest
     * record wins, duplicates never reach the top-k.
     *
+    * The exact search runs when called, as one Spark job over the
+    * tenant's serving rows ([[IndexTable.serving]]: decoded and planned
+    * once per view), and returns its at most `topN` hits as a local
+    * DataFrame: reading it runs no job. Rows and order are those of
+    * `KnnSearch.topK` over `IndexTable.readLatest`.
+    *
     * `approximate = true` (requires `binaryCandidates`): the binary-sketch
     * Hamming sweep keeps the `binaryCandidates * probeDepth` nearest ids
     * and re-ranks only those by exact cosine — probeDepth is the
@@ -104,15 +113,19 @@ final class GraftVectorStore(
   def search(prompt: String, alias: String, topN: Int = 10,
              approximate: Boolean = false, probeDepth: Int = 1): DataFrame = {
     val qvec = queryVec(prompt)
-    if (!approximate)
-      KnnSearch.hitProjection(KnnSearch.topK(
-        IndexTable.readLatest(spark, indexPath, resolveAlias(alias)), qvec, topN))
+    if (!approximate) local(exactHits(qvec, alias, topN).map(_.toRow), KnnSearch.hitSchema)
     else {
       require(binaryCandidates.nonEmpty,
         "approximate search requires the store to be built with binaryCandidates")
       binarySearch(qvec, alias, topN, probeDepth)
     }
   }
+
+  private def exactHits(qvec: Array[Float], alias: String, topN: Int): Seq[KnnSearch.Hit] =
+    KnnSearch.serveTopK(IndexTable.serving(spark, indexPath, resolveAlias(alias)), qvec, topN)
+
+  private def local(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** Binary-sketch approximate path: Hamming sweep + exact re-rank of
     * the `binaryCandidates * probeDepth` nearest ids over the serving
@@ -231,10 +244,16 @@ final class GraftVectorStore(
   def readIndexGeneration(alias: String, genId: Long): DataFrame =
     IndexTable.readGeneration(spark, indexPath, resolveAlias(alias), genId)
 
-  /** E2 full answer pipeline: retrieve, rerank, threshold, project answers. */
+  /** E2 full answer pipeline: retrieve, rerank, threshold, project answers.
+    * Runs when called: the exact search is one Spark job (see [[search]]),
+    * and its at most `fanout` hits are reranked on the driver
+    * ([[Rerank.answerRows]]). Returns the at most `topN` answers as a local
+    * DataFrame, so reading it runs no job. Rows and order are those of
+    * `Rerank.answers` over `search(prompt, alias, fanout)`. */
   def answers(prompt: String, alias: String, topN: Int = 10,
               fanout: Int = 50, threshold: Int = Rerank.ScoreThreshold): DataFrame =
-    Rerank.answers(search(prompt, alias, fanout), prompt, topN, threshold)
+    local(Rerank.answerRows(exactHits(queryVec(prompt), alias, fanout), prompt, topN, threshold),
+      Rerank.answerSchema)
 
   // H1: session query log (the reference keeps it in Streamlit session
   // state, app/app.py:291-296; here an in-memory append log).

@@ -38,9 +38,10 @@ object TextFunctions {
   def wsTokens(c: Column): Column = wsTokensUdf(c)
 
   private val WsPattern = java.util.regex.Pattern.compile("\\s+")
-  private val wsTokensUdf = udf { (s: String) =>
-    if (s == null) null else WsPattern.split(s).filter(_.nonEmpty)
-  }
+  private val wsTokensUdf = udf { (s: String) => if (s == null) null else wsSplit(s) }
+
+  /** [[wsTokens]] of a non-null string, on the JVM. */
+  private[graft] def wsSplit(s: String): Array[String] = WsPattern.split(s).filter(_.nonEmpty)
 
   /** Keyword extraction, bit-faithful to reference `app/app.py:49-56`:
     * strip `.-=?!` to spaces, split on whitespace, lowercase, drop stoplist

@@ -1,8 +1,11 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.{Embedder, TextFunctions}
 
@@ -294,7 +297,7 @@ object IndexTable {
     def release(): Unit = synchronized { released = true; value.foreach(free) }
   }
 
-  /** Values reused across reads, three slots per (index path, tenant), each
+  /** Values reused across reads, four slots per (index path, tenant), each
     * tagged with the session that built it and the key of the file set it
     * was built from:
     *   - `gen`: the parquet relation of the committed generation's
@@ -302,15 +305,18 @@ object IndexTable {
     *   - `delta`: the parquet relation of the sorted active delta files
     *     (append-only);
     *   - `overlay`: the resolved delta overlay of [[readLatest]], keyed by
-    *     both (see [[resolveOverlay]]).
+    *     both (see [[resolveOverlay]]);
+    *   - `serving`: the tenant's live rows decoded to [[ServingRow]]s, keyed
+    *     like `overlay` (see [[serving]]).
     * A relation freezes its file listing and reads with the declared
-    * [[schema]], and the overlay is a function of those same files, so a
-    * slot whose session and key equal the current ones ([[tenantView]]'s
-    * listing) holds exactly what a fresh build would — without the listing
-    * and, for the overlay, without its two resolution jobs. Any write
-    * changes the listing, hence the key, and a read from another session
-    * replaces the slot too, so the map holds at most one session per slot.
-    * A replaced overlay is unpersisted. */
+    * [[schema]], and the overlay and the serving rows are functions of
+    * those same files, so a slot whose session and key equal the current
+    * ones ([[tenantView]]'s listing) holds exactly what a fresh build would
+    * — without the listing, for the overlay without its two resolution
+    * jobs, and for the serving rows without planning or decoding the scan.
+    * Any write changes the listing, hence the key, and a read from another
+    * session replaces the slot too, so the map holds at most one session
+    * per slot. A replaced overlay or serving RDD is unpersisted. */
   private val relations =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Slot[_]]()
 
@@ -534,6 +540,37 @@ object IndexTable {
     *     no generation the overlay alone is the tenant. */
   def readLatest(spark: SparkSession, path: String, alias: String): DataFrame = {
     val (gen, active, _) = tenantView(spark, path, alias)
+    latestView(spark, path, alias, gen, active)
+  }
+
+  /** The serving rows of one tenant: [[readLatest]]'s live rows as JVM
+    * values, one array per partition, for the request kernel
+    * [[KnnSearch.serveTopK]]. Built at most once per file set (the
+    * `serving` slot of [[relations]], keyed like the overlay) from
+    * `readLatest`'s physical plan, and persisted `MEMORY_AND_DISK`:
+    * planning and decoding happen once per view, and the first job over
+    * the RDD fills the cache — no job runs here. The cache holds one value
+    * per partition, not one per row, so filling it does not track the size
+    * of every row (on a tenant of about 1,800 rows that tracking cost the
+    * first search 35-50 ms). A write changes the key, so the next call builds
+    * a fresh RDD and unpersists the old one; [[drop]] unpersists it too. */
+  def serving(spark: SparkSession, path: String, alias: String): RDD[Array[ServingRow]] = {
+    val (gen, active, _) = tenantView(spark, path, alias)
+    reuse[RDD[Array[ServingRow]]](spark, path, alias, "serving",
+      gen.map(_.toString).toSeq ++ active.sorted,
+      (r: RDD[Array[ServingRow]]) => { r.unpersist(false); () }) {
+      latestView(spark, path, alias, gen, active)
+        .select(ServingRow.columns.map(col): _*)
+        .queryExecution.toRdd
+        .mapPartitions(it => Iterator.single(it.map(ServingRow.decode).toArray))
+        .setName(s"serving $path/${aliasDirName(alias)}")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
+  }
+
+  private def latestView(spark: SparkSession, path: String, alias: String,
+                         gen: Option[org.apache.hadoop.fs.Path],
+                         active: Seq[String]): DataFrame = {
     val genDf = gen.map(g => viewFrame(spark, path, alias, Some(g), Seq.empty))
     val resolved =
       if (active.isEmpty) {
@@ -571,7 +608,7 @@ object IndexTable {
     val overlay = latestPerId(genDf.map(_.where(col("id").isin(contested: _*)))
         .fold(deltaDf)(_.unionByName(deltaDf)))
       .coalesce(math.max(1, deltaDf.rdd.getNumPartitions))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
     overlay.count()
     (overlay, contested)
   }
@@ -595,4 +632,29 @@ object IndexTable {
       .orderBy(col("ingest_seq").desc, col("is_deleted").desc, col("page_content").asc)
     df.withColumn("rn", row_number().over(w)).where(col("rn") === 1).drop("rn")
   }
+}
+
+/** One live row of a tenant as JVM values: the hit columns of
+  * [[IndexTable.schema]] with the vector decoded to an `Array[Float]`.
+  * Nullable columns stay nullable (`pageNumber` is boxed), so a hit built
+  * from it reads back exactly as the parquet row would. */
+final case class ServingRow(id: String, indexAlias: String, documentPath: String,
+                            pageNumber: java.lang.Integer, pageContent: String,
+                            vector: Array[Float])
+
+object ServingRow {
+  /** The columns a serving row is decoded from, in field order. */
+  val columns: Seq[String] =
+    Seq("id", "index_alias", "document_path", "page_number", "page_content",
+      "page_content_vector")
+
+  private def str(r: InternalRow, i: Int): String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  /** Copies every value out of `r`, which the scan may reuse. */
+  def decode(r: InternalRow): ServingRow = ServingRow(
+    str(r, 0), str(r, 1), str(r, 2),
+    if (r.isNullAt(3)) null else Int.box(r.getInt(3)),
+    str(r, 4),
+    if (r.isNullAt(5)) null else r.getArray(5).toFloatArray())
 }

@@ -1,22 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.functions.{Embedder, VectorFunctions}
+import graft.functions.VectorFunctions
+import graft.plans.VectorExpressions
 
 /** The core query operator — exact vector top-k, replacing the reference's
   * RediSearch `KNN` query over an HNSW index (reference
   * `modules/utilities.py:368-401`, query string built at `:380-387`).
   *
   * The reference's HNSW search is *approximate* (recall < 1); exact
-  * brute-force is a correctness superset, and on Spark it plans as a single
-  * narrow scan + `TakeOrderedAndProject`: each partition computes a partial
-  * top-k, only k rows per partition reach the driver — no shuffle, no full
-  * sort. With `index_alias` partition pruning (the reference's key-prefix
+  * brute-force is a correctness superset. Two forms compute the same rows:
+  *   - [[topK]], the DataFrame form: a narrow scan + `TakeOrderedAndProject`
+  *     (each partition computes a partial top-k, only k rows per partition
+  *     reach the driver — no shuffle, no full sort);
+  *   - [[serveTopK]], the request kernel the store facade serves with: the
+  *     same cosine and the same total order as one RDD job over the
+  *     tenant's decoded serving rows ([[IndexTable.serving]]), planned once
+  *     per view instead of once per request.
+  * With `index_alias` partition pruning (the reference's key-prefix
   * routing, `modules/utilities.py:284-287`) the scan is bounded to one
-  * tenant. For the 100 TB path, [[SimilaritySearch.lshTopK]] provides the
-  * bucket-pruned approximate variant (the HNSW analogue).
+  * tenant.
   */
 object KnnSearch {
 
@@ -33,11 +42,72 @@ object KnnSearch {
       .limit(k)
 
   /** The hit-result schema every search surface returns (P6 result
-    * projection) — ONE definition so `search`, the facade's `search`, and
-    * `searchAsOf` cannot drift apart. */
+    * projection) — ONE definition so the facade's `search`, `searchAsOf`
+    * and [[Hit.toRow]] ([[hitSchema]]) cannot drift apart. */
   def hitProjection(hits: DataFrame): DataFrame =
     hits.select(col("id"), col("index_alias"), col("document_path"),
       col("page_number"), col("page_content"), col("similarity"))
+
+  /** The schema of [[hitProjection]] over [[IndexTable]] rows. */
+  val hitSchema: StructType = StructType(
+    IndexTable.schema.fields.filter(f => ServingRow.columns.init.contains(f.name)) :+
+      StructField("similarity", DoubleType))
+
+  /** One hit of [[serveTopK]]: a serving row's [[hitSchema]] columns.
+    * `similarity` is null when the row has no vector, as the cosine
+    * expression is. */
+  final case class Hit(id: String, indexAlias: String, documentPath: String,
+                       pageNumber: java.lang.Integer, pageContent: String,
+                       similarity: java.lang.Double) {
+    def toRow: Row = Row(id, indexAlias, documentPath, pageNumber, pageContent, similarity)
+  }
+
+  /** `a` before `b` in UTF-8 byte order, Spark's string order; nulls first. */
+  private[graft] def compareUtf8(a: String, b: String): Int =
+    if (a == null || b == null) (if (a == null) 0 else 1) - (if (b == null) 0 else 1)
+    else UTF8String.fromString(a).binaryCompare(UTF8String.fromString(b))
+
+  /** Descending by Spark's double order, nulls last. */
+  private[graft] def compareDoublesDesc(a: java.lang.Double, b: java.lang.Double): Int =
+    if (a == null || b == null) (if (a == null) 1 else 0) - (if (b == null) 1 else 0)
+    else SQLOrderingUtil.compareDoubles(b, a)
+
+  /** [[topK]]'s order: similarity descending (nulls last), then id. */
+  private def compareHits(simA: java.lang.Double, idA: String,
+                          simB: java.lang.Double, idB: String): Int = {
+    val c = compareDoublesDesc(simA, simB)
+    if (c != 0) c else compareUtf8(idA, idB)
+  }
+
+  val hitOrder: Ordering[Hit] = new Ordering[Hit] {
+    def compare(a: Hit, b: Hit): Int = compareHits(a.similarity, a.id, b.similarity, b.id)
+  }
+
+  /** [[topK]] over serving rows as one job: the query vector is bound in
+    * the task closure, each partition keeps a bounded top-k under
+    * [[hitOrder]], and the driver merges at most k rows per partition.
+    * Bit-identical to `hitProjection(topK(...))` over the same rows: the
+    * cosine is [[VectorExpressions.cosine]], and `hitOrder` is a total
+    * order on a tenant's live rows (one per id). */
+  def serveTopK(rows: RDD[Array[ServingRow]], queryVec: Array[Float], k: Int): Seq[Hit] = {
+    require(k >= 0, s"k must be non-negative, got $k")
+    if (k == 0) Seq.empty
+    else rows.mapPartitions { it =>
+      // the worst kept hit at the head; the queue grows past its initial
+      // capacity, so a huge k allocates nothing up front
+      val heap = new java.util.PriorityQueue[Hit](math.min(k, 64), hitOrder.reverse)
+      it.flatMap(_.iterator).foreach { r =>
+        val sim = if (r.vector == null) null
+          else java.lang.Double.valueOf(VectorExpressions.cosine(r.vector, queryVec))
+        // a hit leaves its vector behind: only k rows per partition travel
+        if (heap.size < k || compareHits(sim, r.id, heap.peek.similarity, heap.peek.id) < 0) {
+          if (heap.size == k) heap.poll()
+          heap.add(Hit(r.id, r.indexAlias, r.documentPath, r.pageNumber, r.pageContent, sim))
+        }
+      }
+      Iterator.single(heap.toArray(new Array[Hit](0)))
+    }.collect().flatten.sorted(hitOrder).take(k).toSeq
+  }
 
   /** MMR diversified re-rank (Carbonell & Goldstein, SIGIR '98): greedily
     * select k of the candidates maximizing
@@ -55,7 +125,7 @@ object KnnSearch {
     * ANSI replay makes bit-identical choices (a rounded DOUBLE score sat
     * on a half-ulp boundary and flipped between engines; integers cannot).
     * `lambda` must be a multiple of 0.1 so the weights are exact ints.
-    * Pairwise cosine mirrors [[graft.plans.VectorExpressions]]: index-order
+    * Pairwise cosine is [[graft.plans.VectorExpressions.cosine]]: index-order
     * accumulation, dp / (sqrt(na) * sqrt(nb)), 0 on zero norm.
     * Output: (rank, vec_id, relevance, mmr_score_e5).
     */
@@ -65,15 +135,6 @@ object KnnSearch {
     val wRel = math.round(lambda * 10).toInt
     val wDiv = 10 - wRel
     require(math.abs(lambda * 10 - wRel) < 1e-9, s"lambda must be a multiple of 0.1, got $lambda")
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dp = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        val x = a(i).toDouble; val y = b(i).toDouble
-        dp += x * y; na += x * x; nb += y * y; i += 1
-      }
-      val den = math.sqrt(na) * math.sqrt(nb)
-      if (den == 0.0) 0.0 else dp / den
-    }
     def e4(x: Double): Long = math.round(
       BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble * 10000)
     val selected = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Double, Long)]
@@ -81,7 +142,7 @@ object KnnSearch {
     var remaining = candidates
     for (rank <- 1 to math.min(k, candidates.size)) {
       val scored = remaining.map { case (id, v, rel) =>
-        val maxSimE4 = if (selVecs.isEmpty) 0L else selVecs.map(s => e4(cos(v, s))).max
+        val maxSimE4 = if (selVecs.isEmpty) 0L else selVecs.map(s => e4(VectorExpressions.cosine(v, s))).max
         (id, v, rel, wRel * e4(rel) - wDiv * maxSimE4)
       }
       val best = scored.minBy { case (id, _, _, sc) => (-sc, id) }
@@ -90,18 +151,5 @@ object KnnSearch {
       remaining = remaining.filterNot(_._1 == best._1)
     }
     selected.toSeq
-  }
-
-  /** E2 search entry (reference `queryRedis`, `modules/utilities.py:368-401`):
-    * embed the prompt (Q1, `:376-377`), partition-pruned scan, exact top-k,
-    * result projection (P6, `:385,393-395`). */
-  def search(spark: SparkSession, indexPath: String, alias: String,
-             prompt: String, k: Int,
-             model: String = graft.core.ModelRegistry.default,
-             seed: Int = Embedder.DefaultSeed): DataFrame = {
-    val qvec = Embedder.embedQuery(prompt, model, seed)
-    // readLatest: re-ingested documents must not surface stale versions
-    // (HSET last-write-wins, modules/utilities.py:304-309)
-    hitProjection(topK(IndexTable.readLatest(spark, indexPath, alias), qvec, k))
   }
 }

@@ -175,6 +175,24 @@ object VectorExpressions {
   private def e(c: Column): Expression =
     ColumnBridge.expression(c.cast("array<float>"))
 
+  /** [[CosineSimilarityExpr]] over JVM float arrays: the same double
+    * accumulation in index order over the shorter length, so results are
+    * bit-identical to the expression's. The driver-side and RDD kernels
+    * (the serving top-k, MMR) call this one loop. */
+  def cosine(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var dp = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a(i).toDouble
+      val y = b(i).toDouble
+      dp += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) 0.0 else dp / denom
+  }
+
   def cosineSim(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimilarityExpr(e(a), e(b)))
 

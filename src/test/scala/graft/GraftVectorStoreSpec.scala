@@ -185,10 +185,17 @@ class GraftVectorStoreSpec extends AnyFunSuite {
     val a = store.search("spark", "tenant_a", topN = 100).count()
     val b = store.search("spark", "tenant_b", topN = 100).count()
     assert(a < b) // tenant scans are isolated slices, not the union
-    // the physical plan prunes on the partition column
-    val plan = store.search("spark", "tenant_a", topN = 5)
+    // delta files are listed from the tenant's own directory, and the
+    // serving read of a compacted generation prunes on the partition column
+    val enc = graft.operators.IndexTable.encodeAlias("tenant_a")
+    val deltaFiles = graft.operators.IndexTable.read(spark, path, enc).inputFiles
+    assert(deltaFiles.nonEmpty && deltaFiles.forall(_.contains(s"/index_alias=$enc/")))
+    store.compactIndex("tenant_a")
+    val plan = graft.operators.IndexTable.readLatest(spark, path, enc)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("index_alias"))
+    val pruned = "PartitionFilters: \\[[^\\]]*\\]".r.findAllIn(plan).toSeq
+    assert(pruned.nonEmpty && pruned.forall(_.contains(enc)), plan)
+    assert(store.search("spark", "tenant_a", topN = 100).count() === a)
   }
 
   test("deleteDocuments masks a doc from search and survives compaction as a physical forget") {

@@ -1,0 +1,89 @@
+package graft
+
+import java.util.concurrent.{ConcurrentHashMap, CyclicBarrier, Executors, TimeUnit}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The cached serving rows behind `search` and `answers` hold memory while
+  * their file set is current and no longer: one persisted serving RDD per
+  * tenant at most, released when a write replaces it and when the index is
+  * dropped — and built once even when two threads make the first search of
+  * a new file set together. */
+class ServingLifecycleSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private def docs(n: Int) = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
+    .select($"source".as("document_path"), $"text").limit(n)
+
+  /** Persisted serving RDDs of one tenant of the index at `path`. */
+  private def servingRdds(path: String, alias: String): Int =
+    spark.sparkContext.getPersistentRDDs.values
+      .count(r => r.name == s"serving $path/index_alias=$alias")
+
+  test("20 write-then-search cycles keep at most one persisted serving RDD per tenant; " +
+      "dropIndex releases them") {
+    val path = java.nio.file.Files.createTempDirectory("serving_cycles").toString + "/idx"
+    val store = new GraftVectorStore(spark, path)
+    store.addDocuments(docs(20), "t", pageSize = 32)
+    store.addDocuments(docs(5), "u", pageSize = 32)
+    store.compactIndex("t")
+    (1 to 20).foreach { i =>
+      val doc = s"cycle/$i"
+      store.addDocuments(Seq((doc, s"cycle $i spark table scan")).toDF("document_path", "text"),
+        "t", pageSize = 32)
+      val hits = store.search(s"cycle $i spark table scan", "t", topN = 3)
+        .select($"document_path").as[String].collect()
+      assert(hits.head === doc, s"cycle $i")
+      store.answers("spark table scan", "u", threshold = 0).collect()
+      if (i % 5 == 0) store.compactIndex("t")
+      assert(servingRdds(path, "t") === 1, s"after cycle $i")
+      assert(servingRdds(path, "u") === 1, s"after cycle $i")
+    }
+    store.dropIndex()
+    assert(servingRdds(path, "t") === 0)
+    assert(servingRdds(path, "u") === 0)
+  }
+
+  test("two threads making the first search of a new file set together build it once") {
+    val path = java.nio.file.Files.createTempDirectory("serving_race").toString + "/idx"
+    val store = new GraftVectorStore(spark, path)
+    store.addDocuments(docs(20), "t", pageSize = 32)
+    store.compactIndex("t")
+    store.search("spark", "t").collect()
+    store.addDocuments(docs(5).withColumn("text", org.apache.spark.sql.functions.upper($"text")),
+      "t", pageSize = 32)
+    val name = s"serving $path/index_alias=t"
+    // the serving RDDs every job of the race reads
+    val read = ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.stageInfos.flatMap(_.rddInfos).filter(_.name == name).foreach(r => read.add(r.id))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val pool = Executors.newFixedThreadPool(2)
+    val results = try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val barrier = new CyclicBarrier(2)
+      val searches = Seq.fill(2)(Future {
+        barrier.await(30, TimeUnit.SECONDS)
+        store.search("fast spark table scan query", "t").collect().toSeq
+      })
+      Await.result(Future.sequence(searches), 2.minutes)
+    } finally {
+      pool.shutdown()
+      org.apache.spark.ListenerDrain.drain(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(results.head === results.last)
+    assert(read.asScala.size === 1)
+    assert(servingRdds(path, "t") === 1)
+    store.dropIndex()
+    assert(servingRdds(path, "t") === 0)
+  }
+}

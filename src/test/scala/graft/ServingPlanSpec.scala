@@ -3,7 +3,10 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart,
+  SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,11 +19,17 @@ class ServingPlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** Jobs and shuffle-write bytes of the actions run under one job group. */
+  /** Jobs and shuffle-write bytes of the actions run under one job group,
+    * and the SQL executions started meanwhile (suites run one at a time). */
   private final class GroupCounter(group: String) extends SparkListener {
     val jobs = new AtomicInteger
     val shuffleWrite = new AtomicLong
+    val sqlExecutions = new AtomicInteger
     private val stages = ConcurrentHashMap.newKeySet[Int]()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case _: SparkListenerSQLExecutionStart => sqlExecutions.incrementAndGet()
+      case _ => ()
+    }
     override def onJobStart(e: SparkListenerJobStart): Unit =
       if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
         jobs.incrementAndGet()
@@ -35,6 +44,12 @@ class ServingPlanSpec extends AnyFunSuite {
 
   /** (jobs, shuffle-write bytes) launched by `f` on this thread. */
   private def measure(f: => Unit): (Int, Long) = {
+    val (jobs, shuffle, _) = count(f)
+    (jobs, shuffle)
+  }
+
+  /** (jobs, shuffle-write bytes, SQL executions) launched by `f`. */
+  private def count(f: => Unit): (Int, Long, Int) = {
     val group = s"serving-plan-${groups.incrementAndGet()}"
     val counter = new GroupCounter(group)
     val sc = spark.sparkContext
@@ -46,7 +61,7 @@ class ServingPlanSpec extends AnyFunSuite {
       org.apache.spark.ListenerDrain.drain(sc)
       sc.removeSparkListener(counter)
     }
-    (counter.jobs.get, counter.shuffleWrite.get)
+    (counter.jobs.get, counter.shuffleWrite.get, counter.sqlExecutions.get)
   }
 
   private def docs(n: Int) = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
@@ -107,6 +122,40 @@ class ServingPlanSpec extends AnyFunSuite {
     assert(warm === cold)
     assert(measure(store.answers(prompt, "t", topN = 3, threshold = 0).collect())._1 === 1)
     store.dropIndex()
+  }
+
+  /** A warm `search` and a warm `answers` call on `store`'s tenant "t":
+    * each call runs 1 job, writes no shuffle bytes and starts no SQL
+    * execution (the tenant scan is not planned again), and reading its
+    * result runs no job. */
+  private def assertWarmCallsPlanNothing(store: GraftVectorStore): Unit = {
+    val calls: Seq[(String, () => DataFrame)] = Seq(
+      "search" -> (() => store.search(prompt, "t", topN = 10)),
+      "answers" -> (() => store.answers(prompt, "t", topN = 3, threshold = 0)))
+    calls.foreach { case (name, call) =>
+      call().collect() // warm: the serving rows of this view are cached
+      var result: DataFrame = null
+      val (jobs, shuffle, sqlExecutions) = count { result = call() }
+      assert(jobs === 1, name)
+      assert(shuffle === 0L, name)
+      assert(sqlExecutions === 0, name)
+      val (readJobs, _, _) = count(result.collect())
+      assert(readJobs === 0, name)
+      assert(result.collect().nonEmpty, name)
+    }
+  }
+
+  test("a warm search or answers call runs 1 job, no shuffle and no SQL execution, " +
+      "and reading its result runs no job: compacted and with deltas pending") {
+    val path = java.nio.file.Files.createTempDirectory("graft_plan_warm").toString + "/idx"
+    val compacted = new GraftVectorStore(spark, path)
+    compacted.addDocuments(docs(40), "t", pageSize = 32)
+    compacted.compactIndex("t")
+    assertWarmCallsPlanNothing(compacted)
+    compacted.dropIndex()
+    val (_, withDeltas, _) = tenantWithDeltas("graft_plan_warm_delta")
+    assertWarmCallsPlanNothing(withDeltas)
+    withDeltas.dropIndex()
   }
 
   test("deleteDocuments is one shuffle-free scan and resolves no overlay") {
