@@ -22,35 +22,3 @@ object ModelRegistry {
   val default: String = "graft-mini"
   def dim(model: String): Int = models(model).dim
 }
-
-/** Canonical index record — the Spark-native replacement for the reference's
-  * Redis HASH record (reference `modules/utilities.py:304-309`) plus the
-  * `prefix` namespace (`modules/utilities.py:285`) as a partition column.
-  */
-final case class PageChunk(
-    id: String,
-    index_alias: String,
-    document_path: String,
-    page_number: Int,
-    page_content: String,
-    page_content_vector: Array[Float])
-
-/** A retrieval hit: PageChunk fields + similarity (= 1 - cosine distance,
-  * reference `modules/utilities.py:394`). */
-final case class ScoredChunk(
-    id: String,
-    index_alias: String,
-    document_path: String,
-    page_number: Int,
-    page_content: String,
-    similarity: Double)
-
-/** Final answer record shape (reference `app/app.py:102-109`); `page` is
-  * 1-based for display (`app/app.py:108`). */
-final case class Answer(
-    answer: String,
-    score: Int,
-    content: String,
-    source: String,
-    similarity: Double,
-    page: Int)

@@ -313,24 +313,11 @@ object Dedup {
       .where(size(col("sh")) > 0)
       .withColumn("bands", minhashBandKeysFast(numHashes, bands)(col("sh")))
 
-  /** [[minhashNearDupPairs]] through the build-once persisted contract
-    * ([[graft.core.PersistedBuild]]): the deterministic pair graph is an
-    * index-like derived artifact consumed by several downstream views
-    * (the pair gate itself, the survivorship report, the recall audit) —
-    * production pipelines persist it next to the corpus rather than
-    * re-hashing per consumer. First caller on `path` builds + publishes
-    * atomically; everyone else reads the parquet. */
-  def minhashNearDupPairsPersisted(df: DataFrame, path: String,
-                                   textCol: String, idCol: String,
-                                   numHashes: Int, bands: Int,
-                                   threshold: Double): DataFrame =
-    graft.core.PersistedBuild.table(
-      minhashNearDupPairs(df, textCol, idCol, numHashes, bands, threshold),
-      path, df.sparkSession)
-
-  /** [[ngramJaccardPairs]] through the build-once persisted contract —
-    * same rationale as [[minhashNearDupPairsPersisted]]: the exact-Jaccard
-    * pair graph feeds the pair gate and the whole cluster family. */
+  /** [[ngramJaccardPairs]] through the build-once persisted contract
+    * ([[graft.core.PersistedBuild]]): the exact-Jaccard pair graph is an
+    * index-like derived artifact that feeds the pair gate and the whole
+    * cluster family, so the first caller on `path` builds and publishes it
+    * atomically and everyone else reads the parquet. */
   def ngramJaccardPairsPersisted(df: DataFrame, path: String,
                                  textCol: String, idCol: String,
                                  n: Int, threshold: Double): DataFrame =
@@ -493,36 +480,11 @@ object Dedup {
   def minhashIncrementalPairs(newDocs: DataFrame, seenDocs: DataFrame,
                               textCol: String, idCol: String,
                               numHashes: Int = 12, bands: Int = 4,
-                              threshold: Double = 0.5, ngram: Int = 2): DataFrame = {
-    def prep(df: DataFrame) = spread(df)
-      .select(col(idCol).as("doc_id"), shinglesFast(ngram)(col(textCol)).as("sh"))
-      .where(size(col("sh")) > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def band(sh: DataFrame) = sh.select(col("doc_id"),
-      posexplode(minhashBandKeysFast(numHashes, bands)(col("sh")))
-        .as(Seq("band_idx", "band_key")))
-    val shNew = prep(newDocs)
-    val shSeen = prep(seenDocs)
-    val candidates = band(shNew)
-      .select(col("doc_id").as("new_id"), col("band_idx"), col("band_key"))
-      .join(band(shSeen)
-        .select(col("doc_id").as("seen_id"), col("band_idx"), col("band_key")),
-        Seq("band_idx", "band_key"))
-      .select(col("new_id"), col("seen_id"))
-      .dropDuplicates("new_id", "seen_id")
-    val pairs = candidates
-      .join(shNew.select(col("doc_id").as("new_id"), col("sh").as("sh1")), "new_id")
-      .join(shSeen.select(col("doc_id").as("seen_id"), col("sh").as("sh2")), "seen_id")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard", round(
-        col("inter") / (size(col("sh1")) + size(col("sh2")) - col("inter")), 4))
-      .where(col("jaccard") >= threshold)
-      .select("new_id", "seen_id", "jaccard")
-    val out = pairs.localCheckpoint()
-    shNew.unpersist(false)
-    shSeen.unpersist(false)
-    out
-  }
+                              threshold: Double = 0.5, ngram: Int = 2): DataFrame =
+    minhashIncrementalPairsFromSigs(
+      minhashSignatures(newDocs, textCol, idCol, numHashes, bands, ngram),
+      minhashSignatures(seenDocs, textCol, idCol, numHashes, bands, ngram),
+      threshold)
 
   /** [[minhashIncrementalPairs]] fed by already-derived signature frames —
     * the r12-verdict shape for the incremental gate: the SEEN side reads

@@ -138,9 +138,10 @@ object IndexTable {
     *
     * Scale shape: a delete of N ids writes N tiny rows — no read, no join,
     * no rewrite at delete time (deletion cost is deferred to the next
-    * compaction, which was already rewriting the tenant). */
+    * compaction, which was already rewriting the tenant). A null id names
+    * no record and is dropped. */
   def deleteRecords(ids: DataFrame, path: String, alias: String): Unit =
-    append(ids.select(col(ids.columns.head).cast("string").as("id"))
+    append(ids.select(col(ids.columns.head).cast("string").as("id")).where(col("id").isNotNull)
       .withColumn("index_alias", lit(alias))
       .withColumn("document_path", lit(null).cast("string"))
       .withColumn("page_number", lit(null).cast("int"))
@@ -297,26 +298,24 @@ object IndexTable {
     def release(): Unit = synchronized { released = true; value.foreach(free) }
   }
 
-  /** Values reused across reads, four slots per (index path, tenant), each
+  /** Values reused across reads, three slots per (index path, tenant), each
     * tagged with the session that built it and the key of the file set it
     * was built from:
     *   - `gen`: the parquet relation of the committed generation's
     *     directory (immutable once its marker lands);
     *   - `delta`: the parquet relation of the sorted active delta files
     *     (append-only);
-    *   - `overlay`: the resolved delta overlay of [[readLatest]], keyed by
-    *     both (see [[resolveOverlay]]);
     *   - `serving`: the tenant's live rows decoded to [[ServingRow]]s, keyed
-    *     like `overlay` (see [[serving]]).
+    *     by both (see [[serving]]).
     * A relation freezes its file listing and reads with the declared
-    * [[schema]], and the overlay and the serving rows are functions of
-    * those same files, so a slot whose session and key equal the current
-    * ones ([[tenantView]]'s listing) holds exactly what a fresh build would
-    * — without the listing, for the overlay without its two resolution
-    * jobs, and for the serving rows without planning or decoding the scan.
-    * Any write changes the listing, hence the key, and a read from another
-    * session replaces the slot too, so the map holds at most one session
-    * per slot. A replaced overlay or serving RDD is unpersisted. */
+    * [[schema]], and the serving rows are a function of those same files,
+    * so a slot whose session and key equal the current ones
+    * ([[tenantView]]'s listing) holds exactly what a fresh build would —
+    * without the listing, and for the serving rows without resolving,
+    * planning or decoding the scan. Any write changes the listing, hence
+    * the key, and a read from another session replaces the slot too, so the
+    * map holds at most one session per slot. A replaced serving RDD is
+    * unpersisted. */
   private val relations =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Slot[_]]()
 
@@ -388,13 +387,14 @@ object IndexTable {
     * record per id survives, stale rows are dropped) and rewrite the slice
     * as fresh files — the OPTIMIZE/VACUUM analogue every append-only store
     * needs once streaming ingest starts producing a small file per
-    * micro-batch. Each surviving row keeps its own `ingest_seq`, so a
-    * write ranks by when it happened, not by when it was folded.
-    * Publication follows the generation + manifest protocol
-    * documented at [[baseRoot]]; retirement is retention-gated: a
-    * superseded generation (and the delta files its successor folded) is
-    * deleted only once the successor has been committed for at least
-    * `retainMillis`, so no reader that started inside the retention window
+    * micro-batch. It resolves as [[readLatest]] does ([[resolve]]): only
+    * the generation rows whose ids the deltas contest are windowed. Each
+    * surviving row keeps its own `ingest_seq`, so a write ranks by when it
+    * happened, not by when it was folded. Publication follows the
+    * generation + manifest protocol documented at [[baseRoot]]; retirement
+    * is retention-gated: a superseded generation (and the delta files its
+    * successor folded) is deleted only once the successor has been
+    * committed for at least `retainMillis`, so no reader that started inside the retention window
     * can lose a file from under its snapshot. A crash at any point never
     * loses the only copy of a row. `retainMillis = 0` reproduces immediate
     * retirement (only safe with no concurrent readers or writers).
@@ -409,7 +409,7 @@ object IndexTable {
     val fs = fileSystem(spark, path)
     val (prevGen, active, allDeltas) = tenantView(spark, path, alias)
     if (prevGen.isEmpty && allDeltas.isEmpty) return 0L // no such tenant
-    val resolved = latestPerId(viewFrame(spark, path, alias, prevGen, active))
+    val resolved = resolve(spark, path, alias, prevGen, active)
       // ids whose newest record is a tombstone older than the retention
       // window leave the store HERE — after vacuum's retention window their
       // bytes are gone from disk
@@ -521,23 +521,20 @@ object IndexTable {
   /** Read with HSET-overwrite semantics: newest record per id wins (by the
     * ingest generation stamp).
     *
-    * Scale shape — this is the serving read under every search, so neither
-    * planning it nor the upsert resolution may cost a pass over the tenant:
-    *   - every read lists the tenant's files (FS metadata only, no Spark
-    *     job) and plans over the parquet relations already read for the
-    *     same generation dir and the same active delta files (see
-    *     [[relations]]): a tenant unchanged since the previous read plans
-    *     with zero jobs, and any write is seen on the very next read;
+    * Scale shape — a lazy plan: calling it lists the tenant's files (FS
+    * metadata only) and runs no Spark job. It plans over the parquet
+    * relations already read for the same generation dir and the same active
+    * delta files (see [[relations]]), and any write is seen on the very next
+    * read.
     *   - zero active deltas (the steady state right after [[compact]]): the
     *     committed generation is already latest-resolved, so the read IS the
     *     raw pruned scan — no window, no exchange;
     *   - active deltas present: only ids that appear in the delta set can be
-    *     contested. The first read of a (generation, delta files) pair
-    *     resolves them once ([[resolveOverlay]]); every read of that pair
-    *     plans as the generation scan minus the contested ids (a driver-side
-    *     set) united with the persisted overlay's live rows — one scan, no
-    *     window and no exchange, the plan shape of a compacted tenant. With
-    *     no generation the overlay alone is the tenant. */
+    *     contested, so the upsert window runs over the contested generation
+    *     rows plus the delta rows, never over the whole tenant (see
+    *     [[resolve]]).
+    * Searches do not run this plan per request: [[serving]] runs it once
+    * per file set. */
   def readLatest(spark: SparkSession, path: String, alias: String): DataFrame = {
     val (gen, active, _) = tenantView(spark, path, alias)
     latestView(spark, path, alias, gen, active)
@@ -546,14 +543,16 @@ object IndexTable {
   /** The serving rows of one tenant: [[readLatest]]'s live rows as JVM
     * values, one array per partition, for the request kernel
     * [[KnnSearch.serveTopK]]. Built at most once per file set (the
-    * `serving` slot of [[relations]], keyed like the overlay) from
-    * `readLatest`'s physical plan, and persisted `MEMORY_AND_DISK`:
-    * planning and decoding happen once per view, and the first job over
-    * the RDD fills the cache — no job runs here. The cache holds one value
-    * per partition, not one per row, so filling it does not track the size
-    * of every row (on a tenant of about 1,800 rows that tracking cost the
-    * first search 35-50 ms). A write changes the key, so the next call builds
-    * a fresh RDD and unpersists the old one; [[drop]] unpersists it too. */
+    * `serving` slot of [[relations]]) from `readLatest`'s physical plan,
+    * and persisted `MEMORY_AND_DISK`: upsert resolution, planning and
+    * decoding happen once per view, and this is the only per-view cache
+    * that holds data. With deltas pending, building the RDD runs the
+    * resolution's broadcast and shuffle; the first job over the RDD fills
+    * the cache. The cache holds one value per partition, not one per row,
+    * so filling it does not track the size of every row (on a tenant of
+    * about 1,800 rows that tracking cost the first search 35-50 ms). A
+    * write changes the key, so the next call builds a fresh RDD and
+    * unpersists the old one; [[drop]] unpersists it too. */
   def serving(spark: SparkSession, path: String, alias: String): RDD[Array[ServingRow]] = {
     val (gen, active, _) = tenantView(spark, path, alias)
     reuse[RDD[Array[ServingRow]]](spark, path, alias, "serving",
@@ -570,47 +569,30 @@ object IndexTable {
 
   private def latestView(spark: SparkSession, path: String, alias: String,
                          gen: Option[org.apache.hadoop.fs.Path],
-                         active: Seq[String]): DataFrame = {
-    val genDf = gen.map(g => viewFrame(spark, path, alias, Some(g), Seq.empty))
-    val resolved =
-      if (active.isEmpty) {
-        release(path, alias, "overlay")
-        // compact() wrote latestPerId output: one row per id, no window needed.
-        genDf.getOrElse(viewFrame(spark, path, alias, None, Seq.empty))
-      } else {
-        val (overlay, contested) = reuse[(DataFrame, Seq[String])](spark, path, alias, "overlay",
-          gen.map(_.toString).toSeq ++ active.sorted,
-          (o: (DataFrame, Seq[String])) => { o._1.unpersist(false); () })(
-          resolveOverlay(spark, path, alias, genDf, active))
-        genDf.map(g => if (contested.isEmpty) g else g.where(!col("id").isin(contested: _*)))
-          .fold(overlay)(_.unionByName(overlay))
-      }
-    dropTombstones(resolved.drop("ingest_seq"))
-  }
+                         active: Seq[String]): DataFrame =
+    dropTombstones(resolve(spark, path, alias, gen, active).drop("ingest_seq"))
 
-  /** Resolve the active deltas against the generation, once per file set:
-    * collect the delta ids to the driver (an `id`-only scan, no shuffle),
-    * then run the window over (generation rows with those ids ∪ delta rows)
-    * and persist the result, tombstone winners and `ingest_seq` included.
-    * Deltas are small by the compaction invariant, so both the id set and
-    * the overlay are. `persist` rather than a checkpoint: an evicted or
-    * released overlay recomputes from the files the retention window
-    * keeps. Returns the overlay and the contested ids. */
-  private def resolveOverlay(spark: SparkSession, path: String, alias: String,
-                             genDf: Option[DataFrame], active: Seq[String])
-      : (DataFrame, Seq[String]) = {
-    val deltaDf = viewFrame(spark, path, alias, None, active)
-    val contested =
-      if (genDf.isEmpty) Seq.empty
-      else deltaDf.select("id").collect().map(_.getString(0)).distinct.toSeq
-    // a cached plan keeps its shuffle's partition count (Spark does not
-    // coalesce it), so the overlay is narrowed to its input's own count
-    val overlay = latestPerId(genDf.map(_.where(col("id").isin(contested: _*)))
-        .fold(deltaDf)(_.unionByName(deltaDf)))
-      .coalesce(math.max(1, deltaDf.rdd.getNumPartitions))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    overlay.count()
-    (overlay, contested)
+  /** Newest record per id over the generation and the active deltas,
+    * tombstone winners and `ingest_seq` included. The generation already
+    * holds one row per id, so only ids in the deltas are contested: the
+    * window runs over the generation rows with those ids plus the delta
+    * rows, and every other generation row passes through. Both sides
+    * select against the broadcast delta ids (deltas are small by the
+    * compaction invariant), so no id list is collected while planning and
+    * the plan runs no job until it is executed. */
+  private def resolve(spark: SparkSession, path: String, alias: String,
+                      gen: Option[org.apache.hadoop.fs.Path],
+                      active: Seq[String]): DataFrame = {
+    if (active.isEmpty) viewFrame(spark, path, alias, gen, Seq.empty)
+    else {
+      val deltaDf = viewFrame(spark, path, alias, None, active)
+      gen.fold(latestPerId(deltaDf)) { g =>
+        val genDf = viewFrame(spark, path, alias, Some(g), Seq.empty)
+        val ids = broadcast(deltaDf.select("id"))
+        genDf.join(ids, Seq("id"), "left_anti").unionByName(
+          latestPerId(genDf.join(ids, Seq("id"), "left_semi").unionByName(deltaDf)))
+      }
+    }
   }
 
   /** True for a row that is not a tombstone. */

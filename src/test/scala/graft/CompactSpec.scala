@@ -296,6 +296,38 @@ class CompactSpec extends AnyFunSuite {
       .collect().toSeq === Seq("kept"))
   }
 
+  test("the rows a compaction writes are the driver-side resolution, retained " +
+      "tombstones and earlier-stamped stragglers included") {
+    val path = java.nio.file.Files.createTempDirectory("compact_rows").toString + "/idx"
+    def doc(p: String, t: String) =
+      IndexTable.ingestRecords(Seq((p, t)).toDF("document_path", "text"), "t", pageSize = 32)
+    Seq("a" -> "alpha one", "b" -> "bravo one", "c" -> "charlie one", "d" -> "delta one")
+      .foreach { case (p, t) => IndexTable.append(doc(s"$p/doc", t), path) }
+    IndexTable.compact(spark, path, "t")
+    // a straggling writer takes its stamp, later writes land, then its rows do
+    val stamp = IndexTable.nextIngestSeq()
+    IndexTable.append(doc("a/doc", "alpha two"), path)
+    IndexTable.delete(spark, path, "t", IndexTable.read(spark, path, "t")
+      .where($"document_path" === "b/doc").select($"id").as[String].collect().toSeq)
+    IndexTable.append(doc("e/doc", "echo one"), path)
+    Seq("a" -> "alpha stale", "b" -> "bravo stale", "c" -> "charlie two").foreach {
+      case (p, t) =>
+        IndexTable.append(doc(s"$p/doc", t).withColumn("ingest_seq", lit(stamp)), path)
+    }
+    def rows: Set[(String, Long, Boolean, String)] = IndexTable.read(spark, path, "t")
+      .select($"id", $"ingest_seq", coalesce($"is_deleted", lit(false)), $"page_content")
+      .as[(String, Long, Boolean, String)].collect().toSet
+    // newest stamp, then tombstone, then content ascending
+    val expected = rows.groupBy(_._1).values
+      .map(_.toSeq.sortBy(r => (-r._2, !r._3, Option(r._4).getOrElse(""))).head).toSet
+    IndexTable.compact(spark, path, "t")
+    // the new generation folded every delta file: the physical rows are its rows
+    val written = rows
+    assert(written === expected)
+    assert(written.map(r => Option(r._4).getOrElse("<tombstone>")) ===
+      Set("alpha two", "<tombstone>", "charlie two", "delta one", "echo one"))
+  }
+
   test("rows with the same id and stamp resolve to one winner at any input partitioning") {
     // one batch holding the same document twice: every row gets the same
     // id and the same stamp, so only the tie-break can pick the winner

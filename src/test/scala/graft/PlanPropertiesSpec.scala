@@ -150,31 +150,33 @@ class PlanPropertiesSpec extends AnyFunSuite {
     assert(p.contains("BroadcastExchange") || p.contains("BroadcastHashJoin"), p)
   }
 
-  test("serving read is exchange-free after compact() and over a resolved overlay") {
+  test("serving read: no window after compact(), one over contested rows only") {
     import org.apache.spark.sql.functions._
+    import graft.operators.IndexTable
     val path = java.nio.file.Files.createTempDirectory("plan_readlatest").toString + "/idx"
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
       .where(col("doc_id") < 50)
       .select(concat_ws("/", col("source"), col("doc_id")).as("document_path"), col("text"))
-    graft.operators.IndexTable.append(
-      graft.operators.IndexTable.ingestRecords(docs, "t", pageSize = 64), path)
-    graft.operators.IndexTable.compact(spark, path, "t")
+    IndexTable.append(IndexTable.ingestRecords(docs, "t", pageSize = 64), path)
+    IndexTable.compact(spark, path, "t")
     // zero active deltas: the generation is pre-resolved — the read must be
     // the bare pruned scan, no upsert window, no exchange of any kind
-    val clean = graft.operators.IndexTable.readLatest(spark, path, "t")
+    val clean = IndexTable.readLatest(spark, path, "t")
     clean.collect()
     val p = clean.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(!p.contains("Exchange"), p)
     assert(!p.contains("Window"), p)
-    // delta overlay: resolved once when the read is planned, then the read
-    // scans the generation and the persisted overlay — no exchange and no
-    // window of its own (the overlay's resolution plan sits inside the
-    // cached relation, not among the read's operators)
-    graft.operators.IndexTable.append(
-      graft.operators.IndexTable.ingestRecords(
-        docs.where(col("document_path").endsWith("/1")), "t", pageSize = 64), path)
-    val overlay = graft.operators.IndexTable.readLatest(spark, path, "t")
-    overlay.collect()
+    // deltas pending: five upserted docs and one new doc. Only ids in the
+    // deltas are contested, so the one shuffle, the upsert window's, carries
+    // the generation rows with those ids plus the delta rows
+    val genIds = IndexTable.read(spark, path, "t").select(col("id")).collect().map(_.getString(0))
+    val delta = IndexTable.ingestRecords(docs.where(col("document_path").endsWith("/1"))
+      .unionByName(spark.range(1).select(lit("new/doc").as("document_path"),
+        lit("okapi tapir narwhal").as("text"))), "t", pageSize = 64)
+    val deltaIds = delta.select(col("id")).collect().map(_.getString(0))
+    IndexTable.append(delta, path)
+    val latest = IndexTable.readLatest(spark, path, "t")
+    latest.collect()
     def nodes(p: org.apache.spark.sql.execution.SparkPlan)
         : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
@@ -182,11 +184,15 @@ class PlanPropertiesSpec extends AnyFunSuite {
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q +: nodes(q.plan)
       case _ => p +: p.children.flatMap(nodes)
     }
-    val p2 = overlay.queryExecution.executedPlan
-    val names = nodes(p2).map(_.nodeName)
-    assert(!names.exists(_.contains("Exchange")), p2)
-    assert(!names.exists(_.contains("Window")), p2)
-    assert(names.contains("InMemoryTableScan"), p2)
+    val p2 = latest.queryExecution.executedPlan
+    assert(nodes(p2).count(_.nodeName == "Window") === 1, p2)
+    val windowInput = nodes(p2).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        e.metrics("shuffleRecordsWritten").value
+    }
+    val contested = genIds.count(deltaIds.toSet)
+    assert(contested > 0 && contested < genIds.length)
+    assert(windowInput === Seq((contested + deltaIds.length).toLong), p2)
   }
 
   test("packing's only single-partition exchange carries the tiny bucket-totals table") {

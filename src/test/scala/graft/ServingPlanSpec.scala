@@ -113,7 +113,7 @@ class ServingPlanSpec extends AnyFunSuite {
     IndexTable.append(IndexTable.ingestRecords(
       Seq(("planted/c", "okapi tapir")).toDF("document_path", "text"), "t"), path)
     assert(measure(IndexTable.read(spark, path, "t"))._1 === 0)
-    // the first search of this file set resolves the overlay
+    // the first search of this file set resolves the deltas and caches its rows
     val cold = store.search(prompt, "t", topN = 10).collect().toSeq
     var warm = Seq.empty[org.apache.spark.sql.Row]
     val (jobs, shuffle) = measure { warm = store.search(prompt, "t", topN = 10).collect().toSeq }
@@ -121,6 +121,21 @@ class ServingPlanSpec extends AnyFunSuite {
     assert(shuffle === 0L)
     assert(warm === cold)
     assert(measure(store.answers(prompt, "t", topN = 3, threshold = 0).collect())._1 === 1)
+    store.dropIndex()
+  }
+
+  test("readLatest on a new file set with deltas pending runs no job, starts no SQL " +
+      "execution and persists nothing") {
+    val (path, store, _) = tenantWithDeltas("graft_plan_lazy")
+    IndexTable.append(IndexTable.ingestRecords(
+      Seq(("planted/d", "okapi tapir")).toDF("document_path", "text"), "t"), path)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    var latest: DataFrame = null
+    val (jobs, _, sqlExecutions) = count { latest = IndexTable.readLatest(spark, path, "t") }
+    assert(jobs === 0)
+    assert(sqlExecutions === 0)
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet === persisted)
+    assert(latest.where($"document_path" === "planted/d").count() === 1L)
     store.dropIndex()
   }
 

@@ -20,7 +20,7 @@ import graft.operators.IndexTable
   * `ingest_seq`. Every doc is one page, so a doc path is one id.
   *
   * Every step reads twice through the same instance: the first read of a
-  * new file set resolves its delta overlay, the second reuses it. */
+  * new file set plans over freshly read relations, the second reuses them. */
 class StoreModelSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
