@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.core.ModelRegistry
 import graft.functions.Embedder
-import graft.operators.{IndexTable, KnnSearch, Rerank}
+import graft.operators.{BinaryQuant, IndexTable, KnnSearch, Rerank}
 
 /** User-facing facade — the one-object surface a user of the reference
   * application needs to switch: every operation the reference exposes
@@ -31,14 +31,13 @@ final class GraftVectorStore(
     model: String = ModelRegistry.default,
     seed: Int = Embedder.DefaultSeed,
     encryptAlias: Boolean = false,
-    // Some(candidates): binary-sketch approximate tier — rows stored plain;
-    // `approximate = true` runs the two-stage Hamming search
-    // (operators/BinaryQuant.hammingSearch): the sweep packs the sign bits
-    // of each row's leading 64 dims from its float vector at query time
-    // (so it reads every row's vector) and keeps the Hamming-nearest ids;
-    // exact cosine is computed only for that candidate sliver. probeDepth
-    // scales the candidate pool. No persisted structure, so appends never
-    // invalidate anything — the zero-maintenance approximate tier.
+    // Some(candidates): binary-sketch approximate tier over the same cached
+    // serving rows as exact search; `approximate = true` keeps the
+    // `candidates * probeDepth` rows whose sign bits over the leading 64
+    // dims are Hamming-nearest the query's, and ranks only those by exact
+    // cosine (operators/BinaryQuant.serveHamming). probeDepth scales the
+    // candidate pool. No persisted structure, so appends never invalidate
+    // anything: the zero-maintenance approximate tier.
     binaryCandidates: Option[Int] = None,
     // Pluggable embedding model (None = the murmur hashing-trick default):
     // `docCol` embeds the cleansed page column at ingest, `query` embeds a
@@ -50,6 +49,8 @@ final class GraftVectorStore(
     // embedder stays the production fast path (the embed_documents /
     // embed_hashed_sparse twin discipline).
     embedder: Option[GraftVectorStore.Embedding] = None) {
+  require(binaryCandidates.forall(_ >= 1),
+    s"binaryCandidates must be at least 1, got ${binaryCandidates.get}")
 
   private def resolveAlias(alias: String): String =
     if (encryptAlias) IndexTable.encodeAlias(alias) else alias
@@ -106,43 +107,36 @@ final class GraftVectorStore(
     * `KnnSearch.topK` over `IndexTable.readLatest`.
     *
     * `approximate = true` (requires `binaryCandidates`): the binary-sketch
-    * Hamming sweep keeps the `binaryCandidates * probeDepth` nearest ids
-    * and re-ranks only those by exact cosine — probeDepth is the
-    * recall/cost dial, the same dial the reference's HNSW turns with
-    * efSearch. */
+    * tier, one Spark job over the same serving rows
+    * ([[graft.operators.BinaryQuant.serveHamming]]). It keeps the
+    * `binaryCandidates * probeDepth` rows (at least `topN`) Hamming-nearest
+    * the query's sign bits and ranks only those by cosine rounded to 4
+    * places, ties on `xxhash64(id)`: the hits of
+    * [[graft.operators.BinaryQuant.hammingTopK]] joined back to the rows.
+    * probeDepth is the recall/cost dial, the one the reference's HNSW
+    * turns with efSearch. */
   def search(prompt: String, alias: String, topN: Int = 10,
              approximate: Boolean = false, probeDepth: Int = 1): DataFrame = {
     val qvec = queryVec(prompt)
-    if (!approximate) local(exactHits(qvec, alias, topN).map(_.toRow), KnnSearch.hitSchema)
-    else {
-      require(binaryCandidates.nonEmpty,
-        "approximate search requires the store to be built with binaryCandidates")
-      binarySearch(qvec, alias, topN, probeDepth)
-    }
+    val hits =
+      if (!approximate) exactHits(qvec, alias, topN)
+      else {
+        require(binaryCandidates.nonEmpty,
+          "approximate search requires the store to be built with binaryCandidates")
+        val pool = math.min(binaryCandidates.get.toLong * math.max(1, probeDepth), Int.MaxValue)
+        BinaryQuant.serveHamming(servingRows(alias), qvec, topN,
+          math.max(pool.toInt, topN))
+      }
+    local(hits.map(_.toRow), KnnSearch.hitSchema)
   }
 
+  private def servingRows(alias: String) = IndexTable.serving(spark, indexPath, resolveAlias(alias))
+
   private def exactHits(qvec: Array[Float], alias: String, topN: Int): Seq[KnnSearch.Hit] =
-    KnnSearch.serveTopK(IndexTable.serving(spark, indexPath, resolveAlias(alias)), qvec, topN)
+    KnnSearch.serveTopK(servingRows(alias), qvec, topN)
 
   private def local(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
-
-  /** Binary-sketch approximate path: Hamming sweep + exact re-rank of
-    * the `binaryCandidates * probeDepth` nearest ids over the serving
-    * slice, as two shuffle-free scans
-    * ([[graft.operators.BinaryQuant.hammingSearch]]: the sweep runs in
-    * this call, the re-rank when the result is read). Ids are xxhash64 of
-    * the record id, as in [[graft.operators.BinaryQuant.hammingTopK]]'s
-    * batch form. */
-  private def binarySearch(qvec: Array[Float], alias: String, topN: Int,
-                           probeDepth: Int): DataFrame = {
-    val cand = binaryCandidates.get * math.max(1, probeDepth)
-    val nodes = IndexTable.readLatest(spark, indexPath, resolveAlias(alias))
-      .withColumn("__nid", xxhash64(col("id")))
-    KnnSearch.hitProjection(graft.operators.BinaryQuant.hammingSearch(
-      nodes, qvec, k = topN, candidates = math.max(cand, topN),
-      corpusVec = "page_content_vector", corpusId = "__nid"))
-  }
 
   /** Hybrid search: BM25 over the stored page content + vector cosine,
     * fused by reciprocal-rank fusion — the lexical+semantic combination the

@@ -1,9 +1,14 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.VectorFunctions
+import graft.plans.VectorExpressions
 
 /** Binary (sign-bit) vector quantization + Hamming-distance search — the
   * third rung of the quantization ladder (SQ8 = 4x smaller, PQ = codebook
@@ -17,6 +22,11 @@ import graft.functions.VectorFunctions
   * candidate sweep affordable at 100 TB. Search is the standard two-stage
   * shape: Hamming top-`candidates` over the packed words (cheap, full
   * sweep), then exact float cosine re-rank of the candidate set only.
+  *
+  * Two forms compute the same hits: [[hammingTopK]], the batch DataFrame
+  * operator over many queries, and [[serveHamming]], the one-query request
+  * kernel the store facade serves with, one RDD job over a tenant's cached
+  * serving rows ([[IndexTable.serving]]).
   *
   * Packing is a Horner fold over the sign bits (`acc*2 + bit`, high bit
   * first) — integer-exact, order-pinned, and replayable verbatim by an ANSI
@@ -93,42 +103,109 @@ object BinaryQuant {
       .select(col(queryId), col(corpusId), col("hamming"), col("similarity"), col("rank"))
   }
 
-  /** One query's [[hammingTopK]] as two narrow scans of `corpus` — the
-    * serving shape, where the batch operator's spread, grouped top-k and
-    * join-back cost more than the work itself:
-    *  1. TakeOrdered of the `candidates` nearest ids by (hamming asc, id
-    *     asc), collected to the driver (a `candidates`-long id list);
-    *  2. `id IN (candidates)`, exact cosine rounded to 4 on those rows only,
-    *     TakeOrdered top-`k` by (similarity desc, id asc), projecting the
-    *     corpus columns directly.
-    * No exchange, no aggregate, no join: two jobs per query. Both cuts use
-    * [[hammingTopK]]'s keys, and a corpus id equal to `queryId` is excluded
-    * as its `=!=` join does, so the hits equal [[hammingTopK]]'s output
-    * joined back to the corpus, order included — provided `corpus` reads
-    * the same rows in both scans (a frozen file set).
-    *
-    * Output: `corpus`'s columns plus `similarity`, best first. */
-  def hammingSearch(corpus: DataFrame, queryVec: Array[Float], k: Int, candidates: Int,
-                    corpusVec: String = "embedding", corpusId: String = "vec_id",
-                    queryId: Long = -1L): DataFrame = {
+  /** Spark's `xxhash64(id)`: the node id [[hammingTopK]] keys a store row
+    * by when the facade feeds it the tenant (seed 42; a null id hashes to
+    * the seed). */
+  private[graft] def nodeId(id: String): Long =
+    if (id == null) 42L else XXH64.hashUTF8String(UTF8String.fromString(id), 42L)
+
+  /** [[packWord]] over a JVM vector: bit `j` is 1 iff dim `lo + j` is `>= 0`
+    * in Spark's float order (so `-0.0` and NaN count as non-negative); a dim
+    * past the end, or a null vector, gives 0. */
+  private[graft] def packWord(vec: Array[Float], lo: Int): Long = {
+    var w = 0L
+    var i = lo + 31
+    while (i >= lo) {
+      val bit = vec != null && i < vec.length && SQLOrderingUtil.compareFloats(vec(i), 0f) >= 0
+      w = w * 2 + (if (bit) 1 else 0)
+      i -= 1
+    }
+    w
+  }
+
+  /** Spark's `round(x, 4)` on a double: HALF_UP on the shortest decimal
+    * form of `x`; NaN, the infinities and null pass through. */
+  private[graft] def round4(x: java.lang.Double): java.lang.Double =
+    if (x == null || x.isNaN || x.isInfinite) x
+    else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+
+  /** A partition's candidate, with its hit only when it can still make the
+    * top k (see [[serveHamming]]). */
+  private final case class Scored(hamming: Int, nid: Long, hit: KnnSearch.Hit)
+
+  /** (hamming asc, nid asc): the candidate cut's order. */
+  private def compareSweep(ha: Int, na: Long, hb: Int, nb: Long): Int = {
+    val c = Integer.compare(ha, hb)
+    if (c != 0) c else java.lang.Long.compare(na, nb)
+  }
+
+  /** (similarity desc, nulls last, nid asc): the re-rank's order. */
+  private val rankOrder: Ordering[Scored] = new Ordering[Scored] {
+    def compare(a: Scored, b: Scored): Int = {
+      val c = KnnSearch.compareDoublesDesc(a.hit.similarity, b.hit.similarity)
+      if (c != 0) c else java.lang.Long.compare(a.nid, b.nid)
+    }
+  }
+
+  /** One query's [[hammingTopK]] over serving rows, as one job: the
+    * request kernel of the facade's approximate search. The query's two
+    * words are packed on the driver and bound in the task closure with the
+    * vector. Each partition keeps its `candidates` nearest rows by (hamming
+    * asc, nid asc), skipping a row whose nid is -1 as the batch form's
+    * `=!=` join against the facade's query id -1 does, and computes the rounded cosine for those rows
+    * only. It ships (hamming, nid) for every candidate, but the hit columns
+    * only for a candidate in the top `k` by (similarity desc, nid asc) of
+    * the partition's candidates at or ahead of it: the global candidate set
+    * holds a prefix of each partition's candidates, so no other row can make
+    * the final top `k`. The driver cuts the global top `candidates` and
+    * returns the top `k` of them best first. Hits, order and similarity
+    * equal [[hammingTopK]]'s output joined back to the rows, for rows whose
+    * vectors have at least 64 dims (pack64 fails on a shorter one under
+    * ANSI; here its missing dims pack as 0). */
+  def serveHamming(rows: RDD[Array[ServingRow]], queryVec: Array[Float], k: Int,
+                   candidates: Int): Seq[KnnSearch.Hit] = {
+    require(k >= 0, s"k must be non-negative, got $k")
     require(candidates >= k, s"candidates ($candidates) must be >= k ($k)")
-    // the query's words are packed once on the driver (a one-row local
-    // relation runs no job), not re-packed next to every corpus row
-    val (p0, p1) = pack64(col("_1"))
-    val qw = corpus.sparkSession.createDataFrame(Seq(Tuple1(queryVec.toSeq)))
-      .select(p0, p1).head()
-    val (c0, c1) = pack64(col(corpusVec))
-    val cand = corpus.where(col(corpusId) =!= queryId)
-      .select(col(corpusId).cast("long").as("__cand"),
-        hamming(c0, c1, lit(qw.getLong(0)), lit(qw.getLong(1))).as("__hamming"))
-      .orderBy(asc("__hamming"), asc("__cand"))
-      .limit(candidates)
-      .collect().map(_.getLong(0))
-    corpus.where(col(corpusId).isin(cand.toSeq: _*))
-      .withColumn("similarity",
-        round(VectorFunctions.cosineSimilarity(col(corpusVec), typedlit(queryVec)), 4))
-      .orderBy(desc("similarity"), asc(corpusId))
-      .limit(k)
+    if (k == 0) Seq.empty
+    else {
+      val (q0, q1) = (packWord(queryVec, 0), packWord(queryVec, 32))
+      rows.mapPartitions { it =>
+        // the worst kept candidate at the head; the queue grows past its
+        // initial capacity, so a huge pool allocates nothing up front
+        val pool = new java.util.PriorityQueue[(Int, Long, ServingRow)](math.min(candidates, 64),
+          (a, b) => compareSweep(b._1, b._2, a._1, a._2))
+        it.flatMap(_.iterator).foreach { r =>
+          val nid = nodeId(r.id)
+          if (nid != -1L) {
+            val h = java.lang.Long.bitCount(packWord(r.vector, 0) ^ q0) +
+              java.lang.Long.bitCount(packWord(r.vector, 32) ^ q1)
+            if (pool.size < candidates || compareSweep(h, nid, pool.peek._1, pool.peek._2) < 0) {
+              if (pool.size == candidates) pool.poll()
+              pool.add((h, nid, r))
+            }
+          }
+        }
+        val swept = pool.toArray(new Array[(Int, Long, ServingRow)](0))
+          .sortWith((a, b) => compareSweep(a._1, a._2, b._1, b._2) < 0)
+        // the top k of the candidates walked so far, the worst at the head
+        val top = new java.util.PriorityQueue[Scored](math.min(k, 64), rankOrder.reverse)
+        Iterator.single(swept.map { case (h, nid, r) =>
+          val sim = if (r.vector == null) null
+            else round4(VectorExpressions.cosine(r.vector, queryVec))
+          val s = Scored(h, nid, KnnSearch.Hit(r.id, r.indexAlias, r.documentPath,
+            r.pageNumber, r.pageContent, sim))
+          if (top.size < k || rankOrder.lt(s, top.peek)) {
+            if (top.size == k) top.poll()
+            top.add(s)
+            s
+          } else s.copy(hit = null)
+        })
+      }.collect().flatten
+        .sortWith((a, b) => compareSweep(a.hamming, a.nid, b.hamming, b.nid) < 0)
+        .take(candidates)
+        .filter(_.hit != null)
+        .sorted(rankOrder).take(k).map(_.hit).toSeq
+    }
   }
 
   /** IVF x binary composition — the two ANN cost axes composed: IVF cell

@@ -541,12 +541,12 @@ object IndexTable {
   }
 
   /** The serving rows of one tenant: [[readLatest]]'s live rows as JVM
-    * values, one array per partition, for the request kernel
-    * [[KnnSearch.serveTopK]]. Built at most once per file set (the
-    * `serving` slot of [[relations]]) from `readLatest`'s physical plan,
-    * and persisted `MEMORY_AND_DISK`: upsert resolution, planning and
-    * decoding happen once per view, and this is the only per-view cache
-    * that holds data. With deltas pending, building the RDD runs the
+    * values, one array per partition, for the request kernels
+    * [[KnnSearch.serveTopK]] and [[BinaryQuant.serveHamming]]. Built at
+    * most once per file set (the `serving` slot of [[relations]]) from
+    * `readLatest`'s physical plan, and persisted `MEMORY_AND_DISK`: upsert
+    * resolution, planning and decoding happen once per view, and this is
+    * the only per-view cache that holds data. With deltas pending, building the RDD runs the
     * resolution's broadcast and shuffle; the first job over the RDD fills
     * the cache. The cache holds one value per partition, not one per row,
     * so filling it does not track the size of every row (on a tenant of

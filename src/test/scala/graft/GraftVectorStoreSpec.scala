@@ -175,6 +175,99 @@ class GraftVectorStoreSpec extends AnyFunSuite {
     store.dropIndex()
   }
 
+  /** The facade's approximate hits as (id, similarity), and the batch
+    * operator's: [[graft.operators.BinaryQuant.hammingTopK]] over the latest
+    * view, joined back to the rows in rank order. */
+  private def approximateHits(store: GraftVectorStore, prompt: String,
+                              topN: Int): Seq[(String, Double)] =
+    store.search(prompt, "t", topN = topN, approximate = true)
+      .select($"id", $"similarity").as[(String, Double)].collect().toSeq
+
+  private def hammingReference(path: String, prompt: String, topN: Int,
+                               candidates: Int): Seq[(String, Double)] = {
+    val nodes = graft.operators.IndexTable.readLatest(spark, path, "t")
+      .withColumn("__nid", xxhash64($"id"))
+    val q = Seq((-1L, graft.functions.Embedder.embedQuery(prompt).toSeq)).toDF("q_id", "q_vec")
+    graft.operators.BinaryQuant.hammingTopK(nodes, q, k = topN,
+        candidates = math.max(candidates, topN),
+        corpusVec = "page_content_vector", corpusId = "__nid")
+      .join(nodes, Seq("__nid")).orderBy($"rank")
+      .select($"id", $"similarity").as[(String, Double)].collect().toSeq
+  }
+
+  test("binary-sketch store: ties on hamming and on similarity break on xxhash64(id) as " +
+      "in the batch form, over several partitions, at topN = 0 and past the tenant's size") {
+    import graft.operators.{BinaryQuant, IndexTable, KnnSearch}
+    val path = java.nio.file.Files.createTempDirectory("graft_binties").toString + "/idx"
+    val store = new GraftVectorStore(spark, path, binaryCandidates = Some(3))
+    // each text under four paths, in four batches: equal pages have equal
+    // sign words and equal similarity. Two batches are compacted and two
+    // stay delta files, so the tenant's rows span several partitions.
+    val texts = Seq("okapi tapir pangolin narwhal", "fast spark table scan query",
+      "vector index cosine search", "cooking dinner tonight with friends")
+    (0 until 4).foreach { b =>
+      store.addDocuments(texts.indices.map(t => (s"dup/$t/${(t + b) % 4}", texts(t)))
+        .toDF("document_path", "text"), "t", pageSize = 32)
+      if (b == 1) store.compactIndex("t")
+    }
+    store.addDocuments(spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
+      .select($"source".as("document_path"), $"text").limit(8), "t", pageSize = 32)
+    assert(IndexTable.deltaFileCount(spark, path, "t") > 0)
+    assert(IndexTable.serving(spark, path, "t").getNumPartitions > 1)
+    val size = IndexTable.readLatest(spark, path, "t").count().toInt
+    val pools = Seq(3, 5, size, size * 4)
+    val stores = pools.map(c => c -> new GraftVectorStore(spark, path, binaryCandidates = Some(c)))
+    // the sketch of every row, to see that the cut falls inside a tie
+    val sketch = IndexTable.readLatest(spark, path, "t")
+      .select($"id", $"page_content_vector").as[(String, Array[Float])].collect()
+    var cutTies, rankTies = 0
+    for (prompt <- texts :+ "spark table"; (pool, s) <- stores; topN <- Seq(2, 5)) {
+      val got = approximateHits(s, prompt, topN)
+      val candidates = math.max(pool, topN)
+      assert(got === hammingReference(path, prompt, topN, candidates),
+        s"'$prompt', topN $topN, $candidates candidates")
+      val q = graft.functions.Embedder.embedQuery(prompt)
+      val (q0, q1) = (BinaryQuant.packWord(q, 0), BinaryQuant.packWord(q, 32))
+      val order = sketch.map { case (id, v) =>
+        (java.lang.Long.bitCount(BinaryQuant.packWord(v, 0) ^ q0) +
+          java.lang.Long.bitCount(BinaryQuant.packWord(v, 32) ^ q1), BinaryQuant.nodeId(id))
+      }.sorted
+      if (candidates < size && order(candidates - 1)._1 == order(candidates)._1) cutTies += 1
+      if (got.map(_._2).distinct.size < got.size) rankTies += 1
+    }
+    assert(cutTies > 0, "no candidate cut fell inside a hamming tie")
+    assert(rankTies > 0, "no top-k held a similarity tie")
+    // topN = 0 is an empty answer with the hit schema
+    val none = store.search(texts.head, "t", topN = 0, approximate = true)
+    assert(none.schema === KnnSearch.hitSchema)
+    assert(none.collect().isEmpty)
+    store.dropIndex()
+  }
+
+  test("a binary-sketch store refuses a pool below one candidate") {
+    val path = java.nio.file.Files.createTempDirectory("graft_binpool").toString + "/idx"
+    Seq(0, -3).foreach { c =>
+      val e = intercept[IllegalArgumentException](
+        new GraftVectorStore(spark, path, binaryCandidates = Some(c)))
+      assert(e.getMessage.contains(s"binaryCandidates must be at least 1, got $c"))
+    }
+    new GraftVectorStore(spark, path, binaryCandidates = Some(1))
+    new GraftVectorStore(spark, path, binaryCandidates = None)
+  }
+
+  test("a negative topN fails the approximate search as it fails the exact one") {
+    val path = java.nio.file.Files.createTempDirectory("graft_binneg").toString + "/idx"
+    val store = new GraftVectorStore(spark, path, binaryCandidates = Some(4))
+    store.addDocuments(Seq(("a.txt", "fast spark table scan query"))
+      .toDF("document_path", "text"), "t")
+    val exact = intercept[IllegalArgumentException](store.search("spark", "t", topN = -1))
+    val approx = intercept[IllegalArgumentException](
+      store.search("spark", "t", topN = -1, approximate = true))
+    assert(exact.getMessage.contains("k must be non-negative, got -1"))
+    assert(approx.getMessage === exact.getMessage)
+    store.dropIndex()
+  }
+
   test("multi-tenant isolation via partition pruning + alias encryption") {
     val path = java.nio.file.Files.createTempDirectory("graft_store2").toString + "/idx"
     val store = new GraftVectorStore(spark, path, encryptAlias = true)

@@ -7,13 +7,15 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions
-import graft.operators.{Chunker, Rerank}
+import graft.operators.{BinaryQuant, Chunker, Rerank}
 import graft.plans.{CosineSimilarityExpr, VectorExpressions}
 
 /** The JVM kernels the serving path shares with the Spark expressions:
-  * [[VectorExpressions.cosine]] against [[CosineSimilarityExpr]], and
+  * [[VectorExpressions.cosine]] against [[CosineSimilarityExpr]],
   * [[Rerank.keywordScore]] against the keyword-overlap score written as
-  * Spark expressions (kept here as the reference). */
+  * Spark expressions (kept here as the reference), and the binary sketch's
+  * node id, sign words and rounding against `xxhash64`,
+  * [[BinaryQuant.pack64]] and `round(x, 4)`. */
 class ServingKernelSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -92,5 +94,61 @@ class ServingKernelSpec extends AnyFunSuite {
     assert(compared === prompts.size * contents.size)
     // a prompt without keywords scores every row 0, so threshold 0 keeps it
     assert(Rerank.keywordScore(Rerank.keywords("the and of"), null) === Some(0))
+  }
+
+  test("the binary sketch's node id is Spark's xxhash64 for ASCII, non-ASCII, empty " +
+      "and null ids") {
+    val ids: Seq[String] = Seq("a", "doc/1.pdf#page=3", "0" * 40, "İSTANBUL", "i̇stanbul",
+      "ΟΔΟΣ", "🚀 rocket", "ǅ", "", null) ++
+      (1 to 20).map(i => java.security.MessageDigest.getInstance("SHA-1")
+        .digest(s"path/$i#$i".getBytes("UTF-8")).map("%02x".format(_)).mkString)
+    val expected = ids.toDF("id").select(xxhash64($"id")).as[Long].collect().toSeq
+    assert(ids.map(BinaryQuant.nodeId) === expected)
+    assert(BinaryQuant.nodeId(null) === 42L)
+  }
+
+  test("the binary sketch's sign words equal pack64 for 1,536-dim, short, zero, " +
+      "negative-zero, NaN and null vectors") {
+    val rng = new scala.util.Random(5)
+    def vec(n: Int): Array[Float] = Array.fill(n)(rng.nextGaussian().toFloat)
+    val full: Seq[Array[Float]] = Seq.fill(30)(vec(1536)) ++ Seq(
+      new Array[Float](1536), Array.fill(64)(-0.0f), Array.fill(64)(Float.NaN),
+      Array.tabulate(64)(i => if (i % 3 == 0) -0.0f else if (i % 3 == 1) Float.NaN else -1f),
+      Array.tabulate(70)(i => if (i % 2 == 0) Float.NegativeInfinity else Float.MinPositiveValue),
+      null)
+    val short: Seq[Array[Float]] = Seq(Array.empty[Float], vec(1), vec(31), vec(32), vec(33),
+      vec(63), Array.fill(40)(-0.0f), Array.fill(10)(Float.NaN))
+    def packed(vs: Seq[Array[Float]]): Seq[(Long, Long)] = {
+      val (h0, h1) = BinaryQuant.pack64($"v")
+      vs.map(Tuple1(_)).toDF("v").select(h0, h1).as[(Long, Long)].collect().toSeq
+    }
+    def words(vs: Seq[Array[Float]]): Seq[(Long, Long)] =
+      vs.map(v => (BinaryQuant.packWord(v, 0), BinaryQuant.packWord(v, 32)))
+    assert(words(full) === packed(full))
+    // pack64 reads past a short vector's end: element_at fails under ANSI
+    // and is null (a 0 bit) without it
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try assert(words(short) === packed(short))
+    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  test("the binary sketch's rounding equals Spark's round(x, 4), half-way points " +
+      "and NaN included") {
+    val rng = new scala.util.Random(9)
+    val xs: Seq[java.lang.Double] = (Seq(0.00005, -0.00005, 0.12345, -0.12345, 0.99995,
+      -0.99995, 1.00005, 0.5, 0.00015, 0.00025, 0.1234500000001, 0.12344999999, 1e-20,
+      -1e-20, 0.0, -0.0, 1.0, -1.0, Double.MinPositiveValue, Double.NaN,
+      Double.PositiveInfinity, Double.NegativeInfinity) ++
+      Seq.fill(200)(rng.nextDouble() * 2 - 1) ++
+      Seq.fill(50)(math.round((rng.nextDouble() * 2 - 1) * 20000) / 20000.0))
+      .map(java.lang.Double.valueOf) :+ null
+    val expected = xs.toDF("x").select(round($"x", 4)).collect().map(r =>
+      if (r.isNullAt(0)) null else java.lang.Double.valueOf(r.getDouble(0))).toSeq
+    xs.zip(expected).foreach { case (x, e) =>
+      val got = BinaryQuant.round4(x)
+      if (e == null) assert(got == null, s"$x")
+      else assert(bits(got) === bits(e), s"$x")
+    }
   }
 }

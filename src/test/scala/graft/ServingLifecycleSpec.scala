@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * their file set is current and no longer: one persisted serving RDD per
   * tenant at most, released when a write replaces it and when the index is
   * dropped — and built once even when two threads make the first search of
-  * a new file set together. */
+  * a new file set together. Exact and approximate searches share them. */
 class ServingLifecycleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -50,12 +50,15 @@ class ServingLifecycleSpec extends AnyFunSuite {
     assert(servingRdds(path, "u") === 0)
   }
 
-  test("two threads making the first search of a new file set together build it once") {
-    val path = java.nio.file.Files.createTempDirectory("serving_race").toString + "/idx"
-    val store = new GraftVectorStore(spark, path)
+  /** Two threads make the first search of a new file set together: both
+    * get the same hits, every job of the race reads one serving RDD, and
+    * one stays persisted until the index is dropped. */
+  private def raceFirstSearch(dir: String, approximate: Boolean): Unit = {
+    val path = java.nio.file.Files.createTempDirectory(dir).toString + "/idx"
+    val store = new GraftVectorStore(spark, path, binaryCandidates = Some(16))
     store.addDocuments(docs(20), "t", pageSize = 32)
     store.compactIndex("t")
-    store.search("spark", "t").collect()
+    store.search("spark", "t", approximate = approximate).collect()
     store.addDocuments(docs(5).withColumn("text", org.apache.spark.sql.functions.upper($"text")),
       "t", pageSize = 32)
     val name = s"serving $path/index_alias=t"
@@ -72,7 +75,8 @@ class ServingLifecycleSpec extends AnyFunSuite {
       val barrier = new CyclicBarrier(2)
       val searches = Seq.fill(2)(Future {
         barrier.await(30, TimeUnit.SECONDS)
-        store.search("fast spark table scan query", "t").collect().toSeq
+        store.search("fast spark table scan query", "t", approximate = approximate)
+          .collect().toSeq
       })
       Await.result(Future.sequence(searches), 2.minutes)
     } finally {
@@ -81,8 +85,44 @@ class ServingLifecycleSpec extends AnyFunSuite {
       spark.sparkContext.removeSparkListener(listener)
     }
     assert(results.head === results.last)
+    assert(results.head.nonEmpty)
     assert(read.asScala.size === 1)
     assert(servingRdds(path, "t") === 1)
+    store.dropIndex()
+    assert(servingRdds(path, "t") === 0)
+  }
+
+  test("two threads making the first search of a new file set together build it once") {
+    raceFirstSearch("serving_race", approximate = false)
+  }
+
+  test("two threads making the first approximate search of a new file set together " +
+      "build it once") {
+    raceFirstSearch("serving_race_ann", approximate = true)
+  }
+
+  test("approximate and exact searches over one tenant share its one persisted " +
+      "serving RDD") {
+    val path = java.nio.file.Files.createTempDirectory("serving_shared").toString + "/idx"
+    val store = new GraftVectorStore(spark, path, binaryCandidates = Some(16))
+    store.addDocuments(docs(20), "t", pageSize = 32)
+    store.compactIndex("t")
+    (1 to 6).foreach { i =>
+      val doc = s"shared/$i"
+      val text = s"shared $i okapi tapir pangolin"
+      // the approximate search first, on odd cycles: either tier may fill it
+      val tiers = if (i % 2 == 1) Seq(true, false) else Seq(false, true)
+      store.addDocuments(Seq((doc, text)).toDF("document_path", "text"), "t", pageSize = 32)
+      tiers.foreach { approximate =>
+        val hits = store.search(text, "t", topN = 3, approximate = approximate)
+          .select($"document_path").as[String].collect()
+        assert(hits.head === doc, s"cycle $i, approximate = $approximate")
+        assert(servingRdds(path, "t") === 1, s"cycle $i, approximate = $approximate")
+      }
+      store.answers("okapi tapir", "t", threshold = 0).collect()
+      if (i % 3 == 0) store.compactIndex("t")
+      assert(servingRdds(path, "t") === 1, s"after cycle $i")
+    }
     store.dropIndex()
     assert(servingRdds(path, "t") === 0)
   }
