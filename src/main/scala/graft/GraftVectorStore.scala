@@ -101,9 +101,9 @@ final class GraftVectorStore(
     * record wins, duplicates never reach the top-k.
     *
     * The exact search runs when called, as one Spark job over the
-    * tenant's serving rows ([[IndexTable.serving]]: decoded and planned
-    * once per view), and returns its at most `topN` hits as a local
-    * DataFrame: reading it runs no job. Rows and order are those of
+    * tenant's cached serving rows ([[IndexTable.serving]], into which a
+    * write's new delta files fold), and returns its at most `topN` hits
+    * as a local DataFrame: reading it runs no job. Rows and order are those of
     * `KnnSearch.topK` over `IndexTable.readLatest`.
     *
     * `approximate = true` (requires `binaryCandidates`): the binary-sketch
@@ -124,16 +124,14 @@ final class GraftVectorStore(
         require(binaryCandidates.nonEmpty,
           "approximate search requires the store to be built with binaryCandidates")
         val pool = math.min(binaryCandidates.get.toLong * math.max(1, probeDepth), Int.MaxValue)
-        BinaryQuant.serveHamming(servingRows(alias), qvec, topN,
-          math.max(pool.toInt, topN))
+        IndexTable.serving(spark, indexPath, resolveAlias(alias))(
+          BinaryQuant.serveHamming(_, qvec, topN, math.max(pool.toInt, topN)))
       }
     local(hits.map(_.toRow), KnnSearch.hitSchema)
   }
 
-  private def servingRows(alias: String) = IndexTable.serving(spark, indexPath, resolveAlias(alias))
-
   private def exactHits(qvec: Array[Float], alias: String, topN: Int): Seq[KnnSearch.Hit] =
-    KnnSearch.serveTopK(servingRows(alias), qvec, topN)
+    IndexTable.serving(spark, indexPath, resolveAlias(alias))(KnnSearch.serveTopK(_, qvec, topN))
 
   private def local(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)

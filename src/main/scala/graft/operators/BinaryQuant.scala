@@ -35,13 +35,14 @@ import graft.plans.VectorExpressions
 object BinaryQuant {
 
   /** Big-endian Horner pack of sign bits [lo, lo+31] of `vec` (0-based dims)
-    * into one long: bit for dim i is 1 iff vec(i) >= 0. Narrow, codegen'd
-    * sequence/aggregate — no shuffle, no UDF. */
+    * into one long: bit for dim i is 1 iff vec(i) >= 0; a dim past the
+    * vector's end is null, hence a 0 bit, with or without ANSI. Narrow,
+    * codegen'd sequence/aggregate — no shuffle, no UDF. */
   def packWord(vec: Column, lo: Int): Column =
     aggregate(
       sequence(lit(lo + 31), lit(lo), lit(-1)),
       lit(0L),
-      (acc, i) => acc * 2 + when(element_at(vec, i + 1) >= 0f, 1L).otherwise(0L))
+      (acc, i) => acc * 2 + when(try_element_at(vec, i + 1) >= 0f, 1L).otherwise(0L))
 
   /** Pack a 64-dim vector into two 32-bit words (h0 = dims 0-31, h1 = dims
     * 32-63). Two words rather than one 64-bit pack so the top bit never
@@ -159,9 +160,9 @@ object BinaryQuant {
     * holds a prefix of each partition's candidates, so no other row can make
     * the final top `k`. The driver cuts the global top `candidates` and
     * returns the top `k` of them best first. Hits, order and similarity
-    * equal [[hammingTopK]]'s output joined back to the rows, for rows whose
-    * vectors have at least 64 dims (pack64 fails on a shorter one under
-    * ANSI; here its missing dims pack as 0). */
+    * equal [[hammingTopK]]'s output joined back to the rows (a vector
+    * shorter than 64 dims packs its missing dims as 0 in both). Tombstones
+    * are skipped. */
   def serveHamming(rows: RDD[Array[ServingRow]], queryVec: Array[Float], k: Int,
                    candidates: Int): Seq[KnnSearch.Hit] = {
     require(k >= 0, s"k must be non-negative, got $k")
@@ -176,7 +177,7 @@ object BinaryQuant {
           (a, b) => compareSweep(b._1, b._2, a._1, a._2))
         it.flatMap(_.iterator).foreach { r =>
           val nid = nodeId(r.id)
-          if (nid != -1L) {
+          if (nid != -1L && !r.isDeleted) {
             val h = java.lang.Long.bitCount(packWord(r.vector, 0) ^ q0) +
               java.lang.Long.bitCount(packWord(r.vector, 32) ^ q1)
             if (pool.size < candidates || compareSweep(h, nid, pool.peek._1, pool.peek._2) < 0) {

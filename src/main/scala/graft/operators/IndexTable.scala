@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -279,23 +282,35 @@ object IndexTable {
     (gen, all.filterNot(folded), all)
   }
 
-  /** One reuse slot: a value built at most once for its session and key,
-    * and released by `free` when the slot is replaced or dropped. A slot
-    * released while its value is still being built frees that value as
-    * soon as it exists; the reader that asked for it still gets it. */
+  /** One reuse slot: a value built at most once for its session and key.
+    * Readers lease the value ([[use]]), and a released slot frees it once
+    * no reader holds it: a slot released while its value is being built or
+    * read still serves the readers that asked for it. */
   private final class Slot[A](val spark: SparkSession, val key: Seq[String],
-                              build: () => A, free: A => Unit) {
-    private var value: Option[A] = None
+                              build: () => A, free: A => Unit, initial: Option[A] = None) {
+    @volatile private var value: Option[A] = initial
+    private var users = 0
     private var released = false
-    def get: A = synchronized {
-      if (value.isEmpty) {
-        val v = build()
-        if (released) free(v)
-        value = Some(v)
+    /** The value if it is built, without waiting for a build in progress. */
+    def peek: Option[A] = value
+    /** `f` over the value, built first if need be. */
+    def use[B](f: A => B): B = {
+      val v = synchronized {
+        if (value.isEmpty) value = Some(build())
+        users += 1
+        value.get
       }
-      value.get
+      try f(v) finally done()
     }
-    def release(): Unit = synchronized { released = true; value.foreach(free) }
+    /** `f` over the value if it is built (after a build in progress). */
+    def useBuilt[B](f: A => B): Option[B] = {
+      val v = synchronized { value.map { x => users += 1; x } }
+      v.map(x => try f(x) finally done())
+    }
+    def release(): Unit = synchronized { released = true; freeIfIdle() }
+    private def done(): Unit = synchronized { users -= 1; freeIfIdle() }
+    private def freeIfIdle(): Unit =
+      if (released && users == 0) { value.foreach(free); value = None }
   }
 
   /** Values reused across reads, three slots per (index path, tenant), each
@@ -305,52 +320,65 @@ object IndexTable {
     *     directory (immutable once its marker lands);
     *   - `delta`: the parquet relation of the sorted active delta files
     *     (append-only);
-    *   - `serving`: the tenant's live rows decoded to [[ServingRow]]s, keyed
-    *     by both (see [[serving]]).
+    *   - `serving`: the tenant's resolved rows decoded to [[ServingRow]]s
+    *     (a [[View]]), keyed by both (see [[serving]]).
     * A relation freezes its file listing and reads with the declared
     * [[schema]], and the serving rows are a function of those same files,
     * so a slot whose session and key equal the current ones
-    * ([[tenantView]]'s listing) holds exactly what a fresh build would —
-    * without the listing, and for the serving rows without resolving,
-    * planning or decoding the scan. Any write changes the listing, hence
-    * the key, and a read from another session replaces the slot too, so the
-    * map holds at most one session per slot. A replaced serving RDD is
-    * unpersisted. */
+    * ([[tenantView]]'s listing) holds exactly what a fresh build would,
+    * without the listing, and for the serving rows without decoding the
+    * scan. Any write changes the listing, hence the key; the replacing
+    * build may read the replaced value (a serving view folds its
+    * predecessor), which is released only after that build. A read from
+    * another session replaces the slot too, so the map holds at most one
+    * session per slot. [[compact]] re-keys this session's serving view to
+    * the generation it publishes. A released serving view is unpersisted. */
   private val relations =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Slot[_]]()
 
-  /** The slot's value for this session and key, built at most once even
-    * when several threads ask for a new key together. */
-  private def reuse[A](spark: SparkSession, path: String, alias: String, slot: String,
-                       key: Seq[String], free: A => Unit = (_: A) => ())(
-                       build: => A): A = {
-    var replaced: Slot[_] = null
+  /** `use` over the slot's value for this session and key, built at most
+    * once even when several threads ask for a new key together. `build`
+    * gets the slot it replaces when that slot is this session's; the
+    * replaced slot is released after the new value is built and used. */
+  private def reuse[A, B](spark: SparkSession, path: String, alias: String, slot: String,
+                          key: Seq[String], free: A => Unit = (_: A) => ())(
+                          build: Option[Slot[A]] => A)(use: A => B): B = {
+    var replaced: Slot[A] = null
     val s = relations.compute((path, alias, slot), (_, cur) =>
       if (cur != null && (cur.spark eq spark) && cur.key == key) cur
-      else { replaced = cur; new Slot[A](spark, key, () => build, free) })
-    if (replaced != null) replaced.release()
-    s.asInstanceOf[Slot[A]].get
+      else {
+        replaced = cur.asInstanceOf[Slot[A]]
+        val prior = Option(replaced).filter(_.spark eq spark)
+        new Slot[A](spark, key, () => build(prior), free)
+      })
+    try s.asInstanceOf[Slot[A]].use(use)
+    finally if (replaced != null) replaced.release()
   }
 
   /** Drop one slot, releasing what it holds. */
   private def release(path: String, alias: String, slot: String): Unit =
     Option(relations.remove((path, alias, slot))).foreach(_.release())
 
+  /** A parquet relation over delta files (paths relative to the index
+    * root). basePath keeps partition-column discovery (index_alias) rooted
+    * at the index even though Spark is handed leaf files. */
+  private def scan(spark: SparkSession, path: String, files: Seq[String]): DataFrame =
+    spark.read.schema(schema).option("basePath", path).parquet(files.map(d => s"$path/$d"): _*)
+
   private def viewFrame(spark: SparkSession, path: String, alias: String,
                         gen: Option[org.apache.hadoop.fs.Path],
                         deltas: Seq[String]): DataFrame = {
     // the declared schema: no footer-inference job, and one column order
     // whatever order a file was written in
-    val base = gen.map(g => reuse[DataFrame](spark, path, alias, "gen", Seq(g.toString))(
-      spark.read.schema(schema).parquet(g.toString).where(col("index_alias") === alias)))
+    val base = gen.map(g => reuse[DataFrame, DataFrame](spark, path, alias, "gen",
+      Seq(g.toString))(_ => spark.read.schema(schema).parquet(g.toString)
+        .where(col("index_alias") === alias))(identity))
     val delta =
       if (deltas.isEmpty) None
       else {
         val files = deltas.sorted
-        // basePath keeps partition-column discovery (index_alias) rooted
-        // at the index even though we hand Spark leaf files.
-        Some(reuse[DataFrame](spark, path, alias, "delta", files)(spark.read.schema(schema)
-          .option("basePath", path).parquet(files.map(d => s"$path/$d"): _*)))
+        Some(reuse[DataFrame, DataFrame](spark, path, alias, "delta", files)(
+          _ => scan(spark, path, files))(identity))
       }
     (base, delta) match {
       case (Some(b), Some(d)) => b.unionByName(d)
@@ -403,18 +431,26 @@ object IndexTable {
     * than `retainMillis`: a write stamped before it but landing after this
     * compaction still loses to it, as it would have without the compaction.
     *
+    * Once the commit marker lands, this session's cached serving view
+    * ([[serving]]) of exactly the snapshot it folded, `(prevGen, active)`,
+    * becomes the view of `(newGen, no deltas)`: its rows are the resolution
+    * this compaction wrote, less the tombstones below the same retention
+    * cutoff. The next search then folds only the deltas written after it,
+    * instead of decoding the new generation again. A view of any other file
+    * set, or another session's, is left alone and rebuilt on its next read.
+    *
     * Returns the number of live rows surviving compaction. */
   def compact(spark: SparkSession, path: String, alias: String,
               retainMillis: Long = DefaultRetainMillis): Long = {
     val fs = fileSystem(spark, path)
     val (prevGen, active, allDeltas) = tenantView(spark, path, alias)
     if (prevGen.isEmpty && allDeltas.isEmpty) return 0L // no such tenant
+    // ids whose newest record is a tombstone older than the retention
+    // window leave the store HERE — after vacuum's retention window their
+    // bytes are gone from disk
+    val cutoff = (System.currentTimeMillis() - retainMillis) << 10
     val resolved = resolve(spark, path, alias, prevGen, active)
-      // ids whose newest record is a tombstone older than the retention
-      // window leave the store HERE — after vacuum's retention window their
-      // bytes are gone from disk
-      .where(isLive ||
-        col("ingest_seq") >= lit((System.currentTimeMillis() - retainMillis) << 10))
+      .where(isLive || col("ingest_seq") >= lit(cutoff))
     val genDir = new org.apache.hadoop.fs.Path(baseRoot(path), s"gen_${nextGenId()}")
     // each surviving row keeps the stamp it was written with: restamping
     // the generation with this compaction's clock would rank it above an
@@ -435,6 +471,10 @@ object IndexTable {
     // The commit marker is the publish point: its creation atomically flips
     // readers from (prevGen + active deltas) to this generation.
     writeSmallFile(fs, new org.apache.hadoop.fs.Path(genDir, CommitMarker), "")
+    // the key a reader's listing gives the new generation
+    gensFor(fs, path, alias, committedOnly = true).find(_.getName == genDir.getName)
+      .foreach(rekeyServing(spark, path, alias,
+        prevGen.map(_.toString).toSeq ++ active.sorted, _, cutoff))
     vacuum(spark, path, alias, retainMillis)
     read(spark, path, alias).where(isLive).count()
   }
@@ -533,44 +573,233 @@ object IndexTable {
     *     contested, so the upsert window runs over the contested generation
     *     rows plus the delta rows, never over the whole tenant (see
     *     [[resolve]]).
-    * Searches do not run this plan per request: [[serving]] runs it once
-    * per file set. */
+    * Searches do not run this plan: they read [[serving]], which resolves
+    * the same records in the same order on the driver, fold by fold. */
   def readLatest(spark: SparkSession, path: String, alias: String): DataFrame = {
     val (gen, active, _) = tenantView(spark, path, alias)
-    latestView(spark, path, alias, gen, active)
-  }
-
-  /** The serving rows of one tenant: [[readLatest]]'s live rows as JVM
-    * values, one array per partition, for the request kernels
-    * [[KnnSearch.serveTopK]] and [[BinaryQuant.serveHamming]]. Built at
-    * most once per file set (the `serving` slot of [[relations]]) from
-    * `readLatest`'s physical plan, and persisted `MEMORY_AND_DISK`: upsert
-    * resolution, planning and decoding happen once per view, and this is
-    * the only per-view cache that holds data. With deltas pending, building the RDD runs the
-    * resolution's broadcast and shuffle; the first job over the RDD fills
-    * the cache. The cache holds one value per partition, not one per row,
-    * so filling it does not track the size of every row (on a tenant of
-    * about 1,800 rows that tracking cost the first search 35-50 ms). A
-    * write changes the key, so the next call builds a fresh RDD and
-    * unpersists the old one; [[drop]] unpersists it too. */
-  def serving(spark: SparkSession, path: String, alias: String): RDD[Array[ServingRow]] = {
-    val (gen, active, _) = tenantView(spark, path, alias)
-    reuse[RDD[Array[ServingRow]]](spark, path, alias, "serving",
-      gen.map(_.toString).toSeq ++ active.sorted,
-      (r: RDD[Array[ServingRow]]) => { r.unpersist(false); () }) {
-      latestView(spark, path, alias, gen, active)
-        .select(ServingRow.columns.map(col): _*)
-        .queryExecution.toRdd
-        .mapPartitions(it => Iterator.single(it.map(ServingRow.decode).toArray))
-        .setName(s"serving $path/${aliasDirName(alias)}")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-  }
-
-  private def latestView(spark: SparkSession, path: String, alias: String,
-                         gen: Option[org.apache.hadoop.fs.Path],
-                         active: Seq[String]): DataFrame =
     dropTombstones(resolve(spark, path, alias, gen, active).drop("ingest_seq"))
+  }
+
+  /** `f` over the serving rows of one tenant: [[readLatest]]'s records as
+    * JVM values, one array per partition, for the request kernels
+    * [[KnnSearch.serveTopK]] and [[BinaryQuant.serveHamming]]. The rows
+    * also hold each id's `ingest_seq` and its tombstone winners, which the
+    * kernels skip. They are cached per file set (the `serving` slot of
+    * [[relations]]) and persisted `MEMORY_AND_DISK`, the only per-view
+    * cache that holds data, and they stay cached while `f` runs.
+    *
+    * One resolution path builds them, the fold ([[fold]]):
+    *   - a listing that keeps the cached view's generation and only adds
+    *     delta files folds the new files into the cached rows: it decodes
+    *     only those files, resolves them by id on the driver, and writes a
+    *     new view from the cached rows and the winning new rows. Vectors
+    *     stay on the executors, and no broadcast, shuffle or window runs:
+    *     one job reads the new rows' keys, one more looks up the cached rows
+    *     they contest (skipped when every new stamp is newer than the view's
+    *     newest), and one fills the new view;
+    *   - any other listing builds the view cold: the same fold over a plain
+    *     decode of the generation, or the plain decode alone when no delta
+    *     is pending (then the first job over it fills it).
+    * Each view is local-checkpointed once filled, so its lineage does not
+    * grow with the folds and no view reads the parquet files again (which
+    * `vacuum` may delete). The cache holds one value per partition, not one
+    * per row, so filling it does not track the size of every row (on a
+    * tenant of about 1,800 rows that tracking cost the first search
+    * 35-50 ms). [[drop]] unpersists the view. */
+  def serving[B](spark: SparkSession, path: String, alias: String)(
+      f: RDD[Array[ServingRow]] => B): B = {
+    val (gen, active, _) = tenantView(spark, path, alias)
+    val files = active.sorted
+    reuse[View, B](spark, path, alias, "serving", gen.map(_.toString).toSeq ++ files,
+      unpersist)(buildView(spark, path, alias, gen, files))(v => f(v.rows))
+  }
+
+  private val unpersist: View => Unit = v => { v.rows.unpersist(false); () }
+
+  /** The view of `gen` plus the sorted delta `files`: `prior`'s view with
+    * the new files folded in when it has the same generation and a subset
+    * of the files, else built cold. */
+  private def buildView(spark: SparkSession, path: String, alias: String,
+                        gen: Option[org.apache.hadoop.fs.Path], files: Seq[String])(
+                        prior: Option[Slot[View]]): View =
+    prior.flatMap(_.useBuilt { v =>
+      if (v.gen == gen.map(_.toString) && v.active.forall(files.contains))
+        Some(fold(spark, path, alias, v, files.filterNot(v.active.contains)))
+      else None
+    }).flatten.getOrElse {
+      val base = plainView(spark, path, alias, gen)
+      if (files.isEmpty) base
+      else try fold(spark, path, alias, base, files) finally unpersist(base)
+    }
+
+  /** A serving view: a tenant's resolved records (tombstone winners
+    * included) as [[ServingRow]]s, one array per partition, and the file
+    * set they resolve (`gen` plus the sorted `active` delta files).
+    * `shape`, once known, gives a bound on every stamp in `rows` from above
+    * and the row count of each partition. A tombstone stamped below
+    * `cutoff` is gone: a compaction since the last fold dropped it. */
+  private final case class View(rows: RDD[Array[ServingRow]], gen: Option[String],
+                                active: Seq[String], shape: () => Option[(Long, Array[Int])],
+                                cutoff: Long)
+
+  private def newestOf(rows: Array[ServingRow]): Long =
+    rows.iterator.map(_.ingestSeq).foldLeft(Long.MinValue)(math.max)
+
+  private def servingName(path: String, alias: String): String =
+    s"serving $path/${aliasDirName(alias)}"
+
+  /** The rows of `df` decoded to [[ServingRow]]s, one array per partition. */
+  private def decode(df: DataFrame): RDD[Array[ServingRow]] =
+    df.select(ServingRow.columns.map(col): _*).queryExecution.toRdd
+      .mapPartitions(it => Iterator.single(it.map(ServingRow.decode).toArray))
+
+  /** The plain decode of a generation (already one record per id), marked
+    * for local checkpointing and filled by the first job over it, which
+    * also reports its shape; an empty view without one. */
+  private def plainView(spark: SparkSession, path: String, alias: String,
+                        gen: Option[org.apache.hadoop.fs.Path]): View = gen match {
+    case Some(g) =>
+      // (partition, newest stamp, rows) as each partition is decoded; a
+      // retried task reports the same values again
+      val seen = spark.sparkContext.collectionAccumulator[(Int, Long, Int)]
+      val rows = decode(viewFrame(spark, path, alias, gen, Seq.empty))
+        .mapPartitionsWithIndex((p, it) =>
+          it.map { a => seen.add((p, newestOf(a), a.length)); a })
+        .setName(servingName(path, alias)).localCheckpoint()
+      View(rows, Some(g.toString), Seq.empty, () => {
+        val parts = seen.value.asScala.groupBy(_._1).map(_._2.head)
+        if (parts.size < rows.getNumPartitions) None
+        else Some((parts.map(_._2).foldLeft(Long.MinValue)(math.max),
+          parts.toArray.sortBy(_._1).map(_._3)))
+      }, Long.MinValue)
+    case None =>
+      View(spark.sparkContext.emptyRDD[Array[ServingRow]], None, Seq.empty,
+        () => Some((Long.MinValue, Array.empty[Int])), Long.MinValue)
+  }
+
+  /** The ranking fields of one record. */
+  private final case class Rank(id: String, seq: Long, deleted: Boolean, content: String)
+
+  private def rankOf(r: ServingRow): Rank = Rank(r.id, r.ingestSeq, r.isDeleted, r.pageContent)
+
+  /** `a` beats `b`, a record of the same id, in [[latestPerId]]'s order:
+    * `ingest_seq` desc, `is_deleted` desc, `page_content` asc with nulls
+    * first (UTF-8 byte order). */
+  private def beats(a: Rank, b: Rank): Boolean =
+    if (a.seq != b.seq) a.seq > b.seq
+    else if (a.deleted != b.deleted) a.deleted
+    else KnnSearch.compareUtf8(a.content, b.content) < 0
+
+  /** A tombstone a compaction dropped (see [[View]]). */
+  private def gone(r: ServingRow, cutoff: Long): Boolean = r.isDeleted && r.ingestSeq < cutoff
+
+  /** `old` with the delta files `files` folded in, filled and
+    * local-checkpointed: each id keeps its best record in [[latestPerId]]'s
+    * order among its row in `old` and its new rows. The new files are
+    * decoded once (persisted until the fill), and only their keys reach the
+    * driver:
+    *   1. one job collects the new rows' [[Rank]]s; the driver picks each
+    *      id's best new row;
+    *   2. ids whose best new stamp is not above the stamp bound of `old`
+    *      (every id when its shape is unknown) are contested: one job
+    *      collects the ranks of their rows in `old`, with its shape. Skipped
+    *      when no id is contested and the shape is known;
+    *   3. one job fills the new view: each partition of `old` without the
+    *      ids a new row won and without its dropped tombstones, plus the
+    *      winning new rows. The new files' partitions become partitions of
+    *      their own up to the default parallelism, then join the smallest
+    *      ones, so no shuffle runs and the partition count stays bounded. */
+  private def fold(spark: SparkSession, path: String, alias: String, old: View,
+                   files: Seq[String]): View = {
+    val deltas = decode(scan(spark, path, files))
+      .setName(s"fold ${servingName(path, alias)}").persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val ranks = deltas.map(_.map(rankOf)).collect()
+      // each id's best new row, as (partition, index)
+      val best = mutable.HashMap.empty[String, (Int, Int)]
+      for (p <- ranks.indices; i <- ranks(p).indices) {
+        val r = ranks(p)(i)
+        if (best.get(r.id).forall { case (bp, bi) => beats(r, ranks(bp)(bi)) }) best(r.id) = (p, i)
+      }
+      def rankAt(at: (Int, Int)): Rank = ranks(at._1)(at._2)
+      val shape = old.shape()
+      val contested = best.collect {
+        case (id, at) if shape.forall(rankAt(at).seq <= _._1) => id
+      }.toSet
+      val cutoff = old.cutoff
+      val (held, newest, sizes) = shape match {
+        case Some((n, s)) if contested.isEmpty => (Map.empty[String, Rank], n, s)
+        case _ =>
+          val found = old.rows.map { rows =>
+            (rows.iterator.filter(r => contested(r.id) && !gone(r, cutoff)).map(rankOf).toArray,
+              newestOf(rows), rows.length)
+          }.collect()
+          (found.iterator.flatMap(_._1).map(r => r.id -> r).toMap,
+            found.iterator.map(_._2).foldLeft(Long.MinValue)(math.max), found.map(_._3))
+      }
+      val won = best.filter { case (id, at) => held.get(id).forall(beats(rankAt(at), _)) }
+      val drop = won.keySet.toSet
+      val byPart = won.values.groupBy(_._1)
+      val keep = Array.tabulate(ranks.length)(p =>
+        byPart.get(p).fold(Array.empty[Int])(_.map(_._2).toArray.sorted))
+      // old partition j is group j; new partitions get groups of their own
+      // up to the default parallelism, then join the smallest group
+      val oldParts = old.rows.getNumPartitions
+      val groups = mutable.ArrayBuffer.tabulate(oldParts)(j => mutable.ArrayBuffer(j))
+      val load = mutable.ArrayBuffer.from(sizes)
+      val target = math.max(oldParts,
+        math.min(oldParts + ranks.length, spark.sparkContext.defaultParallelism))
+      keep.indices.foreach { q =>
+        val grow = groups.size < target
+        if (grow) { groups += mutable.ArrayBuffer.empty[Int]; load += 0 }
+        val j = if (grow) groups.size - 1 else load.indices.minBy(load)
+        groups(j) += oldParts + q
+        load(j) += keep(q).length
+      }
+      val rows = old.rows.map(_.filter(r => !drop(r.id) && !gone(r, cutoff)))
+        .union(deltas.mapPartitionsWithIndex((q, it) => it.map(rows => keep(q).map(rows))))
+        .coalesce(groups.size, shuffle = false,
+          Some(new FixedGroups(groups.map(_.toArray).toArray)))
+        .mapPartitions(it => Iterator.single(it.flatMap(_.iterator).toArray))
+        .setName(servingName(path, alias)).localCheckpoint()
+      val filled = rows.map(_.length).collect()
+      val bound = ranks.iterator.flatten.map(_.seq).foldLeft(newest)(math.max)
+      View(rows, old.gen, (old.active ++ files).sorted, () => Some((bound, filled)),
+        Long.MinValue)
+    } finally deltas.unpersist(false)
+  }
+
+  /** Coalesces a parent's partitions into the given groups of indices. */
+  private final class FixedGroups(groups: Array[Array[Int]])
+      extends org.apache.spark.rdd.PartitionCoalescer with Serializable {
+    def coalesce(maxPartitions: Int,
+                 parent: RDD[_]): Array[org.apache.spark.rdd.PartitionGroup] =
+      groups.map { g =>
+        val group = new org.apache.spark.rdd.PartitionGroup()
+        g.foreach(i => group.partitions += parent.partitions(i))
+        group
+      }
+  }
+
+  /** After a compaction of the snapshot `from` published `gen`: this
+    * session's filled serving view of exactly `from` becomes the view of
+    * `gen` with no deltas, dropping its tombstones stamped below `cutoff`
+    * as the compaction did. Its rows move to the new slot, which frees them
+    * when it is released; the old slot is dropped without freeing them. */
+  private def rekeyServing(spark: SparkSession, path: String, alias: String,
+                           from: Seq[String], gen: org.apache.hadoop.fs.Path,
+                           cutoff: Long): Unit =
+    relations.computeIfPresent((path, alias, "serving"), (_, cur) =>
+      if (!(cur.spark eq spark) || cur.key != from) cur
+      else cur.asInstanceOf[Slot[View]].peek.filter(_.rows.isCheckpointed) match {
+        case Some(v) =>
+          // a reader that reaches the new slot after its release builds cold
+          new Slot[View](spark, Seq(gen.toString),
+            () => buildView(spark, path, alias, Some(gen), Seq.empty)(None), unpersist,
+            Some(v.copy(gen = Some(gen.toString), active = Seq.empty,
+              cutoff = math.max(v.cutoff, cutoff))))
+        case None => cur
+      })
 
   /** Newest record per id over the generation and the active deltas,
     * tombstone winners and `ingest_seq` included. The generation already
@@ -616,19 +845,19 @@ object IndexTable {
   }
 }
 
-/** One live row of a tenant as JVM values: the hit columns of
+/** One resolved record of a tenant as JVM values: the columns of
   * [[IndexTable.schema]] with the vector decoded to an `Array[Float]`.
   * Nullable columns stay nullable (`pageNumber` is boxed), so a hit built
-  * from it reads back exactly as the parquet row would. */
+  * from it reads back exactly as the parquet row would. `ingestSeq` and
+  * `isDeleted` rank it against later writes; a tombstone (`isDeleted`) is
+  * never served. */
 final case class ServingRow(id: String, indexAlias: String, documentPath: String,
                             pageNumber: java.lang.Integer, pageContent: String,
-                            vector: Array[Float])
+                            vector: Array[Float], ingestSeq: Long, isDeleted: Boolean)
 
 object ServingRow {
   /** The columns a serving row is decoded from, in field order. */
-  val columns: Seq[String] =
-    Seq("id", "index_alias", "document_path", "page_number", "page_content",
-      "page_content_vector")
+  val columns: Seq[String] = IndexTable.schema.fieldNames.toSeq
 
   private def str(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
@@ -638,5 +867,9 @@ object ServingRow {
     str(r, 0), str(r, 1), str(r, 2),
     if (r.isNullAt(3)) null else Int.box(r.getInt(3)),
     str(r, 4),
-    if (r.isNullAt(5)) null else r.getArray(5).toFloatArray())
+    if (r.isNullAt(5)) null else r.getArray(5).toFloatArray(),
+    // every written file carries both (stampIngest); a null stamp ranks
+    // last, as in the window's descending order
+    if (r.isNullAt(6)) Long.MinValue else r.getLong(6),
+    !r.isNullAt(7) && r.getBoolean(7))
 }

@@ -50,7 +50,8 @@ object KnnSearch {
 
   /** The schema of [[hitProjection]] over [[IndexTable]] rows. */
   val hitSchema: StructType = StructType(
-    IndexTable.schema.fields.filter(f => ServingRow.columns.init.contains(f.name)) :+
+    IndexTable.schema.fields.filter(f =>
+      Seq("id", "index_alias", "document_path", "page_number", "page_content").contains(f.name)) :+
       StructField("similarity", DoubleType))
 
   /** One hit of [[serveTopK]]: a serving row's [[hitSchema]] columns.
@@ -88,7 +89,7 @@ object KnnSearch {
     * [[hitOrder]], and the driver merges at most k rows per partition.
     * Bit-identical to `hitProjection(topK(...))` over the same rows: the
     * cosine is [[VectorExpressions.cosine]], and `hitOrder` is a total
-    * order on a tenant's live rows (one per id). */
+    * order on a tenant's live rows (one per id). Tombstones are skipped. */
   def serveTopK(rows: RDD[Array[ServingRow]], queryVec: Array[Float], k: Int): Seq[Hit] = {
     require(k >= 0, s"k must be non-negative, got $k")
     if (k == 0) Seq.empty
@@ -96,7 +97,7 @@ object KnnSearch {
       // the worst kept hit at the head; the queue grows past its initial
       // capacity, so a huge k allocates nothing up front
       val heap = new java.util.PriorityQueue[Hit](math.min(k, 64), hitOrder.reverse)
-      it.flatMap(_.iterator).foreach { r =>
+      it.flatMap(_.iterator).filterNot(_.isDeleted).foreach { r =>
         val sim = if (r.vector == null) null
           else java.lang.Double.valueOf(VectorExpressions.cosine(r.vector, queryVec))
         // a hit leaves its vector behind: only k rows per partition travel

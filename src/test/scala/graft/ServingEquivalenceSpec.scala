@@ -93,6 +93,60 @@ class ServingEquivalenceSpec extends AnyFunSuite {
     store.dropIndex()
   }
 
+  test("folds rank same-stamp ties as readLatest does: one id twice in one batch, a " +
+      "null page_content against a non-null one, and writes at a cached row's stamp") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val path = java.nio.file.Files.createTempDirectory("serving_eq_fold").toString + "/idx"
+    val store = new GraftVectorStore(spark, path)
+    val base = docs(30).collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    store.addDocuments(base.toDF("document_path", "text"), "t", pageSize = 32)
+    store.compactIndex("t")
+    val checked = Seq("fast spark table scan query", "zebra aardvark words")
+    // every append below folds into the view the check before it cached
+    assertFacadeMatches(store, path, "t", checked)
+    def records(rows: Seq[(String, String)]): DataFrame =
+      IndexTable.ingestRecords(rows.toDF("document_path", "text"), "t", pageSize = 32)
+    def appendAt(stamp: Long, df: DataFrame): Unit =
+      IndexTable.append(df.withColumn("ingest_seq", lit(stamp)), path)
+    // one id twice in one batch: the smaller content wins
+    appendAt(IndexTable.nextIngestSeq(),
+      records(Seq(("tie/a", "zebra words here"), ("tie/a", "aardvark words here"))))
+    assertFacadeMatches(store, path, "t", checked)
+    // a null page_content against a non-null one at one stamp: null wins
+    val b = records(Seq(("tie/b", "zebra aardvark null words")))
+    appendAt(IndexTable.nextIngestSeq(),
+      b.unionByName(b.withColumn("page_content", lit(null).cast("string"))))
+    assertFacadeMatches(store, path, "t", checked)
+    // writes stamped exactly as cached rows are: a content that sorts first
+    // wins, one that sorts last loses, and a tombstone wins
+    val stamps = IndexTable.read(spark, path, "t").where(col("page_number") === 0)
+      .select(col("id"), col("document_path"), col("ingest_seq")).as[(String, String, Long)]
+      .collect().sortBy(_._2).take(3)
+    val (_, early, earlyStamp) = stamps(0)
+    val (_, late, lateStamp) = stamps(1)
+    val (goneId, _, goneStamp) = stamps(2)
+    appendAt(earlyStamp, records(Seq((early, "0000 zebra aardvark earlier"))))
+    appendAt(lateStamp, records(Seq((late, "~~~~ zebra aardvark later"))))
+    appendAt(goneStamp, Seq(goneId).toDF("id")
+      .withColumn("index_alias", lit("t"))
+      .withColumn("document_path", lit(null).cast("string"))
+      .withColumn("page_number", lit(null).cast("int"))
+      .withColumn("page_content", lit(null).cast("string"))
+      .withColumn("page_content_vector", lit(null).cast("array<float>"))
+      .withColumn("is_deleted", lit(true)))
+    assertFacadeMatches(store, path, "t", checked)
+    val served = store.search("zebra aardvark", "t", topN = 1000)
+      .select($"document_path", $"page_number", $"page_content").as[(String, Int, String)]
+      .collect().map(r => ((r._1, r._2), r._3)).toMap
+    assert(served(("tie/a", 0)) === "aardvark words here")
+    assert(served.contains(("tie/b", 0)) && served(("tie/b", 0)) === null)
+    assert(served((early, 0)) === "0000 zebra aardvark earlier")
+    assert(served.contains((late, 0)))
+    assert(served((late, 0)) !== "~~~~ zebra aardvark later")
+    assert(!served.contains((stamps(2)._2, 0)))
+    store.dropIndex()
+  }
+
   test("an empty tenant serves no rows; k = 0 serves none and k = Int.MaxValue all") {
     val path = java.nio.file.Files.createTempDirectory("serving_eq_empty").toString + "/idx"
     val store = new GraftVectorStore(spark, path)

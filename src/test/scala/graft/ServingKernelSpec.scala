@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions
-import graft.operators.{BinaryQuant, Chunker, Rerank}
+import graft.operators.{BinaryQuant, Chunker, Rerank, ServingRow}
 import graft.plans.{CosineSimilarityExpr, VectorExpressions}
 
 /** The JVM kernels the serving path shares with the Spark expressions:
@@ -125,12 +125,34 @@ class ServingKernelSpec extends AnyFunSuite {
     def words(vs: Seq[Array[Float]]): Seq[(Long, Long)] =
       vs.map(v => (BinaryQuant.packWord(v, 0), BinaryQuant.packWord(v, 32)))
     assert(words(full) === packed(full))
-    // pack64 reads past a short vector's end: element_at fails under ANSI
-    // and is null (a 0 bit) without it
+    // pack64 reads past a short vector's end as null, a 0 bit, with ANSI on
+    // and off
     val ansi = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", "false")
-    try assert(words(short) === packed(short))
-    finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try Seq("true", "false").foreach { on =>
+      spark.conf.set("spark.sql.ansi.enabled", on)
+      assert(words(short) === packed(short), s"ANSI $on")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+  }
+
+  test("hammingTopK over a 10-dim corpus runs with ANSI on and equals serveHamming's hits") {
+    val rng = new scala.util.Random(13)
+    def vec(): Array[Float] = Array.fill(10)(rng.nextGaussian().toFloat)
+    val rows = (0 until 60).map(i => ServingRow(s"doc/$i", "t", s"path/$i", Int.box(0),
+      s"content $i", vec(), i.toLong, isDeleted = false))
+    val corpus = rows.map(r => (BinaryQuant.nodeId(r.id), r.vector)).toDF("vec_id", "embedding")
+    val served = spark.sparkContext.parallelize(rows.grouped(16).map(_.toArray).toSeq, 4)
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try Seq.fill(4)(vec()).foreach { q =>
+      for ((k, candidates) <- Seq((3, 8), (5, 20), (10, 60))) {
+        val batch = BinaryQuant.hammingTopK(corpus, Seq((-1L, q)).toDF("q_id", "q_vec"),
+            k, candidates).orderBy($"rank")
+          .select($"vec_id", $"similarity").as[(Long, Double)].collect().toSeq
+        val hits = BinaryQuant.serveHamming(served, q, k, candidates)
+          .map(h => (BinaryQuant.nodeId(h.id), h.similarity.doubleValue))
+        assert(hits === batch, s"k $k, $candidates candidates")
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
   }
 
   test("the binary sketch's rounding equals Spark's round(x, 4), half-way points " +

@@ -9,11 +9,14 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.IndexTable
+
 /** The cached serving rows behind `search` and `answers` hold memory while
   * their file set is current and no longer: one persisted serving RDD per
   * tenant at most, released when a write replaces it and when the index is
   * dropped — and built once even when two threads make the first search of
-  * a new file set together. Exact and approximate searches share them. */
+  * a new file set together. A view folded from its predecessor keeps a
+  * lineage of constant depth. Exact and approximate searches share them. */
 class ServingLifecycleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -50,9 +53,42 @@ class ServingLifecycleSpec extends AnyFunSuite {
     assert(servingRdds(path, "u") === 0)
   }
 
+  /** Lineage depth of an RDD: 1 for one without dependencies. */
+  private def depth(rdd: org.apache.spark.rdd.RDD[_]): Int =
+    1 + (rdd.dependencies.map(d => depth(d.rdd)) :+ 0).max
+
+  test("50 write-then-search cycles with a compaction every 7th keep one persisted " +
+      "serving RDD per tenant and a lineage depth that does not grow") {
+    val path = java.nio.file.Files.createTempDirectory("serving_folds").toString + "/idx"
+    val store = new GraftVectorStore(spark, path)
+    store.addDocuments(docs(20), "t", pageSize = 32)
+    store.compactIndex("t")
+    val depths = (1 to 50).map { i =>
+      val doc = s"fold/$i"
+      val text = s"fold $i okapi tapir pangolin scan"
+      store.addDocuments(Seq((doc, text)).toDF("document_path", "text"), "t", pageSize = 32)
+      if (i % 4 == 0) store.deleteDocuments(Seq(s"fold/${i - 1}"), "t")
+      // the embedder's hashed features may tie two of these texts
+      val hits = store.search(text, "t", topN = 5).select($"document_path").as[String]
+        .collect()
+      assert(hits.contains(doc), s"cycle $i")
+      if (i % 4 == 0) assert(!store.search(s"fold ${i - 1} okapi tapir pangolin scan", "t",
+        topN = 5).select($"document_path").as[String].collect().contains(s"fold/${i - 1}"))
+      // zero retention: the compaction deletes the files the view was read from
+      if (i % 7 == 0) store.compactIndex("t", retainMillis = 0L)
+      assert(servingRdds(path, "t") === 1, s"after cycle $i")
+      IndexTable.serving(spark, path, "t")(depth)
+    }
+    // a filled view's lineage is its local checkpoint
+    assert(depths.toSet === Set(2), depths)
+    store.dropIndex()
+    assert(servingRdds(path, "t") === 0)
+  }
+
   /** Two threads make the first search of a new file set together: both
-    * get the same hits, every job of the race reads one serving RDD, and
-    * one stays persisted until the index is dropped. */
+    * get the same hits, the jobs of the race read one serving RDD besides
+    * the one it replaces (which the fold reads), and one stays persisted
+    * until the index is dropped. */
   private def raceFirstSearch(dir: String, approximate: Boolean): Unit = {
     val path = java.nio.file.Files.createTempDirectory(dir).toString + "/idx"
     val store = new GraftVectorStore(spark, path, binaryCandidates = Some(16))
@@ -62,6 +98,8 @@ class ServingLifecycleSpec extends AnyFunSuite {
     store.addDocuments(docs(5).withColumn("text", org.apache.spark.sql.functions.upper($"text")),
       "t", pageSize = 32)
     val name = s"serving $path/index_alias=t"
+    val replaced = spark.sparkContext.getPersistentRDDs.values.filter(_.name == name)
+      .map(_.id).toSet
     // the serving RDDs every job of the race reads
     val read = ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
@@ -86,7 +124,8 @@ class ServingLifecycleSpec extends AnyFunSuite {
     }
     assert(results.head === results.last)
     assert(results.head.nonEmpty)
-    assert(read.asScala.size === 1)
+    assert(replaced.size === 1)
+    assert((read.asScala.toSet -- replaced).size === 1)
     assert(servingRdds(path, "t") === 1)
     store.dropIndex()
     assert(servingRdds(path, "t") === 0)

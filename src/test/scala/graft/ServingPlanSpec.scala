@@ -195,6 +195,35 @@ class ServingPlanSpec extends AnyFunSuite {
     withDeltas.dropIndex()
   }
 
+  test("the first search after a write over a cached view runs at most 3 jobs and no " +
+      "shuffle; after a compaction of a cached view with no later write, 1 job") {
+    val (path, store, paths) = tenantWithDeltas("graft_plan_fold")
+    def pipeline(): Seq[org.apache.spark.sql.Row] = graft.operators.KnnSearch.hitProjection(
+      graft.operators.KnnSearch.topK(IndexTable.readLatest(spark, path, "t"),
+        graft.functions.Embedder.embedQuery(prompt), 10)).collect().toSeq
+    def firstSearch(what: String): Unit = {
+      var hits = Seq.empty[org.apache.spark.sql.Row]
+      val (jobs, shuffle, _) = count { hits = store.search(prompt, "t", topN = 10).collect().toSeq }
+      assert(jobs <= 3, what)
+      assert(shuffle === 0L, what)
+      assert(hits === pipeline(), what)
+    }
+    // the deltas of tenantWithDeltas fold into the plain view of the
+    // generation its first search cached
+    firstSearch("onto the generation's view")
+    store.addDocuments(Seq(("planted/e", "fast spark table scan query okapi"),
+      (paths.head, "fast spark revised table")).toDF("document_path", "text"), "t", pageSize = 32)
+    store.deleteDocuments(paths.slice(10, 12), "t")
+    firstSearch("onto a folded view")
+    store.compactIndex("t")
+    var hits = Seq.empty[org.apache.spark.sql.Row]
+    val (jobs, shuffle, _) = count { hits = store.search(prompt, "t", topN = 10).collect().toSeq }
+    assert(jobs === 1)
+    assert(shuffle === 0L)
+    assert(hits === pipeline())
+    store.dropIndex()
+  }
+
   test("deleteDocuments is one shuffle-free scan and resolves no overlay") {
     val (_, store, paths) = tenantWithDeltas("graft_plan_del")
     val persisted = spark.sparkContext.getPersistentRDDs.keySet

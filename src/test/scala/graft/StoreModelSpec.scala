@@ -20,11 +20,18 @@ import graft.operators.IndexTable
   * `ingest_seq`. Every doc is one page, so a doc path is one id.
   *
   * Every step reads twice through the same instance: the first read of a
-  * new file set plans over freshly read relations, the second reuses them. */
+  * new file set plans over freshly read relations, the second reuses them.
+  * It also searches every live row of both instances, cold and warm:
+  * first the instance whose serving view is cached, so a write folds into
+  * that view and a compaction by that instance re-keys it, then the other,
+  * which rebuilds the view and leaves its own cached for the next step. */
 class StoreModelSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private val Alias = "t"
+
+  /** How often each case of the serving view was met, over all seeds. */
+  private val reached = mutable.Map.empty[String, Int].withDefaultValue(0)
 
   private def frame(s: SparkSession, docs: Seq[(String, String)]): DataFrame =
     s.createDataFrame(docs).toDF("document_path", "text")
@@ -92,40 +99,71 @@ class StoreModelSpec extends AnyFunSuite {
         log += s"stale delete via store $i: ${paths.mkString(",")}"
       }
 
+    // the instance whose serving view is cached
+    var cached = 0
+    def servingId(): Int = IndexTable.serving(sessions(cached), path, Alias)(_.id)
+
     def check(i: Int, step: Int): Unit = {
       val expected = model.collect { case (p, (_, Some(t))) => (p, t) }.toSeq.sorted
+      def ops = s"ops:\n${log.mkString("\n")}"
       Seq("cold", "warm").foreach { read =>
         val served = IndexTable.readLatest(sessions(i), path, Alias)
           .select(col("document_path"), col("page_content")).collect()
           .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
-        assert(served === expected,
-          s"seed $seed step $step, $read read via store $i; ops:\n${log.mkString("\n")}")
+        assert(served === expected, s"seed $seed step $step, $read read via store $i; $ops")
       }
+      Seq(cached, 1 - cached).foreach { j =>
+        Seq("cold", "warm").foreach { read =>
+          val served = stores(j).search("version words", Alias, topN = expected.size + 1)
+            .select(col("document_path"), col("page_content")).collect()
+            .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+          assert(served === expected, s"seed $seed step $step, $read search via store $j; $ops")
+        }
+      }
+      cached = 1 - cached
     }
 
     var next = 0
     pool += IndexTable.nextIngestSeq()
     write(0, Seq.fill(3) { next += 1; s"m/$next" }, "append")
+    check(0, 0)
     (1 to steps).foreach { step =>
       val i = rng.nextInt(2)
       pool += IndexTable.nextIngestSeq()
+      val logged = log.size
       rng.nextInt(20) match {
         case n if n < 6 => write(i, Seq.fill(1 + rng.nextInt(2)) { next += 1; s"m/$next" }, "append")
         case n if n < 11 => write(i, pick(model.keys.toSeq.sorted, 2), "upsert")
         case n if n < 15 => delete(i)
         case n if n < 18 =>
           val retain = if (rng.nextBoolean()) 0L else IndexTable.DefaultRetainMillis
+          val view = servingId()
           stores(i).compactIndex(Alias, retain)
           // zero retention retires the tombstones it folds at once: their
           // ids leave the store, and a later write to them stands alone
           if (retain == 0L) model.filterInPlace { case (_, (_, t)) => t.nonEmpty }
           log += s"compact via store $i, retain $retain"
+          // the compacting instance's own view moves to the new generation;
+          // the other instance's view is rebuilt, not folded
+          if (i == cached) {
+            assert(servingId() === view, s"seed $seed step $step: the view was not re-keyed")
+            reached(if (retain == 0L) "compaction of a cached view, then vacuum(0)"
+              else "compaction of a cached view") += 1
+          } else {
+            assert(servingId() !== view, s"seed $seed step $step: the view was not rebuilt")
+            reached("compaction by the other instance") += 1
+          }
         case _ =>
           val retain = if (rng.nextBoolean()) 0L else IndexTable.DefaultRetainMillis
           stores(i).vacuumIndex(Alias, retain)
           log += s"vacuum via store $i, retain $retain"
       }
       if (pool.isEmpty) pool += IndexTable.nextIngestSeq()
+      log.drop(logged).foreach { op =>
+        if (op.startsWith("stale ")) reached("stale-stamp write onto a cached view") += 1
+        else if (!op.startsWith("compact") && !op.startsWith("vacuum"))
+          reached("write onto a cached view") += 1
+      }
       check(i, step)
     }
     stores(0).dropIndex()
@@ -133,5 +171,8 @@ class StoreModelSpec extends AnyFunSuite {
 
   test("random interleavings from two store instances read as a last-write-wins map") {
     Seq(1, 2, 3).foreach(run(_, steps = 12))
+    Seq("write onto a cached view", "stale-stamp write onto a cached view",
+      "compaction of a cached view, then vacuum(0)", "compaction by the other instance")
+      .foreach(c => assert(reached(c) > 0, s"no step reached: $c; reached $reached"))
   }
 }
