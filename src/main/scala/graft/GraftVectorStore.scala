@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.core.ModelRegistry
 import graft.functions.Embedder
-import graft.operators.{BinaryQuant, IndexTable, KnnSearch, Rerank}
+import graft.operators.{IndexTable, KnnSearch, Rerank, ServingKernel}
 
 /** User-facing facade — the one-object surface a user of the reference
   * application needs to switch: every operation the reference exposes
@@ -100,38 +100,42 @@ final class GraftVectorStore(
     * Reads with HSET-upsert semantics — a re-ingested document's newest
     * record wins, duplicates never reach the top-k.
     *
-    * The exact search runs when called, as one Spark job over the
-    * tenant's cached serving rows ([[IndexTable.serving]], into which a
-    * write's new delta files fold), and returns its at most `topN` hits
-    * as a local DataFrame: reading it runs no job. Rows and order are those of
-    * `KnnSearch.topK` over `IndexTable.readLatest`.
+    * The search runs when called, over the tenant's cached serving view
+    * ([[IndexTable.serving]], into which a write's new delta files fold),
+    * and returns its at most `topN` hits as a local DataFrame: reading it
+    * runs no job. The first time a view is asked for a query vector and
+    * `topN`, the search is one Spark job; asked again, the view's memo
+    * answers with no job, until a write replaces the view (a compaction
+    * keeps it). The tenant is listed on every call, so a write is seen by
+    * the next search. Rows and order are those of `KnnSearch.topK` over
+    * `IndexTable.readLatest`.
     *
     * `approximate = true` (requires `binaryCandidates`): the binary-sketch
-    * tier, one Spark job over the same serving rows
-    * ([[graft.operators.BinaryQuant.serveHamming]]). It keeps the
-    * `binaryCandidates * probeDepth` rows (at least `topN`) Hamming-nearest
-    * the query's sign bits and ranks only those by cosine rounded to 4
-    * places, ties on `xxhash64(id)`: the hits of
+    * tier over the same serving view, memoized the same way, keyed also by
+    * the candidate pool ([[graft.operators.BinaryQuant.serveHamming]]). It
+    * keeps the `binaryCandidates * probeDepth` rows (at least `topN`)
+    * Hamming-nearest the query's sign bits and ranks only those by cosine
+    * rounded to 4 places, ties on `xxhash64(id)`: the hits of
     * [[graft.operators.BinaryQuant.hammingTopK]] joined back to the rows.
     * probeDepth is the recall/cost dial, the one the reference's HNSW
     * turns with efSearch. */
   def search(prompt: String, alias: String, topN: Int = 10,
              approximate: Boolean = false, probeDepth: Int = 1): DataFrame = {
-    val qvec = queryVec(prompt)
-    val hits =
-      if (!approximate) exactHits(qvec, alias, topN)
+    val kernel =
+      if (!approximate) ServingKernel.Exact(topN)
       else {
         require(binaryCandidates.nonEmpty,
           "approximate search requires the store to be built with binaryCandidates")
         val pool = math.min(binaryCandidates.get.toLong * math.max(1, probeDepth), Int.MaxValue)
-        IndexTable.serving(spark, indexPath, resolveAlias(alias))(
-          BinaryQuant.serveHamming(_, qvec, topN, math.max(pool.toInt, topN)))
+        ServingKernel.Hamming(topN, math.max(pool.toInt, topN))
       }
-    local(hits.map(_.toRow), KnnSearch.hitSchema)
+    local(hits(alias, kernel, queryVec(prompt)).map(_.toRow), KnnSearch.hitSchema)
   }
 
-  private def exactHits(qvec: Array[Float], alias: String, topN: Int): Seq[KnnSearch.Hit] =
-    IndexTable.serving(spark, indexPath, resolveAlias(alias))(KnnSearch.serveTopK(_, qvec, topN))
+  /** `kernel`'s hits for `qvec` over the tenant's serving view. */
+  private def hits(alias: String, kernel: ServingKernel,
+                   qvec: Array[Float]): Seq[KnnSearch.Hit] =
+    IndexTable.serving(spark, indexPath, resolveAlias(alias))(_.hits(kernel, qvec))
 
   private def local(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
@@ -237,15 +241,17 @@ final class GraftVectorStore(
     IndexTable.readGeneration(spark, indexPath, resolveAlias(alias), genId)
 
   /** E2 full answer pipeline: retrieve, rerank, threshold, project answers.
-    * Runs when called: the exact search is one Spark job (see [[search]]),
-    * and its at most `fanout` hits are reranked on the driver
-    * ([[Rerank.answerRows]]). Returns the at most `topN` answers as a local
-    * DataFrame, so reading it runs no job. Rows and order are those of
-    * `Rerank.answers` over `search(prompt, alias, fanout)`. */
+    * Runs when called: the exact search of `search(prompt, alias, fanout)`
+    * (one Spark job, or none when the view's memo holds its hits; the two
+    * calls share memo entries), and its at most `fanout` hits are reranked
+    * for this prompt on the driver ([[Rerank.answerRows]]). Returns the at
+    * most `topN` answers as a local DataFrame, so reading it runs no job.
+    * Rows and order are those of `Rerank.answers` over
+    * `search(prompt, alias, fanout)`. */
   def answers(prompt: String, alias: String, topN: Int = 10,
               fanout: Int = 50, threshold: Int = Rerank.ScoreThreshold): DataFrame =
-    local(Rerank.answerRows(exactHits(queryVec(prompt), alias, fanout), prompt, topN, threshold),
-      Rerank.answerSchema)
+    local(Rerank.answerRows(hits(alias, ServingKernel.Exact(fanout), queryVec(prompt)), prompt,
+      topN, threshold), Rerank.answerSchema)
 
   // H1: session query log (the reference keeps it in Streamlit session
   // state, app/app.py:291-296; here an in-memory append log).

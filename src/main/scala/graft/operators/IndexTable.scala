@@ -168,8 +168,8 @@ object IndexTable {
   /** Base-zone root: compacted generations live under an underscore-prefixed
     * dir INSIDE the index path, so raw parquet scans of `path` never see
     * them and `drop` removes everything. Each compaction writes one whole
-    * new generation dir `gen_<id>` (strictly increasing `id`, exactly one
-    * tenant per generation) holding:
+    * new generation dir `gen_<id>_<suffix>` (exactly one tenant per
+    * generation) holding:
     *
     *   - `index_alias=<a>/...` — the tenant's resolved rows (Spark-written,
     *     each row keeping its own `ingest_seq`);
@@ -178,8 +178,13 @@ object IndexTable {
     *   - `_graft_committed` — the commit marker, created LAST. A generation
     *     without it is invisible to every reader.
     *
-    * Readers pick, per tenant, the highest-numbered committed generation and
-    * union it with the delta files NOT named in its manifest. Nothing live
+    * `id` increases within a process (millis << 10 | counter), and `suffix`
+    * is random per generation, so two processes compacting in the same
+    * millisecond never write into one directory. Generations order by `id`,
+    * then by `suffix`.
+    *
+    * Readers pick, per tenant, the newest committed generation in that order
+    * and union it with the delta files NOT named in its manifest. Nothing live
     * is ever renamed or deleted at publish time: folded delta files stay on
     * disk (excluded via the manifest) until the NEXT generation is
     * published, and the previous generation is likewise retained for one
@@ -190,21 +195,33 @@ object IndexTable {
     * generation (readers switch atomically on the marker's existence).
     * Concurrent APPENDS during compaction are safe — their files are in no
     * manifest, so they stay visible as delta, and they rank against the
-    * generation rows by the stamps both sides took when they were written;
-    * concurrent compactions of the
-    * SAME tenant are not (single compactor per tenant, as with any
-    * OPTIMIZE). */
+    * generation rows by the stamps both sides took when they were written.
+    * Concurrent compactions of one tenant, from any number of store
+    * instances, are safe too, as long as each finishes within the retention
+    * window of [[vacuum]]. Two compactors whose listings straddle a write
+    * both commit, and the one with the higher id may lack the write's rows.
+    * Its manifest then lacks the write's delta file too, so readers still
+    * see that file as active, and [[vacuum]] deletes a folded delta file
+    * only when the newest aged generation and every newer one list it. */
   private def baseRoot(path: String): String = s"$path/_graft_base"
 
   private val CommitMarker = "_graft_committed"
   private val FoldedManifest = "_folded_deltas"
 
   private val genCounter = new java.util.concurrent.atomic.AtomicLong(0L)
-  private def nextGenId(): Long =
-    (System.currentTimeMillis() << 10) | (genCounter.incrementAndGet() & 0x3ff)
+  private def nextGenName(): String = {
+    val id = (System.currentTimeMillis() << 10) | (genCounter.incrementAndGet() & 0x3ff)
+    f"gen_${id}_${java.util.concurrent.ThreadLocalRandom.current().nextLong()}%016x"
+  }
 
-  private def genIdOf(name: String): Long =
-    scala.util.Try(name.stripPrefix("gen_").toLong).getOrElse(-1L)
+  /** The (id, suffix) of a generation dir name: the order of generations. A
+    * name without a suffix sorts first among its id. */
+  private def genOrder(name: String): (Long, String) = {
+    val (id, suffix) = name.stripPrefix("gen_").span(_ != '_')
+    (scala.util.Try(id.toLong).getOrElse(-1L), suffix.drop(1))
+  }
+
+  private def genIdOf(name: String): Long = genOrder(name)._1
 
   private def aliasDirName(alias: String): String = s"index_alias=$alias"
 
@@ -225,8 +242,8 @@ object IndexTable {
           (!committedOnly ||
             fs.exists(new org.apache.hadoop.fs.Path(s.getPath, CommitMarker)))
       }
-      .sortBy(s => -genIdOf(s.getPath.getName))
       .map(_.getPath)
+      .sortBy(p => genOrder(p.getName))(Ordering[(Long, String)].reverse)
   }
 
   /** Data files currently in the tenant's delta partition, as paths relative
@@ -320,8 +337,9 @@ object IndexTable {
     *     directory (immutable once its marker lands);
     *   - `delta`: the parquet relation of the sorted active delta files
     *     (append-only);
-    *   - `serving`: the tenant's resolved rows decoded to [[ServingRow]]s
-    *     (a [[View]]), keyed by both (see [[serving]]).
+    *   - `serving`: the tenant's resolved rows decoded to [[ServingRow]]s,
+    *     with the memo of the hits served from them (a [[View]]), keyed by
+    *     both (see [[serving]]).
     * A relation freezes its file listing and reads with the declared
     * [[schema]], and the serving rows are a function of those same files,
     * so a slot whose session and key equal the current ones
@@ -332,7 +350,8 @@ object IndexTable {
     * predecessor), which is released only after that build. A read from
     * another session replaces the slot too, so the map holds at most one
     * session per slot. [[compact]] re-keys this session's serving view to
-    * the generation it publishes. A released serving view is unpersisted. */
+    * the generation it publishes, memo included. A released serving view is
+    * unpersisted. */
   private val relations =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Slot[_]]()
 
@@ -439,7 +458,10 @@ object IndexTable {
     * instead of decoding the new generation again. A view of any other file
     * set, or another session's, is left alone and rebuilt on its next read.
     *
-    * Returns the number of live rows surviving compaction. */
+    * Returns the number of live rows surviving compaction: the live rows of
+    * the generation it wrote, counted as they are written. An append that
+    * lands during the compaction is not in that generation, so it is not
+    * counted. */
   def compact(spark: SparkSession, path: String, alias: String,
               retainMillis: Long = DefaultRetainMillis): Long = {
     val fs = fileSystem(spark, path)
@@ -451,11 +473,14 @@ object IndexTable {
     val cutoff = (System.currentTimeMillis() - retainMillis) << 10
     val resolved = resolve(spark, path, alias, prevGen, active)
       .where(isLive || col("ingest_seq") >= lit(cutoff))
-    val genDir = new org.apache.hadoop.fs.Path(baseRoot(path), s"gen_${nextGenId()}")
+    val genDir = new org.apache.hadoop.fs.Path(baseRoot(path), nextGenName())
     // each surviving row keeps the stamp it was written with: restamping
     // the generation with this compaction's clock would rank it above an
     // append that took its stamp earlier but landed after the listing
-    stampIngest(resolved).write.partitionBy("index_alias").parquet(genDir.toString)
+    // the live count rides the write: no job reads the generation back
+    val written = org.apache.spark.sql.Observation()
+    stampIngest(resolved).observe(written, count(when(isLive, 1)).as("live"))
+      .write.partitionBy("index_alias").parquet(genDir.toString)
     // Empty tenant (every row resolved to a dropped tombstone): a zero-row
     // dynamic-partition write emits no tenant dir. Publish an empty one, so
     // the generation is seen like any other and vacuum retires the rows
@@ -476,15 +501,21 @@ object IndexTable {
       .foreach(rekeyServing(spark, path, alias,
         prevGen.map(_.toString).toSeq ++ active.sorted, _, cutoff))
     vacuum(spark, path, alias, retainMillis)
-    read(spark, path, alias).where(isLive).count()
+    written.get("live").asInstanceOf[Long]
   }
 
   /** Retention-gated retirement of superseded files (see [[compact]]):
     * for each adjacent committed-generation pair, once the newer one has
     * been committed for `retainMillis` no reader can still hold the older
-    * view — delete the older generation, the delta files the newer one
-    * folded, and any uncommitted same-tenant debris older than the window
-    * (a crashed compaction's partial write; never reader-visible). */
+    * view — delete the older generation, and any uncommitted same-tenant
+    * debris older than the window (a crashed compaction's partial write;
+    * never reader-visible). A folded delta file is deleted only when the
+    * newest aged generation lists it and so does every newer committed
+    * one: then every reader that could still list the file reads a
+    * generation holding its rows. Under one compactor manifests only grow,
+    * so this is every file an aged generation folded. Two compactions whose
+    * listings straddle a write can commit the one without the write last;
+    * its manifest lacks the write's file, which therefore stays. */
   def vacuum(spark: SparkSession, path: String, alias: String,
              retainMillis: Long = DefaultRetainMillis): Unit = {
     val fs = fileSystem(spark, path)
@@ -496,10 +527,13 @@ object IndexTable {
     // superseded is still the successor of the next older one
     val aged = committed.filter(g =>
       ageOf(new org.apache.hadoop.fs.Path(g, CommitMarker)) >= retainMillis).toSet
-    // Folded delta files: only pre-G views reference the files G folded, so
-    // they are deletable once G itself has been committed for the window.
-    committed.filter(aged).foreach(g => readFolded(fs, g).foreach(rel =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$rel"), false)))
+    // Folded delta files: those the newest aged generation and every newer
+    // one fold. A view older than that generation is past the window, and
+    // each newer view holds their rows.
+    val newestAged = committed.indexWhere(aged)
+    if (newestAged >= 0)
+      committed.take(newestAged + 1).map(readFolded(fs, _)).reduce(_ intersect _).foreach(rel =>
+        fs.delete(new org.apache.hadoop.fs.Path(s"$path/$rel"), false))
     // Superseded generations: deletable once their SUCCESSOR has aged.
     committed.sliding(2).foreach {
       case Seq(newer, older) if aged(newer) => fs.delete(older, true)
@@ -580,15 +614,17 @@ object IndexTable {
     dropTombstones(resolve(spark, path, alias, gen, active).drop("ingest_seq"))
   }
 
-  /** `f` over the serving rows of one tenant: [[readLatest]]'s records as
-    * JVM values, one array per partition, for the request kernels
-    * [[KnnSearch.serveTopK]] and [[BinaryQuant.serveHamming]]. The rows
-    * also hold each id's `ingest_seq` and its tombstone winners, which the
-    * kernels skip. They are cached per file set (the `serving` slot of
-    * [[relations]]) and persisted `MEMORY_AND_DISK`, the only per-view
-    * cache that holds data, and they stay cached while `f` runs.
+  /** `f` over the serving view of one tenant ([[View]]): [[readLatest]]'s
+    * records as JVM values, one array per partition, for the request
+    * kernels ([[ServingKernel]]), and the memo of the hits they gave over
+    * this view. The rows also hold each id's `ingest_seq` and its tombstone
+    * winners, which the kernels skip. A view is cached per file set (the
+    * `serving` slot of [[relations]]), its rows persisted `MEMORY_AND_DISK`,
+    * the only per-view cache that holds data besides the memo, and it stays
+    * cached while `f` runs. The listing runs on every call, so any write is
+    * seen by the next one.
     *
-    * One resolution path builds them, the fold ([[fold]]):
+    * One resolution path builds the rows, the fold ([[fold]]):
     *   - a listing that keeps the cached view's generation and only adds
     *     delta files folds the new files into the cached rows: it decodes
     *     only those files, resolves them by id on the driver, and writes a
@@ -600,21 +636,24 @@ object IndexTable {
     *   - any other listing builds the view cold: the same fold over a plain
     *     decode of the generation, or the plain decode alone when no delta
     *     is pending (then the first job over it fills it).
-    * Each view is local-checkpointed once filled, so its lineage does not
-    * grow with the folds and no view reads the parquet files again (which
-    * `vacuum` may delete). The cache holds one value per partition, not one
-    * per row, so filling it does not track the size of every row (on a
-    * tenant of about 1,800 rows that tracking cost the first search
-    * 35-50 ms). [[drop]] unpersists the view. */
-  def serving[B](spark: SparkSession, path: String, alias: String)(
-      f: RDD[Array[ServingRow]] => B): B = {
+    * Either way the new view starts with an empty memo, so a write drops
+    * every memoized hit; a compaction's re-keyed view keeps it
+    * ([[rekeyServing]]). Each view is local-checkpointed once filled, so
+    * its lineage does not grow with the folds and no view reads the parquet
+    * files again (which `vacuum` may delete). The cache holds one value per
+    * partition, not one per row, so filling it does not track the size of
+    * every row (on a tenant of about 1,800 rows that tracking cost the first
+    * search 35-50 ms). [[drop]] releases the view. */
+  private[graft] def serving[B](spark: SparkSession, path: String, alias: String)(
+      f: View => B): B = {
     val (gen, active, _) = tenantView(spark, path, alias)
     val files = active.sorted
     reuse[View, B](spark, path, alias, "serving", gen.map(_.toString).toSeq ++ files,
-      unpersist)(buildView(spark, path, alias, gen, files))(v => f(v.rows))
+      unpersist)(buildView(spark, path, alias, gen, files))(f)
   }
 
-  private val unpersist: View => Unit = v => { v.rows.unpersist(false); () }
+  private val unpersist: View => Unit = v =>
+    org.apache.spark.sql.graftbridge.StorageBridge.release(v.rows)
 
   /** The view of `gen` plus the sorted delta `files`: `prior`'s view with
     * the new files folded in when it has the same generation and a subset
@@ -637,10 +676,74 @@ object IndexTable {
     * set they resolve (`gen` plus the sorted `active` delta files).
     * `shape`, once known, gives a bound on every stamp in `rows` from above
     * and the row count of each partition. A tombstone stamped below
-    * `cutoff` is gone: a compaction since the last fold dropped it. */
-  private final case class View(rows: RDD[Array[ServingRow]], gen: Option[String],
-                                active: Seq[String], shape: () => Option[(Long, Array[Int])],
-                                cutoff: Long)
+    * `cutoff` is gone: a compaction since the last fold dropped it.
+    *
+    * `memo` holds the hits [[hits]] gave over these rows. It is not part of
+    * the view's equality. A view's rows never change, so its hits for a
+    * kernel and a query vector do not either. */
+  private[graft] final case class View(rows: RDD[Array[ServingRow]], gen: Option[String],
+                                       active: Seq[String],
+                                       shape: () => Option[(Long, Array[Int])], cutoff: Long)(
+                                       val memo: Memo) {
+    /** `kernel`'s hits for `queryVec` over [[rows]]: one Spark job the first
+      * time this view is asked, none while the memo still holds them. */
+    def hits(kernel: ServingKernel, queryVec: Array[Float]): Seq[KnnSearch.Hit] =
+      memo(kernel, queryVec)(kernel(rows, queryVec))
+  }
+
+  /** The most hits one view's [[Memo]] holds; an empty result counts as one
+    * hit, so it also bounds the entries. Worst case, per view: 8,192 hits,
+    * each about 250 bytes of objects plus its id, path and page content
+    * strings, and one query vector copy per entry (4 bytes a dim). At
+    * `text-embedding-ada-002`'s 1,536 dims and 300-word pages of about
+    * 2 KB, that is 8,192 x 2.3 KB = 19 MB of hits when entries hold many
+    * hits each, and at most 8,192 x 6.2 KB = 51 MB of vectors when every
+    * entry holds one hit. A memo of 50-hit `answers` retrievals stays near
+    * the first figure. */
+  private[graft] val MemoHits = 8192
+
+  /** A [[Memo]] key: a kernel and a query vector, equal by the vector's
+    * float bits. */
+  private final class Key(val kernel: ServingKernel, val vec: Array[Float]) {
+    override def hashCode: Int = 31 * kernel.hashCode + java.util.Arrays.hashCode(vec)
+    override def equals(o: Any): Boolean = o match {
+      case k: Key => k.kernel == kernel && java.util.Arrays.equals(k.vec, vec)
+      case _ => false
+    }
+  }
+
+  /** A least-recently-used map from a request (a [[ServingKernel]] with its
+    * parameters, and the query vector's exact float bits) to the hits it
+    * gave, holding at most [[MemoHits]] hits. It keys on the vector, not on
+    * a prompt: store instances with different embedders may share a view.
+    * A result above the bound is not held. */
+  private[graft] final class Memo {
+    private val entries = new java.util.LinkedHashMap[Key, Seq[KnnSearch.Hit]](16, 0.75f, true)
+    private var held = 0
+
+    private def weight(hits: Seq[KnnSearch.Hit]): Int = math.max(1, hits.size)
+
+    /** The held hits of the request, else `run`'s, held from now on. Two
+      * threads that miss on one request together both run it. */
+    def apply(kernel: ServingKernel, vec: Array[Float])(
+        run: => Seq[KnnSearch.Hit]): Seq[KnnSearch.Hit] = {
+      val key = new Key(kernel, vec)
+      synchronized(Option(entries.get(key))).getOrElse {
+        val hits = run
+        if (weight(hits) <= MemoHits) synchronized {
+          // the caller may reuse its array: the key keeps a copy
+          if (entries.put(new Key(kernel, Option(vec).map(_.clone()).orNull), hits) == null)
+            held += weight(hits)
+          val eldest = entries.values.iterator
+          while (held > MemoHits) { held -= weight(eldest.next()); eldest.remove() }
+        }
+        hits
+      }
+    }
+
+    /** Hits held now, an empty result counted as one. */
+    def size: Int = synchronized(held)
+  }
 
   private def newestOf(rows: Array[ServingRow]): Long =
     rows.iterator.map(_.ingestSeq).foldLeft(Long.MinValue)(math.max)
@@ -671,10 +774,10 @@ object IndexTable {
         if (parts.size < rows.getNumPartitions) None
         else Some((parts.map(_._2).foldLeft(Long.MinValue)(math.max),
           parts.toArray.sortBy(_._1).map(_._3)))
-      }, Long.MinValue)
+      }, Long.MinValue)(new Memo)
     case None =>
       View(spark.sparkContext.emptyRDD[Array[ServingRow]], None, Seq.empty,
-        () => Some((Long.MinValue, Array.empty[Int])), Long.MinValue)
+        () => Some((Long.MinValue, Array.empty[Int])), Long.MinValue)(new Memo)
   }
 
   /** The ranking fields of one record. */
@@ -765,7 +868,7 @@ object IndexTable {
       val filled = rows.map(_.length).collect()
       val bound = ranks.iterator.flatten.map(_.seq).foldLeft(newest)(math.max)
       View(rows, old.gen, (old.active ++ files).sorted, () => Some((bound, filled)),
-        Long.MinValue)
+        Long.MinValue)(new Memo)
     } finally deltas.unpersist(false)
   }
 
@@ -785,7 +888,9 @@ object IndexTable {
     * session's filled serving view of exactly `from` becomes the view of
     * `gen` with no deltas, dropping its tombstones stamped below `cutoff`
     * as the compaction did. Its rows move to the new slot, which frees them
-    * when it is released; the old slot is dropped without freeing them. */
+    * when it is released; the old slot is dropped without freeing them. The
+    * view keeps its memo: the tombstones it drops are never served, so every
+    * held hit is still the kernel's answer over the re-keyed view. */
   private def rekeyServing(spark: SparkSession, path: String, alias: String,
                            from: Seq[String], gen: org.apache.hadoop.fs.Path,
                            cutoff: Long): Unit =
@@ -797,7 +902,7 @@ object IndexTable {
           new Slot[View](spark, Seq(gen.toString),
             () => buildView(spark, path, alias, Some(gen), Seq.empty)(None), unpersist,
             Some(v.copy(gen = Some(gen.toString), active = Seq.empty,
-              cutoff = math.max(v.cutoff, cutoff))))
+              cutoff = math.max(v.cutoff, cutoff))(v.memo)))
         case None => cur
       })
 
@@ -872,4 +977,27 @@ object ServingRow {
     // last, as in the window's descending order
     if (r.isNullAt(6)) Long.MinValue else r.getLong(6),
     !r.isNullAt(7) && r.getBoolean(7))
+}
+
+/** A request kernel over a tenant's serving rows, with the parameters that
+  * fix its hits. A view's memo keys on it and the query vector
+  * ([[IndexTable.View]]), so two kernels are equal only when they return
+  * the same hits for the same vector. */
+sealed trait ServingKernel {
+  def apply(rows: RDD[Array[ServingRow]], queryVec: Array[Float]): Seq[KnnSearch.Hit]
+}
+
+object ServingKernel {
+  /** [[KnnSearch.serveTopK]]: the exact cosine top `k`. */
+  final case class Exact(k: Int) extends ServingKernel {
+    def apply(rows: RDD[Array[ServingRow]], queryVec: Array[Float]): Seq[KnnSearch.Hit] =
+      KnnSearch.serveTopK(rows, queryVec, k)
+  }
+
+  /** [[BinaryQuant.serveHamming]]: the top `k` by cosine of the
+    * `candidates` rows Hamming-nearest the query's sign bits. */
+  final case class Hamming(k: Int, candidates: Int) extends ServingKernel {
+    def apply(rows: RDD[Array[ServingRow]], queryVec: Array[Float]): Seq[KnnSearch.Hit] =
+      BinaryQuant.serveHamming(rows, queryVec, k, candidates)
+  }
 }

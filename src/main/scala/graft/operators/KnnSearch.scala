@@ -22,7 +22,8 @@ import graft.plans.VectorExpressions
   *   - [[serveTopK]], the request kernel the store facade serves with: the
   *     same cosine and the same total order as one RDD job over the
   *     tenant's decoded serving rows ([[IndexTable.serving]]), planned once
-  *     per view instead of once per request.
+  *     per view instead of once per request, and run once per view for a
+  *     given query vector and k ([[ServingKernel.Exact]]).
   * With `index_alias` partition pruning (the reference's key-prefix
   * routing, `modules/utilities.py:284-287`) the scan is bounded to one
   * tenant.

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.{CollationFactory, CollationSupport}
 import org.apache.spark.sql.functions._
@@ -48,14 +50,33 @@ object Rerank {
     * loses the same `[.-=?!]` punctuation the keywords lost (otherwise
     * "sandwich." never matches keyword "sandwich"), is lower-cased exactly
     * as Spark's `lower` does, and is split on whitespace as
-    * [[TextFunctions.wsTokens]] splits. */
+    * [[TextFunctions.wsTokens]] splits. Its tokens are probed against the
+    * keywords one by one, so no set of the page's words is built. */
   def keywordScore(keywords: Seq[String], content: String): Option[Int] =
     if (keywords.isEmpty) Some(0)
     else if (content == null) None
     else {
-      val words = TextFunctions.wsSplit(sqlLower(content.replaceAll("[.\\-=?!]", " "))).toSet
-      Some(math.floor(100.0 * keywords.count(words) / keywords.size).toInt)
+      // each keyword's count in `keywords`, which it adds once found
+      val pending = mutable.HashMap.empty[String, Int]
+      keywords.foreach(k => pending(k) = pending.getOrElse(k, 0) + 1)
+      var found = 0
+      val words = sqlLower(Punctuation.matcher(content).replaceAll(" "))
+      // the runs between `\s` characters, as TextFunctions.wsSplit keeps them
+      var i = 0
+      while (i < words.length && pending.nonEmpty) {
+        while (i < words.length && isSpace(words.charAt(i))) i += 1
+        val start = i
+        while (i < words.length && !isSpace(words.charAt(i))) i += 1
+        if (i > start) pending.remove(words.substring(start, i)).foreach(found += _)
+      }
+      Some(math.floor(100.0 * found / keywords.size).toInt)
     }
+
+  private val Punctuation = java.util.regex.Pattern.compile("[.\\-=?!]")
+
+  /** A character of the regex class `\s`: `[ \t\n\x0B\f\r]`. */
+  private def isSpace(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r'
 
   /** Spark's `lower` of a UTF8_BINARY string under the session's case
     * mapping setting. */

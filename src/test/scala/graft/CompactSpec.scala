@@ -357,4 +357,100 @@ class CompactSpec extends AnyFunSuite {
       assert(resolve(8) === expected)
     } finally before.fold(spark.conf.unset(openCost))(spark.conf.set(openCost, _))
   }
+
+  /** Jobs started by `f` on this thread, and its value. */
+  private def jobsOf[A](f: => A): (Int, A) = {
+    val group = s"compact-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerDrain.drain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, group)
+    val value = try f finally {
+      sc.clearJobGroup()
+      org.apache.spark.ListenerDrain.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    (jobs.get, value)
+  }
+
+  test("a compaction returns the readLatest count, counted as it writes") {
+    val path = java.nio.file.Files.createTempDirectory("compact_count").toString + "/idx"
+    IndexTable.append(IndexTable.ingestRecords(docs, "t", pageSize = 32), path)
+    IndexTable.compact(spark, path, "t")
+    IndexTable.append(IndexTable.ingestRecords(
+      docs.limit(3).withColumn("text", upper($"text")), "t", pageSize = 32), path)
+    IndexTable.delete(spark, path, "t",
+      IndexTable.readLatest(spark, path, "t").select($"id").as[String].collect().sorted.take(4))
+    val expected = IndexTable.readLatest(spark, path, "t").count()
+    val (jobs, survivors) = jobsOf(IndexTable.compact(spark, path, "t"))
+    assert(survivors === expected)
+    assert(IndexTable.readLatest(spark, path, "t").count() === expected)
+    // the broadcast of the delta ids, the window's shuffle stage and the
+    // write; reading the generation back to count it took 2 jobs more
+    assert(jobs === 3)
+  }
+
+  test("two compactions whose listings straddle a write keep every live row through " +
+      "vacuum(0)") {
+    val root = java.nio.file.Files.createTempDirectory("compact_straddle")
+    val (path, copy) = (s"$root/idx", s"$root/copy/idx")
+    def doc(p: String) = IndexTable.ingestRecords(
+      Seq((p, s"the text of $p")).toDF("document_path", "text"), "t", pageSize = 32)
+    IndexTable.append(doc("a"), path)
+    IndexTable.append(doc("b"), path)
+    IndexTable.compact(spark, path, "t")
+    IndexTable.append(doc("x"), path)
+    // compactor A lists the tenant: it compacts the index as it stands now
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(path), new java.io.File(copy))
+    // then y lands, and compactor B lists, folds y and commits first
+    IndexTable.append(doc("y"), path)
+    IndexTable.compact(spark, path, "t")
+    // A commits last, so its generation, which lacks y, is the newest
+    IndexTable.compact(spark, copy, "t")
+    val genA = genDirsFor(copy, "t").map(_.getName).max
+    java.nio.file.Files.move(java.nio.file.Paths.get(copy, "_graft_base", genA),
+      java.nio.file.Paths.get(path, "_graft_base", genA))
+    IndexTable.drop(spark, copy)
+    assert(genDirsFor(path, "t").size === 3)
+    assert(IndexTable.generations(spark, path, "t").head ===
+      genA.stripPrefix("gen_").takeWhile(_ != '_').toLong)
+    def served: Set[String] = IndexTable.readLatest(spark, path, "t")
+      .select($"document_path").as[String].collect().toSet
+    assert(served === Set("a", "b", "x", "y"))
+    IndexTable.vacuum(spark, path, "t", retainMillis = 0)
+    assert(served === Set("a", "b", "x", "y"), "vacuum deleted a row the newest generation lacks")
+    assert(new GraftVectorStore(spark, path).search("the text of y", "t", topN = 4)
+      .select($"document_path").as[String].collect().toSet === Set("a", "b", "x", "y"))
+    // the next compaction folds y into a generation of its own
+    IndexTable.compact(spark, path, "t", retainMillis = 0)
+    assert(served === Set("a", "b", "x", "y"))
+    assert(genDirsFor(path, "t").size === 1)
+    IndexTable.drop(spark, path)
+  }
+
+  test("generation names are unique per compaction and order by id, then suffix") {
+    val path = java.nio.file.Files.createTempDirectory("compact_names").toString + "/idx"
+    IndexTable.append(IndexTable.ingestRecords(docs.limit(2), "t", pageSize = 32), path)
+    (1 to 3).foreach(_ => IndexTable.compact(spark, path, "t"))
+    val names = genDirsFor(path, "t").map(_.getName)
+    assert(names.forall(_.matches("gen_[0-9]+_[0-9a-f]{16}")), names)
+    assert(names.distinct.size === 3)
+    // a second writer's generation with the same id sorts by its suffix
+    val newest = names.max
+    val twin = s"gen_${newest.stripPrefix("gen_").takeWhile(_ != '_')}_ffffffffffffffff"
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$path/_graft_base/$newest"),
+      new java.io.File(s"$path/_graft_base/$twin"))
+    IndexTable.append(IndexTable.ingestRecords(
+      Seq(("twin/doc", "only in the twin")).toDF("document_path", "text"), "t", pageSize = 32),
+      s"$path/_graft_base/$twin")
+    assert(IndexTable.readLatest(spark, path, "t").where($"document_path" === "twin/doc")
+      .count() === 1L)
+    IndexTable.drop(spark, path)
+  }
 }

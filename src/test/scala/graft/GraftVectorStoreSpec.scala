@@ -213,7 +213,7 @@ class GraftVectorStoreSpec extends AnyFunSuite {
     store.addDocuments(spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
       .select($"source".as("document_path"), $"text").limit(8), "t", pageSize = 32)
     assert(IndexTable.deltaFileCount(spark, path, "t") > 0)
-    assert(IndexTable.serving(spark, path, "t")(_.getNumPartitions) > 1)
+    assert(IndexTable.serving(spark, path, "t")(_.rows.getNumPartitions) > 1)
     val size = IndexTable.readLatest(spark, path, "t").count().toInt
     val pools = Seq(3, 5, size, size * 4)
     val stores = pools.map(c => c -> new GraftVectorStore(spark, path, binaryCandidates = Some(c)))

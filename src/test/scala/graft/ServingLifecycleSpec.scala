@@ -77,7 +77,7 @@ class ServingLifecycleSpec extends AnyFunSuite {
       // zero retention: the compaction deletes the files the view was read from
       if (i % 7 == 0) store.compactIndex("t", retainMillis = 0L)
       assert(servingRdds(path, "t") === 1, s"after cycle $i")
-      IndexTable.serving(spark, path, "t")(depth)
+      IndexTable.serving(spark, path, "t")(v => depth(v.rows))
     }
     // a filled view's lineage is its local checkpoint
     assert(depths.toSet === Set(2), depths)

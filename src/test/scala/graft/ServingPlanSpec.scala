@@ -14,7 +14,9 @@ import graft.operators.IndexTable
 
 /** The serving plans' job counts on an unchanged tenant, and their
   * freshness under every kind of write: reads reuse the parquet relations
-  * of an unchanged file set, and any write is seen by the next search. */
+  * of an unchanged file set, and any write is seen by the next search. A
+  * call's first run over a view runs its kernel; an identical call after it
+  * is answered by the view's memo, so the pins measure a second prompt. */
 class ServingPlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -70,6 +72,10 @@ class ServingPlanSpec extends AnyFunSuite {
     .select($"source".as("document_path"), $"text").limit(n)
 
   private val prompt = "fast spark table scan query"
+  /** A second prompt: its first call over a view warmed with [[prompt]]
+    * runs the kernel, where a repeat of [[prompt]] is answered by the
+    * view's memo. */
+  private val other = "parquet rows read again"
 
   test("a compacted, unchanged tenant: readLatest plans with 0 jobs, exact " +
       "search and answers run 1 job, binary search 1 job and no shuffle") {
@@ -83,10 +89,10 @@ class ServingPlanSpec extends AnyFunSuite {
     store.search(prompt, "t", topN = 10, approximate = true, probeDepth = 2).collect()
 
     assert(measure(IndexTable.readLatest(spark, path, "t"))._1 === 0)
-    assert(measure(store.search(prompt, "t", topN = 10).collect())._1 === 1)
-    assert(measure(store.answers(prompt, "t", topN = 3, threshold = 0).collect())._1 === 1)
+    assert(measure(store.search(other, "t", topN = 10).collect())._1 === 1)
+    assert(measure(store.answers(other, "t", topN = 3, threshold = 0).collect())._1 === 1)
     val (binJobs, binShuffle) = measure(
-      store.search(prompt, "t", topN = 10, approximate = true, probeDepth = 2).collect())
+      store.search(other, "t", topN = 10, approximate = true, probeDepth = 2).collect())
     assert(binJobs === 1)
     assert(binShuffle === 0L)
     store.dropIndex()
@@ -116,13 +122,15 @@ class ServingPlanSpec extends AnyFunSuite {
       Seq(("planted/c", "okapi tapir")).toDF("document_path", "text"), "t"), path)
     assert(measure(IndexTable.read(spark, path, "t"))._1 === 0)
     // the first search of this file set resolves the deltas and caches its rows
-    val cold = store.search(prompt, "t", topN = 10).collect().toSeq
+    store.search(prompt, "t", topN = 10).collect()
     var warm = Seq.empty[org.apache.spark.sql.Row]
-    val (jobs, shuffle) = measure { warm = store.search(prompt, "t", topN = 10).collect().toSeq }
+    val (jobs, shuffle) = measure { warm = store.search(other, "t", topN = 10).collect().toSeq }
     assert(jobs === 1)
     assert(shuffle === 0L)
-    assert(warm === cold)
-    assert(measure(store.answers(prompt, "t", topN = 3, threshold = 0).collect())._1 === 1)
+    assert(warm === graft.operators.KnnSearch.hitProjection(graft.operators.KnnSearch.topK(
+      IndexTable.readLatest(spark, path, "t"), graft.functions.Embedder.embedQuery(other), 10))
+      .collect().toSeq)
+    assert(measure(store.answers(other, "t", topN = 3, threshold = 0).collect())._1 === 1)
     store.dropIndex()
   }
 
@@ -145,23 +153,33 @@ class ServingPlanSpec extends AnyFunSuite {
     * see [[assertWarmPlansNothing]]. */
   private def assertWarmCallsPlanNothing(store: GraftVectorStore): Unit =
     assertWarmPlansNothing(Seq(
-      "search" -> (() => store.search(prompt, "t", topN = 10)),
-      "answers" -> (() => store.answers(prompt, "t", topN = 3, threshold = 0))))
+      "search" -> (p => store.search(p, "t", topN = 10)),
+      "answers" -> (p => store.answers(p, "t", topN = 3, threshold = 0))))
 
-  /** Each call, once warm, runs 1 job, writes no shuffle bytes and starts no
-    * SQL execution (the tenant scan is not planned again), and reading its
-    * result runs no job. */
-  private def assertWarmPlansNothing(calls: Seq[(String, () => DataFrame)]): Unit =
+  /** Each call, once warm with [[prompt]], runs 1 job for [[other]], writes
+    * no shuffle bytes and starts no SQL execution (the tenant scan is not
+    * planned again), and reading its result runs no job. The same call
+    * again runs no job at all, from the view's memo, and gives the same
+    * rows. */
+  private def assertWarmPlansNothing(calls: Seq[(String, String => DataFrame)]): Unit =
     calls.foreach { case (name, call) =>
-      call().collect() // warm: the serving rows of this view are cached
+      call(prompt).collect() // warm: the serving rows of this view are cached
       var result: DataFrame = null
-      val (jobs, shuffle, sqlExecutions) = count { result = call() }
+      val (jobs, shuffle, sqlExecutions) = count { result = call(other) }
       assert(jobs === 1, name)
       assert(shuffle === 0L, name)
       assert(sqlExecutions === 0, name)
       val (readJobs, _, _) = count(result.collect())
       assert(readJobs === 0, name)
       assert(result.collect().nonEmpty, name)
+      var repeated: DataFrame = null
+      val (repeatJobs, repeatShuffle, repeatSql) = count { repeated = call(other) }
+      assert(repeatJobs === 0, s"$name, repeated")
+      assert(repeatShuffle === 0L, s"$name, repeated")
+      assert(repeatSql === 0, s"$name, repeated")
+      val (repeatReadJobs, _, _) = count(repeated.collect())
+      assert(repeatReadJobs === 0, s"$name, repeated")
+      assert(repeated.collect().toSeq === result.collect().toSeq, s"$name, repeated")
     }
 
   test("a warm search or answers call runs 1 job, no shuffle and no SQL execution, " +
@@ -179,9 +197,9 @@ class ServingPlanSpec extends AnyFunSuite {
 
   test("a warm approximate search runs 1 job, no shuffle and no SQL execution, and " +
       "reading its result runs no job: compacted and with deltas pending") {
-    def approximate(store: GraftVectorStore): Seq[(String, () => DataFrame)] = Seq(
-      "approximate search" -> (() =>
-        store.search(prompt, "t", topN = 10, approximate = true, probeDepth = 2)))
+    def approximate(store: GraftVectorStore): Seq[(String, String => DataFrame)] = Seq(
+      "approximate search" -> (p =>
+        store.search(p, "t", topN = 10, approximate = true, probeDepth = 2)))
     val path = java.nio.file.Files.createTempDirectory("graft_plan_ann").toString + "/idx"
     val compacted = new GraftVectorStore(spark, path, binaryCandidates = Some(16))
     compacted.addDocuments(docs(40), "t", pageSize = 32)
@@ -198,9 +216,10 @@ class ServingPlanSpec extends AnyFunSuite {
   test("the first search after a write over a cached view runs at most 3 jobs and no " +
       "shuffle; after a compaction of a cached view with no later write, 1 job") {
     val (path, store, paths) = tenantWithDeltas("graft_plan_fold")
-    def pipeline(): Seq[org.apache.spark.sql.Row] = graft.operators.KnnSearch.hitProjection(
-      graft.operators.KnnSearch.topK(IndexTable.readLatest(spark, path, "t"),
-        graft.functions.Embedder.embedQuery(prompt), 10)).collect().toSeq
+    def pipeline(p: String = prompt): Seq[org.apache.spark.sql.Row] =
+      graft.operators.KnnSearch.hitProjection(graft.operators.KnnSearch.topK(
+        IndexTable.readLatest(spark, path, "t"), graft.functions.Embedder.embedQuery(p), 10))
+        .collect().toSeq
     def firstSearch(what: String): Unit = {
       var hits = Seq.empty[org.apache.spark.sql.Row]
       val (jobs, shuffle, _) = count { hits = store.search(prompt, "t", topN = 10).collect().toSeq }
@@ -217,9 +236,13 @@ class ServingPlanSpec extends AnyFunSuite {
     firstSearch("onto a folded view")
     store.compactIndex("t")
     var hits = Seq.empty[org.apache.spark.sql.Row]
-    val (jobs, shuffle, _) = count { hits = store.search(prompt, "t", topN = 10).collect().toSeq }
+    val (jobs, shuffle, _) = count { hits = store.search(other, "t", topN = 10).collect().toSeq }
     assert(jobs === 1)
     assert(shuffle === 0L)
+    assert(hits === pipeline(other))
+    // the re-keyed view kept the memo of the folded one
+    val (memoJobs, _, _) = count { hits = store.search(prompt, "t", topN = 10).collect().toSeq }
+    assert(memoJobs === 0)
     assert(hits === pipeline())
     store.dropIndex()
   }

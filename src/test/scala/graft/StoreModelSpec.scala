@@ -24,7 +24,15 @@ import graft.operators.IndexTable
   * It also searches every live row of both instances, cold and warm:
   * first the instance whose serving view is cached, so a write folds into
   * that view and a compaction by that instance re-keys it, then the other,
-  * which rebuilds the view and leaves its own cached for the next step. */
+  * which rebuilds the view and leaves its own cached for the next step.
+  * One query repeats at every step, so a view kept across a step (after a
+  * vacuum, or re-keyed by a compaction) answers it from its memo; it must
+  * equal the top k planned over `readLatest`.
+  *
+  * Some steps run two compactions whose listings straddle a write: one
+  * compacts a copy of the index taken before the write, the other the index
+  * after it; the copy's generation, which lacks the write, commits last and
+  * is moved into the index, and `vacuum(0)` follows. */
 class StoreModelSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -36,9 +44,14 @@ class StoreModelSpec extends AnyFunSuite {
   private def frame(s: SparkSession, docs: Seq[(String, String)]): DataFrame =
     s.createDataFrame(docs).toDF("document_path", "text")
 
+  /** The query every step repeats, and its top k. */
+  private val Probe = "m words version"
+  private val ProbeK = 3
+
   private def run(seed: Int, steps: Int): Unit = {
     val rng = new scala.util.Random(seed)
-    val path = java.nio.file.Files.createTempDirectory(s"store_model_$seed").toString + "/idx"
+    val root = java.nio.file.Files.createTempDirectory(s"store_model_$seed").toString
+    val path = s"$root/idx"
     val sessions = Seq(spark, spark.newSession())
     val stores = sessions.map(new GraftVectorStore(_, path))
     // doc path -> (stamp key, text; None for a tombstone). Stamp keys are
@@ -47,6 +60,7 @@ class StoreModelSpec extends AnyFunSuite {
     val model = mutable.Map.empty[String, (Long, Option[String])]
     val pool = mutable.ArrayBuffer.empty[Long]
     var version = 0
+    var next = 0
     val log = mutable.ArrayBuffer.empty[String]
 
     def merge(p: String, key: Long, text: Option[String]): Unit =
@@ -99,9 +113,34 @@ class StoreModelSpec extends AnyFunSuite {
         log += s"stale delete via store $i: ${paths.mkString(",")}"
       }
 
-    // the instance whose serving view is cached
+    // the instance whose serving view is cached, and that view at the end
+    // of the last check
     var cached = 0
-    def servingId(): Int = IndexTable.serving(sessions(cached), path, Alias)(_.id)
+    var lastView = -1
+    def servingId(): Int = IndexTable.serving(sessions(cached), path, Alias)(_.rows.id)
+
+    /** Compactions by store `i` and by a copy of the index taken before a
+      * write by the other store; the copy's generation commits last. */
+    def straddle(i: Int, step: Int): Unit = {
+      val copy = s"$root/copy_$step/idx"
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(path), new java.io.File(copy))
+      write(1 - i, Seq.fill(1) { next += 1; s"m/$next" } ++ pick(model.keys.toSeq.sorted, 1),
+        "write")
+      stores(i).compactIndex(Alias)
+      IndexTable.compact(sessions(1 - i), copy, Alias)
+      val gens = new java.io.File(s"$copy/_graft_base").listFiles().map(_.getName)
+        .filter(_.startsWith("gen_"))
+      // the copy's newest generation: the highest id, then suffix
+      val newest = gens.maxBy(g => (g.stripPrefix("gen_").takeWhile(_ != '_').toLong, g))
+      java.nio.file.Files.move(java.nio.file.Paths.get(copy, "_graft_base", newest),
+        java.nio.file.Paths.get(path, "_graft_base", newest))
+      IndexTable.drop(sessions(1 - i), copy)
+      assert(IndexTable.generations(sessions(i), path, Alias).head ===
+        newest.stripPrefix("gen_").takeWhile(_ != '_').toLong)
+      stores(i).vacuumIndex(Alias, 0L)
+      log += s"overlapping compactions via store $i and a copy, then vacuum(0)"
+      reached("overlapping compactions, then vacuum(0)") += 1
+    }
 
     def check(i: Int, step: Int): Unit = {
       val expected = model.collect { case (p, (_, Some(t))) => (p, t) }.toSeq.sorted
@@ -112,18 +151,24 @@ class StoreModelSpec extends AnyFunSuite {
           .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
         assert(served === expected, s"seed $seed step $step, $read read via store $i; $ops")
       }
+      if (servingId() == lastView) reached("a repeated query over a kept view") += 1
       Seq(cached, 1 - cached).foreach { j =>
         Seq("cold", "warm").foreach { read =>
           val served = stores(j).search("version words", Alias, topN = expected.size + 1)
             .select(col("document_path"), col("page_content")).collect()
             .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
           assert(served === expected, s"seed $seed step $step, $read search via store $j; $ops")
+          val probed = stores(j).search(Probe, Alias, topN = ProbeK).collect().toSeq
+          val planned = graft.operators.KnnSearch.hitProjection(graft.operators.KnnSearch.topK(
+            IndexTable.readLatest(sessions(j), path, Alias),
+            graft.functions.Embedder.embedQuery(Probe), ProbeK)).collect().toSeq
+          assert(probed === planned, s"seed $seed step $step, $read probe via store $j; $ops")
         }
       }
       cached = 1 - cached
+      lastView = servingId()
     }
 
-    var next = 0
     pool += IndexTable.nextIngestSeq()
     write(0, Seq.fill(3) { next += 1; s"m/$next" }, "append")
     check(0, 0)
@@ -135,6 +180,7 @@ class StoreModelSpec extends AnyFunSuite {
         case n if n < 6 => write(i, Seq.fill(1 + rng.nextInt(2)) { next += 1; s"m/$next" }, "append")
         case n if n < 11 => write(i, pick(model.keys.toSeq.sorted, 2), "upsert")
         case n if n < 15 => delete(i)
+        case 15 => straddle(i, step)
         case n if n < 18 =>
           val retain = if (rng.nextBoolean()) 0L else IndexTable.DefaultRetainMillis
           val view = servingId()
@@ -159,7 +205,9 @@ class StoreModelSpec extends AnyFunSuite {
           log += s"vacuum via store $i, retain $retain"
       }
       if (pool.isEmpty) pool += IndexTable.nextIngestSeq()
-      log.drop(logged).foreach { op =>
+      // a write straddled by compactions is not folded onto the cached view
+      val ops = log.drop(logged)
+      if (!ops.exists(_.startsWith("overlapping"))) ops.foreach { op =>
         if (op.startsWith("stale ")) reached("stale-stamp write onto a cached view") += 1
         else if (!op.startsWith("compact") && !op.startsWith("vacuum"))
           reached("write onto a cached view") += 1
@@ -172,7 +220,8 @@ class StoreModelSpec extends AnyFunSuite {
   test("random interleavings from two store instances read as a last-write-wins map") {
     Seq(1, 2, 3).foreach(run(_, steps = 12))
     Seq("write onto a cached view", "stale-stamp write onto a cached view",
-      "compaction of a cached view, then vacuum(0)", "compaction by the other instance")
+      "compaction of a cached view, then vacuum(0)", "compaction by the other instance",
+      "overlapping compactions, then vacuum(0)", "a repeated query over a kept view")
       .foreach(c => assert(reached(c) > 0, s"no step reached: $c; reached $reached"))
   }
 }
