@@ -105,7 +105,8 @@ object Bench {
         // runs so cached blocks never leak work across timings.
         try {
           spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+          spark.sparkContext.getPersistentRDDs.values
+            .foreach(org.apache.spark.sql.graftbridge.StorageBridge.release)
         } catch { case _: Throwable => () }
         // listener-bus delivery is async; give stragglers a beat so the
         // per-rep delta is complete (diagnostic counters, not timings)

@@ -175,7 +175,7 @@ final class GraftVectorStore(
           Window.orderBy(desc("similarity"), asc("document_path"),
             asc("page_number"))))
         .select(col("document_path"), col("page_number"), col("rank"))
-      val terms = prompt.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct.toSeq
+      val terms = prompt.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty).distinct.toSeq
       // a whitespace-only prompt has no lexical side: degrade to
       // vector-only ranks instead of refusing the search
       val lex =

@@ -184,11 +184,16 @@ object SparkEntry {
     * index-time artifact (r12 verdict item 4) the pair graph is built
     * FROM, the incremental gate's base side reads, and the recall audits'
     * exact side reuses for its shingle sets. Per-doc rows, so any filter
-    * of this table ≡ recomputing signatures on the filtered corpus. */
+    * of this table ≡ recomputing signatures on the filtered corpus.
+    * Its band keys are the md5 form the oracle replays
+    * ([[operators.Dedup.minhashBandKeysFast]]), composed here: the engine's
+    * [[operators.Dedup.minhashSignatures]] uses the XXH64 family. */
   private def minhashSigsShared(s: SparkSession, d: String): DataFrame =
     graft.core.PersistedBuild.table(
-      operators.Dedup.minhashSignatures(t(s, d, "documents"), "text",
-        "doc_id", numHashes = 12, bands = 4),
+      operators.Dedup.spread(t(s, d, "documents"))
+        .select(col("doc_id"), operators.Dedup.shinglesFast(2)(col("text")).as("sh"))
+        .where(size(col("sh")) > 0)
+        .withColumn("bands", operators.Dedup.minhashBandKeysFast(12, 4)(col("sh"))),
       scratch(d, "minhash_sigs_12b4"), s)
 
   /** The corpus near-dup pair graph at the production setting

@@ -35,7 +35,8 @@ object Verify {
       // drop operator-persisted intermediates between queries
       try {
         spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        spark.sparkContext.getPersistentRDDs.values
+          .foreach(org.apache.spark.sql.graftbridge.StorageBridge.release)
       } catch { case _: Throwable => () }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

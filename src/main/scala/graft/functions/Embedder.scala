@@ -28,7 +28,7 @@ object Embedder {
   def embed(text: String, dim: Int, seed: Int): Array[Float] = {
     val v = new Array[Double](dim)
     var i = 0
-    val tokens = text.toLowerCase.split("\\W+")
+    val tokens = text.toLowerCase(java.util.Locale.ROOT).split("\\W+")
     while (i < tokens.length) {
       val t = tokens(i)
       if (t.nonEmpty) {
@@ -120,7 +120,7 @@ object Embedder {
   def embedPortable(text: String, dim: Int, seed: Int = DefaultSeed): Array[Float] = {
     val v = new Array[Double](dim)
     val md = java.security.MessageDigest.getInstance("MD5")
-    text.toLowerCase.split("[^a-z0-9_]+").foreach { t =>
+    text.toLowerCase(java.util.Locale.ROOT).split("[^a-z0-9_]+").foreach { t =>
       if (t.nonEmpty) {
         val d = md.digest((t + "#" + seed).getBytes(java.nio.charset.StandardCharsets.UTF_8))
         val h0 = (d(0) >> 4) & 0xf; val h1 = d(0) & 0xf; val h2 = (d(1) >> 4) & 0xf

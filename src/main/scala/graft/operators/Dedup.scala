@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
 
 import graft.functions.TextFunctions
 
@@ -13,9 +13,13 @@ import graft.functions.TextFunctions
   * `modules/utilities.py:344,304-309`); here dedup is a first-class set of
   * operators, each designed around its shuffle profile at 100 TB.
   *
-  * All hash primitives are engine-portable (md5 hex strings + string min),
-  * so every variant except the murmur-based ones is expressible in ANSI SQL
-  * for the DuckDB oracle.
+  * Most hash primitives are engine-portable (md5 hex strings + string min),
+  * so those variants are expressible in ANSI SQL for the DuckDB oracle. The
+  * MinHash batch path ([[minhashSignatures]]) is the exception: MinHash
+  * needs a min-wise family, not a cryptographic one, so it hashes each
+  * shingle once with XXH64 and keys its band buckets on longs. The md5
+  * MinHash form ([[minhashSignature]], [[lshBandKeys]],
+  * [[minhashBandKeysFast]]) stays as the reference the oracle replays.
   */
 object Dedup {
 
@@ -141,7 +145,7 @@ object Dedup {
     org.apache.spark.sql.functions.udf { (text: String) =>
       if (text == null) Array.empty[String]
       else {
-        val ws = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+        val ws = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
         if (ws.length < n) Array.empty[String]
         else ws.sliding(n).map(_.mkString(" ")).toArray.distinct
       }
@@ -182,7 +186,7 @@ object Dedup {
     val f = udf { (text: String) =>
       if (text == null) Array.empty[(Int, Long)]
       else {
-        val ws = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+        val ws = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
         val n = ws.length - gram + 1
         if (n < window) Array.empty[(Int, Long)]
         else {
@@ -242,7 +246,9 @@ object Dedup {
 
   /** MinHash signature: sig_i = min over shingles of md5(shingle || '#' || i).
     * A string-min hash family — portable across engines (md5 + lexicographic
-    * min are identical everywhere), order-independent, deterministic. */
+    * min are identical everywhere), order-independent, deterministic. This
+    * is the form the DuckDB oracle replays; the batch path
+    * ([[minhashSignatures]]) uses the XXH64 family instead. */
   def minhashSignature(shingleCol: Column, numHashes: Int): Column =
     transform(sequence(lit(0), lit(numHashes - 1)),
       i => array_min(transform(shingleCol, s => md5(concat(s, lit("#"), i.cast("string"))))))
@@ -253,7 +259,12 @@ object Dedup {
     transform(sequence(lit(0), lit(bands - 1)),
       b => md5(concat_ws(",", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)))))
 
-  /** Signature + band keys in ONE narrow per-document pass (the hot path).
+  /** The md5 signature + band keys in ONE narrow per-document pass: the
+    * compiled form of the family the DuckDB oracle replays, run by the
+    * harness cells that replay it and by the streaming bucket table. The
+    * batch path ([[minhashSignatures]]) does not use it: one MD5 per
+    * shingle per hash was its largest cost, and MinHash needs no
+    * cryptographic family.
     * Bit-identical to [[minhashSignature]] + [[lshBandKeys]]: per hash i the
     * minimum of md5(shingle || '#' || i) under lexicographic hex order — which
     * equals unsigned-byte order on the raw 16-byte digests, so the mins are
@@ -297,21 +308,67 @@ object Dedup {
   }
 
   /** Per-document MinHash signature artifact: one row per doc carrying its
-    * distinct `ngram` shingle set (`sh`) and the `bands` LSH band keys —
-    * the index-time state every MinHash consumer derives from. Persisted
-    * once (r13, the r12 verdict's item 4), it serves the pair-graph build,
-    * the incremental gate's BASE side, and the recall audits' exact side
-    * without re-running the shingle+hash chain per consumer. Entirely
-    * narrow per-doc work: signatures are independent of the rest of the
-    * corpus, so any row filter of this table equals recomputing on the
-    * filtered corpus (the restriction argument the sampled recall audit
-    * already relies on). */
+    * distinct `ngram` shingle set (`sh`) and the `bands` LSH band keys
+    * (`array<bigint>`, from [[minhashBandKeys]]) — the state every MinHash
+    * consumer derives from: the pair graph, the incremental gate's BASE
+    * side, and an exact audit's shingle sets. Entirely narrow per-doc work:
+    * signatures are independent of the rest of the corpus, so any row
+    * filter of this table equals recomputing on the filtered corpus.
+    *
+    * The family is XXH64, not md5: MinHash needs a min-wise family, not a
+    * cryptographic one (Broder 1997), and one MD5 per shingle per hash was
+    * the batch job's largest cost. The md5 form ([[minhashBandKeysFast]])
+    * remains only because the DuckDB oracle replays it. */
   def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
                         numHashes: Int, bands: Int, ngram: Int = 2): DataFrame =
     spread(df)
       .select(col(idCol).as("doc_id"), shinglesFast(ngram)(col(textCol)).as("sh"))
       .where(size(col("sh")) > 0)
-      .withColumn("bands", minhashBandKeysFast(numHashes, bands)(col("sh")))
+      .withColumn("bands", minhashBandKeys(numHashes, bands)(col("sh")))
+
+  /** The per-shingle hash of [[minhashBandKeys]]: XXH64 over the shingle's
+    * UTF-8 bytes with seed 42, so it equals Spark's `xxhash64(shingle)`. */
+  private[graft] def shingleHash(s: String): Long = {
+    val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+      b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, b.length, 42L)
+  }
+
+  /** The splitmix64 finalizer: a bijection on 64 bits with full avalanche. */
+  private def mix64(x: Long): Long = {
+    var z = x
+    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
+    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
+    z ^ (z >>> 31)
+  }
+
+  /** The MinHash band keys of a shingle set in one narrow pass, the family
+    * of [[minhashSignatures]]: each shingle is hashed once
+    * ([[shingleHash]]); hash i of a shingle with hash h is
+    * `mix64(h + (i + 1) * 0x9E3779B97F4A7C15)`, and the signature keeps each
+    * hash's signed minimum. Band b folds its `numHashes / bands` minimums m
+    * in order into one long, `k = mix64(k ^ m)` from `k = b`. The keys
+    * depend only on the set of shingles, not on their order or repeats. */
+  private[graft] def minhashBandKeys(numHashes: Int, bands: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
+    org.apache.spark.sql.functions.udf { (shingles: Seq[String]) =>
+      val rpb = numHashes / bands
+      val mins = Array.fill(numHashes)(Long.MaxValue)
+      shingles.foreach { s =>
+        val h = shingleHash(s)
+        var i = 0
+        while (i < numHashes) {
+          val v = mix64(h + (i + 1) * 0x9e3779b97f4a7c15L)
+          if (v < mins(i)) mins(i) = v
+          i += 1
+        }
+      }
+      Array.tabulate(bands) { b =>
+        var k = b.toLong
+        var r = 0
+        while (r < rpb) { k = mix64(k ^ mins(b * rpb + r)); r += 1 }
+        k
+      }
+    }
 
   /** [[ngramJaccardPairs]] through the build-once persisted contract
     * ([[graft.core.PersistedBuild]]): the exact-Jaccard pair graph is an
@@ -326,7 +383,9 @@ object Dedup {
       df.sparkSession)
 
   /** MinHash-LSH near-dup pairs: shingle -> minhash -> band -> bucket ->
-    * exact Jaccard verify inside the bucket, on its candidates only.
+    * exact Jaccard verify inside the bucket, on its candidates only. The
+    * signatures are [[minhashSignatures]]'s XXH64 family with long band
+    * keys; the oracle's md5 form is not used here.
     *
     * Scale shape: the signatures are one narrow per-document pass; the
     * pairs take two shuffles, both in [[minhashNearDupPairsFromSigs]]: a
@@ -340,7 +399,7 @@ object Dedup {
                           maxBucket: Int = 1000): DataFrame = {
     require(bands >= 1 && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    // Shape note: signatures come from [[minhashBandKeysFast]], one narrow
+    // Shape note: signatures come from [[minhashBandKeys]], one narrow
     // per-document pass with NO shuffle (the round-1 shape — explode +
     // numHashes min-aggregates — shuffled (docs x numHashes) strings and was
     // the single slowest stage of the whole bench; the declarative array form
@@ -353,7 +412,9 @@ object Dedup {
   /** The band-bucket + verify tail of [[minhashNearDupPairs]], fed by an
     * already-derived signature frame ([[minhashSignatures]] live or read
     * back from its persisted artifact: the same `sh` / band-key values the
-    * inline form computes). A pair is a candidate when its two docs share a
+    * inline form computes). The band keys may be of any type (longs from
+    * [[minhashSignatures]], md5 hex strings from [[minhashBandKeysFast]]):
+    * they are compared as values. A pair is a candidate when its two docs share a
     * band bucket of at most `maxBucket` members; it is kept when its exact
     * shingle Jaccard, `round(inter / (|sh1| + |sh2| - inter), 4)`, reaches
     * `threshold`. Count, then verify:
@@ -405,12 +466,13 @@ object Dedup {
           s"maxBucket=$maxBucket: the audit-shared pair graph would silently " +
           "drop pairs; raise maxBucket for this build or fix the boilerplate upstream")
     }
-    val cut = oversize.map(r => (r.getInt(0), r.getString(1))).toSet
+    val cut = oversize.map(r => (r.getInt(0), r.get(1))).toSet
     // the bounded keys sit on the driver already, so the broadcast side is
     // a local relation: broadcasting it runs no job
+    val keyType = sigs.schema("bands").dataType.asInstanceOf[ArrayType].elementType
     val boundedKeys = sigs.sparkSession.createDataFrame(
-      java.util.Arrays.asList(bounded.map(r => Row(r.getInt(0), r.getString(1))).toIndexedSeq: _*),
-      new StructType().add("band_idx", IntegerType).add("band_key", StringType))
+      java.util.Arrays.asList(bounded.map(r => Row(r.getInt(0), r.get(1))).toIndexedSeq: _*),
+      new StructType().add("band_idx", IntegerType).add("band_key", keyType))
     val buckets = bandRows(col("doc_id"), col("sh"), col("bands"))
       .join(broadcast(boundedKeys), Seq("band_idx", "band_key"))
       .groupBy(col("band_idx"), col("band_key"))
@@ -436,9 +498,9 @@ object Dedup {
     * in `cut` (the oversize buckets), so each candidate pair is verified and
     * emitted by exactly one group. The count is the number of distinct
     * shingles in both sets, which is `size(array_intersect(sh1, sh2))`. */
-  private def bucketPairs(cut: Set[(Int, String)]) =
+  private def bucketPairs(cut: Set[(Int, Any)]) =
     udf { (band: Int, members: Seq[Row]) =>
-      val bands = members.map(_.getSeq[String](2).toArray).toArray
+      val bands = members.map(_.getSeq[Any](2).toArray).toArray
       val sets = members.map(_.getSeq[String](1).toSet).toArray
       def ownedHere(i: Int, j: Int): Boolean = {
         var c = 0
@@ -470,7 +532,7 @@ object Dedup {
     * corpus — the daily-ingest shape ([[exactIncremental]]'s near-dup
     * sibling; the streaming bucket table is the in-flight analogue). The
     * seen side arrives as persisted band keys (built once at index time by
-    * the same [[minhashBandKeysFast]] family), so a day's ingest computes
+    * the same [[minhashSignatures]] family), so a day's ingest computes
     * signatures for the NEW docs only and probes the seen band table with
     * one equi-join — no new-vs-new or seen-vs-seen pairs, no re-hash of
     * history. Candidates verify by exact shingle Jaccard against the seen
@@ -557,7 +619,7 @@ object Dedup {
       else {
         val md = java.security.MessageDigest.getInstance("MD5")
         val counts = new Array[Int](32)
-        text.toLowerCase.split("\\s+").foreach { tok =>
+        text.toLowerCase(java.util.Locale.ROOT).split("\\s+").foreach { tok =>
           if (tok.nonEmpty) {
             md.reset()
             val d = md.digest(tok.getBytes("UTF-8"))

@@ -356,15 +356,18 @@ object IndexTable {
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Slot[_]]()
 
   /** `use` over the slot's value for this session and key, built at most
-    * once even when several threads ask for a new key together. `build`
-    * gets the slot it replaces when that slot is this session's; the
-    * replaced slot is released after the new value is built and used. */
+    * once even when several threads ask for a new key together. A built
+    * value that is no longer `live` counts as absent. `build` gets the slot
+    * it replaces when that slot is this session's; the replaced slot is
+    * released after the new value is built and used. */
   private def reuse[A, B](spark: SparkSession, path: String, alias: String, slot: String,
-                          key: Seq[String], free: A => Unit = (_: A) => ())(
+                          key: Seq[String], free: A => Unit = (_: A) => (),
+                          live: A => Boolean = (_: A) => true)(
                           build: Option[Slot[A]] => A)(use: A => B): B = {
     var replaced: Slot[A] = null
     val s = relations.compute((path, alias, slot), (_, cur) =>
-      if (cur != null && (cur.spark eq spark) && cur.key == key) cur
+      if (cur != null && (cur.spark eq spark) && cur.key == key &&
+          cur.asInstanceOf[Slot[A]].peek.forall(live)) cur
       else {
         replaced = cur.asInstanceOf[Slot[A]]
         val prior = Option(replaced).filter(_.spark eq spark)
@@ -558,26 +561,34 @@ object IndexTable {
     * folds every delta file on disk into the new generation before the
     * commit marker lands), so any retained id can be read as-of via
     * [[readGeneration]]. [[vacuum]]'s retention window bounds how far back
-    * the catalog reaches — the table-format time-travel contract. */
+    * the catalog reaches — the table-format time-travel contract. Two
+    * writers' generations may share an id (`gen_<id>_<suffix>`); the id is
+    * listed once. */
   def generations(spark: SparkSession, path: String, alias: String): Seq[Long] = {
     val fs = fileSystem(spark, path)
-    gensFor(fs, path, alias, committedOnly = true).map(p => genIdOf(p.getName))
+    gensFor(fs, path, alias, committedOnly = true).map(p => genIdOf(p.getName)).distinct
   }
 
   /** Snapshot (time-travel) read: the tenant exactly as folded at the given
     * committed generation's publish — deltas appended and generations
     * committed AFTER it are excluded, because the generation dir itself IS
     * the folded state (no manifest chasing needed); the tombstones it
-    * retains are left out. Throws if the id is unknown, not committed, or
-    * already vacuumed past retention. */
+    * retains are left out. Throws if the id is unknown, not committed,
+    * already vacuumed past retention, or shared by two committed
+    * generations (then the id names no one snapshot). */
   def readGeneration(spark: SparkSession, path: String, alias: String,
                      genId: Long): DataFrame = {
     val fs = fileSystem(spark, path)
-    val gen = gensFor(fs, path, alias, committedOnly = true)
-      .find(p => genIdOf(p.getName) == genId)
-      .getOrElse(throw new IllegalArgumentException(
+    val committed = gensFor(fs, path, alias, committedOnly = true)
+    val gen = committed.filter(p => genIdOf(p.getName) == genId) match {
+      case Seq(g) => g
+      case Seq() => throw new IllegalArgumentException(
         s"generation $genId of '$alias' does not exist (committed ids: " +
-          s"${generations(spark, path, alias).mkString(", ")})"))
+          s"${committed.map(p => genIdOf(p.getName)).distinct.mkString(", ")})")
+      case shared => throw new IllegalArgumentException(
+        s"generation $genId of '$alias' is ambiguous: committed as " +
+          shared.map(_.getName).sorted.mkString(" and "))
+    }
     viewFrame(spark, path, alias, Some(gen), Seq.empty).where(isLive)
   }
 
@@ -643,26 +654,35 @@ object IndexTable {
     * files again (which `vacuum` may delete). The cache holds one value per
     * partition, not one per row, so filling it does not track the size of
     * every row (on a tenant of about 1,800 rows that tracking cost the first
-    * search 35-50 ms). [[drop]] releases the view. */
+    * search 35-50 ms). [[drop]] releases the view.
+    *
+    * A view whose rows were freed outside this object (a sweep that
+    * unpersists every RDD) is not [[held]]: it counts as absent, and the
+    * view is built cold. */
   private[graft] def serving[B](spark: SparkSession, path: String, alias: String)(
       f: View => B): B = {
     val (gen, active, _) = tenantView(spark, path, alias)
     val files = active.sorted
     reuse[View, B](spark, path, alias, "serving", gen.map(_.toString).toSeq ++ files,
-      unpersist)(buildView(spark, path, alias, gen, files))(f)
+      unpersist, held)(buildView(spark, path, alias, gen, files))(f)
   }
 
   private val unpersist: View => Unit = v =>
     org.apache.spark.sql.graftbridge.StorageBridge.release(v.rows)
 
+  /** Whether a view's rows can still be read: they are registered as
+    * persisted, or there are none. */
+  private val held: View => Boolean = v =>
+    org.apache.spark.sql.graftbridge.StorageBridge.isPersisted(v.rows) || v.rows.partitions.isEmpty
+
   /** The view of `gen` plus the sorted delta `files`: `prior`'s view with
-    * the new files folded in when it has the same generation and a subset
-    * of the files, else built cold. */
+    * the new files folded in when it is [[held]] and has the same
+    * generation and a subset of the files, else built cold. */
   private def buildView(spark: SparkSession, path: String, alias: String,
                         gen: Option[org.apache.hadoop.fs.Path], files: Seq[String])(
                         prior: Option[Slot[View]]): View =
     prior.flatMap(_.useBuilt { v =>
-      if (v.gen == gen.map(_.toString) && v.active.forall(files.contains))
+      if (held(v) && v.gen == gen.map(_.toString) && v.active.forall(files.contains))
         Some(fold(spark, path, alias, v, files.filterNot(v.active.contains)))
       else None
     }).flatten.getOrElse {
@@ -888,7 +908,8 @@ object IndexTable {
     * session's filled serving view of exactly `from` becomes the view of
     * `gen` with no deltas, dropping its tombstones stamped below `cutoff`
     * as the compaction did. Its rows move to the new slot, which frees them
-    * when it is released; the old slot is dropped without freeing them. The
+    * when it is released; the old slot is dropped without freeing them. A
+    * view that is not [[held]] is left alone, to be rebuilt cold. The
     * view keeps its memo: the tombstones it drops are never served, so every
     * held hit is still the kernel's answer over the re-keyed view. */
   private def rekeyServing(spark: SparkSession, path: String, alias: String,
@@ -896,7 +917,7 @@ object IndexTable {
                            cutoff: Long): Unit =
     relations.computeIfPresent((path, alias, "serving"), (_, cur) =>
       if (!(cur.spark eq spark) || cur.key != from) cur
-      else cur.asInstanceOf[Slot[View]].peek.filter(_.rows.isCheckpointed) match {
+      else cur.asInstanceOf[Slot[View]].peek.filter(v => v.rows.isCheckpointed && held(v)) match {
         case Some(v) =>
           // a reader that reaches the new slot after its release builds cold
           new Slot[View](spark, Seq(gen.toString),

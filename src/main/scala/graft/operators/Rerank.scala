@@ -40,7 +40,7 @@ object Rerank {
   /** The prompt's distinct keywords, in order (reference
     * `app/app.py:49-56`). */
   def keywords(prompt: String): Seq[String] =
-    prompt.toLowerCase
+    prompt.toLowerCase(java.util.Locale.ROOT)
       .replaceAll("[.\\-=?!]", " ").split("\\s+")
       .filter(w => w.nonEmpty && !TextFunctions.Stopwords.contains(w))
       .distinct.toSeq

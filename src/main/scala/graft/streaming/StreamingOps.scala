@@ -592,9 +592,9 @@ object StreamingOps {
     * continuously ingesting corpus, the sketch-state sibling of
     * [[cmsCountersOnce]] (the index IS the state; its size is
     * bands x docs fixed-width rows, never the text). Per micro-batch the
-    * signature/band computation is the same ZERO-shuffle compiled pass as
-    * batch ([[graft.operators.Dedup.minhashBandKeysFast]] — bit-identical
-    * family), so a new batch folds into the buckets with one keyed
+    * signature/band computation is one ZERO-shuffle compiled pass
+    * ([[graft.operators.Dedup.minhashBandKeysFast]], the md5 family the
+    * DuckDB oracle replays), so a new batch folds into the buckets with one keyed
     * partial-agg merge. min(doc_id) is the batch Dedup canonical-min
     * convention; a bucket with n_members >= 2 names a candidate near-dup
     * group an ingest gate would route to exact verification. Over the

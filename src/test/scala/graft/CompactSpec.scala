@@ -187,6 +187,25 @@ class CompactSpec extends AnyFunSuite {
     }
   }
 
+  test("two committed generations sharing an id list it once, and reading it throws") {
+    val path = java.nio.file.Files.createTempDirectory("compact_shared_id").toString + "/idx"
+    IndexTable.append(IndexTable.ingestRecords(docs.limit(5), "t", pageSize = 32), path)
+    IndexTable.compact(spark, path, "t")
+    val Seq(id) = IndexTable.generations(spark, path, "t")
+    assert(IndexTable.readGeneration(spark, path, "t", id).count() > 0)
+    // a second writer's generation with the same id, commit marker included
+    val Seq(gen) = genDirsFor(path, "t")
+    val twin = new java.io.File(gen.getParentFile, s"gen_${id}_ffffffffffffffff")
+    org.apache.commons.io.FileUtils.copyDirectory(gen, twin)
+    assert(new java.io.File(twin, "_graft_committed").isFile)
+    assert(IndexTable.generations(spark, path, "t") === Seq(id))
+    val ex = intercept[IllegalArgumentException] {
+      IndexTable.readGeneration(spark, path, "t", id)
+    }
+    assert(ex.getMessage.contains(gen.getName) && ex.getMessage.contains(twin.getName),
+      ex.getMessage)
+  }
+
   test("tombstone delete: masks immediately, un-deletes on re-ingest, forgotten after compact+vacuum") {
     val path = java.nio.file.Files.createTempDirectory("compact_del").toString + "/idx"
     IndexTable.append(IndexTable.ingestRecords(docs, "t", pageSize = 32), path)

@@ -126,6 +126,43 @@ class DedupSpec extends AnyFunSuite {
     both.foreach { case (a, b) => assert(a === b) }
   }
 
+  /** The band keys of [[Dedup.minhashBandKeys]], written out from its
+    * definition: hash i of a shingle is the splitmix64 finalizer of
+    * `xxhash64(shingle) + (i + 1) * 0x9E3779B97F4A7C15`; each band folds its
+    * signed minimums as `k = mix(k ^ m)` from `k = band`. */
+  private def referenceBandKeys(hashes: Seq[Long], numHashes: Int, bands: Int): Seq[Long] = {
+    def mix(x: Long): Long = {
+      val a = (x ^ (x >>> 30)) * 0xbf58476d1ce4e5b9L
+      val b = (a ^ (a >>> 27)) * 0x94d049bb133111ebL
+      b ^ (b >>> 31)
+    }
+    val sig = (0 until numHashes).map(i => hashes.map(h => mix(h + (i + 1) * 0x9e3779b97f4a7c15L)).min)
+    val rows = numHashes / bands
+    (0 until bands).map(b => sig.slice(b * rows, (b + 1) * rows).foldLeft(b.toLong)((k, m) => mix(k ^ m)))
+  }
+
+  test("minhashSignatures' family: xxhash64 per shingle, a fixed mix per hash, " +
+      "long band keys that depend only on the shingle set") {
+    val docsFx = spark.read.parquet(s"${TestSpark.sf}/documents.parquet").limit(50)
+    val sigs = Dedup.minhashSignatures(docsFx, "text", "doc_id", numHashes = 12, bands = 4)
+    assert(sigs.schema("bands").dataType ===
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false))
+    // the per-shingle hash is Spark's xxhash64 of the shingle
+    val hashed = sigs.select($"doc_id", $"sh", transform($"sh", x => xxhash64(x)).as("h"), $"bands")
+      .as[(Long, Seq[String], Seq[Long], Seq[Long])].collect()
+    assert(hashed.nonEmpty)
+    hashed.foreach { case (id, sh, h, bands) =>
+      assert(sh.map(Dedup.shingleHash) === h, s"doc $id")
+      assert(bands === referenceBandKeys(h, 12, 4), s"doc $id")
+    }
+    // the same set in another order, with repeats, keys the same buckets
+    val (_, sh, _, bands) = hashed.maxBy(_._2.size)
+    val shuffled = new scala.util.Random(7).shuffle(sh ++ sh.take(3))
+    val again = Seq(shuffled).toDF("sh").select(Dedup.minhashBandKeys(12, 4)($"sh"))
+      .as[Seq[Long]].head()
+    assert(again === bands)
+  }
+
   test("minhash-LSH surfaces the near-dup pair and skips unrelated docs") {
     val pairs = Dedup.minhashNearDupPairs(docs, "text", "doc_id",
       numHashes = 12, bands = 6, threshold = 0.4)
@@ -186,7 +223,9 @@ class DedupSpec extends AnyFunSuite {
     * (bucket sizes counted on the driver). */
   private def bandedReference(sigs: org.apache.spark.sql.DataFrame, threshold: Double,
                               maxBucket: Int): Set[(Long, Long, Double)] = {
-    val bands = sigs.select($"doc_id", $"bands").as[(Long, Seq[String])].collect().toMap
+    // band keys of either type: longs from minhashSignatures, md5 hex strings
+    val bands = sigs.select($"doc_id", $"bands").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
     val members = bands.values.flatMap(_.zipWithIndex).groupBy(identity).map {
       case (k, v) => k -> v.size }
     def bounded(a: Long, b: Long): Boolean =

@@ -53,6 +53,56 @@ class ServingLifecycleSpec extends AnyFunSuite {
     assert(servingRdds(path, "u") === 0)
   }
 
+  /** A store whose serving views a sweep freed (as a harness that
+    * unpersists every RDD between queries does) serves the same hits as a
+    * fresh store over a copy of the index: a freed view counts as absent,
+    * with deltas pending, after an append and after a compaction alike. */
+  private def searchAfterSweeps(dir: String, sweep: org.apache.spark.rdd.RDD[_] => Unit): Unit = {
+    val root = java.nio.file.Files.createTempDirectory(dir).toString
+    val path = s"$root/idx"
+    val store = new GraftVectorStore(spark, path)
+    // only this test's RDDs: other suites' persisted data stays
+    val earlier = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def sweepAll(): Unit = spark.sparkContext.getPersistentRDDs.values
+      .filterNot(r => earlier(r.id)).foreach(sweep)
+    val prompt = "fast spark table scan query"
+    def hits(s: GraftVectorStore) = s.search(prompt, "t", topN = 10).collect().toSeq
+    def freshHits(step: Int) = {
+      val copy = s"$root/copy$step"
+      org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(path), new java.io.File(copy))
+      val fresh = new GraftVectorStore(spark, copy)
+      try hits(fresh) finally fresh.dropIndex()
+    }
+    store.addDocuments(docs(20), "t", pageSize = 32)
+    store.compactIndex("t")
+    store.addDocuments(Seq(("sweep/1", "fast spark table scan")).toDF("document_path", "text"),
+      "t", pageSize = 32)
+    hits(store)
+    sweepAll()
+    assert(hits(store) === freshHits(1), "deltas pending")
+    sweepAll()
+    store.addDocuments(Seq(("sweep/2", "spark table scan query")).toDF("document_path", "text"),
+      "t", pageSize = 32)
+    assert(hits(store) === freshHits(2), "after an append")
+    sweepAll()
+    store.compactIndex("t")
+    val afterCompact = hits(store)
+    assert(afterCompact === freshHits(3), "after a compaction")
+    assert(afterCompact.nonEmpty)
+    assert(servingRdds(path, "t") === 1)
+    store.dropIndex()
+    assert(servingRdds(path, "t") === 0)
+  }
+
+  test("a serving view freed by RDD.unpersist is rebuilt, not served") {
+    searchAfterSweeps("serving_swept", _.unpersist(false))
+  }
+
+  test("a serving view freed by SparkContext.unpersistRDD is rebuilt, not served") {
+    searchAfterSweeps("serving_swept_ctx",
+      org.apache.spark.sql.graftbridge.StorageBridge.release)
+  }
+
   /** Lineage depth of an RDD: 1 for one without dependencies. */
   private def depth(rdd: org.apache.spark.rdd.RDD[_]): Int =
     1 + (rdd.dependencies.map(d => depth(d.rdd)) :+ 0).max
