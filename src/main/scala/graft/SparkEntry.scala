@@ -9019,7 +9019,7 @@ object SparkEntry {
     * kmeans updateCte cross-join-index pattern so both engines fold the
     * cosine in INDEX order. */
   private lazy val storeHybridE2eOracleSql: String = {
-    val termsSql = fixedPrompt.toLowerCase.split("\\s+")
+    val termsSql = fixedPrompt.toLowerCase(java.util.Locale.ROOT).split("\\s+")
       .filter(_.nonEmpty).distinct.map(t => s"'$t'").mkString(", ")
     s"""WITH pages AS (
        |  SELECT CAST(doc_id AS VARCHAR) AS document_path, g AS page_number,

@@ -118,7 +118,7 @@ object Bm25 {
                    queryTerms: Seq[String], k: Int = 10, qId: Long = 0L,
                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    require(queryTerms.forall(t => t == t.toLowerCase),
+    require(queryTerms.forall(t => t == t.toLowerCase(java.util.Locale.ROOT)),
       "queryTerms must be lowercase (the token stream is lowercased)")
     // corpus constants: one partial-aggregated row, broadcast back in
     val stats = docs.agg(count(lit(1)).cast("double").as("n_docs"),
@@ -155,7 +155,7 @@ object Bm25 {
                  queryTerms: Seq[String], k: Int = 10, qId: Long = 0L,
                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    require(queryTerms.forall(t => t == t.toLowerCase),
+    require(queryTerms.forall(t => t == t.toLowerCase(java.util.Locale.ROOT)),
       "queryTerms must be lowercase (the token stream is lowercased)")
     val pruned = toks.where(col("term").isInCollection(queryTerms))
     val tf = pruned.groupBy(col("doc_id"), col("term"))
@@ -189,7 +189,7 @@ object Bm25 {
     val vocab = Dedup.spread(df)
       .select(explode(TextFunctions.wsTokens(lower(col(textCol)))).as("term"))
       .distinct()
-    val qs = queryTerms.map(q => lit(q.toLowerCase).as("q"))
+    val qs = queryTerms.map(q => lit(q.toLowerCase(java.util.Locale.ROOT)).as("q"))
     vocab.select(col("term"), explode(array(qs: _*)).as("q"))
       .where(levenshtein(col("term"), col("q")) <= maxDist)
       .select(col("term")).distinct()
@@ -242,7 +242,7 @@ object Bm25 {
                        queryTerms: Seq[String], k: Int = 10, qId: Long = 0L,
                        k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    require(queryTerms.forall(t => t == t.toLowerCase),
+    require(queryTerms.forall(t => t == t.toLowerCase(java.util.Locale.ROOT)),
       "queryTerms must be lowercase (the index is built lowercased)")
     val stats = norms.agg(count(lit(1)).cast("double").as("n_docs"),
       sum(col("dl")).as("sum_dl"))
@@ -282,7 +282,7 @@ object Bm25 {
                     queryTerms: Seq[String], k: Int = 10,
                     k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    require(queryTerms.forall(t => t == t.toLowerCase),
+    require(queryTerms.forall(t => t == t.toLowerCase(java.util.Locale.ROOT)),
       "queryTerms must be lowercase (the token stream is lowercased)")
     val docs = Dedup.spread(df).select(col(idCol).cast("string").as("__sid"),
         TextFunctions.wsTokens(lower(col(textCol))).as("toks"))
@@ -329,7 +329,7 @@ object Bm25 {
                    pageCol: String, queryTerms: Seq[String], k: Int = 10,
                    k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(queryTerms.nonEmpty, "queryTerms must be non-empty")
-    require(queryTerms.forall(t => t == t.toLowerCase),
+    require(queryTerms.forall(t => t == t.toLowerCase(java.util.Locale.ROOT)),
       "queryTerms must be lowercase (the token stream is lowercased)")
     val docs = Dedup.spread(df).select(col(pathCol).as("__path"),
         col(pageCol).as("__page"),

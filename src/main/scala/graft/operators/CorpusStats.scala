@@ -461,7 +461,7 @@ object CorpusStats {
   private val adjacentBigrams = org.apache.spark.sql.functions.udf { (text: String) =>
     if (text == null) Array.empty[String]
     else {
-      val ws = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
+      val ws = text.toLowerCase(java.util.Locale.ROOT).split("\\s+").filter(_.nonEmpty)
       if (ws.length < 2) Array.empty[String]
       else ws.sliding(2).map(_.mkString(" ")).toArray
     }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
 
 import graft.functions.TextFunctions
 
@@ -17,9 +17,12 @@ import graft.functions.TextFunctions
   * so those variants are expressible in ANSI SQL for the DuckDB oracle. The
   * MinHash batch path ([[minhashSignatures]]) is the exception: MinHash
   * needs a min-wise family, not a cryptographic one, so it hashes each
-  * shingle once with XXH64 and keys its band buckets on longs. The md5
-  * MinHash form ([[minhashSignature]], [[lshBandKeys]],
-  * [[minhashBandKeysFast]]) stays as the reference the oracle replays.
+  * shingle once with XXH64, carries a doc's shingles as its ascending
+  * distinct 64-bit hashes, verifies pairs by a merge of those arrays and
+  * keys its band buckets on longs. The md5 MinHash form
+  * ([[minhashSignature]], [[lshBandKeys]], [[minhashBandKeysFast]]) stays
+  * as the reference the oracle replays; its frames carry shingle strings,
+  * which still verify by set.
   */
 object Dedup {
 
@@ -307,27 +310,97 @@ object Dedup {
     a.length < b.length
   }
 
-  /** Per-document MinHash signature artifact: one row per doc carrying its
-    * distinct `ngram` shingle set (`sh`) and the `bands` LSH band keys
-    * (`array<bigint>`, from [[minhashBandKeys]]) — the state every MinHash
-    * consumer derives from: the pair graph, the incremental gate's BASE
-    * side, and an exact audit's shingle sets. Entirely narrow per-doc work:
-    * signatures are independent of the rest of the corpus, so any row
-    * filter of this table equals recomputing on the filtered corpus.
+  /** Per-document MinHash signature artifact: one row per doc carrying
+    * `sh`, its distinct `ngram` shingles as ascending 64-bit hashes
+    * (`array<bigint>`, each the [[shingleHash]] of a [[shinglesFast]]
+    * shingle), and the `bands` LSH band keys (`array<bigint>`) — the state
+    * every MinHash consumer derives from: the pair graph, the incremental
+    * gate's BASE side, and an exact audit's shingle sets. Entirely narrow
+    * per-doc work: signatures are independent of the rest of the corpus,
+    * so any row filter of this table equals recomputing on the filtered
+    * corpus. Docs with no shingle (fewer than `ngram` words, empty or null
+    * text) are dropped.
+    *
+    * One UDF pass per doc goes from the text straight to both columns
+    * ([[shingleHashes]], then [[bandKeys]]): no shingle string is built,
+    * so none is converted, cached or shuffled downstream. A Jaccard over
+    * `sh` is the Jaccard of the shingle sets unless two distinct shingles
+    * of one pair collide in 64 bits (p ~ k^2/2^65, as in
+    * [[ngramJaccardPairsFromShingles]]).
     *
     * The family is XXH64, not md5: MinHash needs a min-wise family, not a
     * cryptographic one (Broder 1997), and one MD5 per shingle per hash was
     * the batch job's largest cost. The md5 form ([[minhashBandKeysFast]])
     * remains only because the DuckDB oracle replays it. */
   def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-                        numHashes: Int, bands: Int, ngram: Int = 2): DataFrame =
+                        numHashes: Int, bands: Int, ngram: Int = 2): DataFrame = {
+    require(ngram >= 1, s"ngram ($ngram) must be at least 1")
+    // Marked nondeterministic only to pin it in its own projection: a
+    // deterministic UDF lets the optimizer push the size filter below it
+    // and below `spread`'s exchange, so each doc's signature was computed
+    // twice, once on the unspread (often single-task) scan.
+    val sig = udf { (text: String) =>
+      val sh = shingleHashes(text, ngram)
+      (sh, bandKeys(sh, numHashes, bands))
+    }.asNondeterministic()
     spread(df)
-      .select(col(idCol).as("doc_id"), shinglesFast(ngram)(col(textCol)).as("sh"))
+      .select(col(idCol).as("doc_id"), sig(col(textCol)).as("s"))
+      .select(col("doc_id"), col("s._1").as("sh"), col("s._2").as("bands"))
       .where(size(col("sh")) > 0)
-      .withColumn("bands", minhashBandKeys(numHashes, bands)(col("sh")))
+  }
 
-  /** The per-shingle hash of [[minhashBandKeys]]: XXH64 over the shingle's
-    * UTF-8 bytes with seed 42, so it equals Spark's `xxhash64(shingle)`. */
+  /** The distinct word `n`-gram shingle hashes of `text`, ascending: the
+    * [[shingleHash]] of every [[shinglesFast]] shingle, without building
+    * one. The text is lowercased (`Locale.ROOT`) and split on Java's `\s`
+    * class (space, tab, LF, VT, FF, CR), the tokens of `split("\\s+")`; the
+    * words, joined by single spaces, are encoded to UTF-8 once, and each
+    * n-gram's byte slice is hashed in place. Null text has no shingles. */
+  private[graft] def shingleHashes(text: String, n: Int): Array[Long] = {
+    if (text == null) return Array.emptyLongArray
+    val b = text.toLowerCase(java.util.Locale.ROOT).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    // compact in place to words joined by single spaces: in UTF-8 the six
+    // separator bytes occur only as those ASCII characters
+    val starts = new Array[Int](b.length / 2 + 1)
+    val ends = new Array[Int](b.length / 2 + 1)
+    var words = 0
+    var w = 0
+    var r = 0
+    while (r < b.length) {
+      while (r < b.length && isSpace(b(r))) r += 1
+      if (r < b.length) {
+        if (words > 0) { b(w) = ' '; w += 1 }
+        starts(words) = w
+        while (r < b.length && !isSpace(b(r))) { b(w) = b(r); w += 1; r += 1 }
+        ends(words) = w
+        words += 1
+      }
+    }
+    if (words < n) return Array.emptyLongArray
+    val hs = new Array[Long](words - n + 1)
+    var i = 0
+    while (i < hs.length) {
+      hs(i) = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+        b, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + starts(i),
+        ends(i + n - 1) - starts(i), 42L)
+      i += 1
+    }
+    java.util.Arrays.sort(hs)
+    var k = 1
+    i = 1
+    while (i < hs.length) {
+      if (hs(i) != hs(k - 1)) { hs(k) = hs(i); k += 1 }
+      i += 1
+    }
+    if (k == hs.length) hs else java.util.Arrays.copyOf(hs, k)
+  }
+
+  private def isSpace(c: Byte): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r')
+
+  /** The per-shingle hash of [[minhashSignatures]]: XXH64 over the
+    * shingle's UTF-8 bytes with seed 42, so it equals Spark's
+    * `xxhash64(shingle)`. The batch path hashes byte slices of the text
+    * ([[shingleHashes]]); this string form is the reference it equals. */
   private[graft] def shingleHash(s: String): Long = {
     val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
@@ -342,33 +415,30 @@ object Dedup {
     z ^ (z >>> 31)
   }
 
-  /** The MinHash band keys of a shingle set in one narrow pass, the family
-    * of [[minhashSignatures]]: each shingle is hashed once
-    * ([[shingleHash]]); hash i of a shingle with hash h is
+  /** The MinHash band keys of a set of shingle hashes, the family of
+    * [[minhashSignatures]]: hash i of a shingle with hash h is
     * `mix64(h + (i + 1) * 0x9E3779B97F4A7C15)`, and the signature keeps each
     * hash's signed minimum. Band b folds its `numHashes / bands` minimums m
     * in order into one long, `k = mix64(k ^ m)` from `k = b`. The keys
-    * depend only on the set of shingles, not on their order or repeats. */
-  private[graft] def minhashBandKeys(numHashes: Int, bands: Int): org.apache.spark.sql.expressions.UserDefinedFunction =
-    org.apache.spark.sql.functions.udf { (shingles: Seq[String]) =>
-      val rpb = numHashes / bands
-      val mins = Array.fill(numHashes)(Long.MaxValue)
-      shingles.foreach { s =>
-        val h = shingleHash(s)
-        var i = 0
-        while (i < numHashes) {
-          val v = mix64(h + (i + 1) * 0x9e3779b97f4a7c15L)
-          if (v < mins(i)) mins(i) = v
-          i += 1
-        }
-      }
-      Array.tabulate(bands) { b =>
-        var k = b.toLong
-        var r = 0
-        while (r < rpb) { k = mix64(k ^ mins(b * rpb + r)); r += 1 }
-        k
+    * depend only on the set of hashes, not on their order or repeats. */
+  private def bandKeys(hashes: Array[Long], numHashes: Int, bands: Int): Array[Long] = {
+    val rpb = numHashes / bands
+    val mins = Array.fill(numHashes)(Long.MaxValue)
+    hashes.foreach { h =>
+      var i = 0
+      while (i < numHashes) {
+        val v = mix64(h + (i + 1) * 0x9e3779b97f4a7c15L)
+        if (v < mins(i)) mins(i) = v
+        i += 1
       }
     }
+    Array.tabulate(bands) { b =>
+      var k = b.toLong
+      var r = 0
+      while (r < rpb) { k = mix64(k ^ mins(b * rpb + r)); r += 1 }
+      k
+    }
+  }
 
   /** [[ngramJaccardPairs]] through the build-once persisted contract
     * ([[graft.core.PersistedBuild]]): the exact-Jaccard pair graph is an
@@ -384,8 +454,12 @@ object Dedup {
 
   /** MinHash-LSH near-dup pairs: shingle -> minhash -> band -> bucket ->
     * exact Jaccard verify inside the bucket, on its candidates only. The
-    * signatures are [[minhashSignatures]]'s XXH64 family with long band
-    * keys; the oracle's md5 form is not used here.
+    * signatures are [[minhashSignatures]]'s XXH64 family: shingles as
+    * ascending distinct 64-bit hashes and long band keys; the oracle's md5
+    * form is not used here. The Jaccard is over the shingle hash sets,
+    * which equals the shingle Jaccard unless two distinct shingles of a
+    * pair collide in 64 bits (p ~ k^2/2^65, as in
+    * [[ngramJaccardPairsFromShingles]]).
     *
     * Scale shape: the signatures are one narrow per-document pass; the
     * pairs take two shuffles, both in [[minhashNearDupPairsFromSigs]]: a
@@ -399,8 +473,9 @@ object Dedup {
                           maxBucket: Int = 1000): DataFrame = {
     require(bands >= 1 && numHashes % bands == 0,
       s"numHashes ($numHashes) must be a positive multiple of bands ($bands)")
-    // Shape note: signatures come from [[minhashBandKeys]], one narrow
-    // per-document pass with NO shuffle (the round-1 shape — explode +
+    // Shape note: signatures come from [[minhashSignatures]], one narrow
+    // per-document UDF pass from text to shingle hashes and band keys,
+    // with NO shuffle and no shingle string (the round-1 shape — explode +
     // numHashes min-aggregates — shuffled (docs x numHashes) strings and was
     // the single slowest stage of the whole bench; the declarative array form
     // is ~50s at 500 docs because HOF lambdas are interpreted).
@@ -414,10 +489,16 @@ object Dedup {
     * back from its persisted artifact: the same `sh` / band-key values the
     * inline form computes). The band keys may be of any type (longs from
     * [[minhashSignatures]], md5 hex strings from [[minhashBandKeysFast]]):
-    * they are compared as values. A pair is a candidate when its two docs share a
-    * band bucket of at most `maxBucket` members; it is kept when its exact
-    * shingle Jaccard, `round(inter / (|sh1| + |sh2| - inter), 4)`, reaches
-    * `threshold`. Count, then verify:
+    * they are compared as values. `sh` may be [[minhashSignatures]]'
+    * ascending distinct shingle hashes (`array<bigint>`, verified by a
+    * linear merge that refuses an array that is not strictly ascending) or
+    * any other distinct shingle array, such as the md5 frames' strings
+    * (verified by set). A pair is a candidate when its two docs share a
+    * band bucket of at most `maxBucket` members; it is kept when the
+    * Jaccard of its two `sh` sets, `round(inter / (|sh1| + |sh2| - inter),
+    * 4)`, reaches `threshold` (over hashes, the shingle Jaccard up to a
+    * 64-bit collision, as in [[ngramJaccardPairsFromShingles]]). Count,
+    * then verify:
     *   1. one keys-only partial aggregate counts each (band_idx, band_key)
     *      bucket, and its multi-member buckets (the only ones that can hold
     *      a pair) are collected to the driver, split into oversize (more
@@ -433,8 +514,9 @@ object Dedup {
     *      `dropDuplicates`, and no join-back to fetch shingles.
     * On a signature frame with no shuffle in its lineage that is 6 jobs
     * and 2 shuffles (`DedupPlanSpec`). `sigs` is persisted for its two
-    * passes; the pair set is materialized eagerly and `sigs` released, so
-    * repeated calls in one session hold no cached blocks.
+    * passes; the pair set is materialized eagerly and `sigs` released,
+    * also when a stage throws, so repeated calls in one session hold no
+    * cached blocks.
     *
     * `requireBucketBound = true` makes the maxBucket skew cut CHECKED
     * rather than assumed: a multi-member band bucket exceeding the bound
@@ -449,46 +531,46 @@ object Dedup {
                                   maxBucket: Int = 1000,
                                   requireBucketBound: Boolean = false): DataFrame = {
     val sh = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def bandRows(cols: Column*): DataFrame =
-      sh.select(cols :+ posexplode(col("bands")).as(Seq("band_idx", "band_key")): _*)
-    // Skew bound: a bucket of size B yields B^2/2 candidate pairs; drop
-    // buckets above maxBucket (boilerplate shared by thousands of docs
-    // carries no dedup signal and would OOM the verify group at scale).
-    val (oversize, bounded) = bandRows().groupBy(col("band_idx"), col("band_key"))
-      .agg(count(lit(1)).as("n"))
-      .where(col("n") >= 2)
-      .collect()
-      .partition(_.getLong(2) > maxBucket)
-    if (requireBucketBound && oversize.nonEmpty) {
-      sh.unpersist(false)
-      throw new IllegalStateException(
-        s"minhash band bucket of size ${oversize.map(_.getLong(2)).max} exceeds " +
-          s"maxBucket=$maxBucket: the audit-shared pair graph would silently " +
-          "drop pairs; raise maxBucket for this build or fix the boilerplate upstream")
-    }
-    val cut = oversize.map(r => (r.getInt(0), r.get(1))).toSet
-    // the bounded keys sit on the driver already, so the broadcast side is
-    // a local relation: broadcasting it runs no job
-    val keyType = sigs.schema("bands").dataType.asInstanceOf[ArrayType].elementType
-    val boundedKeys = sigs.sparkSession.createDataFrame(
-      java.util.Arrays.asList(bounded.map(r => Row(r.getInt(0), r.get(1))).toIndexedSeq: _*),
-      new StructType().add("band_idx", IntegerType).add("band_key", keyType))
-    val buckets = bandRows(col("doc_id"), col("sh"), col("bands"))
-      .join(broadcast(boundedKeys), Seq("band_idx", "band_key"))
-      .groupBy(col("band_idx"), col("band_key"))
-      // sorted by doc_id, so a member's index orders the pair
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sh"), col("bands")))).as("m"))
-    val pairs = buckets
-      .select(col("m"), explode(bucketPairs(cut)(col("band_idx"), col("m"))).as("p"))
-      .select(col("m")(col("p._1")).as("a"), col("m")(col("p._2")).as("b"),
-        col("p._3").cast("double").as("inter"))
-      .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-        round(col("inter") / (size(col("a.sh")) + size(col("b.sh")) - col("inter")), 4)
-          .as("jaccard"))
-      .where(col("jaccard") >= threshold)
-    val out = pairs.localCheckpoint()
-    sh.unpersist(false)
-    out
+    try {
+      def bandRows(cols: Column*): DataFrame =
+        sh.select(cols :+ posexplode(col("bands")).as(Seq("band_idx", "band_key")): _*)
+      // Skew bound: a bucket of size B yields B^2/2 candidate pairs; drop
+      // buckets above maxBucket (boilerplate shared by thousands of docs
+      // carries no dedup signal and would OOM the verify group at scale).
+      val (oversize, bounded) = bandRows().groupBy(col("band_idx"), col("band_key"))
+        .agg(count(lit(1)).as("n"))
+        .where(col("n") >= 2)
+        .collect()
+        .partition(_.getLong(2) > maxBucket)
+      if (requireBucketBound && oversize.nonEmpty) {
+        throw new IllegalStateException(
+          s"minhash band bucket of size ${oversize.map(_.getLong(2)).max} exceeds " +
+            s"maxBucket=$maxBucket: the audit-shared pair graph would silently " +
+            "drop pairs; raise maxBucket for this build or fix the boilerplate upstream")
+      }
+      val cut = oversize.map(r => (r.getInt(0), r.get(1))).toSet
+      // the bounded keys sit on the driver already, so the broadcast side is
+      // a local relation: broadcasting it runs no job
+      val keyType = sigs.schema("bands").dataType.asInstanceOf[ArrayType].elementType
+      val boundedKeys = sigs.sparkSession.createDataFrame(
+        java.util.Arrays.asList(bounded.map(r => Row(r.getInt(0), r.get(1))).toIndexedSeq: _*),
+        new StructType().add("band_idx", IntegerType).add("band_key", keyType))
+      val hashed = sigs.schema("sh").dataType.asInstanceOf[ArrayType].elementType == LongType
+      val buckets = bandRows(col("doc_id"), col("sh"), col("bands"))
+        .join(broadcast(boundedKeys), Seq("band_idx", "band_key"))
+        .groupBy(col("band_idx"), col("band_key"))
+        // sorted by doc_id, so a member's index orders the pair
+        .agg(sort_array(collect_list(struct(col("doc_id"), col("sh"), col("bands")))).as("m"))
+      val pairs = buckets
+        .select(col("m"), explode(bucketPairs(cut, hashed)(col("band_idx"), col("m"))).as("p"))
+        .select(col("m")(col("p._1")).as("a"), col("m")(col("p._2")).as("b"),
+          col("p._3").cast("double").as("inter"))
+        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
+          round(col("inter") / (size(col("a.sh")) + size(col("b.sh")) - col("inter")), 4)
+            .as("jaccard"))
+        .where(col("jaccard") >= threshold)
+      pairs.localCheckpoint()
+    } finally sh.unpersist(false)
   }
 
   /** The pairs one band bucket owns, as (member index, member index,
@@ -497,11 +579,27 @@ object Dedup {
     * bucket of the lowest band where its two docs share a key that is not
     * in `cut` (the oversize buckets), so each candidate pair is verified and
     * emitted by exactly one group. The count is the number of distinct
-    * shingles in both sets, which is `size(array_intersect(sh1, sh2))`. */
-  private def bucketPairs(cut: Set[(Int, Any)]) =
+    * elements in both `sh`, which is `size(array_intersect(sh1, sh2))`:
+    * with `hashed`, `sh` holds ascending distinct longs (the form of
+    * [[minhashSignatures]]) and the count is a linear merge of the two
+    * arrays, which throws `IllegalArgumentException` on an array that is
+    * not strictly ascending (the merge would miscount it silently); any
+    * other element type (the md5 frames' shingle strings) counts by set. */
+  private def bucketPairs(cut: Set[(Int, Any)], hashed: Boolean) =
     udf { (band: Int, members: Seq[Row]) =>
       val bands = members.map(_.getSeq[Any](2).toArray).toArray
-      val sets = members.map(_.getSeq[String](1).toSet).toArray
+      val inter: (Int, Int) => Int =
+        if (hashed) {
+          val hs = members.map(m => ascending(m.getSeq[Long](1).toArray, m.get(0))).toArray
+          (i, j) => mergeCount(hs(i), hs(j))
+        } else {
+          val sets = members.map(_.getSeq[Any](1).toSet).toArray
+          (i, j) => {
+            val (small, large) =
+              if (sets(i).size <= sets(j).size) (sets(i), sets(j)) else (sets(j), sets(i))
+            small.count(large)
+          }
+        }
       def ownedHere(i: Int, j: Int): Boolean = {
         var c = 0
         while (c < band) {
@@ -513,20 +611,41 @@ object Dedup {
       }
       val out = Array.newBuilder[(Int, Int, Int)]
       var i = 0
-      while (i < sets.length) {
+      while (i < members.length) {
         var j = i + 1
-        while (j < sets.length) {
-          if (ownedHere(i, j)) {
-            val (small, large) =
-              if (sets(i).size <= sets(j).size) (sets(i), sets(j)) else (sets(j), sets(i))
-            out += ((i, j, small.count(large)))
-          }
+        while (j < members.length) {
+          if (ownedHere(i, j)) out += ((i, j, inter(i, j)))
           j += 1
         }
         i += 1
       }
       out.result()
     }
+
+  /** `hs`, checked to be strictly ascending. */
+  private def ascending(hs: Array[Long], docId: Any): Array[Long] = {
+    var i = 1
+    while (i < hs.length) {
+      if (hs(i - 1) >= hs(i))
+        throw new IllegalArgumentException(
+          s"sh of doc $docId is not strictly ascending at index $i: a merge would miscount it")
+      i += 1
+    }
+    hs
+  }
+
+  /** The number of values two strictly ascending arrays share. */
+  private def mergeCount(a: Array[Long], b: Array[Long]): Int = {
+    var i = 0
+    var j = 0
+    var n = 0
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
+  }
 
   /** Incremental MinHash near-dup: NEW batch vs an already-indexed SEEN
     * corpus — the daily-ingest shape ([[exactIncremental]]'s near-dup
@@ -563,27 +682,29 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val shSeen = seenSigs
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def band(sg: DataFrame) = sg.select(col("doc_id"),
-      posexplode(col("bands")).as(Seq("band_idx", "band_key")))
-    val candidates = band(shNew)
-      .select(col("doc_id").as("new_id"), col("band_idx"), col("band_key"))
-      .join(band(shSeen)
-        .select(col("doc_id").as("seen_id"), col("band_idx"), col("band_key")),
-        Seq("band_idx", "band_key"))
-      .select(col("new_id"), col("seen_id"))
-      .dropDuplicates("new_id", "seen_id")
-    val pairs = candidates
-      .join(shNew.select(col("doc_id").as("new_id"), col("sh").as("sh1")), "new_id")
-      .join(shSeen.select(col("doc_id").as("seen_id"), col("sh").as("sh2")), "seen_id")
-      .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("jaccard", round(
-        col("inter") / (size(col("sh1")) + size(col("sh2")) - col("inter")), 4))
-      .where(col("jaccard") >= threshold)
-      .select("new_id", "seen_id", "jaccard")
-    val out = pairs.localCheckpoint()
-    shNew.unpersist(false)
-    shSeen.unpersist(false)
-    out
+    try {
+      def band(sg: DataFrame) = sg.select(col("doc_id"),
+        posexplode(col("bands")).as(Seq("band_idx", "band_key")))
+      val candidates = band(shNew)
+        .select(col("doc_id").as("new_id"), col("band_idx"), col("band_key"))
+        .join(band(shSeen)
+          .select(col("doc_id").as("seen_id"), col("band_idx"), col("band_key")),
+          Seq("band_idx", "band_key"))
+        .select(col("new_id"), col("seen_id"))
+        .dropDuplicates("new_id", "seen_id")
+      val pairs = candidates
+        .join(shNew.select(col("doc_id").as("new_id"), col("sh").as("sh1")), "new_id")
+        .join(shSeen.select(col("doc_id").as("seen_id"), col("sh").as("sh2")), "seen_id")
+        .withColumn("inter", size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
+        .withColumn("jaccard", round(
+          col("inter") / (size(col("sh1")) + size(col("sh2")) - col("inter")), 4))
+        .where(col("jaccard") >= threshold)
+        .select("new_id", "seen_id", "jaccard")
+      pairs.localCheckpoint()
+    } finally {
+      shNew.unpersist(false)
+      shSeen.unpersist(false)
+    }
   }
 
   /** 32-bit SimHash as a bit string, from the high bit of each md5 hex char:
@@ -991,131 +1112,140 @@ object Dedup {
     val p0 = pairs
       .select(col(idCol1).as("src"), col(idCol2).as("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPairs = p0.count()
-    // comp only decreases, so sum(comp) strictly decreases until fixpoint;
-    // exact decimal keeps the check overflow-safe for arbitrary long ids.
-    // The checksum rides along the checkpoint materialization via observe()
-    // — zero extra jobs per round (an agg-and-head was a second pass over
-    // the labels, doubling the per-round fixed job cost on small graphs).
-    def checkpointWithChecksum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val cp = df
-        .observe(obs, sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("cs"))
-        .localCheckpoint()
-      // sum over ZERO rows observes null — a corpus with no near-dup pairs
-      // must converge to an empty label frame, not NPE in compareTo.
-      val cs = obs.get("cs")
-      (cp, if (cs == null) java.math.BigDecimal.ZERO
-           else cs.asInstanceOf[java.math.BigDecimal])
-    }
-    // Driver-resident tier: union-find with union-by-MIN-root (labels are
-    // provably identical to the loop's min-label fixpoint). LONG ids only
-    // (every in-repo pair source); other id types take the loop. Budget is
-    // in SYMMETRIZED edge rows as before (2 per pair). r13: the tier
-    // decision comes from the persist-materializing count above, so this
-    // path no longer computes the distributed seed (a full groupBy exchange
-    // per call, wasted whenever the graph fits the driver — which is every
-    // in-fixture dedup graph), and it collects the pair rows themselves
-    // (half the rows of the old symmetrized-edge collect; union(a,b) makes
-    // union(b,a) a no-op, so labels are unchanged).
-    if (nPairs * 2 <= driverEdgeBudget &&
-        p0.schema("src").dataType == org.apache.spark.sql.types.LongType) {
-      graft.core.TierStats.record("connectedComponents", "driver")
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long](
-        math.min(nPairs * 4 + 16, Int.MaxValue.toLong).toInt)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
-        r
+    // released however the call ends; the labels of the loop only when it
+    // throws, since the last ones are the result
+    var labels: DataFrame = null
+    var ok = false
+    try {
+      val nPairs = p0.count()
+      // comp only decreases, so sum(comp) strictly decreases until fixpoint;
+      // exact decimal keeps the check overflow-safe for arbitrary long ids.
+      // The checksum rides along the checkpoint materialization via observe()
+      // — zero extra jobs per round (an agg-and-head was a second pass over
+      // the labels, doubling the per-round fixed job cost on small graphs).
+      def checkpointWithChecksum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+        val obs = org.apache.spark.sql.Observation()
+        val cp = df
+          .observe(obs, sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("cs"))
+          .localCheckpoint()
+        // sum over ZERO rows observes null — a corpus with no near-dup pairs
+        // must converge to an empty label frame, not NPE in compareTo.
+        val cs = obs.get("cs")
+        (cp, if (cs == null) java.math.BigDecimal.ZERO
+             else cs.asInstanceOf[java.math.BigDecimal])
       }
-      p0.collect().foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) {
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+      // Driver-resident tier: union-find with union-by-MIN-root (labels are
+      // provably identical to the loop's min-label fixpoint). LONG ids only
+      // (every in-repo pair source); other id types take the loop. Budget is
+      // in SYMMETRIZED edge rows as before (2 per pair). r13: the tier
+      // decision comes from the persist-materializing count above, so this
+      // path no longer computes the distributed seed (a full groupBy exchange
+      // per call, wasted whenever the graph fits the driver — which is every
+      // in-fixture dedup graph), and it collects the pair rows themselves
+      // (half the rows of the old symmetrized-edge collect; union(a,b) makes
+      // union(b,a) a no-op, so labels are unchanged).
+      if (nPairs * 2 <= driverEdgeBudget &&
+          p0.schema("src").dataType == org.apache.spark.sql.types.LongType) {
+        graft.core.TierStats.record("connectedComponents", "driver")
+        val parent = new java.util.HashMap[java.lang.Long, java.lang.Long](
+          math.min(nPairs * 4 + 16, Int.MaxValue.toLong).toInt)
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.get(r) != r) r = parent.get(r)
+          var c = x
+          while (parent.get(c) != r) { val nx = parent.get(c); parent.put(c, r); c = nx }
+          r
         }
+        p0.collect().foreach { row =>
+          val a = row.getLong(0); val b = row.getLong(1)
+          if (!parent.containsKey(a)) parent.put(a, a)
+          if (!parent.containsKey(b)) parent.put(b, b)
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) {
+            if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+          }
+        }
+        import scala.jdk.CollectionConverters._
+        import spark.implicits._
+        val out = parent.keySet().asScala.toSeq
+          .map(k => (k.longValue(), find(k.longValue())))
+        return spark.createDataset(out).toDF("id", "comp")
       }
+      // Distributed tier: symmetrize lazily over the persisted pairs, then
+      // fused round 0 — every node appears as src of the symmetrized view, so
+      // one groupBy seeds comp(v) = least(v, min neighbor). The observe also
+      // counts the nodes so the iteration can size its shuffles.
+      val edges = p0
+        .select(explode(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst"))
+      val seedObs = org.apache.spark.sql.Observation()
+      val seed = edges
+        .groupBy("src")
+        .agg(min(col("dst")).as("nbr"))
+        .select(col("src").as("id"), least(col("src"), col("nbr")).as("comp"))
+        .observe(seedObs,
+          sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("cs"),
+          count(lit(1)).as("n"))
+        .localCheckpoint()
+      labels = seed
+      var prev = seedObs.get("cs") match {
+        case null => java.math.BigDecimal.ZERO
+        case cs => cs.asInstanceOf[java.math.BigDecimal]
+      }
+      val nNodes = seedObs.get("n").asInstanceOf[Long]
+      // Every round is 2 joins + an agg over NODE-sized frames; at the
+      // session's corpus-tuned shuffle-partition count a small graph pays
+      // rounds x partitions of empty-task scheduling (measured 2.44 -> 1.78 s
+      // on the er_golden_record match graph). Scope the loop's partitions to
+      // the observed node count (~1M labels per reducer), never above the
+      // session setting — at corpus scale the clamp is a no-op, exactly the
+      // GraphAnn.WalkShufflePartitions discipline. The scoped setting lives
+      // on a SESSION CLONE (own SQLConf, shared context/cache) and only the
+      // loop's eager checkpoints execute under it — round 8's fix for the
+      // conf-mutation race two concurrent queries on one session would hit.
+      graft.core.TierStats.record("connectedComponents", "distributed")
+      val loopParts = math.max(1L, math.min(
+        spark.conf.get("spark.sql.shuffle.partitions").toLong,
+        nNodes / 1000000L + 1L))
+      // conf-inheriting clone (NOT newSession — that would re-plan the loop
+      // frames under default confs, dropping e.g. the nanosAsLong parquet
+      // flag; the SessionBridge.scopedShuffle contract)
+      val rebind = org.apache.spark.sql.graftbridge.SessionBridge
+        .scopedShuffle(spark, loopParts.toInt)
+      var it = 0
+      var done = false
+      while (!done && it < maxIter) {
+        // Round part 1: neighbor min — comp(v) <- min(comp(v), min_{u~v} comp(u)).
+        val nbrMin = edges
+          .join(labels.select(col("id").as("src"), col("comp").as("src_comp")), "src")
+          .groupBy(col("dst").as("id"))
+          .agg(min(col("src_comp")).as("nbr_comp"))
+        val afterNbr = labels.join(nbrMin, Seq("id"), "left")
+          .select(col("id"),
+            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
+        // Round part 2: pointer jump — comp(v) <- comp(comp(v)). Labels always
+        // point at smaller ids, so chains halve every round.
+        val (next, cur) = checkpointWithChecksum(
+          rebind(afterNbr
+            .join(afterNbr.select(col("id").as("comp"), col("comp").as("parent_comp")),
+              Seq("comp"), "left")
+            .select(col("id"), coalesce(col("parent_comp"), col("comp")).as("comp"))))
+        done = cur.compareTo(prev) == 0
+        prev = cur
+        labels.unpersist()
+        labels = next
+        it += 1
+      }
+      // re-bind the final checkpointed labels to the CALLER's session so
+      // downstream (corpus-sized) shuffles plan at the caller's partitions
+      val out = org.apache.spark.sql.graftbridge.SessionBridge.withSession(labels, spark)
+      ok = true
+      out
+    } finally {
       p0.unpersist(false)
-      import scala.jdk.CollectionConverters._
-      import spark.implicits._
-      val out = parent.keySet().asScala.toSeq
-        .map(k => (k.longValue(), find(k.longValue())))
-      return spark.createDataset(out).toDF("id", "comp")
+      if (!ok && labels != null) labels.unpersist()
     }
-    // Distributed tier: symmetrize lazily over the persisted pairs, then
-    // fused round 0 — every node appears as src of the symmetrized view, so
-    // one groupBy seeds comp(v) = least(v, min neighbor). The observe also
-    // counts the nodes so the iteration can size its shuffles.
-    val edges = p0
-      .select(explode(array(
-        struct(col("src"), col("dst")),
-        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-    val seedObs = org.apache.spark.sql.Observation()
-    val seed = edges
-      .groupBy("src")
-      .agg(min(col("dst")).as("nbr"))
-      .select(col("src").as("id"), least(col("src"), col("nbr")).as("comp"))
-      .observe(seedObs,
-        sum(col("comp").cast(org.apache.spark.sql.types.DecimalType(38, 0))).as("cs"),
-        count(lit(1)).as("n"))
-      .localCheckpoint()
-    var labels = seed
-    var prev = seedObs.get("cs") match {
-      case null => java.math.BigDecimal.ZERO
-      case cs => cs.asInstanceOf[java.math.BigDecimal]
-    }
-    val nNodes = seedObs.get("n").asInstanceOf[Long]
-    // Every round is 2 joins + an agg over NODE-sized frames; at the
-    // session's corpus-tuned shuffle-partition count a small graph pays
-    // rounds x partitions of empty-task scheduling (measured 2.44 -> 1.78 s
-    // on the er_golden_record match graph). Scope the loop's partitions to
-    // the observed node count (~1M labels per reducer), never above the
-    // session setting — at corpus scale the clamp is a no-op, exactly the
-    // GraphAnn.WalkShufflePartitions discipline. The scoped setting lives
-    // on a SESSION CLONE (own SQLConf, shared context/cache) and only the
-    // loop's eager checkpoints execute under it — round 8's fix for the
-    // conf-mutation race two concurrent queries on one session would hit.
-    graft.core.TierStats.record("connectedComponents", "distributed")
-    val loopParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toLong,
-      nNodes / 1000000L + 1L))
-    // conf-inheriting clone (NOT newSession — that would re-plan the loop
-    // frames under default confs, dropping e.g. the nanosAsLong parquet
-    // flag; the SessionBridge.scopedShuffle contract)
-    val rebind = org.apache.spark.sql.graftbridge.SessionBridge
-      .scopedShuffle(spark, loopParts.toInt)
-    var it = 0
-    var done = false
-    while (!done && it < maxIter) {
-      // Round part 1: neighbor min — comp(v) <- min(comp(v), min_{u~v} comp(u)).
-      val nbrMin = edges
-        .join(labels.select(col("id").as("src"), col("comp").as("src_comp")), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("src_comp")).as("nbr_comp"))
-      val afterNbr = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
-      // Round part 2: pointer jump — comp(v) <- comp(comp(v)). Labels always
-      // point at smaller ids, so chains halve every round.
-      val (next, cur) = checkpointWithChecksum(
-        rebind(afterNbr
-          .join(afterNbr.select(col("id").as("comp"), col("comp").as("parent_comp")),
-            Seq("comp"), "left")
-          .select(col("id"), coalesce(col("parent_comp"), col("comp")).as("comp"))))
-      done = cur.compareTo(prev) == 0
-      prev = cur
-      labels.unpersist()
-      labels = next
-      it += 1
-    }
-    p0.unpersist()
-    // re-bind the final checkpointed labels to the CALLER's session so
-    // downstream (corpus-sized) shuffles plan at the caller's partitions
-    org.apache.spark.sql.graftbridge.SessionBridge.withSession(labels, spark)
   }
 }

@@ -32,7 +32,7 @@ object LineFilter {
     require(minWords >= 1 && policyPhrases.nonEmpty)
     val wc = size(graft.functions.TextFunctions.wsTokens(col("line")))
     val policyHit = policyPhrases
-      .map(p => contains(lower(col("line")), lit(p.toLowerCase)))
+      .map(p => contains(lower(col("line")), lit(p.toLowerCase(java.util.Locale.ROOT))))
       .reduce(_ || _)
     val terminal = substring(col("line"), -1, 1).isin(".", "!", "?", "\"")
     df.select(col(idCol), posexplode(split(col(textCol), "\n")))

@@ -37,7 +37,7 @@ object Rake {
         val out = Array.newBuilder[String]
         val cur = new StringBuilder
         var has = false
-        text.toLowerCase.split("\\s+").foreach { w =>
+        text.toLowerCase(java.util.Locale.ROOT).split("\\s+").foreach { w =>
           if (w.isEmpty || stopwords(w)) {
             if (has) { out += cur.result(); cur.clear(); has = false }
           } else {

@@ -126,7 +126,7 @@ class DedupSpec extends AnyFunSuite {
     both.foreach { case (a, b) => assert(a === b) }
   }
 
-  /** The band keys of [[Dedup.minhashBandKeys]], written out from its
+  /** The band keys of [[Dedup.minhashSignatures]], written out from its
     * definition: hash i of a shingle is the splitmix64 finalizer of
     * `xxhash64(shingle) + (i + 1) * 0x9E3779B97F4A7C15`; each band folds its
     * signed minimums as `k = mix(k ^ m)` from `k = band`. */
@@ -145,22 +145,92 @@ class DedupSpec extends AnyFunSuite {
       "long band keys that depend only on the shingle set") {
     val docsFx = spark.read.parquet(s"${TestSpark.sf}/documents.parquet").limit(50)
     val sigs = Dedup.minhashSignatures(docsFx, "text", "doc_id", numHashes = 12, bands = 4)
-    assert(sigs.schema("bands").dataType ===
-      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false))
-    // the per-shingle hash is Spark's xxhash64 of the shingle
-    val hashed = sigs.select($"doc_id", $"sh", transform($"sh", x => xxhash64(x)).as("h"), $"bands")
-      .as[(Long, Seq[String], Seq[Long], Seq[Long])].collect()
+    val longs = org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
+    assert(sigs.schema("sh").dataType === longs)
+    assert(sigs.schema("bands").dataType === longs)
+    // the per-shingle hash is Spark's xxhash64 of the shinglesFast shingle
+    val hashed = sigs
+      .join(docsFx.select($"doc_id", transform(Dedup.shinglesFast(2)($"text"), x => xxhash64(x)).as("h")),
+        "doc_id")
+      .select($"doc_id", $"sh", $"h", $"bands")
+      .as[(Long, Seq[Long], Seq[Long], Seq[Long])].collect()
     assert(hashed.nonEmpty)
     hashed.foreach { case (id, sh, h, bands) =>
-      assert(sh.map(Dedup.shingleHash) === h, s"doc $id")
-      assert(bands === referenceBandKeys(h, 12, 4), s"doc $id")
+      assert(sh === h.distinct.sorted, s"doc $id")
+      assert(bands === referenceBandKeys(sh, 12, 4), s"doc $id")
     }
-    // the same set in another order, with repeats, keys the same buckets
-    val (_, sh, _, bands) = hashed.maxBy(_._2.size)
-    val shuffled = new scala.util.Random(7).shuffle(sh ++ sh.take(3))
-    val again = Seq(shuffled).toDF("sh").select(Dedup.minhashBandKeys(12, 4)($"sh"))
-      .as[Seq[Long]].head()
-    assert(again === bands)
+    // a cycle of words read from another start, twice over, has the same
+    // bigram set in another order with repeats: it keys the same buckets
+    val ws = (1 to 30).map(i => s"w$i")
+    val rot = ws.drop(11) ++ ws.take(11)
+    val cyc = Seq((1L, (ws :+ ws.head).mkString(" ")), (2L, (rot ++ rot :+ rot.head).mkString(" ")))
+      .toDF("doc_id", "text")
+    val Array(a, b) = Dedup.minhashSignatures(cyc, "text", "doc_id", numHashes = 12, bands = 4)
+      .orderBy($"doc_id").select($"sh", $"bands").as[(Seq[Long], Seq[Long])].collect()
+    assert(a._1.size === 30)
+    assert(b === a)
+  }
+
+  test("minhashSignatures' sh is the sorted distinct shingleHash of shinglesFast, " +
+      "and its bands are the reference keys, for n = 1, 2, 3") {
+    val texts = Seq(
+      "alpha\tbeta\ngamma\u000Bdelta\fepsilon\rzeta eta",
+      "mixed \t\n\r  runs\u000B\f of \t\t  white \n\n space",
+      "  \t leading and trailing \n ",
+      "no\u00A0break and em\u2003space inside words",
+      "\u0130stanbul STRASSE stra\u00DFe \u00DF \uD83D\uDE00 emoji \uD83D\uDE00 emoji",
+      "a b a b a b c a b",
+      "one",
+      "two words",
+      "",
+      null)
+    val docsT = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    for (n <- 1 to 3) {
+      val want = docsT.select($"doc_id", Dedup.shinglesFast(n)($"text"))
+        .as[(Long, Seq[String])].collect()
+        .map { case (id, sh) => id -> sh.map(Dedup.shingleHash).distinct.sorted }
+        .filter(_._2.nonEmpty).toMap
+      val got = Dedup.minhashSignatures(docsT, "text", "doc_id", numHashes = 12, bands = 4, ngram = n)
+        .select($"doc_id", $"sh", $"bands").as[(Long, Seq[Long], Seq[Long])].collect()
+      assert(got.map(_._1).toSet === want.keySet, s"n = $n")
+      got.foreach { case (id, sh, bands) =>
+        assert(sh === want(id), s"n = $n, doc $id")
+        assert(bands === referenceBandKeys(sh, 12, 4), s"n = $n, doc $id")
+      }
+    }
+  }
+
+  test("minhashNearDupPairsFromSigs refuses a long sh that is not strictly ascending") {
+    def sigs(sh1: Seq[Long]) = Seq((1L, sh1, Seq(7L, 8L)), (2L, Seq(3L, 5L, 9L), Seq(7L, 9L)))
+      .toDF("doc_id", "sh", "bands")
+    assert(Dedup.minhashNearDupPairsFromSigs(sigs(Seq(3L, 5L, 9L)), threshold = 0.5)
+      .as[(Long, Long, Double)].collect().toSeq === Seq((1L, 2L, 1.0)))
+    for (sh1 <- Seq(Seq(5L, 3L, 9L), Seq(3L, 3L, 9L))) {
+      val ex = intercept[Exception] {
+        Dedup.minhashNearDupPairsFromSigs(sigs(sh1), threshold = 0.5).collect()
+      }
+      val chain = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(e => e.isInstanceOf[IllegalArgumentException] &&
+        e.getMessage.contains("not strictly ascending")), s"sh $sh1: $ex")
+    }
+  }
+
+  test("a dedup stage that throws leaves no signature frame cached") {
+    val boom = udf { (id: Long) =>
+      if (id == 3L) throw new IllegalStateException("boom")
+      Seq(id % 2, 7L)
+    }
+    // a range, not a local relation: the optimizer would run the UDF on a
+    // local relation's rows while planning, before anything is cached
+    val sigs = spark.range(1L, 7L)
+      .select($"id".as("doc_id"), array(lit(1L), lit(2L)).as("sh"), boom($"id").as("bands"))
+    val none = org.apache.spark.storage.StorageLevel.NONE
+    intercept[Exception](Dedup.minhashNearDupPairsFromSigs(sigs, threshold = 0.5).collect())
+    assert(sigs.storageLevel === none)
+    val (odd, even) = (sigs.where($"doc_id" % 2 === 1), sigs.where($"doc_id" % 2 === 0))
+    intercept[Exception](Dedup.minhashIncrementalPairsFromSigs(odd, even, threshold = 0.5).collect())
+    assert(odd.storageLevel === none)
+    assert(even.storageLevel === none)
   }
 
   test("minhash-LSH surfaces the near-dup pair and skips unrelated docs") {
