@@ -189,12 +189,22 @@ object SparkEntry {
     * ([[operators.Dedup.minhashBandKeysFast]]), composed here: the engine's
     * [[operators.Dedup.minhashSignatures]] uses the XXH64 family. */
   private def minhashSigsShared(s: SparkSession, d: String): DataFrame =
-    graft.core.PersistedBuild.table(
-      operators.Dedup.spread(t(s, d, "documents"))
-        .select(col("doc_id"), operators.Dedup.shinglesFast(2)(col("text")).as("sh"))
-        .where(size(col("sh")) > 0)
-        .withColumn("bands", operators.Dedup.minhashBandKeysFast(12, 4)(col("sh"))),
+    graft.core.PersistedBuild.table(minhashSigsMd5(t(s, d, "documents")),
       scratch(d, "minhash_sigs_12b4"), s)
+
+  /** The md5 signature frame of [[minhashSigsShared]]: `doc_id`, the doc's
+    * distinct word-bigram shingle strings `sh` and 4 md5 band keys of 12
+    * hashes, docs without a shingle dropped. The shingle UDF is marked
+    * nondeterministic only to pin it in its own projection above `spread`'s
+    * exchange: a deterministic one lets the optimizer push the size filter
+    * below the exchange, so each doc's shingles were built twice, once on
+    * the unspread (often single-task) scan. */
+  private[graft] def minhashSigsMd5(docs: DataFrame): DataFrame =
+    operators.Dedup.spread(docs)
+      .select(col("doc_id"),
+        operators.Dedup.shinglesFast(2).asNondeterministic()(col("text")).as("sh"))
+      .where(size(col("sh")) > 0)
+      .withColumn("bands", operators.Dedup.minhashBandKeysFast(12, 4)(col("sh")))
 
   /** The corpus near-dup pair graph at the production setting
     * (12 hashes x 4 bands, tau 0.30), build-once-per-JVM and shared by

@@ -1,9 +1,12 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructType}
 
 import graft.functions.TextFunctions
 
@@ -22,7 +25,10 @@ import graft.functions.TextFunctions
   * keys its band buckets on longs. The md5 MinHash form
   * ([[minhashSignature]], [[lshBandKeys]], [[minhashBandKeysFast]]) stays
   * as the reference the oracle replays; its frames carry shingle strings,
-  * which still verify by set.
+  * which still verify by set. Both forms take the same pair stage
+  * ([[minhashNearDupPairsFromSigs]]): one RDD lineage over the decoded
+  * signature rows, a bucket count and a bucket verify, with no Catalyst
+  * planning per stage.
   */
 object Dedup {
 
@@ -462,11 +468,13 @@ object Dedup {
     * [[ngramJaccardPairsFromShingles]]).
     *
     * Scale shape: the signatures are one narrow per-document pass; the
-    * pairs take two shuffles, both in [[minhashNearDupPairsFromSigs]]: a
-    * keys-only count per band bucket, then one group of the bounded
-    * multi-member buckets, which verifies its own pairs. Verification
-    * touches candidate pairs, not the n^2 cross product. Skewed buckets
-    * (boilerplate docs) are bounded by dropping buckets above `maxBucket`. */
+    * pairs are one RDD lineage over the decoded signature rows in
+    * [[minhashNearDupPairsFromSigs]], with two shuffles: a map-side
+    * combined count per band bucket, then one group of the bounded
+    * multi-member buckets, which verifies its own pairs. No stage is
+    * planned by Catalyst. Verification touches candidate pairs, not the
+    * n^2 cross product. Skewed buckets (boilerplate docs) are bounded by
+    * dropping buckets above `maxBucket`. */
   def minhashNearDupPairs(df: DataFrame, textCol: String, idCol: String,
                           numHashes: Int = 12, bands: Int = 4,
                           threshold: Double = 0.5, ngram: Int = 2,
@@ -487,36 +495,42 @@ object Dedup {
   /** The band-bucket + verify tail of [[minhashNearDupPairs]], fed by an
     * already-derived signature frame ([[minhashSignatures]] live or read
     * back from its persisted artifact: the same `sh` / band-key values the
-    * inline form computes). The band keys may be of any type (longs from
-    * [[minhashSignatures]], md5 hex strings from [[minhashBandKeysFast]]):
-    * they are compared as values. `sh` may be [[minhashSignatures]]'
-    * ascending distinct shingle hashes (`array<bigint>`, verified by a
-    * linear merge that refuses an array that is not strictly ascending) or
-    * any other distinct shingle array, such as the md5 frames' strings
-    * (verified by set). A pair is a candidate when its two docs share a
-    * band bucket of at most `maxBucket` members; it is kept when the
-    * Jaccard of its two `sh` sets, `round(inter / (|sh1| + |sh2| - inter),
-    * 4)`, reaches `threshold` (over hashes, the shingle Jaccard up to a
-    * 64-bit collision, as in [[ngramJaccardPairsFromShingles]]). Count,
-    * then verify:
-    *   1. one keys-only partial aggregate counts each (band_idx, band_key)
-    *      bucket, and its multi-member buckets (the only ones that can hold
-    *      a pair) are collected to the driver, split into oversize (more
-    *      than `maxBucket` members) and bounded keys. A broadcast join of
-    *      the bounded keys would collect the same rows to the driver;
-    *      collecting them here saves that join's own pass over the counts;
-    *   2. the bounded keys are broadcast-joined back to the band rows, so
-    *      only the docs of those buckets carry their shingles and band keys
-    *      into the second shuffle, a group per bucket;
+    * inline form computes). `doc_id` and the band keys may be of any type
+    * (longs from [[minhashSignatures]], md5 hex strings from
+    * [[minhashBandKeysFast]]): keys are compared as values, and ids are
+    * ordered as Spark orders their type. `sh` may be
+    * [[minhashSignatures]]' ascending distinct shingle hashes
+    * (`array<bigint>`, verified by a linear merge that refuses an array
+    * that is not strictly ascending) or any other distinct shingle array,
+    * such as the md5 frames' strings (verified by set). A pair is a
+    * candidate when its two docs share a band bucket of at most
+    * `maxBucket` members; it is kept when the Jaccard of its two `sh` sets,
+    * `round(inter / (|sh1| + |sh2| - inter), 4)`, reaches `threshold` (over
+    * hashes, the shingle Jaccard up to a 64-bit collision, as in
+    * [[ngramJaccardPairsFromShingles]]).
+    *
+    * Both frame forms take one RDD lineage over the signature rows, decoded
+    * once from `sigs.queryExecution.toRdd` to JVM values, so no stage pays
+    * Catalyst planning or adaptive re-planning. Count, then verify:
+    *   1. a `reduceByKey`, combined on the map side, counts each
+    *      (band_idx, band_key) bucket, and its multi-member buckets (the
+    *      only ones that can hold a pair) are collected to the driver,
+    *      split into oversize (more than `maxBucket` members) and bounded
+    *      keys;
+    *   2. both key sets are broadcast, and only the docs of bounded buckets
+    *      carry their shingles and band keys into the second shuffle, a
+    *      group per bucket;
     *   3. each group verifies its own pairs (lower id first) and emits a
     *      pair only from the lowest band where the two docs share a bucket
     *      that is not oversize. Every pair is therefore emitted once: no
-    *      `dropDuplicates`, and no join-back to fetch shingles.
-    * On a signature frame with no shuffle in its lineage that is 6 jobs
-    * and 2 shuffles (`DedupPlanSpec`). `sigs` is persisted for its two
-    * passes; the pair set is materialized eagerly and `sigs` released,
-    * also when a stage throws, so repeated calls in one session hold no
-    * cached blocks.
+    *      de-duplication, and no join-back to fetch shingles.
+    * On a signature frame with no shuffle in its lineage that is 2 jobs
+    * and 2 shuffles (`DedupPlanSpec`), each shuffle to
+    * `spark.sql.shuffle.partitions` reducers. The decoded rows are
+    * persisted for their two passes; the pairs (`id1`, `id2`, `jaccard`)
+    * are local-checkpointed eagerly and the decoded rows released, also
+    * when a stage throws, so repeated calls in one session hold no cached
+    * blocks but their results.
     *
     * `requireBucketBound = true` makes the maxBucket skew cut CHECKED
     * rather than assumed: a multi-member band bucket exceeding the bound
@@ -530,97 +544,134 @@ object Dedup {
   def minhashNearDupPairsFromSigs(sigs: DataFrame, threshold: Double,
                                   maxBucket: Int = 1000,
                                   requireBucketBound: Boolean = false): DataFrame = {
-    val sh = sigs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val spark = sigs.sparkSession
+    val idType = sigs.schema("doc_id").dataType
+    val hashed = elementType(sigs, "sh") == LongType
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val members = decodeMembers(sigs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      def bandRows(cols: Column*): DataFrame =
-        sh.select(cols :+ posexplode(col("bands")).as(Seq("band_idx", "band_key")): _*)
       // Skew bound: a bucket of size B yields B^2/2 candidate pairs; drop
       // buckets above maxBucket (boilerplate shared by thousands of docs
       // carries no dedup signal and would OOM the verify group at scale).
-      val (oversize, bounded) = bandRows().groupBy(col("band_idx"), col("band_key"))
-        .agg(count(lit(1)).as("n"))
-        .where(col("n") >= 2)
+      val (oversize, bounded) = members
+        .flatMap(m => (0 until m.bands).iterator.map(c => ((c, m.key(c)), 1L)))
+        .reduceByKey(_ + _, parts)
+        .filter(_._2 >= 2)
         .collect()
-        .partition(_.getLong(2) > maxBucket)
+        .partition(_._2 > maxBucket)
       if (requireBucketBound && oversize.nonEmpty) {
         throw new IllegalStateException(
-          s"minhash band bucket of size ${oversize.map(_.getLong(2)).max} exceeds " +
+          s"minhash band bucket of size ${oversize.map(_._2).max} exceeds " +
             s"maxBucket=$maxBucket: the audit-shared pair graph would silently " +
             "drop pairs; raise maxBucket for this build or fix the boilerplate upstream")
       }
-      val cut = oversize.map(r => (r.getInt(0), r.get(1))).toSet
-      // the bounded keys sit on the driver already, so the broadcast side is
-      // a local relation: broadcasting it runs no job
-      val keyType = sigs.schema("bands").dataType.asInstanceOf[ArrayType].elementType
-      val boundedKeys = sigs.sparkSession.createDataFrame(
-        java.util.Arrays.asList(bounded.map(r => Row(r.getInt(0), r.get(1))).toIndexedSeq: _*),
-        new StructType().add("band_idx", IntegerType).add("band_key", keyType))
-      val hashed = sigs.schema("sh").dataType.asInstanceOf[ArrayType].elementType == LongType
-      val buckets = bandRows(col("doc_id"), col("sh"), col("bands"))
-        .join(broadcast(boundedKeys), Seq("band_idx", "band_key"))
-        .groupBy(col("band_idx"), col("band_key"))
-        // sorted by doc_id, so a member's index orders the pair
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("sh"), col("bands")))).as("m"))
-      val pairs = buckets
-        .select(col("m"), explode(bucketPairs(cut, hashed)(col("band_idx"), col("m"))).as("p"))
-        .select(col("m")(col("p._1")).as("a"), col("m")(col("p._2")).as("b"),
-          col("p._3").cast("double").as("inter"))
-        .select(col("a.doc_id").as("id1"), col("b.doc_id").as("id2"),
-          round(col("inter") / (size(col("a.sh")) + size(col("b.sh")) - col("inter")), 4)
-            .as("jaccard"))
-        .where(col("jaccard") >= threshold)
-      pairs.localCheckpoint()
-    } finally sh.unpersist(false)
-  }
-
-  /** The pairs one band bucket owns, as (member index, member index,
-    * shared-shingle count) with the lower index first. `members` are
-    * (doc_id, sh, bands) rows sorted by doc_id. A pair is owned by the
-    * bucket of the lowest band where its two docs share a key that is not
-    * in `cut` (the oversize buckets), so each candidate pair is verified and
-    * emitted by exactly one group. The count is the number of distinct
-    * elements in both `sh`, which is `size(array_intersect(sh1, sh2))`:
-    * with `hashed`, `sh` holds ascending distinct longs (the form of
-    * [[minhashSignatures]]) and the count is a linear merge of the two
-    * arrays, which throws `IllegalArgumentException` on an array that is
-    * not strictly ascending (the merge would miscount it silently); any
-    * other element type (the md5 frames' shingle strings) counts by set. */
-  private def bucketPairs(cut: Set[(Int, Any)], hashed: Boolean) =
-    udf { (band: Int, members: Seq[Row]) =>
-      val bands = members.map(_.getSeq[Any](2).toArray).toArray
-      val inter: (Int, Int) => Int =
-        if (hashed) {
-          val hs = members.map(m => ascending(m.getSeq[Long](1).toArray, m.get(0))).toArray
-          (i, j) => mergeCount(hs(i), hs(j))
-        } else {
-          val sets = members.map(_.getSeq[Any](1).toSet).toArray
-          (i, j) => {
-            val (small, large) =
-              if (sets(i).size <= sets(j).size) (sets(i), sets(j)) else (sets(j), sets(i))
-            small.count(large)
+      // not destroyed here: the checkpointed pairs keep their closure, which
+      // refers to it; the context cleaner frees it with them
+      val buckets = spark.sparkContext.broadcast((bounded.map(_._1).toSet, oversize.map(_._1).toSet))
+      val pairs = members
+        .flatMap { m =>
+          val verified = buckets.value._1
+          (0 until m.bands).iterator.map(c => (c, m.key(c))).filter(verified).map(_ -> m)
+        }
+        .groupByKey(parts)
+        .mapPartitions { groups =>
+          val order = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(idType)
+          val toId = org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(idType)
+          groups.flatMap { case ((band, _), ms) =>
+            ownedPairs(band, ms.toArray.sortBy(_.id)(order), buckets.value._2, hashed, threshold)
+              .map { case (a, b, jaccard) => Row(toId(a), toId(b), jaccard) }
           }
         }
-      def ownedHere(i: Int, j: Int): Boolean = {
-        var c = 0
-        while (c < band) {
-          val k = bands(i)(c)
-          if (k == bands(j)(c) && !cut((c, k))) return false
-          c += 1
-        }
-        true
+      pairs.localCheckpoint()
+      try pairs.count()
+      catch {
+        case e: Throwable =>
+          org.apache.spark.sql.graftbridge.StorageBridge.release(pairs)
+          throw e
       }
-      val out = Array.newBuilder[(Int, Int, Int)]
-      var i = 0
-      while (i < members.length) {
-        var j = i + 1
-        while (j < members.length) {
-          if (ownedHere(i, j)) out += ((i, j, inter(i, j)))
-          j += 1
-        }
-        i += 1
-      }
-      out.result()
+      spark.createDataFrame(pairs, new StructType()
+        .add("id1", idType).add("id2", idType).add("jaccard", DoubleType))
+    } finally members.unpersist(false)
+  }
+
+  /** One signature row as JVM values: `id` as a Catalyst value copied out
+    * of the row; `sh` and the band `keys` each as an `Array[Long]` when
+    * their elements are longs, else as an array of copied Catalyst values.
+    * Primitive arrays keep the persisted rows cheap to size and to
+    * serialize. */
+  private final case class Member(id: Any, sh: AnyRef, keys: AnyRef) {
+    def size: Int = java.lang.reflect.Array.getLength(sh)
+    def bands: Int = java.lang.reflect.Array.getLength(keys)
+    def key(c: Int): Any = scala.runtime.ScalaRunTime.array_apply(keys, c)
+  }
+
+  private def elementType(df: DataFrame, name: String): DataType =
+    df.schema(name).dataType.asInstanceOf[ArrayType].elementType
+
+  /** The `doc_id`, `sh` and `bands` of every row of `sigs`, decoded from
+    * its physical rows without a planned projection. */
+  private def decodeMembers(sigs: DataFrame): RDD[Member] = {
+    val schema = sigs.schema
+    val Seq(iId, iSh, iBands) = Seq("doc_id", "sh", "bands").map(schema.fieldIndex)
+    val idType = schema(iId).dataType
+    val (shType, keyType) = (elementType(sigs, "sh"), elementType(sigs, "bands"))
+    def values(a: ArrayData, t: DataType): AnyRef =
+      if (t == LongType) a.toLongArray()
+      else a.toObjectArray(t).map(v => InternalRow.copyValue(v).asInstanceOf[AnyRef])
+    sigs.queryExecution.toRdd.map { r =>
+      Member(InternalRow.copyValue(r.get(iId, idType)),
+        values(r.getArray(iSh), shType), values(r.getArray(iBands), keyType))
     }
+  }
+
+  /** The pairs one band bucket owns, as (id, id, jaccard) with the lower
+    * id first and the jaccard at least `threshold`. `ms` are the bucket's
+    * members sorted by id. A pair is owned by the bucket of the lowest band
+    * where its two docs share a key that is not in `cut` (the oversize
+    * buckets), so each candidate pair is verified and emitted by exactly
+    * one group. The shared count is the number of distinct elements in
+    * both `sh`: with `hashed`, `sh` holds ascending distinct longs (the
+    * form of [[minhashSignatures]]) and the count is a linear merge of the
+    * two arrays, which throws `IllegalArgumentException` on an array that
+    * is not strictly ascending (the merge would miscount it silently); any
+    * other element type (the md5 frames' shingle strings) counts by set.
+    * The jaccard is rounded as Spark's `round(x, 4)` rounds a double. */
+  private def ownedPairs(band: Int, ms: Array[Member], cut: Set[(Int, Any)],
+                          hashed: Boolean, threshold: Double): Iterator[(Any, Any, Double)] = {
+    val inter: (Int, Int) => Int =
+      if (hashed) {
+        val hs = ms.map(m => ascending(m.sh.asInstanceOf[Array[Long]], m.id))
+        (i, j) => mergeCount(hs(i), hs(j))
+      } else {
+        val sets = ms.map(_.sh.asInstanceOf[Array[AnyRef]].toSet)
+        (i, j) => {
+          val (small, large) =
+            if (sets(i).size <= sets(j).size) (sets(i), sets(j)) else (sets(j), sets(i))
+          small.count(large)
+        }
+      }
+    def ownedHere(i: Int, j: Int): Boolean = {
+      var c = 0
+      while (c < band) {
+        val k = ms(i).key(c)
+        if (k == ms(j).key(c) && !cut((c, k))) return false
+        c += 1
+      }
+      true
+    }
+    for {
+      i <- ms.indices.iterator
+      j <- (i + 1 until ms.length).iterator
+      if ownedHere(i, j)
+      n = inter(i, j)
+      d = ms(i).size + ms(j).size - n
+      if d > 0
+      jaccard = java.math.BigDecimal.valueOf(n.toDouble / d)
+        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue
+      if jaccard >= threshold
+    } yield (ms(i).id, ms(j).id, jaccard)
+  }
 
   /** `hs`, checked to be strictly ascending. */
   private def ascending(hs: Array[Long], docId: Any): Array[Long] = {

@@ -46,8 +46,8 @@ class DedupPlanSpec extends AnyFunSuite {
     (counter.jobs.get, counter.shuffles.get)
   }
 
-  test("minhash pairs from signatures: 6 jobs and 2 shuffle exchanges " +
-      "(a keys-only bucket count, then one verify group)") {
+  test("minhash pairs from signatures: 2 jobs and 2 shuffle exchanges " +
+      "(a map-side combined bucket count, then one verify group)") {
     val docs = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
     val sigs = Dedup.minhashSignatures(docs, "text", "doc_id",
       numHashes = 12, bands = 4).localCheckpoint()
@@ -57,6 +57,6 @@ class DedupPlanSpec extends AnyFunSuite {
       pairs = Dedup.minhashNearDupPairsFromSigs(sigs, threshold = 0.30)
     }
     assert(pairs.count() > 0, "the fixture must yield pairs for the shape to mean anything")
-    assert((jobs, shuffles) === (6, 2))
+    assert((jobs, shuffles) === (2, 2))
   }
 }

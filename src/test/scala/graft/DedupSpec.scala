@@ -215,6 +215,15 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  /** The RDDs that `f` registers as persisted and leaves registered. RDDs
+    * it unregisters are not counted: the context cleaner may free an
+    * earlier test's blocks at any time. */
+  private def persistedBy(f: => Any): Map[Int, org.apache.spark.rdd.RDD[_]] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    f
+    spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }.toMap
+  }
+
   test("a dedup stage that throws leaves no signature frame cached") {
     val boom = udf { (id: Long) =>
       if (id == 3L) throw new IllegalStateException("boom")
@@ -225,8 +234,25 @@ class DedupSpec extends AnyFunSuite {
     val sigs = spark.range(1L, 7L)
       .select($"id".as("doc_id"), array(lit(1L), lit(2L)).as("sh"), boom($"id").as("bands"))
     val none = org.apache.spark.storage.StorageLevel.NONE
-    intercept[Exception](Dedup.minhashNearDupPairsFromSigs(sigs, threshold = 0.5).collect())
+    assert(persistedBy(intercept[Exception](
+      Dedup.minhashNearDupPairsFromSigs(sigs, threshold = 0.5).collect())).isEmpty)
     assert(sigs.storageLevel === none)
+    // a throw in the verify job: a long sh that is not strictly ascending
+    val unsorted = Seq((1L, Seq(5L, 3L, 9L), Seq(7L, 8L)), (2L, Seq(3L, 5L, 9L), Seq(7L, 9L)))
+      .toDF("doc_id", "sh", "bands")
+    assert(persistedBy(intercept[Exception](
+      Dedup.minhashNearDupPairsFromSigs(unsorted, threshold = 0.5).collect())).isEmpty)
+    // a throw between the two jobs: a bucket over the checked bound
+    val same = Dedup.minhashSignatures((1L to 5L).map(i => (i, "alpha beta gamma delta"))
+      .toDF("doc_id", "text"), "text", "doc_id", numHashes = 12, bands = 4)
+    assert(persistedBy(intercept[IllegalStateException](
+      Dedup.minhashNearDupPairsFromSigs(same, threshold = 0.5, maxBucket = 4,
+        requireBucketBound = true))).isEmpty)
+    // a call that returns leaves only the local checkpoint of its pairs
+    var pairs: org.apache.spark.sql.DataFrame = null
+    val kept = persistedBy { pairs = Dedup.minhashNearDupPairsFromSigs(same, threshold = 0.5) }
+    assert(pairs.count() === 10L)
+    assert(kept.size === 1 && kept.values.forall(_.isCheckpointed), kept)
     val (odd, even) = (sigs.where($"doc_id" % 2 === 1), sigs.where($"doc_id" % 2 === 0))
     intercept[Exception](Dedup.minhashIncrementalPairsFromSigs(odd, even, threshold = 0.5).collect())
     assert(odd.storageLevel === none)
@@ -292,25 +318,27 @@ class DedupSpec extends AnyFunSuite {
     * share at least one band bucket of at most `maxBucket` members
     * (bucket sizes counted on the driver). */
   private def bandedReference(sigs: org.apache.spark.sql.DataFrame, threshold: Double,
-                              maxBucket: Int): Set[(Long, Long, Double)] = {
-    // band keys of either type: longs from minhashSignatures, md5 hex strings
+                              maxBucket: Int): Set[(Any, Any, Double)] = {
+    // ids and band keys of either type: longs from minhashSignatures, md5
+    // hex strings from the md5 frame, string ids from the caller
     val bands = sigs.select($"doc_id", $"bands").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+      .map(r => r.get(0) -> r.getSeq[Any](1)).toMap
     val members = bands.values.flatMap(_.zipWithIndex).groupBy(identity).map {
       case (k, v) => k -> v.size }
-    def bounded(a: Long, b: Long): Boolean =
+    def bounded(a: Any, b: Any): Boolean =
       bands(a).indices.exists(c => bands(a)(c) == bands(b)(c) && members((bands(a)(c), c)) <= maxBucket)
-    Dedup.ngramJaccardPairsFromShingles(sigs.select($"doc_id", $"sh"), threshold)
-      .select($"id1", $"id2", $"jaccard").as[(Long, Long, Double)].collect()
+    triples(Dedup.ngramJaccardPairsFromShingles(sigs.select($"doc_id", $"sh"), threshold))
       .filter { case (a, b, _) => bounded(a, b) }.toSet
   }
+
+  private def triples(pairs: org.apache.spark.sql.DataFrame): Array[(Any, Any, Double)] =
+    pairs.select($"id1", $"id2", $"jaccard").collect().map(r => (r.get(0), r.get(1), r.getDouble(2)))
 
   /** The pairs of `minhashNearDupPairsFromSigs`, checked to hold no
     * repeated (id1, id2). */
   private def distinctPairs(sigs: org.apache.spark.sql.DataFrame, threshold: Double,
-                            maxBucket: Int): Set[(Long, Long, Double)] = {
-    val rows = Dedup.minhashNearDupPairsFromSigs(sigs, threshold, maxBucket)
-      .select($"id1", $"id2", $"jaccard").as[(Long, Long, Double)].collect()
+                            maxBucket: Int): Set[(Any, Any, Double)] = {
+    val rows = triples(Dedup.minhashNearDupPairsFromSigs(sigs, threshold, maxBucket))
     assert(rows.map(r => (r._1, r._2)).distinct.length === rows.length,
       "a pair was emitted more than once")
     rows.toSet
@@ -329,16 +357,60 @@ class DedupSpec extends AnyFunSuite {
       .union(spark.range(8).select(($"id" + 20000L).as("doc_id"),
         concat(lit("terms of service apply to every page of this site "),
           $"id".cast("string")).as("text")))
-    for ((fixture, name) <- Seq(sf -> "sf", planted -> "planted")) {
-      val sigs = Dedup.minhashSignatures(fixture, "text", "doc_id",
-        numHashes = 12, bands = 4).localCheckpoint()
+    // both frame forms: XXH64 hashes with long keys, and the md5 frame the
+    // oracle cells build (shingle strings, md5 hex keys)
+    for ((fixture, name) <- Seq(sf -> "sf", planted -> "planted");
+         (frame, form) <- Seq(
+           Dedup.minhashSignatures(fixture, "text", "doc_id", numHashes = 12, bands = 4) -> "xxh64",
+           SparkEntry.minhashSigsMd5(fixture) -> "md5")) {
+      val sigs = frame.localCheckpoint()
       for (threshold <- Seq(0.30, 0.05); maxBucket <- Seq(1000, 3)) {
         val want = bandedReference(sigs, threshold, maxBucket)
-        if (maxBucket == 1000) assert(want.nonEmpty, s"$name fixture has no pairs")
+        if (maxBucket == 1000) assert(want.nonEmpty, s"$name $form fixture has no pairs")
         assert(distinctPairs(sigs, threshold, maxBucket) === want,
-          s"$name fixture, threshold $threshold, maxBucket $maxBucket")
+          s"$name $form fixture, threshold $threshold, maxBucket $maxBucket")
       }
     }
+  }
+
+  test("minhash pairs keep String doc_ids and order them as Spark does, on both frame forms") {
+    // U+FF61 sorts before U+1F600 in UTF-8 bytes (Spark's string order) but
+    // after its UTF-16 surrogates (java.lang.String.compareTo)
+    val (half, emoji) = ("\uFF61 copy", "\uD83D\uDE00 copy")
+    val fox = "the quick brown fox jumps over the lazy dog"
+    val tos = "terms of service apply to every page of this site"
+    val docsS = Seq(("b", fox), ("a", fox + " again"), (emoji, tos), (half, tos),
+      ("c", "completely different content about spark engines and parquet files"))
+      .toDF("doc_id", "text")
+    for ((frame, form) <- Seq(
+           Dedup.minhashSignatures(docsS, "text", "doc_id", numHashes = 12, bands = 4) -> "xxh64",
+           SparkEntry.minhashSigsMd5(docsS) -> "md5")) {
+      val sigs = frame.localCheckpoint()
+      val got = Dedup.minhashNearDupPairsFromSigs(sigs, threshold = 0.5)
+      assert(got.schema.map(_.dataType).take(2) ===
+        Seq(org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType), form)
+      val pairs = triples(got).toSet
+      assert(pairs === bandedReference(sigs, threshold = 0.5, maxBucket = 1000), form)
+      assert(pairs.map(p => (p._1, p._2)) === Set(("a", "b"), (half, emoji)), form)
+    }
+  }
+
+  test("the md5 signature frame builds each doc's shingles above the spread exchange") {
+    val docsFx = spark.read.parquet(s"${TestSpark.sf}/documents.parquet")
+    val plan = SparkEntry.minhashSigsMd5(docsFx).queryExecution.executedPlan
+    def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        nodes(a.executedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    val exchanges = nodes(plan).collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(exchanges.nonEmpty, s"the fixture must be spread for the check to mean anything: $plan")
+    val udfsBelow = exchanges.flatMap(e => nodes(e.child)).flatMap(_.expressions)
+      .flatMap(_.collect { case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u })
+    assert(udfsBelow.isEmpty, plan)
   }
 
   test("a pair whose lowest shared bucket is oversize comes once from a higher bounded band") {
